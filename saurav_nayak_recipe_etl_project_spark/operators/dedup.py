@@ -562,12 +562,11 @@ def dup_clusters(docs: DataFrame, tau: float = 0.5, n: int = 3,
             .groupBy("src")
             .agg(F.min("label").alias("nmin"))
         )
-        # LAZY checkpoint + FULL-count probe = one job per iteration:
-        # the probe below joins and counts EVERY row of new_labels
-        # (no limit — a limit(1) short-circuit would leave cached
-        # partitions unfilled and re-evaluate the propagation plan
-        # next round, the r15-measured hazard), so new_labels
-        # materializes inside the job that answers convergence.
+        # EAGER checkpoint: new_labels is fully materialized before the
+        # probe and the next round read it, whatever their shape (a
+        # lazy one cached only what its first consumer computed). The
+        # interleaved A/B against lazy + full-count probe was flat to
+        # eager-ahead (OPTIMIZATION_r15.md).
         new_labels = (
             labels.join(neighbor_min, "src", "left")
             .select(
@@ -575,9 +574,7 @@ def dup_clusters(docs: DataFrame, tau: float = 0.5, n: int = 3,
                 F.least(F.col("label"), F.coalesce("nmin", F.col("label")))
                 .alias("label"),
             )
-            .localCheckpoint(
-                eager=__import__("os").environ.get(
-                    "SPARK_GRAFT_CC_EAGER") == "1")
+            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -692,19 +689,13 @@ def star_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
         return out.where(F.col("a") != F.col("b"))
 
     for rnd in range(max_rounds):
-        # LAZY checkpoint + FULL-count probe = ONE job per round: the
-        # probe below is new_e's first consumer and aggregates every
-        # group, so it computes (and caches) every partition — unlike
-        # the r15-measured limit(1) lazy form, whose short-circuit left
-        # partitions unfilled and re-evaluated the plan next round
-        # (dedup_clusters_star 3.9 -> 5.5 s). Full count vs limit(1)
-        # costs nothing extra: the groupBy must finish before the
-        # filter can emit anyway.
-        import os as _os  # A/B switch, removed after measurement
-        _eager = _os.environ.get("SPARK_GRAFT_CC_EAGER") == "1"
+        # EAGER checkpoint, as in dup_clusters: a lazy one with a
+        # limit(1) probe left partitions unfilled and re-evaluated the
+        # plan next round (dedup_clusters_star 3.9 -> 5.5 s); with a
+        # full-count probe it measured flat to slower than eager.
         new_e = (
             _star(_star(e, "large"), "small").distinct()
-            .localCheckpoint(eager=_eager)
+            .localCheckpoint()
         )
         # fixpoint probe: both sides are distinct sets, so a row
         # appears twice in the union iff it is in both — any count==1

@@ -248,55 +248,6 @@ def lsh_bucketed_topk(emb: DataFrame, n_queries: int = N_QUERIES,
     )
 
 
-def refine_centroids(e: DataFrame, c_mat, iters: int = 2):
-    """Distributed Lloyd iterations: assign via broadcast matmul, then
-    recompute each centroid as the member mean with a posexplode →
-    groupBy(list, dim) aggregation (scales to any corpus; only the
-    K×dim centroid table ever reaches the driver). Float-sum order
-    makes refined centroids run-to-run jittery at the last ulp, so the
-    deterministic registry query skips refinement; pipelines that
-    train once and persist centroids should use it."""
-    import numpy as np
-    import pandas as pd  # noqa: F401
-
-    spark = e.sparkSession
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(c_mat)
-
-        def assign(batches):
-            import numpy as np
-            import pandas as pd
-
-            cm = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.stack(pdf["v"].to_numpy())
-                mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-                yield pd.DataFrame(
-                    {"v": pdf["v"], "list_id": np.argmax(mn @ cm.T, axis=1)}
-                )
-
-        assigned = e.mapInPandas(assign, schema="v array<double>, list_id int")
-        means = (
-            assigned.select("list_id", F.posexplode("v").alias("dim", "x"))
-            .groupBy("list_id", "dim")
-            .agg(F.avg("x").alias("m"))
-            .toPandas()
-        )
-        new_c = c_mat.copy()
-        import numpy as np
-
-        for lid, grp in means.groupby("list_id"):
-            vec = np.zeros(c_mat.shape[1])
-            vec[grp["dim"].to_numpy()] = grp["m"].to_numpy()
-            n = np.linalg.norm(vec)
-            if n > 0:
-                new_c[int(lid)] = vec / n
-        c_mat = new_c
-    return c_mat
-
-
 def _probe_masks(q_mat, c_mat, list_sizes, scan_frac: float,
                  n_probe_min: int = 1):
     """Per-list probe budgeting: instead of a fixed list COUNT per

@@ -1,5 +1,5 @@
 """Persistent IVF vector index as a PARTITIONED PARQUET TABLE, plus
-streaming index maintenance.
+incremental index maintenance.
 
 The 100 TB serving design made concrete in Spark storage terms: the
 inverted lists of an IVF index are exactly a hive partition layout
@@ -11,7 +11,7 @@ inverted lists of an IVF index are exactly a hive partition layout
   `list_id IN (...)` filter that Spark resolves to directory pruning —
   only n_probe of n_lists directories are ever opened (asserted on
   real file-read metrics in tests/test_vector_index.py);
-- INCREMENTAL ADDS are a foreachBatch stream appending
+- INCREMENTAL ADDS (`_add_batch`, a foreachBatch body) append
   `batch_id=N`-subdir overwrites inside each touched list dir —
   idempotent under replay, O(batch) written bytes, and the search
   path picks new vectors up with no index rebuild (centroids stay
@@ -162,29 +162,6 @@ def _add_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
         .partitionBy("list_id", "batch_id")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(index_path)
-    )
-
-
-def run_index_stream(spark: SparkSession, source_dir: str,
-                     checkpoint_dir: str, index_path: str, c_mat) -> None:
-    """Incremental index maintenance: vector drops stream in, each
-    micro-batch lands as per-(list, batch) partition overwrites.
-    Search needs no rebuild and no coordination — new partitions are
-    visible on the next read."""
-    from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
-
-    vecs = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label string"
-    ).parquet(source_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _add_batch(spark, batch_df, batch_id, index_path, c_mat)
-
-    await_or_raise(
-        vecs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -24,10 +24,9 @@ def _register(queries: dict, oracles: dict) -> None:
     ORACLES.update(oracles)
 
 
-# Optional suites: each module registers its queries; import errors must
-# not take down the whole registry (mirrors import-try gating for libs
-# that may be absent).
-def _load_optional() -> None:
+# The suites: each module registers its queries and oracles. An import
+# error propagates, so a broken suite fails the registry import loudly.
+def _load_suites() -> None:
     import importlib
 
     for mod, q_attr, o_attr in [
@@ -73,14 +72,11 @@ def _load_optional() -> None:
         ("saurav_nayak_recipe_etl_project_spark.streaming.drift", "STREAM_DRIFT_QUERIES", "STREAM_DRIFT_ORACLES"),
         ("saurav_nayak_recipe_etl_project_spark.streaming.clipstats_mv", "CLIPSTATS_MV_QUERIES", "CLIPSTATS_MV_ORACLES"),
     ]:
-        try:
-            m = importlib.import_module(mod)
-        except ImportError:
-            continue
+        m = importlib.import_module(mod)
         _register(getattr(m, q_attr, {}), getattr(m, o_attr, {}))
 
 
-_load_optional()
+_load_suites()
 
 
 # The driver oracles only the FIRST 50 registry entries per round.

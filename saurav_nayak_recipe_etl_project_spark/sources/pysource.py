@@ -355,13 +355,6 @@ class JsonlDocsStreamReader(DataSourceStreamReader):
         # reveals one — the cap only applies once a position is known
         self._seen_n = None
 
-    def _trace(self, msg):
-        import os as _os
-        tf = _os.environ.get("JSONL_DOCS_TRACE")
-        if tf:
-            with open(tf, "a") as fh:
-                fh.write(f"pid={_os.getpid()} id={id(self)} {msg}\n")
-
     def _shards(self):
         try:
             names = os.listdir(self._path)
@@ -373,7 +366,6 @@ class JsonlDocsStreamReader(DataSourceStreamReader):
         )
 
     def initialOffset(self) -> dict:
-        self._trace("initialOffset")
         self._seen_n = 0
         return {"n": 0, "last": ""}
 
@@ -382,7 +374,6 @@ class JsonlDocsStreamReader(DataSourceStreamReader):
         n = len(shards)
         if self._max_files is not None and self._seen_n is not None:
             n = min(n, self._seen_n + self._max_files)
-        self._trace(f"latestOffset seen={self._seen_n} -> n={n}")
         return {"n": n, "last": shards[n - 1] if n else ""}
 
     def partitions(self, start: dict, end: dict):
@@ -393,7 +384,6 @@ class JsonlDocsStreamReader(DataSourceStreamReader):
         # by the 4.1 runner, traced, so end-tracking here is the one
         # dependable signal). Also how a restarted query's first
         # batch reveals the checkpointed position.
-        self._trace(f"partitions {start} -> {end}")
         self._seen_n = max(self._seen_n or 0, end["n"])
         shards = self._shards()
         if len(shards) < end["n"]:

@@ -48,6 +48,7 @@ format performs.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import uuid
@@ -73,32 +74,31 @@ def _log_path(table: str) -> str:
     return os.path.join(table, _LOG_DIR)
 
 
-def _json_versions(table: str) -> list[int]:
-    """Versions with a raw JSON commit file still present."""
+def _log_versions(table: str) -> tuple[list[int], list[int]]:
+    """(versions with a raw JSON commit file still present, checkpoint
+    versions) from ONE listing of the log directory."""
     d = _log_path(table)
     if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[:-5]) for f in os.listdir(d)
-        if f.endswith(".json") and f[:-5].isdigit()
-    )
-
-
-def _checkpoint_versions(table: str) -> list[int]:
-    d = _log_path(table)
-    if not os.path.isdir(d):
-        return []
+        return [], []
     n = len(_CKPT_SUFFIX)
-    return sorted(
-        int(f[:-n]) for f in os.listdir(d)
-        if f.endswith(_CKPT_SUFFIX) and f[:-n].isdigit()
-    )
+    js, cs = [], []
+    for f in os.listdir(d):
+        if f.endswith(".json") and f[:-5].isdigit():
+            js.append(int(f[:-5]))
+        elif f.endswith(_CKPT_SUFFIX) and f[:-n].isdigit():
+            cs.append(int(f[:-n]))
+    return sorted(js), sorted(cs)
+
+
+def _json_versions(table: str) -> list[int]:
+    return _log_versions(table)[0]
 
 
 def _versions(table: str) -> list[int]:
     """All readable versions: JSON commits plus checkpoint-only
     versions (a cleaned log keeps the checkpointed snapshot live)."""
-    return sorted(set(_json_versions(table)) | set(_checkpoint_versions(table)))
+    js, cs = _log_versions(table)
+    return sorted(set(js) | set(cs))
 
 
 def latest_version(table: str) -> int:
@@ -107,37 +107,73 @@ def latest_version(table: str) -> int:
     return vs[-1] if vs else -1
 
 
+# The table METADATA record every commit carries — field → default
+# for a table (or an older commit) that never set it:
+# - schema: {logical column: type}; None = a log that predates schema
+#   recording (reads fall back to mergeSchema);
+# - checks: CHECK constraints {name: [col, op, literal]};
+# - colmap: logical→physical column mapping (empty = identity);
+# - partition_by: PHYSICAL partition columns, fixed at creation;
+# - retired: PHYSICAL names dropped by tx_drop_column — monotonically
+#   growing: a retired name still has bytes in old data files, so no
+#   later column may ever map to it (the field-id guarantee).
+# This one table drives the JSON commit write (_commit) and read
+# (_meta_at), and the checkpoint's `<field>_json` parquet metadata
+# write (tx_checkpoint) and read (_load_checkpoint).
+_META = {"schema": None, "checks": {}, "colmap": {}, "partition_by": [],
+         "retired": []}
+
+
+def _meta_from(get) -> dict:
+    """The metadata record from a field getter; an unset (None) field
+    takes a fresh copy of its default."""
+    meta = {}
+    for k, default in _META.items():
+        v = get(k)
+        meta[k] = copy.deepcopy(default) if v is None else v
+    return meta
+
+
+def _ckpt_key(field: str) -> bytes:
+    return f"{field}_json".encode()
+
+
+def _meta_at(table: str, version: int) -> dict:
+    """The metadata record at `version` — from the JSON commit when
+    present, else from the checkpoint that replaced it, else the
+    defaults (version < 0 or not committed)."""
+    if version >= 0:
+        try:
+            return _meta_from(_read_json_commit(table, version).get)
+        except FileNotFoundError:
+            pass
+        if os.path.exists(_ckpt_path(table, version)):
+            _, meta, _ = _load_checkpoint(table, version)
+            return meta
+    return _meta_from(lambda _k: None)
+
+
 def _commit(table: str, version: int, actions: list[dict],
-            txn: dict | None = None,
-            schema: dict | None = None,
-            checks: dict | None = None,
-            colmap: dict | None = None,
-            partition_by: list | None = None,
-            retired: list | None = None) -> None:
+            txn: dict | None = None, **changes) -> None:
     """Atomically create version file `version` — O_CREAT|O_EXCL is
     the mutual exclusion: exactly one writer wins a version number.
-    Each commit records the table schema, CHECK constraints, and the
-    logical→physical column mapping; a commit that passes none of
-    them carries the prior version's forward."""
-    if schema is None and version > 0:
-        schema = _schema_at(table, version - 1)
-    if checks is None:
-        checks = _checks_at(table, version - 1) if version > 0 else {}
-    if colmap is None:
-        colmap = _colmap_at(table, version - 1) if version > 0 else {}
-    if partition_by is None:
-        partition_by = (_partition_by_at(table, version - 1)
-                        if version > 0 else [])
-    if retired is None:
-        retired = _retired_at(table, version - 1) if version > 0 else []
+    Each commit records the whole metadata record (_META): `changes`
+    overlays the record of `version - 1`, and a field not passed (or
+    passed as None) carries forward. A caller already holding the
+    prior record passes all of it (`**dict(meta, ...)`) and no log
+    read happens."""
+    unknown = changes.keys() - _META.keys()
+    if unknown:
+        raise TypeError(f"_commit: unknown metadata fields {sorted(unknown)}")
+    meta = {k: v for k, v in changes.items() if v is not None}
+    if meta.keys() != _META.keys():
+        meta = {**_meta_at(table, version - 1), **meta}
     import time
 
     os.makedirs(_log_path(table), exist_ok=True)
     path = os.path.join(_log_path(table), f"{version:011d}.json")
     payload = json.dumps(
-        {"actions": actions, "txn": txn, "schema": schema,
-         "checks": checks, "colmap": colmap,
-         "partition_by": partition_by, "retired": retired,
+        {"actions": actions, "txn": txn, **{k: meta[k] for k in _META},
          "ts": round(time.time(), 6)}) + "\n"
     # publish the FULL payload atomically: write a private temp file,
     # then hard-link it to the version name (link fails if the name is
@@ -164,60 +200,55 @@ def _read_json_commit(table: str, v: int) -> dict:
         return json.loads(f.read())
 
 
-def _load_checkpoint(
-        table: str, v: int
-) -> tuple[dict, dict | None, dict, dict, dict, list, list]:
-    """(live files, schema, txn high-water marks, check constraints,
-    column mapping, partition columns, retired physical names) from
-    the parquet checkpoint at version v."""
+def _ckpt_path(table: str, v: int) -> str:
+    return os.path.join(_log_path(table), f"{v:011d}{_CKPT_SUFFIX}")
+
+
+def _load_checkpoint(table: str, v: int) -> tuple[dict, dict, dict]:
+    """(live files, metadata record, txn high-water marks) from the
+    parquet checkpoint at version v."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(_log_path(table), f"{v:011d}{_CKPT_SUFFIX}")
-    t = pq.read_table(path)
+    t = pq.read_table(_ckpt_path(table, v))
     live = {
         f: json.loads(s) for f, s in
         zip(t.column("file").to_pylist(), t.column("stats_json").to_pylist())
     }
-    meta = t.schema.metadata or {}
-    schema = (json.loads(meta[b"schema_json"].decode())
-              if b"schema_json" in meta else None)
-    txns = (json.loads(meta[b"txns_json"].decode())
-            if b"txns_json" in meta else {})
-    checks = (json.loads(meta[b"checks_json"].decode())
-              if b"checks_json" in meta else {})
-    colmap = (json.loads(meta[b"colmap_json"].decode())
-              if b"colmap_json" in meta else {})
-    partition_by = (json.loads(meta[b"partition_by_json"].decode())
-                    if b"partition_by_json" in meta else [])
-    retired = (json.loads(meta[b"retired_json"].decode())
-               if b"retired_json" in meta else [])
-    return live, schema, txns, checks, colmap, partition_by, retired
+    md = t.schema.metadata or {}
+
+    def get(field):
+        raw = md.get(_ckpt_key(field))
+        return None if raw is None else json.loads(raw)
+
+    return live, _meta_from(get), get("txns") or {}
 
 
-def _best_checkpoint(table: str, version: int) -> int:
+def _best_checkpoint(table: str, version: int, cvs: list[int]) -> int:
     """The newest checkpoint at or below `version`, -1 if none. The
     `_last_checkpoint` pointer is consulted FIRST (one file read — on
     an object store this is the whole point of the Delta pointer
-    protocol: no log-directory listing on the happy path); the
-    directory listing is only the fallback for reads BELOW the
-    pointer (older-checkpoint time travel) or a missing/racing
-    pointer."""
+    protocol); the listed checkpoint versions `cvs` are only the
+    fallback for reads BELOW the pointer (older-checkpoint time
+    travel) or a missing/racing pointer."""
     ptr = last_checkpoint_version(table)
     if ptr is not None and ptr <= version:
         return ptr
-    return max((c for c in _checkpoint_versions(table) if c <= version),
-               default=-1)
+    return max((c for c in cvs if c <= version), default=-1)
 
 
-def _resolve_snapshot(table: str,
-                      version: int | None = None) -> tuple[dict, int, int]:
+def _resolve_snapshot(
+        table: str, version: int | None = None
+) -> tuple[dict, int, int, dict]:
     """Replay to `version` through the best checkpoint at or below it:
-    (live files, json commits replayed, checkpoint version used or -1).
-    The replay cost is O(tail-past-checkpoint), not O(commits) — the
-    Delta `_last_checkpoint` read path. Versions are dense by
-    construction (every commit is latest+1), so a missing tail file
-    means the log was cleaned past its checkpoint — loud error."""
-    vs = _versions(table)
+    (live files, json commits replayed, checkpoint version used or -1,
+    metadata record at `version`). The replay cost is
+    O(tail-past-checkpoint), not O(commits) — the Delta
+    `_last_checkpoint` read path — over ONE log-directory listing.
+    Versions are dense by construction (every commit is latest+1), so
+    a missing tail file means the log was cleaned past its checkpoint
+    — loud error."""
+    js, cs = _log_versions(table)
+    vs = sorted(set(js) | set(cs))
     if not vs:
         raise ValueError(f"{table} has no transaction log")
     if version is None:
@@ -231,8 +262,8 @@ def _resolve_snapshot(table: str,
         raise ValueError(
             f"version {version} of {table} was vacuumed (horizon "
             f"{horizon}) — its data files no longer exist")
-    base = _best_checkpoint(table, version)
-    tail = [v for v in _json_versions(table) if base < v <= version]
+    base = _best_checkpoint(table, version, cs)
+    tail = [v for v in js if base < v <= version]
     expected = list(range(base + 1, version + 1))
     if tail != expected:
         # The pointer's tail is broken — almost always a REGRESSED
@@ -244,12 +275,10 @@ def _resolve_snapshot(table: str,
         # are never cleaned, so a newer listed checkpoint <= version
         # repairs the replay (the rare failure path pays the listing;
         # the happy path stays one pointer read).
-        listed = max((c for c in _checkpoint_versions(table)
-                      if c <= version), default=-1)
+        listed = max((c for c in cs if c <= version), default=-1)
         if listed > base:
             base = listed
-            tail = [v for v in _json_versions(table)
-                    if base < v <= version]
+            tail = [v for v in js if base < v <= version]
             expected = list(range(base + 1, version + 1))
     if tail != expected:
         raise ValueError(
@@ -257,9 +286,10 @@ def _resolve_snapshot(table: str,
             f"between checkpoint {base} and version {version} — cannot replay")
     live: dict = {}
     if base >= 0:
-        live = _load_checkpoint(table, base)[0]
+        live, meta, _ = _load_checkpoint(table, base)
     for v in tail:
-        for a in _read_json_commit(table, v)["actions"]:
+        entry = _read_json_commit(table, v)
+        for a in entry["actions"]:
             if a["op"] == "add":
                 live[a["file"]] = a.get("stats") or {}
             elif a["op"] == "remove":
@@ -277,7 +307,9 @@ def _resolve_snapshot(table: str,
                 st = dict(live[a["file"]])
                 st["_dvs"] = list(st.get("_dvs", [])) + [a["dv"]]
                 live[a["file"]] = st
-    return live, len(tail), base
+    if tail:  # the last replayed commit IS `version`
+        meta = _meta_from(entry.get)
+    return live, len(tail), base, meta
 
 
 def snapshot_files(table: str, version: int | None = None) -> dict:
@@ -380,15 +412,14 @@ def _attach_partition_cols(df: DataFrame, pby: list,
 
 
 def _read_files(spark: SparkSession, table: str, files: list[str],
-                version: int | None = None,
-                live: dict | None = None) -> DataFrame:
-    """Read data files under the COMMITTED schema at `version` (latest
-    when None): files that predate an additive evolution NULL-backfill
-    the new columns, and narrow-generation files up-cast in place
-    (int→bigint, float→double) — the type-widening read contract a
-    mergeSchema inference cannot provide (it refuses to merge int and
-    bigint footers). Falls back to mergeSchema for a log that predates
-    schema recording.
+                meta: dict, live: dict | None = None) -> DataFrame:
+    """Read data files under the COMMITTED schema of the metadata
+    record `meta` (see _meta_at): files that predate an additive
+    evolution NULL-backfill the new columns, and narrow-generation
+    files up-cast in place (int→bigint, float→double) — the
+    type-widening read contract a mergeSchema inference cannot provide
+    (it refuses to merge int and bigint footers). Falls back to
+    mergeSchema for a log that predates schema recording.
 
     `live` (the snapshot's {file: stats}) additionally applies any
     DELETION VECTORS the stats carry: rows named by (file, position)
@@ -399,13 +430,11 @@ def _read_files(spark: SparkSession, table: str, files: list[str],
 
     Column mapping: the files store PHYSICAL names (stable across
     renames); the scan is pinned to the physical schema and the frame
-    is renamed to the LOGICAL names of `version` at the end — a
+    is renamed to the record's LOGICAL names at the end — a
     rename-then-read sees old files under the new name with zero
     rewrites."""
-    v = latest_version(table) if version is None else version
-    schema = _schema_at(table, v)
-    colmap = _colmap_at(table, v)
-    pby = _partition_by_at(table, v)
+    schema, colmap = meta["schema"], meta["colmap"]
+    pby = meta["partition_by"]
     if schema:
         phys = {_phys(colmap, c): t for c, t in schema.items()}
         # partition columns live in the DIRECTORY names, not the files
@@ -443,90 +472,19 @@ def _read_files(spark: SparkSession, table: str, files: list[str],
     return df
 
 
-def _schema_at(table: str, version: int) -> dict | None:
-    """The committed table schema at `version` — from the JSON commit
-    when present, else from the checkpoint that replaced it."""
-    if version < 0:
-        return None
-    if version in _json_versions(table):
-        return _read_json_commit(table, version).get("schema")
-    if version in _checkpoint_versions(table):
-        return _load_checkpoint(table, version)[1]
-    return None
-
-
-def _checks_at(table: str, version: int) -> dict:
-    """The CHECK constraints in force at `version` — {name: [col, op,
-    literal]} from the JSON commit when present, else from the
-    checkpoint that replaced it."""
-    if version < 0:
-        return {}
-    if version in _json_versions(table):
-        return _read_json_commit(table, version).get("checks") or {}
-    if version in _checkpoint_versions(table):
-        return _load_checkpoint(table, version)[3]
-    return {}
-
-
 def table_checks(table: str) -> dict:
     """The currently-enforced CHECK constraints."""
-    return _checks_at(table, latest_version(table))
-
-
-def _colmap_at(table: str, version: int) -> dict:
-    """The logical→physical column mapping at `version` (the
-    Delta/Iceberg column-mapping idea: a RENAME changes only the
-    LOGICAL name; data files keep writing the stable PHYSICAL name —
-    the name the column was created under — so zero files are
-    rewritten and old files read under the new name). Empty dict =
-    identity (tables that never renamed pay nothing)."""
-    if version < 0:
-        return {}
-    if version in _json_versions(table):
-        return _read_json_commit(table, version).get("colmap") or {}
-    if version in _checkpoint_versions(table):
-        return _load_checkpoint(table, version)[4]
-    return {}
+    return _meta_at(table, latest_version(table))["checks"]
 
 
 def table_colmap(table: str) -> dict:
     """The current logical→physical column mapping (empty = identity)."""
-    return _colmap_at(table, latest_version(table))
-
-
-def _partition_by_at(table: str, version: int) -> list:
-    """The table's PHYSICAL partition columns at `version` (fixed at
-    table creation — the Delta/Iceberg partition-spec contract this
-    engine supports; empty = unpartitioned). At 100 TB this is the
-    FIRST prune: hive-style `col=value` directories whose values ride
-    in every add-action's stats (`_part`), matched before any min/max
-    stats are consulted."""
-    if version < 0:
-        return []
-    if version in _json_versions(table):
-        return _read_json_commit(table, version).get("partition_by") or []
-    if version in _checkpoint_versions(table):
-        return _load_checkpoint(table, version)[5]
-    return []
+    return _meta_at(table, latest_version(table))["colmap"]
 
 
 def table_partition_by(table: str) -> list:
     """The table's physical partition columns (empty = unpartitioned)."""
-    return _partition_by_at(table, latest_version(table))
-
-
-def _retired_at(table: str, version: int) -> list:
-    """PHYSICAL column names retired by tx_drop_column as of
-    `version` — monotonically growing: a retired physical name still
-    has bytes in old data files, so no later column may ever map to
-    it (the field-id guarantee, done with names)."""
-    if version < 0:
-        return []
-    if version in _json_versions(table):
-        return _read_json_commit(table, version).get("retired") or []
-    if version in _checkpoint_versions(table):
-        return _load_checkpoint(table, version)[6]
-    return []
+    return _meta_at(table, latest_version(table))["partition_by"]
 
 
 _PYOPS = {
@@ -625,7 +583,7 @@ def tx_set_check(spark: SparkSession, table: str, name: str,
     base = latest_version(table)
     if base < 0:
         raise ValueError(f"{table} has no commits — append first")
-    checks = dict(_checks_at(table, base))
+    checks = dict(_meta_at(table, base)["checks"])
     _validate_checks(read_table(spark, table), {name: constraint}, table)
     checks[name] = list(constraint)
     _commit(table, base + 1, [], checks=checks)
@@ -635,7 +593,7 @@ def tx_set_check(spark: SparkSession, table: str, name: str,
 def tx_drop_check(table: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT: one metadata-only commit."""
     base = latest_version(table)
-    checks = dict(_checks_at(table, base))
+    checks = dict(_meta_at(table, base)["checks"])
     if name not in checks:
         raise ValueError(f"{table} has no CHECK constraint {name!r} "
                          f"(have {sorted(checks)})")
@@ -664,7 +622,8 @@ def tx_rename_column(table: str, old: str, new: str) -> int:
     base = latest_version(table)
     if base < 0:
         raise ValueError(f"{table} has no commits — append first")
-    schema = _schema_at(table, base)
+    meta = _meta_at(table, base)
+    schema = meta["schema"]
     if not schema:
         raise ValueError(f"{table} records no schema — cannot rename")
     if old not in schema:
@@ -674,7 +633,7 @@ def tx_rename_column(table: str, old: str, new: str) -> int:
         raise ValueError(f"{table} already has a column {new!r}")
     if not new or "`" in new:
         raise ValueError(f"invalid column name {new!r}")
-    colmap = dict(_colmap_at(table, base))
+    colmap = dict(meta["colmap"])
     phys_old = colmap.pop(old, old)
     for c in schema:
         if c != old and _phys(colmap, c) == new:
@@ -686,7 +645,7 @@ def tx_rename_column(table: str, old: str, new: str) -> int:
     new_schema = {(new if c == old else c): t for c, t in schema.items()}
     checks = {
         n: [new if spec[0] == old else spec[0], spec[1], spec[2]]
-        for n, spec in _checks_at(table, base).items()
+        for n, spec in meta["checks"].items()
     }
     _commit(table, base + 1, [], schema=new_schema, checks=checks,
             colmap=colmap)
@@ -709,7 +668,8 @@ def tx_drop_column(table: str, col: str) -> int:
     base = latest_version(table)
     if base < 0:
         raise ValueError(f"{table} has no commits")
-    schema = _schema_at(table, base)
+    meta = _meta_at(table, base)
+    schema = meta["schema"]
     if not schema:
         raise ValueError(f"{table} records no schema — cannot drop")
     if col not in schema:
@@ -718,20 +678,20 @@ def tx_drop_column(table: str, col: str) -> int:
     if len(schema) == 1:
         raise ValueError(
             f"cannot drop {col!r}: it is the last column of {table}")
-    colmap = dict(_colmap_at(table, base))
+    colmap = dict(meta["colmap"])
     phys = colmap.pop(col, col)
-    if phys in _partition_by_at(table, base):
+    if phys in meta["partition_by"]:
         raise ValueError(
             f"cannot drop {col!r}: it is a partition column of "
             f"{table} (the directory layout depends on it)")
-    refs = sorted(n for n, spec in _checks_at(table, base).items()
+    refs = sorted(n for n, spec in meta["checks"].items()
                   if spec[0] == col)
     if refs:
         raise ValueError(
             f"cannot drop {col!r}: CHECK constraints {refs} reference "
             "it — tx_drop_check them deliberately first")
     new_schema = {c: t for c, t in schema.items() if c != col}
-    retired = list(_retired_at(table, base))
+    retired = list(meta["retired"])
     if phys not in retired:
         retired.append(phys)
     _commit(table, base + 1, [], schema=new_schema, colmap=colmap,
@@ -754,7 +714,7 @@ def check_audit(spark: SparkSession, table: str) -> DataFrame:
     ONCE: the audited rows and the constraint set come from the same
     snapshot (the read_table single-resolution rule)."""
     v = latest_version(table)
-    checks = _checks_at(table, v)
+    checks = _meta_at(table, v)["checks"]
     if not checks:
         return spark.createDataFrame(
             [],
@@ -786,8 +746,7 @@ def check_audit(spark: SparkSession, table: str) -> DataFrame:
         "n_violate long, n_unknown long")
 
 
-def _check_schema(df: DataFrame, table: str, evolve: bool,
-                  at_version: int | None = None,
+def _check_schema(df: DataFrame, table: str, evolve: bool, meta: dict,
                   allow_readd: bool = False) -> dict | None:
     """Schema enforcement (the Delta contract): an append whose
     columns drift from the table raises unless `evolve=True`.
@@ -798,16 +757,12 @@ def _check_schema(df: DataFrame, table: str, evolve: bool,
     table deliberately instead). A source NARROWER than the table is
     accepted without the flag: the committed schema stays the wide
     one and reads up-cast the narrow files in place — no contract
-    change happened. `at_version` pins the check to a captured base
-    version so callers can make check-then-commit atomic (a rival
-    commit in between bumps the version and the commit raises
+    change happened. `meta` is the metadata record of the caller's
+    captured base version, which makes check-then-commit atomic (a
+    rival commit in between bumps the version and the commit raises
     TxConflict). Returns the prior schema it checked against (None
-    for a fresh table) so callers reuse it instead of re-reading the
-    commit file."""
-    v = latest_version(table) if at_version is None else at_version
-    if v < 0:
-        return None
-    prior = _schema_at(table, v)
+    for a fresh table)."""
+    prior = meta["schema"]
     if prior is None:
         return None
     now = _schema_fields(df)
@@ -829,7 +784,7 @@ def _check_schema(df: DataFrame, table: str, evolve: bool,
         # an added column may not shadow a renamed column's PHYSICAL
         # name — its files would collide with the mapped column's
         # storage namespace
-        renamed = {p for c, p in _colmap_at(table, v).items() if p != c}
+        renamed = {p for c, p in meta["colmap"].items() if p != c}
         shadow = [c for c in added if c in renamed]
         if shadow:
             raise ValueError(
@@ -841,7 +796,7 @@ def _check_schema(df: DataFrame, table: str, evolve: bool,
         # resurrect. tx_append re-adds safely (fresh physical name,
         # allow_readd); other writers route there.
         if not allow_readd:
-            reused = [c for c in added if c in _retired_at(table, v)]
+            reused = [c for c in added if c in meta["retired"]]
             if reused:
                 raise ValueError(
                     f"tx schema evolution rejected for {table}: "
@@ -1148,26 +1103,25 @@ def _discard_written(table: str, actions: list[dict]) -> None:
 
 
 def _read_written(spark: SparkSession, actions: list[dict],
-                  table: str, colmap: dict | None = None,
-                  base: int | None = None) -> DataFrame:
+                  table: str, meta: dict, colmap: dict) -> DataFrame:
     """The rows a pending commit would make live — read back from the
     files actually written, so validation sees the committed BYTES,
     not a second evaluation of a possibly non-deterministic source
     (ADVICE r13: rand()/timestamp sources could otherwise commit rows
     that were never validated). Files store physical names; the frame
     comes back LOGICAL (checks reference logical columns), with hive
-    partition columns re-derived from the paths."""
+    partition columns re-derived from the paths. `meta` is the base
+    version's record; `colmap` the mapping the files were written
+    under."""
     df = spark.read.parquet(
         *[os.path.join(table, a["file"]) for a in actions
           if a["op"] == "add"])
-    v = latest_version(table) if base is None else base
-    pby = _partition_by_at(table, v)
+    pby = meta["partition_by"]
     if pby:
-        schema = _schema_at(table, v) or {}
-        phys_types = {_phys(colmap or {}, c): t
-                      for c, t in schema.items()}
+        phys_types = {_phys(colmap, c): t
+                      for c, t in (meta["schema"] or {}).items()}
         df = _attach_partition_cols(df, pby, phys_types)
-    ren = {p: c for c, p in (colmap or {}).items() if p != c}
+    ren = {p: c for c, p in colmap.items() if p != c}
     return df.withColumnsRenamed(ren) if ren else df
 
 
@@ -1209,16 +1163,17 @@ def tx_append(df: DataFrame, table: str,
             last = last_txn_batch(table, txn["app"], at_version=base)
             if last is not None and txn["batch"] <= last:
                 return base  # idempotent replay: no-op
-        prior = _check_schema(df, table, allow_schema_evolution,
-                              at_version=base, allow_readd=True)
+        meta = _meta_at(table, base)
+        prior = _check_schema(df, table, allow_schema_evolution, meta,
+                              allow_readd=True)
         # files store PHYSICAL names; a rival RENAME between retries
         # invalidates already-written files (wrong physical names) —
         # discard and rewrite under the new mapping
-        colmap = _colmap_at(table, base)
+        colmap = meta["colmap"]
         # re-adding a DROPPED column name: assign a FRESH physical
         # name so the old files' bytes (under the retired name) can
         # never resurrect — the new column starts NULL everywhere
-        retired = _retired_at(table, base)
+        retired = meta["retired"]
         readds = [c for c in df.columns
                   if c in retired and c not in (prior or {})]
         if readds:
@@ -1231,7 +1186,7 @@ def tx_append(df: DataFrame, table: str,
                     i += 1
                 colmap[c] = f"{c}__{i}"
                 taken.add(f"{c}__{i}")
-        pby = _partition_by_at(table, base)
+        pby = meta["partition_by"]
         if partition_by is not None:
             req = [_phys(colmap, c) for c in partition_by]
             if base < 0:
@@ -1257,24 +1212,24 @@ def tx_append(df: DataFrame, table: str,
         # rival changing the checks mid-write forces TxConflict at
         # base+1 and this re-validates (the same pinning as the schema
         # check). A violation discards the uncommitted files.
-        checks = _checks_at(table, base)
+        checks = meta["checks"]
         if checks:
             try:
                 _validate_checks(
                     _read_written(df.sparkSession, actions, table,
-                                  colmap, base),
+                                  meta, colmap),
                     checks, table)
             except ValueError:
                 _discard_written(table, actions)
                 raise
         # record the MERGED schema: a narrow source never regresses a
         # widened table; a widening/evolving source promotes it
-        # (prior comes back from the check — one commit-file read)
         schema = _merged_schema(prior, _schema_fields(df)) if prior \
             else _schema_fields(df)
         try:
-            _commit(table, base + 1, actions, txn, schema,
-                    colmap=colmap, partition_by=pby)
+            _commit(table, base + 1, actions, txn,
+                    **dict(meta, schema=schema, colmap=colmap,
+                           partition_by=pby))
             return base + 1
         except TxConflict:
             continue
@@ -1284,7 +1239,7 @@ def tx_append(df: DataFrame, table: str,
 
 
 def _commit_rmw(table: str, base: int, actions: list[dict],
-                read_set: set, schema: dict | None = None) -> int:
+                read_set: set, meta: dict, **changes) -> int:
     """Commit a read-modify-write op (delete/merge/compact) with
     Delta-style LOGICAL conflict resolution (the ConflictChecker /
     WriteSerializable behavior): losing the version race to a rival
@@ -1298,15 +1253,15 @@ def _commit_rmw(table: str, base: int, actions: list[dict],
     commit was already cleaned away raises TxConflict: the op's
     derivation is genuinely stale and the CALLER must re-derive.
     At 100 TB this is the difference between nightly compaction
-    blocking every ingest writer and the two proceeding unbothered."""
-    schema0 = _schema_at(table, base)
-    checks0 = _checks_at(table, base)
-    colmap0 = _colmap_at(table, base)
-    pby0 = _partition_by_at(table, base)
+    blocking every ingest writer and the two proceeding unbothered.
+    `meta` is the metadata record at `base`; `changes` overlay it
+    (see _commit)."""
     v = base
     for _ in range(20):
         try:
-            _commit(table, v + 1, actions, schema=schema)
+            # a retry commits past rivals whose metadata equals `meta`
+            # (checked below), so `meta` stays the prior record
+            _commit(table, v + 1, actions, **dict(meta, **changes))
             return v + 1
         except TxConflict:
             latest = latest_version(table)
@@ -1325,13 +1280,12 @@ def _commit_rmw(table: str, base: int, actions: list[dict],
                             f"concurrent commit {rv} {a['op']}d "
                             f"{a['file']}, which this operation read "
                             "— re-derive from the latest snapshot")
-            if (_schema_at(table, latest) != schema0
-                    or _checks_at(table, latest) != checks0
-                    or _colmap_at(table, latest) != colmap0
-                    or _partition_by_at(table, latest) != pby0):
+            # e is the commit at `latest`: its record against base's
+            if _meta_from(e.get) != meta:
                 raise TxConflict(
                     f"concurrent metadata change on {table} "
-                    "(schema/constraints/column mapping/partitioning) "
+                    "(schema/constraints/column mapping/partitioning/"
+                    "dropped columns) "
                     "— re-derive from the latest snapshot")
             v = latest
     raise TxConflict(
@@ -1387,17 +1341,15 @@ def read_table(spark: SparkSession, table: str,
         version = version_at_timestamp(table, timestamp)
     # resolve 'latest' ONCE: files and schema must come from the SAME
     # version — a rival evolution committing between two independent
-    # latest_version() calls would return snapshot-N rows under
-    # schema@N+1 (r13 review finding)
-    if version is None:
-        version = latest_version(table)
-    live = snapshot_files(table, version)
+    # resolutions would return snapshot-N rows under schema@N+1 (r13
+    # review finding); one replay yields both
+    live, _, _, meta = _resolve_snapshot(table, version)
     if not live:
         raise ValueError(f"{table} snapshot is empty")
     files = sorted(live)
     if where is not None:
         col, op, value = where
-        pcol = _phys(_colmap_at(table, version), col)
+        pcol = _phys(meta["colmap"], col)
         # partition prune FIRST (directory-level: exact values, valid
         # even with no stats columns recorded), then min/max stats
         files = [f for f in files
@@ -1410,7 +1362,7 @@ def read_table(spark: SparkSession, table: str,
             # The predicate matches nothing, parquet row-group stats
             # skip the data pages, and zero-match reads are rare.
             files = sorted(live)
-    df = _read_files(spark, table, files, version, live)
+    df = _read_files(spark, table, files, meta, live)
     if where is not None:
         col, op, value = where
         df = df.filter(_OPS[op](F.col(col), F.lit(value)))
@@ -1440,8 +1392,8 @@ def tx_delete_where(spark: SparkSession, table: str, where: tuple,
       predicate never deletes a row."""
     col, op, value = where
     base = latest_version(table)
-    live = snapshot_files(table, base)
-    colmap = _colmap_at(table, base)
+    live, _, _, meta = _resolve_snapshot(table, base)
+    colmap = meta["colmap"]
     pcol = _phys(colmap, col)
     touched = [f for f in sorted(live)
                if not _part_prunes(live[f], pcol, op, value)
@@ -1458,7 +1410,7 @@ def tx_delete_where(spark: SparkSession, table: str, where: tuple,
         # read WITH the current DVs applied: rows already deleted must
         # not be re-recorded; pred IS TRUE keeps NULL rows out
         hits = (
-            _read_files(spark, table, touched, base, live)
+            _read_files(spark, table, touched, meta, live)
             .filter(pred.eqNullSafe(F.lit(True)))
             .select(
                 _rel_file_expr().alias("file"),
@@ -1474,20 +1426,20 @@ def tx_delete_where(spark: SparkSession, table: str, where: tuple,
             shutil.rmtree(dest, ignore_errors=True)
             return base
         actions = [{"op": "dv", "file": f, "dv": sub} for f in dv_files]
-        return _commit_rmw(table, base, actions, set(touched))
+        return _commit_rmw(table, base, actions, set(touched), meta)
     # NULL-safe survivor filter: ~(col op value) is NULL (not
     # false) when the column is NULL, and a plain filter drops
     # NULL rows — silently deleting rows the predicate never
     # matched. A delete keeps every row whose predicate is not
     # TRUE, so coalesce the negation to TRUE for NULLs.
-    survivors = _read_files(spark, table, touched, base, live).filter(
+    survivors = _read_files(spark, table, touched, meta, live).filter(
         F.coalesce(~pred, F.lit(True)))
     actions = [{"op": "remove", "file": f} for f in touched]
     actions += _write_files(_to_physical(survivors, colmap), table,
                             [_phys(colmap, c) for c in stats_cols or []],
-                            _partition_by_at(table, base))
+                            meta["partition_by"])
     # schema carried forward; blind-append rivals commute (_commit_rmw)
-    return _commit_rmw(table, base, actions, set(touched))
+    return _commit_rmw(table, base, actions, set(touched), meta)
 
 
 def _cluster(df: DataFrame, cluster_by, target_files: int) -> DataFrame:
@@ -1530,15 +1482,15 @@ def tx_compact(spark: SparkSession, table: str, target_files: int = 1,
     (Morton-interleaved ranks — both columns prune alone, the Delta
     OPTIMIZE ZORDER layout)."""
     base = latest_version(table)
-    live = snapshot_files(table, base)
-    colmap = _colmap_at(table, base)
-    df = _read_files(spark, table, sorted(live), base, live)
+    live, _, _, meta = _resolve_snapshot(table, base)
+    colmap = meta["colmap"]
+    df = _read_files(spark, table, sorted(live), meta, live)
     df = _cluster(df, cluster_by, target_files)
     actions = _write_files(_to_physical(df, colmap), table,
                            [_phys(colmap, c) for c in stats_cols or []],
-                           _partition_by_at(table, base))
+                           meta["partition_by"])
     actions += [{"op": "remove", "file": f} for f in sorted(live)]
-    return _commit_rmw(table, base, actions, set(live))
+    return _commit_rmw(table, base, actions, set(live), meta)
 
 
 def tx_optimize(spark: SparkSession, table: str,
@@ -1567,8 +1519,8 @@ def tx_optimize(spark: SparkSession, table: str,
     untouched by construction (directory-level prune first, then
     stats)."""
     base = latest_version(table)
-    live = snapshot_files(table, base)
-    colmap = _colmap_at(table, base)
+    live, _, _, meta = _resolve_snapshot(table, base)
+    colmap = meta["colmap"]
 
     def _size(f: str, st: dict) -> int:
         b = st.get("bytes")
@@ -1593,14 +1545,14 @@ def tx_optimize(spark: SparkSession, table: str,
             live[f].get("_dvs") for f in small):
         return base
     n_out = max(1, -(-sum(small.values()) // target_file_bytes))
-    df = _read_files(spark, table, sorted(small), base, live)
+    df = _read_files(spark, table, sorted(small), meta, live)
     df = (df.coalesce(n_out) if cluster_by is None
           else _cluster(df, cluster_by, n_out))
     actions = _write_files(_to_physical(df, colmap), table,
                            [_phys(colmap, c) for c in stats_cols or []],
-                           _partition_by_at(table, base))
+                           meta["partition_by"])
     actions += [{"op": "remove", "file": f} for f in sorted(small)]
-    return _commit_rmw(table, base, actions, set(small))
+    return _commit_rmw(table, base, actions, set(small), meta)
 
 
 def tx_merge(spark: SparkSession, table: str, source: DataFrame,
@@ -1667,11 +1619,11 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
     # being schema-checked against the pre-rival version and silently
     # dropped from _schema_fields(merged)
     base = latest_version(table)
+    live, _, _, meta = _resolve_snapshot(table, base)
     prior = _check_schema(source, table, allow_schema_evolution,
-                          at_version=base) or {}
+                          meta) or {}
     lo, hi = klo, khi
-    live = snapshot_files(table, base)
-    colmap = _colmap_at(table, base)
+    colmap = meta["colmap"]
     pkey = _phys(colmap, key)
     if lo is None:
         return base  # empty source: no-op, no empty commit
@@ -1688,7 +1640,7 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
 
     tgt = None
     if touched:
-        tgt = _read_files(spark, table, touched, base, live)
+        tgt = _read_files(spark, table, touched, meta, live)
     repl = None  # keys whose matched TARGET row leaves the table
     if matched_delete is None and matched_update_condition is None:
         # plain upsert: survivors = unmatched targets, write-all source
@@ -1751,7 +1703,7 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
         # positions read WITH current DVs applied (already-masked rows
         # are never re-recorded — the tx_delete_where discipline)
         hits = (
-            _read_files(spark, table, touched, base, live)
+            _read_files(spark, table, touched, meta, live)
             .select(
                 F.col(key),
                 _rel_file_expr().alias("file"),
@@ -1785,7 +1737,7 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
                 res["add_actions"] = _write_files(
                     _to_physical(to_write, colmap), table,
                     [_phys(colmap, c) for c in stats_cols or []],
-                    _partition_by_at(table, base))
+                    meta["partition_by"])
 
         parallel_actions(_write_dv, _write_repl)
         if res["dv_files"]:
@@ -1811,22 +1763,22 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
             actions += _write_files(
                 _to_physical(write_df, colmap), table,
                 [_phys(colmap, c) for c in stats_cols or []],
-                _partition_by_at(table, base))
+                meta["partition_by"])
     # CHECK constraints validated against the WRITTEN BYTES (ADVICE
     # r13, same as tx_append): every row this commit makes newly live
     # is in the new files; a violation discards them uncommitted.
-    checks = _checks_at(table, base)
+    checks = meta["checks"]
     new = [a for a in actions if a["op"] == "add"]
     if checks and new:
         try:
             _validate_checks(
-                _read_written(spark, new, table, colmap, base),
+                _read_written(spark, new, table, meta, colmap),
                 checks, table)
         except ValueError:
             _discard_written(table, new)
             raise
     return _commit_rmw(
-        table, base, actions, set(touched),
+        table, base, actions, set(touched), meta,
         schema=_merged_schema(
             prior, _schema_fields(write_df if write_df is not None
                                   else source)))
@@ -1861,7 +1813,7 @@ def _cdf_sides(spark: SparkSession, table: str, from_version: int,
     if from_version >= to_version:
         raise ValueError("tx_changes needs from_version < to_version")
     before = snapshot_files(table, from_version)
-    after = snapshot_files(table, to_version)
+    after, _, _, meta = _resolve_snapshot(table, to_version)
     removed = sorted(f for f in before if f not in after)
     added = sorted(f for f in after if f not in before)
     # a file whose DELETION VECTORS changed between the versions
@@ -1885,7 +1837,7 @@ def _cdf_sides(spark: SparkSession, table: str, from_version: int,
         # reported in the current contract, and a widened generation
         # compares as the same logical values (int 7 == bigint 7).
         # Each side applies ITS OWN version's deletion vectors.
-        df = _read_files(spark, table, src, to_version, live)
+        df = _read_files(spark, table, src, meta, live)
         return df if files else df.limit(0)
 
     return (_read(added + modified, after),
@@ -1905,7 +1857,7 @@ def tx_changes_rows(spark: SparkSession, table: str, from_version: int,
     struct-equal and is filtered out; each side applies its own
     version's deletion vectors."""
     a, b = _cdf_sides(spark, table, from_version, to_version)
-    schema = _schema_at(table, to_version) or {}
+    schema = _meta_at(table, to_version)["schema"] or {}
     cols = [c for c in schema if c != key] or         [c for c in a.columns if c != key]
     av = a.select(F.col(key).alias("_k"), F.struct(*cols).alias("_a"))
     bv = b.select(F.col(key).alias("_k"), F.struct(*cols).alias("_b"))
@@ -1957,7 +1909,7 @@ def tx_read_incremental(spark: SparkSession, table: str,
             added.append(a["file"])
     if not added:
         return None, latest
-    df = _read_files(spark, table, added, latest)
+    df = _read_files(spark, table, added, _meta_at(table, latest))
     return df, latest
 
 
@@ -1977,14 +1929,15 @@ def last_txn_batch(table: str, app: str,
     # made a long-lived tx_sink_batch stream O(commits^2)). A
     # checkpoint at or below `limit` bounds the scan further: its
     # metadata folds every older commit's txn high-water marks.
-    base = _best_checkpoint(table, limit)
-    for v in reversed([v for v in _json_versions(table)
-                       if base < v <= limit]):
+    js, cs = _log_versions(table)
+    base = _best_checkpoint(table, limit, cs)
+    for v in reversed([v for v in js if base < v <= limit]):
         txn = _read_json_commit(table, v).get("txn")
         if txn and txn.get("app") == app:
             return txn["batch"]
     if base >= 0:
-        return _load_checkpoint(table, base)[2].get(app)
+        _, _, txns = _load_checkpoint(table, base)
+        return txns.get(app)
     return None
 
 
@@ -2078,14 +2031,14 @@ def tx_restore(table: str, to_version: int,
     the constraints currently in force and a violation raises without
     committing."""
     base = latest_version(table)
-    target = snapshot_files(table, to_version)  # loud if vacuumed/cleaned
-    current = snapshot_files(table, base)
+    # loud if vacuumed/cleaned
+    target, _, _, tmeta = _resolve_snapshot(table, to_version)
+    current, _, _, meta = _resolve_snapshot(table, base)
     if spark is not None:
-        checks = _checks_at(table, base)
+        checks = meta["checks"]
         if checks and target:
             _validate_checks(
-                _read_files(spark, table, sorted(target), to_version,
-                            target),
+                _read_files(spark, table, sorted(target), tmeta, target),
                 checks, table)
     # a file live in BOTH snapshots whose stats differ (a deletion
     # vector landed after the target version) must also roll back:
@@ -2100,16 +2053,14 @@ def tx_restore(table: str, to_version: int,
                 for f in sorted(target) if f not in current]
     actions += [{"op": "add", "file": f, "stats": target[f]}
                 for f in changed]
-    if not actions and (
-            _schema_at(table, to_version) == _schema_at(table, base)
-            and _colmap_at(table, to_version) == _colmap_at(table, base)):
+    if not actions and all(tmeta[k] == meta[k] for k in ("schema", "colmap")):
         return base
     # full state restore: the TARGET version's schema AND column
     # mapping come back together (a restore across a rename or a
     # column drop rolls the logical contract back — possibly with
     # ZERO file actions, a pure metadata restore)
-    _commit(table, base + 1, actions, schema=_schema_at(table, to_version),
-            colmap=_colmap_at(table, to_version))
+    _commit(table, base + 1, actions, schema=tmeta["schema"],
+            colmap=tmeta["colmap"])
     return base + 1
 
 
@@ -2167,12 +2118,12 @@ def tx_checkpoint(table: str) -> int:
     v = latest_version(table)
     if v < 0:
         raise ValueError(f"{table} has no commits to checkpoint")
-    live, _, base = _resolve_snapshot(table, v)
-    schema = _schema_at(table, v)
+    live, _, base, meta = _resolve_snapshot(table, v)
     txns: dict = {}
     if base >= 0:
-        txns = dict(_load_checkpoint(table, base)[2])
-    for jv in [x for x in _json_versions(table) if base < x <= v]:
+        _, _, txns = _load_checkpoint(table, base)
+    # the replay above proved the tail base+1..v dense
+    for jv in range(base + 1, v + 1):
         txn = _read_json_commit(table, jv).get("txn")
         if txn and "app" in txn:
             prev = txns.get(txn["app"])
@@ -2184,16 +2135,11 @@ def tx_checkpoint(table: str) -> int:
          "stats_json": pa.array([json.dumps(live[f]) for f in files],
                                 pa.string())},
     ).replace_schema_metadata({
-        b"schema_json": json.dumps(schema).encode(),
-        b"txns_json": json.dumps(txns).encode(),
-        b"checks_json": json.dumps(_checks_at(table, v)).encode(),
-        b"colmap_json": json.dumps(_colmap_at(table, v)).encode(),
-        b"partition_by_json": json.dumps(
-            _partition_by_at(table, v)).encode(),
-        b"retired_json": json.dumps(_retired_at(table, v)).encode(),
+        **{_ckpt_key(k): json.dumps(meta[k]).encode() for k in _META},
+        _ckpt_key("txns"): json.dumps(txns).encode(),
         b"version": str(v).encode(),
     })
-    path = os.path.join(_log_path(table), f"{v:011d}{_CKPT_SUFFIX}")
+    path = _ckpt_path(table, v)
     tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     pq.write_table(t, tmp)
     os.replace(tmp, path)
@@ -2240,14 +2186,14 @@ def tx_clean_log(table: str) -> int:
     read path replayable. Pointer missing entirely → fall back to the
     max listed checkpoint (the directory-listing path _best_checkpoint
     would also take)."""
-    cvs = _checkpoint_versions(table)
+    js, cvs = _log_versions(table)
     if not cvs:
         return 0
     c = last_checkpoint_version(table)
     if c is None:
         c = max(cvs)
     removed = 0
-    for v in _json_versions(table):
+    for v in js:
         if v <= c:
             os.remove(os.path.join(_log_path(table), f"{v:011d}.json"))
             removed += 1

@@ -52,9 +52,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
-    _colmap_at,
+    _meta_at,
     _read_json_commit,
-    _schema_at,
     _schema_ddl,
     latest_version,
     snapshot_files,
@@ -67,7 +66,7 @@ def _table_schema_ddl(table: str, version: int | None = None) -> str:
     v = latest_version(table) if version is None else version
     if v < 0:
         raise ValueError(f"txlog source: {table} has no commits")
-    fields = _schema_at(table, v)
+    fields = _meta_at(table, v)["schema"]
     if not fields:
         raise ValueError(
             f"txlog source: {table} records no schema at version {v}")
@@ -187,10 +186,10 @@ class TxLogBatchReader(DataSourceReader):
         self._version = int(v) if v is not None else None
         # logical→physical mapping at the read version (files store
         # physical names; the reader schema is logical)
-        self._colmap = _colmap_at(
+        self._colmap = _meta_at(
             self._path,
             latest_version(self._path) if self._version is None
-            else self._version)
+            else self._version)["colmap"]
 
     def partitions(self):
         live = snapshot_files(self._path, self._version)
@@ -243,7 +242,8 @@ class TxLogStreamReader(DataSourceStreamReader):
         self._seen_v = None  # last version this INSTANCE has seen
         # pinned like the schema: a rename committed after query start
         # applies on restart (files keep physical names either way)
-        self._colmap = _colmap_at(self._path, latest_version(self._path))
+        self._colmap = _meta_at(self._path,
+                                latest_version(self._path))["colmap"]
 
     def initialOffset(self) -> dict:
         self._seen_v = self._start - 1

@@ -38,9 +38,7 @@ def parallel_actions(*thunks) -> None:
     each re-evaluate its whole plan (the r14-measured hazard).
     Every action is awaited; the first failure re-raises after all
     have settled, so no thunk is abandoned mid-write."""
-    import os
-
-    if len(thunks) <= 1 or os.environ.get("SPARK_GRAFT_SEQ_ACTIONS") == "1":
+    if len(thunks) <= 1:
         for t in thunks:
             t()
         return

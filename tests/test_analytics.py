@@ -26,6 +26,9 @@ def test_entry_smoke(spark):
 def test_all_queries_have_callable(spark):
     for name, fn in QUERIES.items():
         assert callable(fn), name
+    # every suite registers or the import fails loudly: a whole suite
+    # vanishing from the registry shows up here as a count drop
+    assert len(QUERIES) == len(ORACLES) == 289
 
 
 def test_harness_detects_mismatches(spark, sf_dir):

@@ -70,9 +70,8 @@ def test_merge_toctou_rival_schema_evolution_conflicts(spark, tmp_path,
     # the exact pre-fix window (check ran, base not yet captured);
     # pre-fix the merge then committed at rival+1 with the rival's
     # column silently dropped from _schema_fields(merged)
-    def hook(df, table, evolve, at_version=None, allow_readd=False):
-        prior = orig(df, table, evolve, at_version=at_version,
-                     allow_readd=allow_readd)
+    def hook(*args, **kwargs):
+        prior = orig(*args, **kwargs)
         if not fired:
             fired.append(True)
             tx_append(_df(spark, [(9, "e", 7)],

@@ -246,12 +246,3 @@ def test_parallel_actions_runs_all_and_propagates_failure():
     with pytest.raises(RuntimeError, match="boom"):
         parallel_actions(boom, slow_ok)
     assert done == ["slow"]  # sibling finished despite the failure
-
-    # sequential kill-switch used by the A/B harness
-    os.environ["SPARK_GRAFT_SEQ_ACTIONS"] = "1"
-    try:
-        seq = []
-        parallel_actions(lambda: seq.append(1), lambda: seq.append(2))
-        assert seq == [1, 2]
-    finally:
-        del os.environ["SPARK_GRAFT_SEQ_ACTIONS"]

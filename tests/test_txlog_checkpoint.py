@@ -51,14 +51,14 @@ def test_checkpoint_read_equivalence_and_tail_replay(spark, tmp_path):
     # THE pin: a post-checkpoint read opens the checkpoint + ZERO json
     # commits; after one more append it replays exactly that ONE tail
     # commit — O(tail), not O(commits)
-    live, replayed, base = _resolve_snapshot(t)
+    live, replayed, base, _ = _resolve_snapshot(t)
     assert (replayed, base) == (0, 2)
     tx_append(_df(spark, [(4, "d")]), t, ["k"])
-    live, replayed, base = _resolve_snapshot(t)
+    live, replayed, base, _ = _resolve_snapshot(t)
     assert (replayed, base) == (1, 2)
     assert _rows(read_table(spark, t)) == [(1, "a"), (3, "c"), (4, "d")]
     # pre-checkpoint time travel still replays from scratch (json kept)
-    live, replayed, base = _resolve_snapshot(t, 1)
+    live, replayed, base, _ = _resolve_snapshot(t, 1)
     assert (replayed, base) == (2, -1)
 
 
@@ -244,7 +244,7 @@ def test_sink_auto_checkpoint_every_k(spark, tmp_path):
     folds its own log — readers stay O(tail) without a maintenance
     job, replay detection survives a subsequent log clean."""
     from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
-        _checkpoint_versions,
+        _log_versions,
         tx_sink_batch,
     )
 
@@ -253,7 +253,7 @@ def test_sink_auto_checkpoint_every_k(spark, tmp_path):
         tx_sink_batch(_df(spark, [(b, f"row{b}")]), b, t, "app1",
                       ["k"], checkpoint_every=2)
     # versions 0..4 committed; checkpoints at the even ones
-    assert _checkpoint_versions(t) == [0, 2, 4]
+    assert _log_versions(t)[1] == [0, 2, 4]
     assert last_checkpoint_version(t) == 4
     tx_clean_log(t)
     # replay of an already-committed batch: detected via the
@@ -346,12 +346,12 @@ def test_long_log_soak_reads_stay_o_tail(spark, tmp_path, monkeypatch):
             txlog.tx_compact(spark, t, 2, ["k"])
             tx_checkpoint(t)
             tx_clean_log(t)
-            live, tail, base = txlog._resolve_snapshot(t)
+            live, tail, base, _ = txlog._resolve_snapshot(t)
             assert tail == 0 and base == latest_version(t)
             assert len(live) <= 2
     # (a) the tail after the last maintenance (at i=80) is exactly the
     # 40 appends since it — never the full 120+-commit history
-    live, tail, base = txlog._resolve_snapshot(t)
+    live, tail, base, _ = txlog._resolve_snapshot(t)
     assert tail == every
     assert tail < n // 2
     # (c) checkpointed read == full replay of the surviving log;
@@ -362,5 +362,86 @@ def test_long_log_soak_reads_stay_o_tail(spark, tmp_path, monkeypatch):
     assert len(via_ckpt) == n
     want = [(i, f"r{i}") for i in range(1, n + 1)]
     assert via_ckpt == sorted(want)
-    live2, tail2, base2 = txlog._resolve_snapshot(t)
+    live2, tail2, base2, _ = txlog._resolve_snapshot(t)
     assert tail2 == 0 and base2 == latest_version(t)
+
+
+def test_public_calls_read_the_log_a_bounded_number_of_times(
+        spark, tmp_path, monkeypatch):
+    """Each public call resolves the table metadata once per version it
+    needs and passes it down: one tx_append lists the log directory
+    once and parses one commit (the record at its base); one tx_merge
+    lists it twice (base capture + snapshot replay) and parses only the
+    commits its replay needs. Re-reading the record field by field
+    cost 9 listings / 7 parses for this append and 21 / 20 for this
+    merge."""
+    t = str(tmp_path / "t")
+    for i in range(4):
+        tx_append(_df(spark, [(i, f"r{i}")]), t, ["k"])
+    counts = {"listdir": 0, "json": 0}
+    real_listdir, real_read = os.listdir, txlog._read_json_commit
+
+    def listdir(path="."):
+        if os.path.basename(os.path.normpath(path)) == "_txlog":
+            counts["listdir"] += 1
+        return real_listdir(path)
+
+    def read_json_commit(table, v):
+        counts["json"] += 1
+        return real_read(table, v)
+
+    monkeypatch.setattr(os, "listdir", listdir)
+    monkeypatch.setattr(txlog, "_read_json_commit", read_json_commit)
+    assert tx_append(_df(spark, [(9, "r9")]), t, ["k"]) == 4
+    assert counts == {"listdir": 1, "json": 1}
+    counts.update(listdir=0, json=0)
+    # no checkpoint: the replay parses all five commits, nothing more
+    assert tx_merge(spark, t, _df(spark, [(1, "m1"), (7, "m7")]), "k",
+                    ["k"]) == 5
+    assert counts["listdir"] <= 2 and counts["json"] <= 5, counts
+    monkeypatch.undo()
+    assert _rows(read_table(spark, t)) == [
+        (0, "r0"), (1, "m1"), (2, "r2"), (3, "r3"), (7, "m7"), (9, "r9")]
+
+
+def test_metadata_record_reads_back_from_commit_and_checkpoint(
+        spark, tmp_path):
+    """All five metadata fields round-trip through both storage paths
+    of the one reader: the JSON commit, then — after tx_clean_log
+    deleted it — the checkpoint's `<field>_json` parquet metadata,
+    whose key set is the on-disk checkpoint format."""
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / "t")
+    tx_append(_df(spark, [(1, "a", "x", 10), (2, "b", "y", 20)],
+                  "k long, s string, p string, n long"),
+              t, ["k"], partition_by=["p"])
+    txlog.tx_set_check(spark, t, "k_pos", ("k", ">=", 0))
+    txlog.tx_rename_column(t, "s", "label")
+    v = txlog.tx_drop_column(t, "n")
+    want = {
+        "schema": {"k": "bigint", "label": "string", "p": "string"},
+        "checks": {"k_pos": ["k", ">=", 0]},
+        "colmap": {"label": "s"},
+        "partition_by": ["p"],
+        "retired": ["n"],
+    }
+    assert txlog._meta_at(t, v) == want
+    assert tx_checkpoint(t) == v
+    tx_clean_log(t)
+    assert not os.path.exists(
+        os.path.join(t, "_txlog", f"{v:011d}.json"))
+    assert txlog._meta_at(t, v) == want
+    assert txlog.table_checks(t) == want["checks"]
+    assert txlog.table_colmap(t) == want["colmap"]
+    assert txlog.table_partition_by(t) == want["partition_by"]
+    md = pq.read_schema(
+        os.path.join(t, "_txlog", f"{v:011d}.checkpoint.parquet")).metadata
+    assert set(md) == {b"schema_json", b"txns_json", b"checks_json",
+                       b"colmap_json", b"partition_by_json",
+                       b"retired_json", b"version"}
+    assert _rows(read_table(spark, t)) == [(1, "a", "x"), (2, "b", "y")]
+    # no commit at the version: the defaults, with the schema None
+    assert txlog._meta_at(t, v + 1) == {
+        "schema": None, "checks": {}, "colmap": {}, "partition_by": [],
+        "retired": []}

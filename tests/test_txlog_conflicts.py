@@ -135,11 +135,11 @@ def test_dv_delete_commutes_with_rival_append(spark, tmp_path,
     orig = txlog._commit_rmw
     fired = []
 
-    def hook(table, base, actions, read_set, schema=None):
+    def hook(*args, **kwargs):
         if not fired:
             fired.append(True)
             tx_append(_df(spark, [(9, "late")]), t, ["k"])
-        return orig(table, base, actions, read_set, schema)
+        return orig(*args, **kwargs)
 
     monkeypatch.setattr(txlog, "_commit_rmw", hook)
     v = tx_delete_where(spark, t, ("s", "=", "F"), ["k"],

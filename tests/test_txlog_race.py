@@ -29,6 +29,7 @@ def _rmw_racer(table, barrier, out_q):
     blind appends — _commit_rmw must commute past them."""
     from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
         _commit_rmw,
+        _meta_at,
     )
 
     base = 0
@@ -37,7 +38,8 @@ def _rmw_racer(table, barrier, out_q):
                 "stats": {"rows": 1}}]
     barrier.wait()   # parent lands rival appends now
     barrier.wait()   # rivals are committed; our base is stale
-    v = _commit_rmw(table, base, actions, {"data/old-0"})
+    v = _commit_rmw(table, base, actions, {"data/old-0"},
+                    _meta_at(table, base))
     out_q.put(v)
 
 
