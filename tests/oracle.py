@@ -122,6 +122,9 @@ def _norm(v, float_digits: int = 9):
 
 
 def assert_matches_oracle(spark_df, sql: str, sf_dir: str):
+    """Assert the query matches the oracle; return its collected Rows,
+    so a caller checking further laws on the result need not build and
+    run the query again."""
     cols, duck_types, oracle_rows = run_oracle(sql, sf_dir)
     oracle_cols = [c.lower() for c in cols]
 
@@ -129,7 +132,8 @@ def assert_matches_oracle(spark_df, sql: str, sf_dir: str):
     spark_types = dict(
         (c.lower(), t) for c, t in spark_df.dtypes
     )
-    spark_rows = [tuple(r) for r in spark_df.collect()]
+    collected = spark_df.collect()
+    spark_rows = [tuple(r) for r in collected]
 
     # Duplicate output names would silently collapse the dicts/index
     # lookups below into comparing the wrong (or the same) column twice.
@@ -183,3 +187,4 @@ def assert_matches_oracle(spark_df, sql: str, sf_dir: str):
         (a, b) for a, b in zip(s_vals, o_vals) if a != b
     ]
     assert s_vals == o_vals, f"values differ; first mismatches: {mism[:5]}"
+    return collected

@@ -10,8 +10,9 @@ from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, sf_dir, name):
+def test_query_matches_oracle(spark, sf_dir, registry_plans, name):
     df = QUERIES[name](spark, sf_dir)
+    registry_plans.record(name, df)
     assert_matches_oracle(df, ORACLES[name], sf_dir)
 
 

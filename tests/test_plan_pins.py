@@ -185,7 +185,7 @@ def test_scan_pruning_on_wide_tables(spark, sf_dir):
     assert "l_comment" not in read and "l_shipmode" not in read, read
 
 
-def test_no_python_udfs_anywhere_in_headline(spark, sf_dir):
+def test_no_python_udfs_anywhere_in_headline(registry_plans):
     """Sweep: every bench headline query that is plain Column algebra
     must stay out of Python row execution (the ANN/mapInPandas paths
     are vectorized Arrow by design and excluded)."""
@@ -197,7 +197,7 @@ def test_no_python_udfs_anywhere_in_headline(spark, sf_dir):
     for name in bench.HEADLINE:
         if name in arrow_ok:
             continue
-        p = _plan(QUERIES[name](spark, sf_dir))
+        p = registry_plans.get(name)[1]
         assert "BatchEvalPython" not in p, name
         assert "CartesianProduct" not in p, name
 
@@ -226,7 +226,7 @@ def test_join_strategy_hints_are_honored(spark, sf_dir):
         assert op in p, (hint, p[:800])
 
 
-def test_registry_output_types_are_driver_hash_portable(spark, sf_dir):
+def test_registry_output_types_are_driver_hash_portable(registry_plans):
     """Registry-wide output-type CONTRACT: every registered query's
     output schema uses only types the external driver's value hash has
     proven portable across its Spark and DuckDB fetch paths. The r9
@@ -249,9 +249,9 @@ def test_registry_output_types_are_driver_hash_portable(spark, sf_dir):
         "string", "boolean", "date", "timestamp", "timestamp_ntz",
     }
     violations = []
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         try:
-            dtypes = fn(spark, sf_dir).dtypes
+            dtypes = registry_plans.get(name)[0]
         except Exception as e:  # a build error is its own violation
             violations.append((name, "<build failed>", str(e)[:120]))
             continue

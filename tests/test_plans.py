@@ -60,11 +60,11 @@ def test_q1_map_side_combine_single_shuffle(spark, sf_dir):
     assert "BatchEvalPython" not in plan  # no Python in the hot path
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
+def test_no_cartesian_products_anywhere(registry_plans):
     # returned_vs_global legitimately cross-joins two 1-row aggregates;
     # everything else must not.
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         if name in ("returned_vs_global", "view_purchase_funnel"):
             continue
-        plan = _plan(fn(spark, sf_dir))
+        plan = registry_plans.get(name)[1]
         assert "CartesianProduct" not in plan, f"cartesian in {name}"

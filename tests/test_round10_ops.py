@@ -268,7 +268,7 @@ def test_embedding_qc_pipeline_matches_oracle_and_stages(spark, sf_dir):
     pipeline's clip frame must equal dim_clip_stats run manually on
     the outlier survivors, and n_dropped must equal the F66 entry's
     outlier count."""
-    assert_matches_oracle(
+    rows = assert_matches_oracle(
         QUERIES["embedding_qc_pipeline"](spark, sf_dir),
         ORACLES["embedding_qc_pipeline"], sf_dir,
     )
@@ -279,7 +279,6 @@ def test_embedding_qc_pipeline_matches_oracle_and_stages(spark, sf_dir):
         load_table,
     )
 
-    rows = QUERIES["embedding_qc_pipeline"](spark, sf_dir).collect()
     flags = QUERIES["embedding_outliers_mad"](spark, sf_dir).collect()
     n_out = sum(1 for r in flags if r["is_outlier"])
     assert rows and all(r["n_dropped"] == n_out for r in rows)
@@ -380,11 +379,10 @@ def test_doc_length_psi_by_source_matches_oracle_and_bounds(
 def test_dup_exposure_by_quality_matches_oracle_and_reconciles(
     spark, sf_dir
 ):
-    assert_matches_oracle(
+    rows = assert_matches_oracle(
         QUERIES["dup_exposure_by_quality"](spark, sf_dir),
         ORACLES["dup_exposure_by_quality"], sf_dir,
     )
-    rows = QUERIES["dup_exposure_by_quality"](spark, sf_dir).collect()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # partition law: bands cover the corpus exactly once
     assert sum(r["n_docs"] for r in rows) == docs.count()
@@ -403,11 +401,10 @@ def test_dup_exposure_by_quality_matches_oracle_and_reconciles(
 
 
 def test_leakage_by_source_matches_oracle_and_reconciles(spark, sf_dir):
-    assert_matches_oracle(
+    rows = assert_matches_oracle(
         QUERIES["leakage_by_source"](spark, sf_dir),
         ORACLES["leakage_by_source"], sf_dir,
     )
-    rows = QUERIES["leakage_by_source"](spark, sf_dir).collect()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     # F62 reconciliation: total leak-doc endpoints must be bounded by

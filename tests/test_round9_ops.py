@@ -408,15 +408,15 @@ def test_corpus_release_dedup_then_split_needs_no_repair(spark, sf_dir):
         load_table,
     )
 
-    assert_matches_oracle(QUERIES["corpus_release_pipeline"](spark, sf_dir),
-                          ORACLES["corpus_release_pipeline"], sf_dir)
+    out = assert_matches_oracle(
+        QUERIES["corpus_release_pipeline"](spark, sf_dir),
+        ORACLES["corpus_release_pipeline"], sf_dir)
     docs = load_table(spark, "documents", sf_dir)
     surv = docs.filter(quality_reasons() == "")
     keepers = keep_best_mapping(surv).where("keep").select("doc_id")
     keeper_docs = surv.join(keepers, "doc_id")
     assert lsh_verified_pairs(keeper_docs).count() == 0
     n_keepers = keepers.count()
-    out = QUERIES["corpus_release_pipeline"](spark, sf_dir).collect()
     assert sum(r["n_docs"] for r in out) == n_keepers
     # and the pipeline actually dropped something at each stage
     assert n_keepers < surv.count() <= docs.count()
@@ -670,8 +670,9 @@ def test_embedding_outliers_match_python(spark, sf_dir):
         load_table,
     )
 
-    assert_matches_oracle(QUERIES["embedding_outliers_mad"](spark, sf_dir),
-                          ORACLES["embedding_outliers_mad"], sf_dir)
+    rows = assert_matches_oracle(
+        QUERIES["embedding_outliers_mad"](spark, sf_dir),
+        ORACLES["embedding_outliers_mad"], sf_dir)
     vecs = {
         r["vec_id"]: [round(float(x) * 1_000_000) for x in r["embedding"]]
         for r in load_table(spark, "embeddings", sf_dir).collect()
@@ -690,7 +691,6 @@ def test_embedding_outliers_match_python(spark, sf_dir):
     med_x2 = s[(n - 1) // 2] + s[n // 2]
     devs = sorted(abs(2 * x - med_x2) for x in dist2.values())
     mad_x4 = devs[(n - 1) // 2] + devs[n // 2]
-    rows = QUERIES["embedding_outliers_mad"](spark, sf_dir).collect()
     assert len(rows) == n
     for r in rows:
         assert r["dist2"] == dist2[r["vec_id"]]
@@ -714,10 +714,10 @@ def test_simhash_radius_audit_laws(spark, sf_dir):
         load_table,
     )
 
-    assert_matches_oracle(QUERIES["simhash_radius_audit"](spark, sf_dir),
-                          ORACLES["simhash_radius_audit"], sf_dir)
-    rows = sorted(QUERIES["simhash_radius_audit"](spark, sf_dir).collect(),
-                  key=lambda r: r["radius"])
+    rows = sorted(
+        assert_matches_oracle(QUERIES["simhash_radius_audit"](spark, sf_dir),
+                              ORACLES["simhash_radius_audit"], sf_dir),
+        key=lambda r: r["radius"])
     assert [r["radius"] for r in rows] == [0, 1, 2, 3]
     for a, b in zip(rows, rows[1:]):
         assert b["n_cand"] >= a["n_cand"] and b["n_true"] >= a["n_true"]
@@ -943,9 +943,9 @@ def test_source_exposure_consistent_with_pair_matrix(spark, sf_dir):
         load_table,
     )
 
-    assert_matches_oracle(QUERIES["source_dup_exposure"](spark, sf_dir),
-                          ORACLES["source_dup_exposure"], sf_dir)
-    rows = QUERIES["source_dup_exposure"](spark, sf_dir).collect()
+    rows = assert_matches_oracle(
+        QUERIES["source_dup_exposure"](spark, sf_dir),
+        ORACLES["source_dup_exposure"], sf_dir)
     docs = load_table(spark, "documents", sf_dir)
     assert sum(r["n_docs"] for r in rows) == docs.count()
     pairs = lsh_verified_pairs(docs).collect()
