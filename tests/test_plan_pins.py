@@ -241,9 +241,11 @@ def test_registry_output_types_are_driver_hash_portable(registry_plans):
     risked on the driver hash and are equally forbidden at the
     boundary — explode/serialize instead.
 
-    Schema-only: builds each plan (no .collect() of results; bounded
-    driver actions during plan construction — seed rows, band-width
-    quantiles — are the entries' documented cost)."""
+    Schema-only: reads each entry's dtypes from the session's plan
+    records, building an entry only if no earlier test did (no
+    .collect() of results; bounded driver actions during plan
+    construction — seed rows, band-width quantiles — are the entries'
+    documented cost)."""
     allowed = {
         "tinyint", "smallint", "int", "bigint", "float", "double",
         "string", "boolean", "date", "timestamp", "timestamp_ntz",
