@@ -1,4 +1,5 @@
-"""Scoped DataFrame persists for within-one-query reuse.
+"""Build-scoped state: DataFrame persists for within-one-query reuse,
+and scratch directories for registered entries that keep state on disk.
 
 DataFrame.persist registers the plan in Spark's CacheManager and is
 NEVER released until an explicit unpersist — unlike RDD caches, the
@@ -16,9 +17,24 @@ The previous frame stays CORRECT if some caller still holds it — it
 just recomputes — so this is pure cache hygiene, not a semantics
 change. It is also NOT cross-run result caching: each call persists
 the freshly built frame; nothing survives or is keyed on inputs.
+
+`scratch_dir(key)` applies the same "one live per key" rule to the
+directories that txlog, streaming-MV and vector-index builds write
+their tables, checkpoints and indexes into: a new directory for `key`
+removes the one handed out before it, and an exit hook removes the
+directories still live when the process ends. The contract this gives
+a caller: a frame returned by a registered build stays valid until the
+next build of the same entry in the same process (the frame reads the
+files lazily, so materialize it before building that entry again).
+The registry maps each key to its one live path and holds no results.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
+import threading
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -38,3 +54,26 @@ def persist_scoped(df: DataFrame, key: str,
     out = df.persist(level)
     _LIVE[key] = out
     return out
+
+
+_SCRATCH: dict[str, str] = {}
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_dir(key: str) -> str:
+    """A fresh directory named after `key`; the one handed out before
+    it for `key` is removed."""
+    with _SCRATCH_LOCK:
+        prev = _SCRATCH.pop(key, None)
+        path = _SCRATCH[key] = tempfile.mkdtemp(prefix=key)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    return path
+
+
+@atexit.register
+def _remove_scratch_dirs() -> None:
+    with _SCRATCH_LOCK:
+        for path in _SCRATCH.values():
+            shutil.rmtree(path, ignore_errors=True)
+        _SCRATCH.clear()

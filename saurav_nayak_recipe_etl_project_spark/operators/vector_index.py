@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
@@ -176,11 +177,9 @@ def ann_index_stream_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterminism, partition-overwrite bug, replay duplication) goes
     RED at the driver. Assignment is a pure function of (vector,
     fixed centroids), so exact equality is the correct bar."""
-    import tempfile
-
     emb = load_table(spark, "embeddings", sf_dir)
     c_mat = train_centroids(emb)
-    tmp = tempfile.mkdtemp(prefix="vec_index_replay_")
+    tmp = scratch_dir("vec_index_replay_")
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
     _add_batch(spark, emb.filter(F.col("vec_id") <= mid), 0,
@@ -208,8 +207,6 @@ def ann_index_partitioned_search(spark: SparkSession,
     recall_ok) vs the exact top-k at the shared per-query floor. The
     directory-pruning property itself (files read ⊆ probed list dirs)
     is asserted on real scan metrics in tests/test_vector_index.py."""
-    import tempfile
-
     import numpy as np
 
     from saurav_nayak_recipe_etl_project_spark.operators.similarity import (
@@ -219,7 +216,7 @@ def ann_index_partitioned_search(spark: SparkSession,
 
     emb = load_table(spark, "embeddings", sf_dir)
     c_mat = train_centroids(emb)
-    tmp = tempfile.mkdtemp(prefix="vec_index_search_")
+    tmp = scratch_dir("vec_index_search_")
     build_index(emb, f"{tmp}/index", c_mat)
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
     queries = e.filter(F.col("vec_id") < N_QUERIES).toPandas()

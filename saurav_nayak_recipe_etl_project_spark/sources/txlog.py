@@ -55,9 +55,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.functions.localframe import (
     local_frame,
 )
+from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 
 _LOG_DIR = "_txlog"
 _HORIZON = "_vacuum_horizon"
@@ -237,11 +239,12 @@ def _best_checkpoint(table: str, version: int, cvs: list[int]) -> int:
 
 
 def _resolve_snapshot(
-        table: str, version: int | None = None
+        table: str, version: int | None = None, txns: dict | None = None
 ) -> tuple[dict, int, int, dict]:
     """Replay to `version` through the best checkpoint at or below it:
     (live files, json commits replayed, checkpoint version used or -1,
-    metadata record at `version`). The replay cost is
+    metadata record at `version`). A `txns` dict passed in receives
+    every app's txn high-water mark as of `version`. The replay cost is
     O(tail-past-checkpoint), not O(commits) — the Delta
     `_last_checkpoint` read path — over ONE log-directory listing.
     Versions are dense by construction (every commit is latest+1), so
@@ -285,10 +288,17 @@ def _resolve_snapshot(
             f"{table} log is missing commits {sorted(set(expected) - set(tail))} "
             f"between checkpoint {base} and version {version} — cannot replay")
     live: dict = {}
+    marks = {} if txns is None else txns
     if base >= 0:
-        live, meta, _ = _load_checkpoint(table, base)
+        live, meta, ckpt_marks = _load_checkpoint(table, base)
+        marks.update(ckpt_marks)
     for v in tail:
         entry = _read_json_commit(table, v)
+        txn = entry.get("txn")
+        if txn and "app" in txn:
+            prev = marks.get(txn["app"])
+            if prev is None or txn["batch"] > prev:
+                marks[txn["app"]] = txn["batch"]
         for a in entry["actions"]:
             if a["op"] == "add":
                 live[a["file"]] = a.get("stats") or {}
@@ -2118,17 +2128,8 @@ def tx_checkpoint(table: str) -> int:
     v = latest_version(table)
     if v < 0:
         raise ValueError(f"{table} has no commits to checkpoint")
-    live, _, base, meta = _resolve_snapshot(table, v)
     txns: dict = {}
-    if base >= 0:
-        _, _, txns = _load_checkpoint(table, base)
-    # the replay above proved the tail base+1..v dense
-    for jv in range(base + 1, v + 1):
-        txn = _read_json_commit(table, jv).get("txn")
-        if txn and "app" in txn:
-            prev = txns.get(txn["app"])
-            if prev is None or txn["batch"] > prev:
-                txns[txn["app"]] = txn["batch"]
+    live, _, _, meta = _resolve_snapshot(table, v, txns)
     files = sorted(live)
     t = pa.table(
         {"file": pa.array(files, pa.string()),
@@ -2201,6 +2202,105 @@ def tx_clean_log(table: str) -> int:
 
 
 # --- registered verification gate -------------------------------------
+#
+# Each acid_* harness scripts a short life of an orders table and emits
+# a readout that its oracle recomputes straight from `orders`. The
+# helpers below are the blocks those scripts share; the oracle SQL
+# states each scenario on its own.
+
+def _orders_table(spark: SparkSession, sf_dir: str, key: str
+                  ) -> tuple[DataFrame, str, int, int]:
+    """(orders' key, status and price; a fresh table directory for the
+    entry `key`; the lowest and highest order key, read in one job —
+    0 and 0 when orders is empty)."""
+    orders = load_table(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_orderstatus", "o_totalprice")
+    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
+    return orders, scratch_dir(key), lo or 0, hi or 0
+
+
+def _cents(price: str = "o_totalprice") -> tuple:
+    """The readout aggregate: n_orders and the price total in integer
+    cents (exact against the oracle at cent boundaries)."""
+    return (F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.round(F.col(price) * 100).cast("long"))
+            .alias("total_cents"))
+
+
+def _files_at(table: str) -> list[list[str]]:
+    """The sorted live file list of every version of `table`."""
+    return [sorted(snapshot_files(table, v))
+            for v in range(latest_version(table) + 1)]
+
+
+def _per_version(spark: SparkSession, table: str, extra=lambda v: [],
+                 by: tuple = ()) -> DataFrame:
+    """Time-travel to every version and union one readout per version:
+    (version, *by, n_orders, total_cents, *extra(version)). The price
+    is read under the name the version's schema gives it."""
+    out = None
+    for v in range(latest_version(table) + 1):
+        snap = read_table(spark, table, version=v)
+        price = "price_usd" if "price_usd" in snap.columns \
+            else "o_totalprice"
+        row = snap.groupBy(*by).agg(*_cents(price)).select(
+            F.lit(v).cast("long").alias("version"), *by,
+            "n_orders", "total_cents", *extra(v))
+        out = row if out is None else out.unionByName(row)
+    return out
+
+
+def _append_halves(orders: DataFrame, table: str, mid: int,
+                   stats: list[str]) -> None:
+    """Commit the keys at or below `mid`, then the rest, 4 files each."""
+    k = F.col("o_orderkey")
+    tx_append(orders.filter(k <= mid).repartition(4), table, stats)
+    tx_append(orders.filter(k > mid).repartition(4), table, stats)
+
+
+def _append_clustered(orders: DataFrame, table: str) -> None:
+    """Commit orders as 8 key-range-clustered files with key stats."""
+    tx_append(orders.repartitionByRange(8, "o_orderkey")
+              .sortWithinPartitions("o_orderkey"), table, ["o_orderkey"])
+
+
+def _reinserts(orders: DataFrame, hi: int) -> DataFrame:
+    """Every 13th key re-inserted beyond the key space as 'N'."""
+    k = F.col("o_orderkey")
+    return orders.filter(k % 13 == 0).select(
+        (k + hi + 1).alias("o_orderkey"),
+        F.lit("N").alias("o_orderstatus"), "o_totalprice")
+
+
+def _clause_batch(orders: DataFrame, hi: int) -> DataFrame:
+    """The full MERGE clause set: %5 keys arrive 'D'; %7 keys (not %5)
+    arrive 'U' at double price; %11 keys (not %5/%7) arrive with a NULL
+    status at triple price; plus the %13 re-inserts."""
+    k, price = F.col("o_orderkey"), F.col("o_totalprice")
+    return orders.filter((k % 5 == 0) | (k % 7 == 0) | (k % 11 == 0)).select(
+        "o_orderkey",
+        F.when(k % 5 == 0, F.lit("D"))
+        .when(k % 7 == 0, F.lit("U"))
+        .otherwise(F.lit(None).cast("string")).alias("o_orderstatus"),
+        F.when(k % 5 == 0, price)
+        .when(k % 7 == 0, price * 2)
+        .otherwise(price * 3).alias("o_totalprice"),
+    ).unionByName(_reinserts(orders, hi))
+
+
+def _upserted(spark: SparkSession, sf_dir: str, key: str) -> str:
+    """An orders table committed range-clustered, then MERGEd with the
+    upsert batch: every 7th key set to 'U' at double price, plus the
+    %13 re-inserts."""
+    orders, table, _, hi = _orders_table(spark, sf_dir, key)
+    _append_clustered(orders, table)
+    updates = orders.filter(F.col("o_orderkey") % 7 == 0).select(
+        "o_orderkey", F.lit("U").alias("o_orderstatus"),
+        (F.col("o_totalprice") * 2).alias("o_totalprice"))
+    tx_merge(spark, table, updates.unionByName(_reinserts(orders, hi)),
+             "o_orderkey", ["o_orderkey"])
+    return table
+
 
 def acid_orders_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry, STRICT VALUE oracle: scripts a 4-commit life
@@ -2211,34 +2311,12 @@ def acid_orders_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash proves log replay, O(delta) append, file-granular delete
     (including that stats pruning never drops a matching file),
     compaction invariance, and time travel."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    table = tempfile.mkdtemp(prefix="txlog_orders_")
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_orders_")
     stats = ["o_orderkey", "o_orderstatus"]
-    tx_append(orders.filter(F.col("o_orderkey") <= mid)
-              .repartition(4), table, stats)
-    tx_append(orders.filter(F.col("o_orderkey") > mid)
-              .repartition(4), table, stats)
+    _append_halves(orders, table, (lo + hi) // 2, stats)
     tx_delete_where(spark, table, ("o_orderstatus", "=", "F"), stats)
     tx_compact(spark, table, 1, stats)
-    out = None
-    for v in range(latest_version(table) + 1):
-        snap = read_table(spark, table, version=v).agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .alias("total_cents"),
-        ).select(F.lit(v).cast("long").alias("version"),
-                 "n_orders", "total_cents")
-        out = snap if out is None else out.unionByName(snap)
-    return out
+    return _per_version(spark, table)
 
 
 _ACID_ORACLE = """
@@ -2273,31 +2351,8 @@ def acid_orders_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves replace-not-duplicate semantics, insert placement, the
     file-granular rewrite's survivor arithmetic, and that the coarse
     stats prune never skipped a matched file."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    hi = orders.agg(F.max("o_orderkey")).first()[0] or 0
-    table = tempfile.mkdtemp(prefix="txlog_merge_")
-    tx_append(orders.repartitionByRange(8, "o_orderkey")
-              .sortWithinPartitions("o_orderkey"), table, ["o_orderkey"])
-    updates = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey", F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * 2).alias("o_totalprice"))
-    inserts = orders.filter(F.col("o_orderkey") % 13 == 0).select(
-        (F.col("o_orderkey") + hi + 1).alias("o_orderkey"),
-        F.lit("N").alias("o_orderstatus"), "o_totalprice")
-    tx_merge(spark, table, updates.unionByName(inserts), "o_orderkey",
-             ["o_orderkey"])
-    return read_table(spark, table).groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .alias("total_cents"),
-    )
+    table = _upserted(spark, sf_dir, "txlog_merge_")
+    return read_table(spark, table).groupBy("o_orderstatus").agg(*_cents())
 
 
 _MERGE_ORACLE = """
@@ -2335,26 +2390,7 @@ def acid_orders_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     else must be ABSENT — so one hash proves the touched-file diff
     reads exactly the churn: any unchanged row leaking in (or a
     changed one hashing out) reds the driver."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    hi = orders.agg(F.max("o_orderkey")).first()[0] or 0
-    table = tempfile.mkdtemp(prefix="txlog_cdf_")
-    tx_append(orders.repartitionByRange(8, "o_orderkey")
-              .sortWithinPartitions("o_orderkey"), table, ["o_orderkey"])
-    updates = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey", F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * 2).alias("o_totalprice"))
-    inserts = orders.filter(F.col("o_orderkey") % 13 == 0).select(
-        (F.col("o_orderkey") + hi + 1).alias("o_orderkey"),
-        F.lit("N").alias("o_orderstatus"), "o_totalprice")
-    tx_merge(spark, table, updates.unionByName(inserts), "o_orderkey",
-             ["o_orderkey"])
+    table = _upserted(spark, sf_dir, "txlog_cdf_")
     tx_delete_where(spark, table, ("o_orderstatus", "=", "O"),
                     ["o_orderkey"])
     return tx_changes(spark, table, 0, 2, "o_orderkey",
@@ -2389,26 +2425,7 @@ def acid_orders_cdf_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states all four image classes analytically — a wrong value
     in ANY image, a missing pre/post pair, or churn leaking through
     hash-mismatches."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    hi = orders.agg(F.max("o_orderkey")).first()[0] or 0
-    table = tempfile.mkdtemp(prefix="txlog_cdfrows_")
-    tx_append(orders.repartitionByRange(8, "o_orderkey")
-              .sortWithinPartitions("o_orderkey"), table, ["o_orderkey"])
-    updates = orders.filter(F.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey", F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * 2).alias("o_totalprice"))
-    inserts = orders.filter(F.col("o_orderkey") % 13 == 0).select(
-        (F.col("o_orderkey") + hi + 1).alias("o_orderkey"),
-        F.lit("N").alias("o_orderstatus"), "o_totalprice")
-    tx_merge(spark, table, updates.unionByName(inserts), "o_orderkey",
-             ["o_orderkey"])
+    table = _upserted(spark, sf_dir, "txlog_cdfrows_")
     tx_delete_where(spark, table, ("o_orderstatus", "=", "O"),
                     ["o_orderkey"])
     return tx_changes_rows(spark, table, 0, 2, "o_orderkey").select(
@@ -2461,45 +2478,17 @@ def acid_orders_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged table clause-by-clause in SQL; the NULL-status group in
     the output hashes the NULL-safety, and the kept-target rows hash
     the conditional-update fall-through."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    hi = orders.agg(F.max("o_orderkey")).first()[0] or 0
-    table = tempfile.mkdtemp(prefix="txlog_mergedel_")
-    tx_append(orders.repartitionByRange(8, "o_orderkey")
-              .sortWithinPartitions("o_orderkey"), table, ["o_orderkey"])
+    orders, table, _, hi = _orders_table(spark, sf_dir, "txlog_mergedel_")
+    _append_clustered(orders, table)
     tx_checkpoint(table)
     tx_clean_log(table)  # merge must read through the checkpoint
-    k = F.col("o_orderkey")
-    src = orders.filter((k % 5 == 0) | (k % 7 == 0) | (k % 11 == 0)).select(
-        "o_orderkey",
-        F.when(k % 5 == 0, F.lit("D"))
-        .when(k % 7 == 0, F.lit("U"))
-        .otherwise(F.lit(None).cast("string")).alias("o_orderstatus"),
-        F.when(k % 5 == 0, F.col("o_totalprice"))
-        .when(k % 7 == 0, F.col("o_totalprice") * 2)
-        .otherwise(F.col("o_totalprice") * 3).alias("o_totalprice"),
-    ).unionByName(
-        orders.filter(k % 13 == 0).select(
-            (k + hi + 1).alias("o_orderkey"),
-            F.lit("N").alias("o_orderstatus"), "o_totalprice")
-    )
     tx_merge(
-        spark, table, src, "o_orderkey", ["o_orderkey"],
+        spark, table, _clause_batch(orders, hi), "o_orderkey", ["o_orderkey"],
         matched_delete=("o_orderstatus", "=", "D"),
         matched_update_condition=(
             "o_totalprice", "<", MERGE_DELETE_UPDATE_BELOW),
     )
-    return read_table(spark, table).groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .alias("total_cents"),
-    )
+    return read_table(spark, table).groupBy("o_orderstatus").agg(*_cents())
 
 
 _MERGE_DELETE_ORACLE = f"""
@@ -2550,35 +2539,13 @@ def acid_orders_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically (version 3 must equal version 1 exactly), so one
     hash proves the metadata-only rollback rebuilt the old live set,
     the restored schema read works, and nothing else moved."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    table = tempfile.mkdtemp(prefix="txlog_restore_")
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_restore_")
     stats = ["o_orderkey", "o_orderstatus"]
-    tx_append(orders.filter(F.col("o_orderkey") <= mid)
-              .repartition(4), table, stats)
-    tx_append(orders.filter(F.col("o_orderkey") > mid)
-              .repartition(4), table, stats)
+    _append_halves(orders, table, (lo + hi) // 2, stats)
     tx_delete_where(spark, table, ("o_orderstatus", "=", "F"), stats)
     v = tx_restore(table, 1)
     assert v == 3
-    out = None
-    for ver in range(latest_version(table) + 1):
-        snap = read_table(spark, table, version=ver).agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .alias("total_cents"),
-        ).select(F.lit(ver).cast("long").alias("version"),
-                 "n_orders", "total_cents")
-        out = snap if out is None else out.unionByName(snap)
-    return out
+    return _per_version(spark, table)
 
 
 _RESTORE_ORACLE = """
@@ -2614,43 +2581,18 @@ def acid_orders_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact that doesn't) hash-mismatches, alongside any value error
     in the merge-on-read row masking, DV accumulation, time travel
     across DV versions, or the compaction fold."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    q = lo + (hi - lo) // 4 if lo is not None else 0
-    table = tempfile.mkdtemp(prefix="txlog_dv_")
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_dv_")
     stats = ["o_orderkey", "o_orderstatus"]
-    tx_append(orders.filter(F.col("o_orderkey") <= mid)
-              .repartition(4), table, stats)
-    tx_append(orders.filter(F.col("o_orderkey") > mid)
-              .repartition(4), table, stats)
+    _append_halves(orders, table, (lo + hi) // 2, stats)
     tx_delete_where(spark, table, ("o_orderstatus", "=", "F"), stats,
                     deletion_vectors=True)
-    tx_delete_where(spark, table, ("o_orderkey", "<=", q), stats,
-                    deletion_vectors=True)
+    tx_delete_where(spark, table, ("o_orderkey", "<=", lo + (hi - lo) // 4),
+                    stats, deletion_vectors=True)
     tx_compact(spark, table, 1, stats)
-    files_at = [sorted(f for f in snapshot_files(table, v)
-                       if not f.split("/")[1].startswith("dv-"))
-                for v in range(latest_version(table) + 1)]
-    out = None
-    for v in range(latest_version(table) + 1):
-        meta_only = v > 0 and files_at[v] == files_at[v - 1]
-        snap = read_table(spark, table, version=v).agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .alias("total_cents"),
-        ).select(F.lit(v).cast("long").alias("version"),
-                 "n_orders", "total_cents",
-                 F.lit(meta_only).alias("metadata_only"))
-        out = snap if out is None else out.unionByName(snap)
-    return out
+    files_at = [[f for f in fs if not f.split("/")[1].startswith("dv-")]
+                for fs in _files_at(table)]
+    return _per_version(spark, table, lambda v: [F.lit(
+        v > 0 and files_at[v] == files_at[v - 1]).alias("metadata_only")])
 
 
 _DV_ORACLE = """
@@ -2699,57 +2641,21 @@ def acid_orders_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     still live at v; hard-coded TRUE for both merges and FALSE for
     the compact in the oracle, so a DV merge that ever rewrites a
     file on the matched side hash-mismatches)."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    hi = orders.agg(F.max("o_orderkey")).first()[0] or 0
-    table = tempfile.mkdtemp(prefix="txlog_mergedv_")
-    tx_append(orders.repartitionByRange(8, "o_orderkey")
-              .sortWithinPartitions("o_orderkey"), table, ["o_orderkey"])
-    k = F.col("o_orderkey")
-    src1 = orders.filter(
-        (k % 5 == 0) | (k % 7 == 0) | (k % 11 == 0)).select(
-        "o_orderkey",
-        F.when(k % 5 == 0, F.lit("D"))
-        .when(k % 7 == 0, F.lit("U"))
-        .otherwise(F.lit(None).cast("string")).alias("o_orderstatus"),
-        F.when(k % 5 == 0, F.col("o_totalprice"))
-        .when(k % 7 == 0, F.col("o_totalprice") * 2)
-        .otherwise(F.col("o_totalprice") * 3).alias("o_totalprice"),
-    ).unionByName(
-        orders.filter(k % 13 == 0).select(
-            (k + hi + 1).alias("o_orderkey"),
-            F.lit("N").alias("o_orderstatus"), "o_totalprice")
-    )
-    tx_merge(spark, table, src1, "o_orderkey", ["o_orderkey"],
-             matched_delete=("o_orderstatus", "=", "D"),
+    orders, table, _, hi = _orders_table(spark, sf_dir, "txlog_mergedv_")
+    _append_clustered(orders, table)
+    tx_merge(spark, table, _clause_batch(orders, hi), "o_orderkey",
+             ["o_orderkey"], matched_delete=("o_orderstatus", "=", "D"),
              deletion_vectors=True)
-    src2 = orders.filter(k % 3 == 0).select(
+    src2 = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey", F.lit("X").alias("o_orderstatus"),
         (F.col("o_totalprice") * 4).alias("o_totalprice"))
     tx_merge(spark, table, src2, "o_orderkey", ["o_orderkey"],
              deletion_vectors=True)
     tx_compact(spark, table, 1, ["o_orderkey"])
-    files_at = [sorted(snapshot_files(table, v))
-                for v in range(latest_version(table) + 1)]
-    out = None
-    for v in range(latest_version(table) + 1):
-        preserved = v > 0 and set(files_at[v - 1]) <= set(files_at[v])
-        snap = read_table(spark, table, version=v).groupBy(
-            "o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .alias("total_cents"),
-        ).select(F.lit(v).cast("long").alias("version"),
-                 "o_orderstatus", "n_orders", "total_cents",
-                 F.lit(preserved).alias("prev_files_preserved"))
-        out = snap if out is None else out.unionByName(snap)
-    return out
+    files_at = _files_at(table)
+    return _per_version(spark, table, lambda v: [F.lit(
+        v > 0 and set(files_at[v - 1]) <= set(files_at[v])
+    ).alias("prev_files_preserved")], by=("o_orderstatus",))
 
 
 _MERGE_DV_ORACLE = """
@@ -2833,50 +2739,24 @@ def acid_orders_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-coded metadata_only=TRUE witnesses zero files touched; the
     version-99 row is the pruned post-clean read (colmap resolved
     from the checkpoint, stats keyed by the physical name)."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    table = tempfile.mkdtemp(prefix="txlog_rename_")
-    stats = ["o_orderkey", "o_totalprice"]
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_rename_")
+    mid = (lo + hi) // 2
     tx_append(orders.filter(F.col("o_orderkey") <= mid)
-              .repartition(4), table, stats)
+              .repartition(4), table, ["o_orderkey", "o_totalprice"])
     tx_rename_column(table, "o_totalprice", "price_usd")
     tx_append(orders.filter(F.col("o_orderkey") > mid)
               .withColumnRenamed("o_totalprice", "price_usd")
               .repartition(4), table, ["o_orderkey", "price_usd"])
-    files_at = [sorted(snapshot_files(table, v))
-                for v in range(latest_version(table) + 1)]
-    out = None
-    for v in range(latest_version(table) + 1):
-        meta_only = v > 0 and files_at[v] == files_at[v - 1]
-        snap = read_table(spark, table, version=v)
-        price = "price_usd" if "price_usd" in snap.columns \
-            else "o_totalprice"
-        row = snap.agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col(price) * 100).cast("long"))
-            .alias("total_cents"),
-        ).select(F.lit(v).cast("long").alias("version"),
-                 "n_orders", "total_cents",
-                 F.lit(meta_only).alias("metadata_only"))
-        out = row if out is None else out.unionByName(row)
+    files_at = _files_at(table)
+    out = _per_version(spark, table, lambda v: [F.lit(
+        v > 0 and files_at[v] == files_at[v - 1]).alias("metadata_only")])
     # the version reads above are planned (files resolved) pre-clean;
     # the pruned read below must resolve colmap + stats THROUGH the
     # checkpoint — the survival witness
     tx_checkpoint(table)
     tx_clean_log(table)
-    pruned = read_table(spark, table,
-                        where=("o_orderkey", ">", mid)).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("price_usd") * 100).cast("long"))
-        .alias("total_cents"),
+    pruned = read_table(spark, table, where=("o_orderkey", ">", mid)).agg(
+        *_cents("price_usd"),
     ).select(F.lit(99).cast("long").alias("version"),
              "n_orders", "total_cents",
              F.lit(True).alias("metadata_only"))
@@ -2920,18 +2800,8 @@ def acid_orders_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     between proves merge-on-read works on the nested layout. The
     pruned read runs after checkpoint+clean (the spec survives via the
     checkpoint footer)."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    q = lo + (hi - lo) // 4 if lo is not None else 0
-    table = tempfile.mkdtemp(prefix="txlog_part_")
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_part_")
+    mid, q = (lo + hi) // 2, lo + (hi - lo) // 4
     tx_append(orders.filter(F.col("o_orderkey") <= mid)
               .repartition(2), table, ["o_orderkey"],
               partition_by=["o_orderstatus"])
@@ -2942,20 +2812,12 @@ def acid_orders_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ["o_orderkey"], deletion_vectors=True)
     tx_checkpoint(table)
     tx_clean_log(table)
-
-    def _cents(df):
-        return df.agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .alias("total_cents"))
-
     full = read_table(spark, table).groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .alias("total_cents"),
+        *_cents(),
     ).select(F.concat(F.lit("full:"), F.col("o_orderstatus")).alias("grp"),
              "n_orders", "total_cents",
              F.lit(False).alias("scan_pruned"))
+
     def _data_files(df):  # inputFiles also lists the DV anti-join side
         return [f for f in df.inputFiles() if "/data/dv-" not in f]
 
@@ -2964,12 +2826,12 @@ def acid_orders_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned_ok = (len(pfiles) > 0
                  and all("o_orderstatus=F/" in f for f in pfiles)
                  and len(pfiles) < len(snapshot_files(table)))
-    pruned = _cents(pr).select(
+    pruned = pr.agg(*_cents()).select(
         F.lit("pruned:F").alias("grp"), "n_orders", "total_cents",
         F.lit(pruned_ok).alias("scan_pruned"))
     rg = read_table(spark, table, where=("o_orderkey", ">", mid))
     range_ok = 0 < len(_data_files(rg)) < len(snapshot_files(table))
-    ranged = _cents(rg).select(
+    ranged = rg.agg(*_cents()).select(
         F.lit("range").alias("grp"), "n_orders", "total_cents",
         F.lit(range_ok).alias("scan_pruned"))
     return full.unionByName(pruned).unionByName(ranged)
@@ -3011,17 +2873,8 @@ def acid_orders_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-evolution row count for the flag constraint (NULL passes the
     write contract but is counted separately), and every committed
     table must audit n_violate = 0."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    table = tempfile.mkdtemp(prefix="txlog_checks_")
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_checks_")
+    mid = (lo + hi) // 2
     tx_append(orders.filter(F.col("o_orderkey") <= mid)
               .repartition(4), table, ["o_orderkey"])
     tx_append(orders.filter(F.col("o_orderkey") > mid)
@@ -3034,7 +2887,7 @@ def acid_orders_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_set_check(spark, table, "flag_nonneg",
                  ("o_priority_flag", ">=", 0))
     tx_set_check(spark, table, "orderkey_min",
-                 ("o_orderkey", ">=", int(lo or 0)))
+                 ("o_orderkey", ">=", int(lo)))
     return check_audit(spark, table)
 
 
@@ -3084,21 +2937,11 @@ def acid_orders_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file count — an optimize that rewrites the big file (or packs
     nothing) hash-mismatches, alongside any value error in the pack's
     DV fold."""
-    import tempfile
-
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    lo, hi = lo or 0, hi or 0
+    orders, table, lo, hi = _orders_table(spark, sf_dir, "txlog_opt_")
     b0 = lo + (hi - lo) * 6 // 10
     c1 = b0 + (hi - b0) // 3
     c2 = b0 + 2 * (hi - b0) // 3
     e = c2 + (hi - c2) // 2
-    table = tempfile.mkdtemp(prefix="txlog_opt_")
     k = F.col("o_orderkey")
     tx_append(orders.filter(k <= b0).repartition(1), table,
               ["o_orderkey"])
@@ -3115,22 +2958,12 @@ def acid_orders_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     big_bytes = live0[big_file]["bytes"]
     tx_optimize(spark, table, target_file_bytes=big_bytes,
                 stats_cols=["o_orderkey"])
-    files_at = [sorted(snapshot_files(table, v))
-                for v in range(latest_version(table) + 1)]
-    out = None
-    for v in range(latest_version(table) + 1):
-        final = v == latest_version(table)
-        untouched = (final and big_file in files_at[v]
-                     and len(files_at[v]) < len(files_at[v - 1]))
-        snap = read_table(spark, table, version=v).agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .alias("total_cents"),
-        ).select(F.lit(v).cast("long").alias("version"),
-                 "n_orders", "total_cents",
-                 F.lit(untouched).alias("big_untouched"))
-        out = snap if out is None else out.unionByName(snap)
-    return out
+    files_at = _files_at(table)
+    last = len(files_at) - 1
+    return _per_version(spark, table, lambda v: [F.lit(
+        v == last and big_file in files_at[v]
+        and len(files_at[v]) < len(files_at[v - 1])
+    ).alias("big_untouched")])
 
 
 _OPTIMIZE_ORACLE = """

@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.kmeans import (
     _dist2_matrix,
     _seed_matrix,
@@ -516,12 +517,10 @@ def stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank — so one hash proves quantizer determinism, streamed-
     index/batch-assignment equality, replay idempotency, directory-
     pruned candidate completeness, and re-rank arithmetic."""
-    import tempfile
-
     emb = load_table(spark, "embeddings", sf_dir)
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_ann_mv_")
+    tmp = scratch_dir("stream_ann_mv_")
     state = f"{tmp}/state"
     first = emb.filter(F.col("vec_id") <= mid)
     ann_mv_process_batch(first, 0, state)
@@ -640,12 +639,10 @@ def stream_ann_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy analytically from vec_id <= mid, and reruns the G22
     integer JS arithmetic — one hash proves the side-state counts,
     their replay idempotency, and the drift scalar."""
-    import tempfile
-
     emb = load_table(spark, "embeddings", sf_dir)
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_ann_drift_")
+    tmp = scratch_dir("stream_ann_drift_")
     state = f"{tmp}/state"
     first = emb.filter(F.col("vec_id") <= mid)
     ann_mv_process_batch(first, 0, state)
@@ -718,12 +715,10 @@ def stream_ann_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, so one hash proves retraining determinism, the fold's
     reassignment, the generation swap, and that serving reads only
     the new generation."""
-    import tempfile
-
     emb = load_table(spark, "embeddings", sf_dir)
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_ann_rebuild_")
+    tmp = scratch_dir("stream_ann_rebuild_")
     state = f"{tmp}/state"
     first = emb.filter(F.col("vec_id") <= mid)
     ann_mv_process_batch(first, 0, state)

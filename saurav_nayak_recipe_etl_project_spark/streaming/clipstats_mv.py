@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.linalg import MICRO
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 
@@ -189,13 +190,11 @@ def stream_clip_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotency, the fixed-band pooling, and the drift scalar; the
     planted batch separating (js_micro ≫ batches 0-1) is pinned in
     tests, not here (the oracle already hash-verifies the values)."""
-    import tempfile
-
     emb = load_table(spark, "embeddings", sf_dir)
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     c1 = lo + (hi - lo) // 3 if lo is not None else 0
     c2 = lo + 2 * (hi - lo) // 3 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_clip_drift_")
+    tmp = scratch_dir("stream_clip_drift_")
     state = f"{tmp}/state"
     b0 = emb.filter(F.col("vec_id") <= c1)
     clipstats_process_batch(b0, 0, state)
@@ -290,12 +289,10 @@ def stream_clip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately replayed (the at-least-once idempotency contract,
     exercised every run) — then rolls the merged counts up to the
     calibration readout."""
-    import tempfile
-
     emb = load_table(spark, "embeddings", sf_dir)
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="clipstats_mv_")
+    tmp = scratch_dir("clipstats_mv_")
     state = f"{tmp}/state"
     first = emb.filter(F.col("vec_id") <= mid)
     clipstats_process_batch(first, 0, state)

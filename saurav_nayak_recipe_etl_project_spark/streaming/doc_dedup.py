@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.streaming import (
     await_or_raise,
     parallel_actions,
@@ -120,12 +121,10 @@ def dedup_stream_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller doc_id" under an ordered split. Raw kept/dropped output:
     lsh_band_dedup() (replay + planted-dup behavior pinned in
     tests/test_doc_dedup.py)."""
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_lsh_replay_")
+    tmp = scratch_dir("stream_lsh_replay_")
     state, out = f"{tmp}/state", f"{tmp}/out"
     _process_batch(spark, docs.filter(F.col("doc_id") <= mid), 0, state, out)
     _process_batch(spark, docs.filter(F.col("doc_id") > mid), 1, state, out)

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
 
@@ -139,12 +140,10 @@ def stream_mv_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot SQL groupBy bit-for-bit — any double-count (replay bug),
     lost batch, or merge error shows up as a value/hash mismatch at
     the driver, far stronger than an agree-boolean."""
-    import tempfile
-
     events = load_table(spark, "events", sf_dir)
     lo, hi = events.agg(F.min("event_id"), F.max("event_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_mv_")
+    tmp = scratch_dir("stream_mv_")
     state = f"{tmp}/state"
     mv_process_batch(events.filter(F.col("event_id") <= mid), 0, state)
     # replay batch 0 deliberately: idempotent overwrite must not
@@ -196,8 +195,6 @@ def txsource_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     version-offset planning, the Arrow read lane, exactly-once resume
     from the checkpoint (a replay of commits 0-1 in the second
     lifetime would double-count and mismatch), and the IVM merge."""
-    import tempfile
-
     from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
         tx_append,
     )
@@ -207,7 +204,7 @@ def txsource_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = events.agg(F.min("event_id"), F.max("event_id")).first()
     c1 = lo + (hi - lo) // 3 if lo is not None else 0
     c2 = lo + 2 * (hi - lo) // 3 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="txsource_mv_")
+    tmp = scratch_dir("txsource_mv_")
     table, ckpt, state = f"{tmp}/events_tx", f"{tmp}/ckpt", f"{tmp}/state"
     tx_append(events.filter(F.col("event_id") <= c1), table, ["event_id"])
     tx_append(events.filter((F.col("event_id") > c1)

@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.dedup import (
     shingle_rows,
 )
@@ -323,12 +324,10 @@ def stream_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, cross-batch candidate completeness, replay idempotency,
     and exact verify arithmetic — any missed state read, double-write,
     or bucket-prune bug goes RED at the driver."""
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="stream_pair_mv_")
+    tmp = scratch_dir("stream_pair_mv_")
     state = f"{tmp}/state"
     first = docs.filter(F.col("doc_id") <= mid)
     pair_mv_process_batch(first, 0, state)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.text import (
     quality_reasons,
 )
@@ -146,12 +147,10 @@ def stream_quality_scorecard(spark: SparkSession,
     as two doc_id-split batches — batch 0 deliberately replayed (the
     at-least-once idempotency contract, exercised every run) — then
     rolls the merged counts up to the scorecard."""
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir)
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = tempfile.mkdtemp(prefix="scorecard_mv_")
+    tmp = scratch_dir("scorecard_mv_")
     state = f"{tmp}/state"
     first = docs.filter(F.col("doc_id") <= mid)
     scorecard_process_batch(first, 0, state)

@@ -1,7 +1,12 @@
-"""Operator behaviour depends on arguments only: no module of the
-package reads the process environment, except the three that define
-the session and the data location (session.py, sources/catalog.py,
-plans/dump.py)."""
+"""Names that only one or a few package modules may use, checked over
+the source of every module:
+
+- operator behaviour depends on arguments only, so only the three
+  modules that define the session and the data location (session.py,
+  sources/catalog.py, plans/dump.py) read the process environment;
+- scratch directories have one owner, functions/cachereg.py, which
+  keeps one live directory per registered entry and removes them all
+  at exit; any other `mkdtemp` would leak a directory per build."""
 
 from __future__ import annotations
 
@@ -10,28 +15,53 @@ import os
 
 import saurav_nayak_recipe_etl_project_spark as pkg
 
-ALLOWED = {"session.py", os.path.join("sources", "catalog.py"),
-           os.path.join("plans", "dump.py")}
-ENV_NAMES = {"environ", "environb", "getenv", "getenvb"}
+_ENV = {"session.py", os.path.join("sources", "catalog.py"),
+        os.path.join("plans", "dump.py")}
+# name (as an attribute, a bare name or an imported alias) → the
+# modules, relative to the package root, allowed to use it
+ALLOWED = {
+    "environ": _ENV, "environb": _ENV, "getenv": _ENV, "getenvb": _ENV,
+    "mkdtemp": {os.path.join("functions", "cachereg.py")},
+}
 
 
-def _env_reads(path: str) -> list[int]:
+def _uses(path: str) -> dict[str, list[int]]:
+    """{restricted name: lines using it} for one module."""
     with open(path) as f:
         tree = ast.parse(f.read())
-    return [n.lineno for n in ast.walk(tree)
-            if (isinstance(n, ast.Attribute) and n.attr in ENV_NAMES)
-            or (isinstance(n, ast.Name) and n.id in ENV_NAMES)
-            or (isinstance(n, ast.alias) and n.name in ENV_NAMES)]
+    found: dict[str, list[int]] = {}
+    for n in ast.walk(tree):
+        name = (n.attr if isinstance(n, ast.Attribute)
+                else n.id if isinstance(n, ast.Name)
+                else n.name if isinstance(n, ast.alias) else None)
+        if name in ALLOWED:
+            found.setdefault(name, []).append(n.lineno)
+    return found
+
+
+def _violations(names: set[str]) -> dict[str, dict[str, list[int]]]:
+    """{module: {name: lines}} for each use of `names` outside the
+    modules allowed to use it."""
+    root = os.path.dirname(pkg.__file__)
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, root)
+            bad = {name: lines for name, lines in _uses(path).items()
+                   if name in names and rel not in ALLOWED[name]}
+            if bad:
+                out[rel] = bad
+    return out
 
 
 def test_no_environment_reads_outside_session_and_catalog():
-    root = os.path.dirname(pkg.__file__)
-    found = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for name in files:
-            rel = os.path.relpath(os.path.join(dirpath, name), root)
-            if name.endswith(".py") and rel not in ALLOWED:
-                lines = _env_reads(os.path.join(dirpath, name))
-                if lines:
-                    found[rel] = lines
+    found = _violations({"environ", "environb", "getenv", "getenvb"})
     assert not found, f"environment reads in operator code: {found}"
+
+
+def test_no_scratch_directories_outside_cachereg():
+    found = _violations({"mkdtemp"})
+    assert not found, f"mkdtemp outside functions/cachereg.py: {found}"

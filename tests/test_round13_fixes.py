@@ -43,14 +43,7 @@ from saurav_nayak_recipe_etl_project_spark.streaming.clipstats_mv import (
     compact_clipstats_state,
     read_clipstats_counts,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 # --- 1. tx_merge TOCTOU ------------------------------------------------
@@ -62,7 +55,7 @@ def test_merge_toctou_rival_schema_evolution_conflicts(spark, tmp_path,
     pre-fix behavior schema-checked against the pre-rival version and
     committed a schema that silently dropped the rival's new column."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     orig = txlog._check_schema
     fired = []
 
@@ -74,19 +67,19 @@ def test_merge_toctou_rival_schema_evolution_conflicts(spark, tmp_path,
         prior = orig(*args, **kwargs)
         if not fired:
             fired.append(True)
-            tx_append(_df(spark, [(9, "e", 7)],
+            tx_append(tx_df(spark, [(9, "e", 7)],
                           "k long, s string, extra int"),
                       t, ["k"], allow_schema_evolution=True)
         return prior
 
     monkeypatch.setattr(txlog, "_check_schema", hook)
     with pytest.raises(TxConflict):
-        tx_merge(spark, t, _df(spark, [(2, "B"), (3, "c")]), "k")
+        tx_merge(spark, t, tx_df(spark, [(2, "B"), (3, "c")]), "k")
     # the rival's evolution SURVIVED: its column is in the live schema
     # and its row is in the table — nothing was silently regressed
     got = read_table(spark, t)
     assert "extra" in got.columns
-    assert _rows(got.select("k", "s")) == [(1, "a"), (2, "b"), (9, "e")]
+    assert tx_rows(got.select("k", "s")) == [(1, "a"), (2, "b"), (9, "e")]
 
 
 def test_merge_retry_after_conflict_sees_evolved_schema(spark, tmp_path,
@@ -95,25 +88,25 @@ def test_merge_retry_after_conflict_sees_evolved_schema(spark, tmp_path,
     the same merge must now be checked against the EVOLVED schema —
     an old-schema source (missing the rival's column) fails loudly."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(9, "e", 7)], "k long, s string, extra int"),
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(9, "e", 7)], "k long, s string, extra int"),
               t, ["k"], allow_schema_evolution=True)
     with pytest.raises(ValueError, match="dropped columns"):
-        tx_merge(spark, t, _df(spark, [(1, "A")]), "k")
+        tx_merge(spark, t, tx_df(spark, [(1, "A")]), "k")
 
 
 # --- 2. checkpoint pointer monotonicity --------------------------------
 
 def test_checkpoint_pointer_never_regresses(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     tx_checkpoint(t)
     # simulate a rival having already published a NEWER pointer while
     # this (slower) checkpointer was folding an older version
     ptr = os.path.join(txlog._log_path(t), txlog._CKPT_PTR)
     with open(ptr, "w") as f:
         f.write(json.dumps({"version": 999}))
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     tx_checkpoint(t)  # folds v1 < 999: must NOT move the pointer back
     assert last_checkpoint_version(t) == 999
 
@@ -125,9 +118,9 @@ def test_clean_log_trusts_pointer_not_max_listed(spark, tmp_path):
     pre-fix it cleaned to the max listed checkpoint and left the
     pointer-resolved read path replaying into deleted commits."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     tx_checkpoint(t)  # ckpt 0, ptr 0
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     tx_checkpoint(t)  # ckpt 1, ptr 1
     ptr = os.path.join(txlog._log_path(t), txlog._CKPT_PTR)
     with open(ptr, "w") as f:
@@ -135,7 +128,7 @@ def test_clean_log_trusts_pointer_not_max_listed(spark, tmp_path):
     tx_clean_log(t)
     # the read path resolves base=0 via the pointer and replays the
     # JSON tail — commit 1 must therefore have survived the clean
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
     assert latest_version(t) == 1
 
 
@@ -184,12 +177,12 @@ def test_clipstats_compact_heals_crashed_swap(spark, sf_dir, tmp_path):
     state = str(tmp_path / "state")
     clipstats_process_batch(emb.filter(F.col("vec_id") <= mid), 0, state)
     clipstats_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
-    before = _rows(clip_stats_from_counts(
+    before = tx_rows(clip_stats_from_counts(
         read_clipstats_counts(spark, state)))
     os.rename(f"{state}/counts", f"{state}/counts.fold.old")
     removed = compact_clipstats_state(spark, state)
     assert removed == 1
-    after = _rows(clip_stats_from_counts(
+    after = tx_rows(clip_stats_from_counts(
         read_clipstats_counts(spark, state)))
     assert after == before
 
@@ -201,9 +194,9 @@ def test_regressed_pointer_read_repairs_via_listing(spark, tmp_path):
     directory listing (checkpoint parquet files are never cleaned)
     instead of raising 'missing commits' on a healthy table."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     tx_checkpoint(t)  # ckpt 0
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     tx_checkpoint(t)  # ckpt 1, ptr 1
     tx_clean_log(t)   # cleans commits <= 1 (pointer = 1)
     # NOW the lost-race pointer write lands (simulated directly)
@@ -212,8 +205,8 @@ def test_regressed_pointer_read_repairs_via_listing(spark, tmp_path):
         f.write(json.dumps({"version": 0}))
     # pointer says base=0, commit 1's JSON is gone — the listed
     # checkpoint at 1 must repair the read
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
     # and the next checkpoint heals the pointer itself
-    tx_append(_df(spark, [(3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(3, "c")]), t, ["k"])
     tx_checkpoint(t)
     assert last_checkpoint_version(t) == 2

@@ -37,14 +37,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_restore,
     tx_set_check,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 def _data_dirs(t):
@@ -54,7 +47,7 @@ def _data_dirs(t):
 
 def test_check_name_must_be_identifier(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     for bad in ("k.min", "a`b", "has space", "", "9starts_with_digit",
                 "semi;colon"):
         with pytest.raises(ValueError, match="identifier"):
@@ -66,30 +59,30 @@ def test_check_name_must_be_identifier(spark, tmp_path):
 
 def test_violating_append_discards_files_and_raises(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     tx_set_check(spark, t, "k_positive", ("k", ">", 0))
     before_dirs = _data_dirs(t)
-    before_rows = _rows(read_table(spark, t))
+    before_rows = tx_rows(read_table(spark, t))
     with pytest.raises(ValueError, match="k_positive"):
-        tx_append(_df(spark, [(-5, "bad"), (3, "ok")]), t, ["k"])
+        tx_append(tx_df(spark, [(-5, "bad"), (3, "ok")]), t, ["k"])
     # the rejected write's files are DISCARDED — no orphan data dirs,
     # no new version, table rows unchanged
     assert _data_dirs(t) == before_dirs
     assert latest_version(t) == 1
-    assert _rows(read_table(spark, t)) == before_rows
+    assert tx_rows(read_table(spark, t)) == before_rows
 
 
 def test_violating_merge_discards_files_and_raises(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     tx_set_check(spark, t, "k_positive", ("k", ">", 0))
     before_dirs = _data_dirs(t)
     with pytest.raises(ValueError, match="k_positive"):
-        tx_merge(spark, t, _df(spark, [(2, "upd"), (-7, "bad")]),
+        tx_merge(spark, t, tx_df(spark, [(2, "upd"), (-7, "bad")]),
                  "k", ["k"])
     assert _data_dirs(t) == before_dirs
     assert latest_version(t) == 1
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
 
 
 def test_append_validates_the_written_bytes_not_the_source(
@@ -99,7 +92,7 @@ def test_append_validates_the_written_bytes_not_the_source(
     non-deterministic-source hazard, pinned structurally via the
     validated DataFrame's inputFiles()."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     tx_set_check(spark, t, "k_nonneg", ("k", ">=", 0))
     seen: list = []
     orig = txlog._validate_checks
@@ -110,7 +103,7 @@ def test_append_validates_the_written_bytes_not_the_source(
         return orig(df, checks, table)
 
     monkeypatch.setattr(txlog, "_validate_checks", spy)
-    tx_append(_df(spark, [(5, "ok")]), t, ["k"])
+    tx_append(tx_df(spark, [(5, "ok")]), t, ["k"])
     assert seen, "append with checks must validate"
     files = seen[-1]
     assert files, "validated frame must be file-backed (the read-back)"
@@ -125,7 +118,7 @@ def test_append_validates_the_written_bytes_not_the_source(
 def test_restore_validation_optin_and_default_exemption(spark, tmp_path):
     t = str(tmp_path / "t")
     # v0 contains a row a FUTURE check will forbid
-    tx_append(_df(spark, [(-5, "old"), (1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(-5, "old"), (1, "a")]), t, ["k"])
     # v1 deletes it; v2 records the check (passes current data)
     tx_delete_where(spark, t, ("k", "<", 0), ["k"])
     tx_set_check(spark, t, "k_nonneg", ("k", ">=", 0))
@@ -138,7 +131,7 @@ def test_restore_validation_optin_and_default_exemption(spark, tmp_path):
     # commits without re-validation
     v = tx_restore(t, 0)
     assert v == 3
-    assert _rows(read_table(spark, t)) == [(-5, "old"), (1, "a")]
+    assert tx_rows(read_table(spark, t)) == [(-5, "old"), (1, "a")]
 
 
 def test_cdf_rows_emits_all_four_image_classes(spark, tmp_path):
@@ -147,12 +140,12 @@ def test_cdf_rows_emits_all_four_image_classes(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), t, ["k"])
-    tx_merge(spark, t, _df(spark, [(2, "B"), (9, "new")]), "k", ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b"), (3, "c")]), t, ["k"])
+    tx_merge(spark, t, tx_df(spark, [(2, "B"), (9, "new")]), "k", ["k"])
     tx_delete_where(spark, t, ("s", "=", "c"), ["k"])
     got = tx_changes_rows(spark, t, 0, 2, "k")
     assert set(got.columns) == {"k", "s", "_change_type"}
-    assert _rows(got) == [
+    assert tx_rows(got) == [
         (2, "B", "update_postimage"),
         (2, "b", "update_preimage"),
         (3, "c", "delete"),
@@ -166,7 +159,7 @@ def test_cdf_rows_rewrite_only_churn_is_empty(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     tx_compact(spark, t, 1, ["k"])
     assert tx_changes_rows(spark, t, 0, 1, "k").count() == 0
 
@@ -177,19 +170,19 @@ def test_cdf_rows_across_dv_and_rename(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     tx_rename_column(t, "s", "label")
     # images read under the TO-version contract: renamed column name
     got = tx_changes_rows(spark, t, 0, 2, "k")
     assert set(got.columns) == {"k", "label", "_change_type"}
-    assert _rows(got) == [(2, "F", "delete")]
+    assert tx_rows(got) == [(2, "F", "delete")]
 
 
 def test_write_files_record_byte_stats(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     for a in _read_json_commit(t, 0)["actions"]:
         assert a["op"] == "add"
         real = os.path.getsize(os.path.join(t, a["file"]))

@@ -27,36 +27,29 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_read_incremental,
     vacuum,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 def test_checkpoint_read_equivalence_and_tail_replay(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
-    tx_append(_df(spark, [(3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(3, "c")]), t, ["k"])
     tx_delete_where(spark, t, ("k", "=", 2), ["k"])
-    before = _rows(read_table(spark, t))
+    before = tx_rows(read_table(spark, t))
     v = tx_checkpoint(t)
     assert v == 2 and last_checkpoint_version(t) == 2
     # values identical through the checkpoint path
-    assert _rows(read_table(spark, t)) == before
-    assert _rows(read_table(spark, t, version=0)) == [(1, "a"), (2, "b")]
+    assert tx_rows(read_table(spark, t)) == before
+    assert tx_rows(read_table(spark, t, version=0)) == [(1, "a"), (2, "b")]
     # THE pin: a post-checkpoint read opens the checkpoint + ZERO json
     # commits; after one more append it replays exactly that ONE tail
     # commit — O(tail), not O(commits)
     live, replayed, base, _ = _resolve_snapshot(t)
     assert (replayed, base) == (0, 2)
-    tx_append(_df(spark, [(4, "d")]), t, ["k"])
+    tx_append(tx_df(spark, [(4, "d")]), t, ["k"])
     live, replayed, base, _ = _resolve_snapshot(t)
     assert (replayed, base) == (1, 2)
-    assert _rows(read_table(spark, t)) == [(1, "a"), (3, "c"), (4, "d")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (3, "c"), (4, "d")]
     # pre-checkpoint time travel still replays from scratch (json kept)
     live, replayed, base, _ = _resolve_snapshot(t, 1)
     assert (replayed, base) == (2, -1)
@@ -64,43 +57,43 @@ def test_checkpoint_read_equivalence_and_tail_replay(spark, tmp_path):
 
 def test_checkpoint_idempotent_rewrite(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     assert tx_checkpoint(t) == 0
     assert tx_checkpoint(t) == 0  # same version, rewritten identically
-    assert _rows(read_table(spark, t)) == [(1, "a")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
 
 
 def test_clean_log_reads_schema_and_txns_survive(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"],
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"],
               txn={"app": "app1", "batch": 0})
-    tx_append(_df(spark, [(2, "b")]), t, ["k"],
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"],
               txn={"app": "app1", "batch": 1})
     tx_checkpoint(t)
     removed = tx_clean_log(t)
     assert removed == 2
     assert latest_version(t) == 1
     # snapshot + time-travel semantics after cleaning
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
     with pytest.raises(ValueError, match="does not exist"):
         read_table(spark, t, version=0)
     # txn replay detection resolves from the checkpoint's folded marks
     assert last_txn_batch(t, "app1") == 1
-    v = tx_append(_df(spark, [(2, "b")]), t, ["k"],
+    v = tx_append(tx_df(spark, [(2, "b")]), t, ["k"],
                   txn={"app": "app1", "batch": 1})
     assert v == 1  # replayed batch: no-op
     # schema enforcement resolves from the checkpoint schema
     with pytest.raises(ValueError, match="drift"):
-        tx_append(_df(spark, [(3, "c", 1)], "k long, s string, extra int"),
+        tx_append(tx_df(spark, [(3, "c", 1)], "k long, s string, extra int"),
                   t, ["k"])
     # append feed across the cleaned range is loud, not silently wrong
     with pytest.raises(ValueError, match="re-bootstrap"):
         tx_read_incremental(spark, t, -1)
     # history is honest about folded commits
     assert history(t) == []
-    tx_append(_df(spark, [(9, "z")]), t, ["k"])
+    tx_append(tx_df(spark, [(9, "z")]), t, ["k"])
     assert [e["version"] for e in history(t)] == [2]
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b"), (9, "z")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b"), (9, "z")]
 
 
 def test_append_toctou_rival_replay_no_duplicate(spark, tmp_path,
@@ -110,8 +103,8 @@ def test_append_toctou_rival_replay_no_duplicate(spark, tmp_path,
     the commit into a no-op via TxConflict + re-check — not land a
     duplicate batch at a fresh version number."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(0, "seed")]), t, ["k"])
-    batch = _df(spark, [(1, "x")])
+    tx_append(tx_df(spark, [(0, "seed")]), t, ["k"])
+    batch = tx_df(spark, [(1, "x")])
     orig = txlog._write_files
     fired = []
 
@@ -120,7 +113,7 @@ def test_append_toctou_rival_replay_no_duplicate(spark, tmp_path,
         if not fired:
             fired.append(True)
             # rival lands the SAME (app, batch) inside the window
-            tx_append(_df(spark, [(1, "x")]), t, ["k"],
+            tx_append(tx_df(spark, [(1, "x")]), t, ["k"],
                       txn={"app": "a", "batch": 1})
         return actions
 
@@ -129,13 +122,13 @@ def test_append_toctou_rival_replay_no_duplicate(spark, tmp_path,
     assert v == latest_version(t)
     # exactly ONE copy of the batch row — the replay was detected on
     # the post-conflict re-check
-    assert _rows(read_table(spark, t)) == [(0, "seed"), (1, "x")]
+    assert tx_rows(read_table(spark, t)) == [(0, "seed"), (1, "x")]
 
 
 def test_append_toctou_rival_schema_evolution_is_loud(spark, tmp_path,
                                                       monkeypatch):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(0, "seed")]), t, ["k"])
+    tx_append(tx_df(spark, [(0, "seed")]), t, ["k"])
     orig = txlog._write_files
     fired = []
 
@@ -143,7 +136,7 @@ def test_append_toctou_rival_schema_evolution_is_loud(spark, tmp_path,
         actions = orig(df, table, stats_cols, partition_by)
         if not fired:
             fired.append(True)
-            tx_append(_df(spark, [(5, "e", 7)],
+            tx_append(tx_df(spark, [(5, "e", 7)],
                           "k long, s string, extra int"),
                       t, ["k"], allow_schema_evolution=True)
         return actions
@@ -153,12 +146,12 @@ def test_append_toctou_rival_schema_evolution_is_loud(spark, tmp_path,
     # table) must fail LOUDLY on the post-conflict re-check, not
     # silently regress the schema
     with pytest.raises(ValueError, match="dropped columns"):
-        tx_append(_df(spark, [(1, "x")]), t, ["k"])
+        tx_append(tx_df(spark, [(1, "x")]), t, ["k"])
 
 
 def test_delete_where_noop_commits_nothing(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     v0 = latest_version(t)
     # stats range is [1, 2]: k = 99 overlaps no file
     assert tx_delete_where(spark, t, ("k", "=", 99), ["k"]) == v0
@@ -172,8 +165,8 @@ def test_vacuum_writes_horizon_before_deleting(spark, tmp_path,
     published, so time travel to vacuumed versions fails with the loud
     horizon error, never a missing-parquet scan error."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     tx_delete_where(spark, t, ("k", "=", 1), ["k"])
     real_remove = os.remove
     calls = []
@@ -193,19 +186,19 @@ def test_vacuum_writes_horizon_before_deleting(spark, tmp_path,
         read_table(spark, t, version=0)  # ...which already guards reads
     # the kept snapshot is intact (no data file was actually removed
     # before the simulated crash aborted the loop)
-    assert _rows(read_table(spark, t)) == [(2, "b")]
+    assert tx_rows(read_table(spark, t)) == [(2, "b")]
 
 
 def test_merge_matched_delete_and_conditional_update(spark, tmp_path):
     t = str(tmp_path / "t")
     tx_append(
-        _df(spark, [(1, "old"), (2, "old"), (3, "old"), (4, "old")]),
+        tx_df(spark, [(1, "old"), (2, "old"), (3, "old"), (4, "old")]),
         t, ["k"])
     # source: k=1 → DELETE clause fires; k=2 → update cond TRUE;
     # k=3 → update cond FALSE (target kept); k=4 → delete cond NULL
     # (must NOT fire) + update cond TRUE; k=9 → unmatched insert
     # (clauses don't gate inserts, even with the 'D' flag set)
-    src = _df(
+    src = tx_df(
         spark,
         [(1, "D", 10), (2, "U", 10), (3, "U", 99), (4, None, 10),
          (9, "D", 10)],
@@ -217,26 +210,26 @@ def test_merge_matched_delete_and_conditional_update(spark, tmp_path):
         matched_delete=("s", "=", "D"),
         matched_update_condition=("price", "<", 50),
     )
-    got = _rows(read_table(spark, t).select("k", "s"))
+    got = tx_rows(read_table(spark, t).select("k", "s"))
     assert got == [(2, "U"), (3, "old"), (4, None), (9, "D")]
 
 
 def test_merge_plain_upsert_unchanged_by_clause_machinery(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "old"), (2, "old")]), t, ["k"])
-    tx_merge(spark, t, _df(spark, [(2, "new"), (3, "new")]), "k", ["k"])
-    assert _rows(read_table(spark, t)) == [(1, "old"), (2, "new"),
+    tx_append(tx_df(spark, [(1, "old"), (2, "old")]), t, ["k"])
+    tx_merge(spark, t, tx_df(spark, [(2, "new"), (3, "new")]), "k", ["k"])
+    assert tx_rows(read_table(spark, t)) == [(1, "old"), (2, "new"),
                                            (3, "new")]
 
 
 def test_merge_through_checkpointed_cleaned_log(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     tx_checkpoint(t)
     tx_clean_log(t)
-    tx_merge(spark, t, _df(spark, [(2, "B"), (3, "C")]), "k", ["k"],
+    tx_merge(spark, t, tx_df(spark, [(2, "B"), (3, "C")]), "k", ["k"],
              matched_delete=("s", "=", "zzz"))
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "B"), (3, "C")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "B"), (3, "C")]
 
 
 def test_sink_auto_checkpoint_every_k(spark, tmp_path):
@@ -250,7 +243,7 @@ def test_sink_auto_checkpoint_every_k(spark, tmp_path):
 
     t = str(tmp_path / "t")
     for b in range(5):
-        tx_sink_batch(_df(spark, [(b, f"row{b}")]), b, t, "app1",
+        tx_sink_batch(tx_df(spark, [(b, f"row{b}")]), b, t, "app1",
                       ["k"], checkpoint_every=2)
     # versions 0..4 committed; checkpoints at the even ones
     assert _log_versions(t)[1] == [0, 2, 4]
@@ -258,10 +251,10 @@ def test_sink_auto_checkpoint_every_k(spark, tmp_path):
     tx_clean_log(t)
     # replay of an already-committed batch: detected via the
     # checkpoint's folded txn marks, and its re-checkpoint is a no-op
-    tx_sink_batch(_df(spark, [(1, "row1")]), 1, t, "app1",
+    tx_sink_batch(tx_df(spark, [(1, "row1")]), 1, t, "app1",
                   ["k"], checkpoint_every=2)
     assert latest_version(t) == 4
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (0, "row0"), (1, "row1"), (2, "row2"), (3, "row3"), (4, "row4")]
 
 
@@ -277,14 +270,14 @@ def test_restore_metadata_only_rollback(spark, tmp_path):
     import glob
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     tx_delete_where(spark, t, ("k", "=", 1), ["k"])
     n_files_before = len(glob.glob(f"{t}/data/*/*.parquet"))
     v = tx_restore(t, 0)
     assert v == 2
     # metadata-only: zero new data files
     assert len(glob.glob(f"{t}/data/*/*.parquet")) == n_files_before
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b")]
     assert snapshot_files(t, 2) == snapshot_files(t, 0)
     # the feed across the restore shows the row that came back
     feed = {(r["k"], r["change_type"])
@@ -301,9 +294,9 @@ def test_restore_to_vacuumed_version_is_loud(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     tx_delete_where(spark, t, ("k", "=", 1), ["k"])
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     vacuum(t, keep_versions=1)
     with pytest.raises(ValueError, match="vacuumed"):
         tx_restore(t, 0)
@@ -318,15 +311,15 @@ def test_restore_restores_schema_generation(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(2, "b", 7)], "k long, s string, extra int"),
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b", 7)], "k long, s string, extra int"),
               t, ["k"], allow_schema_evolution=True)
     tx_restore(t, 0)
     # old-schema appends pass again; evolved-schema appends need the
     # evolution flag again
-    tx_append(_df(spark, [(3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(3, "c")]), t, ["k"])
     with pytest.raises(ValueError, match="drift"):
-        tx_append(_df(spark, [(4, "d", 9)],
+        tx_append(tx_df(spark, [(4, "d", 9)],
                       "k long, s string, extra int"), t, ["k"])
 
 
@@ -337,18 +330,11 @@ def test_long_log_soak_reads_stay_o_tail(spark, tmp_path, monkeypatch):
     (a) the replayed-commit count == the post-checkpoint tail (never
     O(commits)), (b) the live file count bounded by compaction, and
     (c) a checkpointed read bit-identical to a full-log replay."""
-    import pandas as pd
-
     t = str(tmp_path / "t")
     n = 150  # the r13 verdict's CI-sized soak (600-commit study in NOTES)
     every = 50
     for i in range(1, n + 1):
-        # the same one-row frame as _df, built from pandas: Arrow hands
-        # it to the JVM as one partition, where a row list is split
-        # into one Python task per core, which made each append ~5x
-        # slower (0.8 s vs 0.16 s on 4 cores)
-        row = pd.DataFrame({"k": [i], "s": [f"r{i}"]})
-        tx_append(spark.createDataFrame(row, "k long, s string"), t, ["k"])
+        tx_append(tx_df(spark, [(i, f"r{i}")]), t, ["k"])
         if i % every == 0 and i < n:
             txlog.tx_compact(spark, t, 2, ["k"])
             tx_checkpoint(t)
@@ -365,7 +351,7 @@ def test_long_log_soak_reads_stay_o_tail(spark, tmp_path, monkeypatch):
     # then checkpoint at HEAD and compare against a forced
     # no-checkpoint replay of the full JSON tail
     tx_checkpoint(t)
-    via_ckpt = _rows(read_table(spark, t))
+    via_ckpt = tx_rows(read_table(spark, t))
     assert len(via_ckpt) == n
     want = [(i, f"r{i}") for i in range(1, n + 1)]
     assert via_ckpt == sorted(want)
@@ -379,12 +365,14 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
     needs and passes it down: one tx_append lists the log directory
     once and parses one commit (the record at its base); one tx_merge
     lists it twice (base capture + snapshot replay) and parses only the
-    commits its replay needs. Re-reading the record field by field
-    cost 9 listings / 7 parses for this append and 21 / 20 for this
-    merge."""
+    commits its replay needs; one tx_checkpoint parses each tail commit
+    once, folding the txn marks into the replay. Re-reading the record
+    field by field cost 9 listings / 7 parses for this append and
+    21 / 20 for this merge; a second pass over the tail for the txn
+    marks cost this checkpoint 12 parses."""
     t = str(tmp_path / "t")
     for i in range(4):
-        tx_append(_df(spark, [(i, f"r{i}")]), t, ["k"])
+        tx_append(tx_df(spark, [(i, f"r{i}")]), t, ["k"])
     counts = {"listdir": 0, "json": 0}
     real_listdir, real_read = os.listdir, txlog._read_json_commit
 
@@ -399,15 +387,20 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
 
     monkeypatch.setattr(os, "listdir", listdir)
     monkeypatch.setattr(txlog, "_read_json_commit", read_json_commit)
-    assert tx_append(_df(spark, [(9, "r9")]), t, ["k"]) == 4
+    assert tx_append(tx_df(spark, [(9, "r9")]), t, ["k"]) == 4
     assert counts == {"listdir": 1, "json": 1}
     counts.update(listdir=0, json=0)
     # no checkpoint: the replay parses all five commits, nothing more
-    assert tx_merge(spark, t, _df(spark, [(1, "m1"), (7, "m7")]), "k",
-                    ["k"]) == 5
+    # a row list, not tx_df: built through Arrow, this merge source
+    # changes how many files the merge commits
+    src = spark.createDataFrame([(1, "m1"), (7, "m7")], "k long, s string")
+    assert tx_merge(spark, t, src, "k", ["k"]) == 5
     assert counts["listdir"] <= 2 and counts["json"] <= 5, counts
+    counts.update(listdir=0, json=0)
+    assert tx_checkpoint(t) == 5
+    assert counts["listdir"] <= 2 and counts["json"] <= 6, counts
     monkeypatch.undo()
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (0, "r0"), (1, "m1"), (2, "r2"), (3, "r3"), (7, "m7"), (9, "r9")]
 
 
@@ -420,7 +413,7 @@ def test_metadata_record_reads_back_from_commit_and_checkpoint(
     import pyarrow.parquet as pq
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a", "x", 10), (2, "b", "y", 20)],
+    tx_append(tx_df(spark, [(1, "a", "x", 10), (2, "b", "y", 20)],
                   "k long, s string, p string, n long"),
               t, ["k"], partition_by=["p"])
     txlog.tx_set_check(spark, t, "k_pos", ("k", ">=", 0))
@@ -447,7 +440,7 @@ def test_metadata_record_reads_back_from_commit_and_checkpoint(
     assert set(md) == {b"schema_json", b"txns_json", b"checks_json",
                        b"colmap_json", b"partition_by_json",
                        b"retired_json", b"version"}
-    assert _rows(read_table(spark, t)) == [(1, "a", "x"), (2, "b", "y")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a", "x"), (2, "b", "y")]
     # no commit at the version: the defaults, with the schema None
     assert txlog._meta_at(t, v + 1) == {
         "schema": None, "checks": {}, "colmap": {}, "partition_by": [],

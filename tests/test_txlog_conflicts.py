@@ -26,14 +26,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_rename_column,
     tx_set_check,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 def _rival_hook(monkeypatch, spark, t, rival_fn):
@@ -55,45 +48,45 @@ def _rival_hook(monkeypatch, spark, t, rival_fn):
 
 def test_rival_append_commutes_with_delete(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     _rival_hook(monkeypatch, spark, t,
-                lambda: tx_append(_df(spark, [(9, "late")]), t, ["k"]))
+                lambda: tx_append(tx_df(spark, [(9, "late")]), t, ["k"]))
     v = tx_delete_where(spark, t, ("s", "=", "F"), ["k"])
     # rival took version 1; the delete re-committed at 2 unchanged
     assert v == 2 and latest_version(t) == 2
-    assert _rows(read_table(spark, t)) == [(1, "a"), (9, "late")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (9, "late")]
 
 
 def test_rival_append_survives_concurrent_compact(spark, tmp_path,
                                                   monkeypatch):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     _rival_hook(monkeypatch, spark, t,
-                lambda: tx_append(_df(spark, [(9, "late")]), t, ["k"]))
+                lambda: tx_append(tx_df(spark, [(9, "late")]), t, ["k"]))
     v = tx_compact(spark, t, 1, ["k"])
     assert v == 3
     # the rival's rows are NOT in the compacted file set but stay live
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "b"), (9, "late")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "b"), (9, "late")]
     h = history(t)[-1]
     assert h["removes"] == 2  # only the files compact READ
 
 
 def test_rival_append_commutes_with_merge(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     _rival_hook(monkeypatch, spark, t,
-                lambda: tx_append(_df(spark, [(9, "late")]), t, ["k"]))
-    v = tx_merge(spark, t, _df(spark, [(2, "B"), (5, "new")]), "k", ["k"])
+                lambda: tx_append(tx_df(spark, [(9, "late")]), t, ["k"]))
+    v = tx_merge(spark, t, tx_df(spark, [(2, "B"), (5, "new")]), "k", ["k"])
     assert v == 2
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "a"), (2, "B"), (5, "new"), (9, "late")]
 
 
 def test_rival_remove_of_read_file_still_conflicts(spark, tmp_path,
                                                    monkeypatch):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     # the rival compact runs through the same hook with the flag
     # already fired, so it executes plainly
     _rival_hook(monkeypatch, spark, t,
@@ -104,7 +97,7 @@ def test_rival_remove_of_read_file_still_conflicts(spark, tmp_path,
 
 def test_rival_dv_on_read_file_conflicts(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     _rival_hook(
         monkeypatch, spark, t,
         lambda: tx_delete_where(spark, t, ("k", "=", 1), ["k"],
@@ -119,7 +112,7 @@ def test_rival_metadata_change_conflicts(spark, tmp_path, monkeypatch):
         ("t2", lambda t: tx_rename_column(t, "s", "label")),
     ):
         t = str(tmp_path / sub)
-        tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+        tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
         _rival_hook(monkeypatch, spark, t, lambda t=t: rival(t))
         with pytest.raises(TxConflict, match="metadata"):
             tx_delete_where(spark, t, ("s", "=", "F"), ["k"])
@@ -131,18 +124,18 @@ def test_dv_delete_commutes_with_rival_append(spark, tmp_path,
     """The DV path bypasses _write_files, so hook the position write
     instead: rival append lands between base capture and commit."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     orig = txlog._commit_rmw
     fired = []
 
     def hook(*args, **kwargs):
         if not fired:
             fired.append(True)
-            tx_append(_df(spark, [(9, "late")]), t, ["k"])
+            tx_append(tx_df(spark, [(9, "late")]), t, ["k"])
         return orig(*args, **kwargs)
 
     monkeypatch.setattr(txlog, "_commit_rmw", hook)
     v = tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                         deletion_vectors=True)
     assert v == 2
-    assert _rows(read_table(spark, t)) == [(1, "a"), (9, "late")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (9, "late")]

@@ -32,14 +32,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_restore,
     vacuum,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 def _data_files(t):
@@ -49,7 +42,7 @@ def _data_files(t):
 
 def test_dv_delete_rewrites_nothing_and_reads_correctly(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F"), (3, "c"), (4, "F")]),
+    tx_append(tx_df(spark, [(1, "a"), (2, "F"), (3, "c"), (4, "F")]),
               t, ["k"])
     before = _data_files(t)
     v = tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
@@ -60,31 +53,31 @@ def test_dv_delete_rewrites_nothing_and_reads_correctly(spark, tmp_path):
     h = history(t)
     assert h[-1]["adds"] == 0 and h[-1]["removes"] == 0
     assert h[-1]["dvs"] >= 1
-    assert _rows(read_table(spark, t)) == [(1, "a"), (3, "c")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (3, "c")]
     # time travel: the pre-DV snapshot still shows everything
-    assert len(_rows(read_table(spark, t, version=0))) == 4
+    assert len(tx_rows(read_table(spark, t, version=0))) == 4
 
 
 def test_dv_delete_is_null_safe_and_accumulates(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "F"), (2, None), (3, "O"), (4, "F")])
+    tx_append(tx_df(spark, [(1, "F"), (2, None), (3, "O"), (4, "F")])
               .coalesce(1), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     # NULL predicate rows SURVIVE (IS TRUE semantics)
-    assert _rows(read_table(spark, t)) == [(2, None), (3, "O")]
+    assert tx_rows(read_table(spark, t)) == [(2, None), (3, "O")]
     # second DV on the same file accumulates; already-deleted rows are
     # not re-recorded (read-with-DVs feeds the position scan)
     tx_delete_where(spark, t, ("k", "=", 3), ["k"],
                     deletion_vectors=True)
-    assert _rows(read_table(spark, t)) == [(2, None)]
+    assert tx_rows(read_table(spark, t)) == [(2, None)]
     live = snapshot_files(t)
     assert all(len(st.get("_dvs", [])) == 2 for st in live.values())
 
 
 def test_dv_noop_when_stats_overlap_but_nothing_matches(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (9, "z")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (9, "z")]), t, ["k"])
     v0 = latest_version(t)
     # k=5 overlaps the [1,9] stats range but matches no row
     assert tx_delete_where(spark, t, ("k", "=", 5), ["k"],
@@ -94,22 +87,22 @@ def test_dv_noop_when_stats_overlap_but_nothing_matches(spark, tmp_path):
 
 def test_merge_and_compact_after_dv(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F"), (3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F"), (3, "c")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     # merge must NOT resurrect the DV'd row: target read applies DVs,
     # and the rewrite folds the DV away for the touched file
-    tx_merge(spark, t, _df(spark, [(3, "C"), (5, "e")]), "k", ["k"])
-    assert _rows(read_table(spark, t)) == [(1, "a"), (3, "C"), (5, "e")]
+    tx_merge(spark, t, tx_df(spark, [(3, "C"), (5, "e")]), "k", ["k"])
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (3, "C"), (5, "e")]
     # compaction folds any remaining DVs into clean files
     tx_compact(spark, t, 1, ["k"])
-    assert _rows(read_table(spark, t)) == [(1, "a"), (3, "C"), (5, "e")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (3, "C"), (5, "e")]
     assert all("_dvs" not in st for st in snapshot_files(t).values())
 
 
 def test_cdf_reports_dv_rows_as_removed(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F"), (3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F"), (3, "c")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     ch = sorted((r["k"], r["change_type"])
@@ -119,7 +112,7 @@ def test_cdf_reports_dv_rows_as_removed(spark, tmp_path):
 
 def test_append_feeds_raise_on_dv(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "F"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "F"), (2, "b")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     with pytest.raises(ValueError, match="tx_changes"):
@@ -133,16 +126,16 @@ def test_batch_datasource_masks_dv_positions(spark, tmp_path):
 
     register_txlog_source(spark)
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F"), (3, "c"), (4, "F")]),
+    tx_append(tx_df(spark, [(1, "a"), (2, "F"), (3, "c"), (4, "F")]),
               t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     got = spark.read.format("txlog").option("path", t).load()
-    assert _rows(got) == [(1, "a"), (3, "c")]
+    assert tx_rows(got) == [(1, "a"), (3, "c")]
     # time travel through the source still shows the pre-DV snapshot
     v0 = (spark.read.format("txlog").option("path", t)
           .option("version", 0).load())
-    assert len(_rows(v0)) == 4
+    assert len(tx_rows(v0)) == 4
     # the STREAM raises on the DV commit (append feed cannot carry it)
     from saurav_nayak_recipe_etl_project_spark.streaming import (
         await_or_raise,
@@ -157,20 +150,20 @@ def test_batch_datasource_masks_dv_positions(spark, tmp_path):
 
 def test_dv_survives_checkpoint_and_clean(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     tx_checkpoint(t)
     tx_clean_log(t)
     # the DV list rides inside stats_json through the checkpoint
-    assert _rows(read_table(spark, t)) == [(1, "a")]
-    tx_append(_df(spark, [(3, "c")]), t, ["k"])
-    assert _rows(read_table(spark, t)) == [(1, "a"), (3, "c")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
+    tx_append(tx_df(spark, [(3, "c")]), t, ["k"])
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (3, "c")]
 
 
 def test_vacuum_keeps_referenced_dvs_then_reclaims(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
     dv_files = glob.glob(os.path.join(t, "data", "dv-*", "*.parquet"))
@@ -178,26 +171,26 @@ def test_vacuum_keeps_referenced_dvs_then_reclaims(spark, tmp_path):
     vacuum(t, keep_versions=1)
     # the kept snapshot still reads through the DV — files stay
     assert all(os.path.exists(p) for p in dv_files)
-    assert _rows(read_table(spark, t)) == [(1, "a")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
     # compaction folds the DV away; vacuum then reclaims it
     tx_compact(spark, t, 1, ["k"])
     vacuum(t, keep_versions=1)
     assert not any(os.path.exists(p) for p in dv_files)
-    assert _rows(read_table(spark, t)) == [(1, "a")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
 
 
 def test_restore_across_dv_brings_rows_back(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "F")]), t, ["k"])
     tx_delete_where(spark, t, ("s", "=", "F"), ["k"],
                     deletion_vectors=True)
-    assert _rows(read_table(spark, t)) == [(1, "a")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
     n_data = len(_data_files(t))
     v = tx_restore(t, 0)
     assert v == 2
     # metadata-only: restore across a DV writes no data files
     assert len(_data_files(t)) == n_data
-    assert _rows(read_table(spark, t)) == [(1, "a"), (2, "F")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (2, "F")]
     # CDF across the restore reports the row that came back
     ch = sorted((r["k"], r["change_type"])
                 for r in tx_changes(spark, t, 1, 2, "k", ["s"]).collect())
@@ -214,26 +207,26 @@ def test_check_constraint_enforced_on_append_and_merge(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, 1)], "k long, v long"), t, ["k"])
+    tx_append(tx_df(spark, [(1, 1)], "k long, v long"), t, ["k"])
     tx_set_check(spark, t, "v_nonneg", ("v", ">=", 0))
     assert table_checks(t) == {"v_nonneg": ["v", ">=", 0]}
     # valid append passes; violating append is rejected WHOLE
-    tx_append(_df(spark, [(2, 5)], "k long, v long"), t, ["k"])
+    tx_append(tx_df(spark, [(2, 5)], "k long, v long"), t, ["k"])
     with pytest.raises(ValueError, match="v_nonneg"):
-        tx_append(_df(spark, [(3, 7), (4, -1)], "k long, v long"),
+        tx_append(tx_df(spark, [(3, 7), (4, -1)], "k long, v long"),
                   t, ["k"])
-    assert _rows(read_table(spark, t)) == [(1, 1), (2, 5)]
+    assert tx_rows(read_table(spark, t)) == [(1, 1), (2, 5)]
     # NULL passes (SQL-standard CHECK: violation only when FALSE)
-    tx_append(_df(spark, [(5, None)], "k long, v long"), t, ["k"])
+    tx_append(tx_df(spark, [(5, None)], "k long, v long"), t, ["k"])
     # merge validates its source too
     with pytest.raises(ValueError, match="v_nonneg"):
-        tx_merge(spark, t, _df(spark, [(2, -9)], "k long, v long"), "k")
-    tx_merge(spark, t, _df(spark, [(2, 9)], "k long, v long"), "k")
+        tx_merge(spark, t, tx_df(spark, [(2, -9)], "k long, v long"), "k")
+    tx_merge(spark, t, tx_df(spark, [(2, 9)], "k long, v long"), "k")
     # dropping the constraint re-opens the gate
     tx_drop_check(t, "v_nonneg")
     assert table_checks(t) == {}
-    tx_append(_df(spark, [(6, -3)], "k long, v long"), t, ["k"])
-    assert (6, -3) in _rows(read_table(spark, t))
+    tx_append(tx_df(spark, [(6, -3)], "k long, v long"), t, ["k"])
+    assert (6, -3) in tx_rows(read_table(spark, t))
 
 
 def test_check_constraint_validates_existing_data_and_survives_clean(
@@ -244,7 +237,7 @@ def test_check_constraint_validates_existing_data_and_survives_clean(
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, -5)], "k long, v long"), t, ["k"])
+    tx_append(tx_df(spark, [(1, -5)], "k long, v long"), t, ["k"])
     # existing data violates: the constraint is NOT recorded (Delta
     # ADD CONSTRAINT semantics)
     with pytest.raises(ValueError, match="v_nonneg"):
@@ -256,6 +249,6 @@ def test_check_constraint_validates_existing_data_and_survives_clean(
     tx_clean_log(t)
     assert table_checks(t) == {"v_small": ["v", "<=", 100]}
     with pytest.raises(ValueError, match="v_small"):
-        tx_append(_df(spark, [(2, 500)], "k long, v long"), t, ["k"])
-    tx_append(_df(spark, [(2, 50)], "k long, v long"), t, ["k"])
-    assert _rows(read_table(spark, t)) == [(1, -5), (2, 50)]
+        tx_append(tx_df(spark, [(2, 500)], "k long, v long"), t, ["k"])
+    tx_append(tx_df(spark, [(2, 50)], "k long, v long"), t, ["k"])
+    assert tx_rows(read_table(spark, t)) == [(1, -5), (2, 50)]

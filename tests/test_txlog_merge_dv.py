@@ -25,14 +25,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_compact,
     tx_merge,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 def _data_files(t):
@@ -47,10 +40,10 @@ def _dvs(t):
 
 def test_merge_dv_removes_no_data_files(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")])
               .repartition(2), t, ["k"])
     before = _data_files(t)
-    v = tx_merge(spark, t, _df(spark, [(2, "B"), (9, "new")]), "k",
+    v = tx_merge(spark, t, tx_df(spark, [(2, "B"), (9, "new")]), "k",
                  ["k"], deletion_vectors=True)
     assert v == 1
     # every pre-merge data file still ON DISK and still LIVE
@@ -58,7 +51,7 @@ def test_merge_dv_removes_no_data_files(spark, tmp_path):
     assert set(os.path.join(t, f) for f in snapshot_files(t)) >= set(before)
     h = history(t)[-1]
     assert h["removes"] == 0 and h["dvs"] >= 1 and h["adds"] >= 1
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "a"), (2, "B"), (3, "c"), (4, "d"), (9, "new")]
 
 
@@ -67,34 +60,34 @@ def test_merge_dv_equals_cow_twin_with_clauses(spark, tmp_path):
     results = []
     for mode, sub in ((False, "cow"), (True, "dv")):
         t = str(tmp_path / sub)
-        tx_append(_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")]),
+        tx_append(tx_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")]),
                   t, ["k"])
-        tx_merge(spark, t, _df(spark, src_rows), "k", ["k"],
+        tx_merge(spark, t, tx_df(spark, src_rows), "k", ["k"],
                  matched_delete=("s", "=", "D"),
                  matched_update_condition=("k", "<", 100),
                  deletion_vectors=mode)
-        results.append(_rows(read_table(spark, t)))
+        results.append(tx_rows(read_table(spark, t)))
     assert results[0] == results[1] == [
         (2, "U"), (3, None), (4, "d"), (11, "N")]
 
 
 def test_merge_dv_accumulates_under_repeated_merges(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")])
               .coalesce(1), t, ["k"])
     only_file = list(snapshot_files(t))[0]
-    tx_merge(spark, t, _df(spark, [(1, "A1")]), "k", ["k"],
+    tx_merge(spark, t, tx_df(spark, [(1, "A1")]), "k", ["k"],
              deletion_vectors=True)
     assert len(_dvs(t)[only_file]) == 1
-    tx_merge(spark, t, _df(spark, [(2, "B2")]), "k", ["k"],
+    tx_merge(spark, t, tx_df(spark, [(2, "B2")]), "k", ["k"],
              deletion_vectors=True)
     # second merge ADDS a second vector on the same original file
     assert len(_dvs(t)[only_file]) == 2
     # and re-merging an already-DV'd key masks the LATEST row, not the
     # original (positions are read with current DVs applied)
-    tx_merge(spark, t, _df(spark, [(1, "A3")]), "k", ["k"],
+    tx_merge(spark, t, tx_df(spark, [(1, "A3")]), "k", ["k"],
              deletion_vectors=True)
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "A3"), (2, "B2"), (3, "c"), (4, "d")]
     # no data file was ever removed across the three merges
     assert all(h["removes"] == 0 for h in history(t)[1:])
@@ -102,58 +95,58 @@ def test_merge_dv_accumulates_under_repeated_merges(spark, tmp_path):
 
 def test_merge_dv_folds_under_compaction(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), t, ["k"])
-    tx_merge(spark, t, _df(spark, [(2, "B"), (7, "x")]), "k", ["k"],
+    tx_append(tx_df(spark, [(1, "a"), (2, "b"), (3, "c")]), t, ["k"])
+    tx_merge(spark, t, tx_df(spark, [(2, "B"), (7, "x")]), "k", ["k"],
              deletion_vectors=True)
     assert any(_dvs(t).values())
     tx_compact(spark, t, 1, ["k"])
     # compaction rewrote the files: every DV is gone, values intact
     assert not any(st.get("_dvs") for st in snapshot_files(t).values())
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "a"), (2, "B"), (3, "c"), (7, "x")]
 
 
 def test_merge_dv_pure_delete_writes_no_files(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "D"), (2, "keep")]), t, ["k"])
-    v = tx_merge(spark, t, _df(spark, [(1, "D")]), "k", ["k"],
+    tx_append(tx_df(spark, [(1, "D"), (2, "keep")]), t, ["k"])
+    v = tx_merge(spark, t, tx_df(spark, [(1, "D")]), "k", ["k"],
                  matched_delete=("s", "=", "D"),
                  matched_update_condition=("k", "<", 0),
                  deletion_vectors=True)
     assert v == 1
     h = history(t)[-1]
     assert h["adds"] == 0 and h["removes"] == 0 and h["dvs"] == 1
-    assert _rows(read_table(spark, t)) == [(2, "keep")]
+    assert tx_rows(read_table(spark, t)) == [(2, "keep")]
 
 
 def test_merge_dv_noop_when_nothing_fires(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
     # matched, but neither clause fires (delete cond false, update
     # cond false) and nothing to insert → no-op, no empty commit
-    v = tx_merge(spark, t, _df(spark, [(1, "z")]), "k", ["k"],
+    v = tx_merge(spark, t, tx_df(spark, [(1, "z")]), "k", ["k"],
                  matched_delete=("s", "=", "NEVER"),
                  matched_update_condition=("k", "<", 0),
                  deletion_vectors=True)
     assert v == 0 and latest_version(t) == 0
-    assert _rows(read_table(spark, t)) == [(1, "a")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
 
 
 def test_merge_dv_cdf_reports_update_as_changed(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
-    tx_merge(spark, t, _df(spark, [(2, "B"), (3, "c")]), "k", ["k"],
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_merge(spark, t, tx_df(spark, [(2, "B"), (3, "c")]), "k", ["k"],
              deletion_vectors=True)
     diff = tx_changes(spark, t, 0, 1, "k", ["s"])
-    assert _rows(diff) == [(2, "changed"), (3, "added")]
+    assert tx_rows(diff) == [(2, "changed"), (3, "added")]
 
 
 def test_merge_dv_all_insert_when_no_overlap(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    v = tx_merge(spark, t, _df(spark, [(100, "z")]), "k", ["k"],
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    v = tx_merge(spark, t, tx_df(spark, [(100, "z")]), "k", ["k"],
                  deletion_vectors=True)
     assert v == 1
     h = history(t)[-1]
     assert h["dvs"] == 0 and h["removes"] == 0 and h["adds"] >= 1
-    assert _rows(read_table(spark, t)) == [(1, "a"), (100, "z")]
+    assert tx_rows(read_table(spark, t)) == [(1, "a"), (100, "z")]

@@ -27,16 +27,11 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_delete_where,
     tx_merge,
 )
+from tests.txframes import tx_df
 
 N_OPS = 30
 KEYSPACE = 400
-
-
-def _df(spark, rows):
-    return spark.createDataFrame(
-        [(k, s, v) for k, s, v in rows],
-        "k long, status string, val long",
-    )
+SCHEMA = "k long, status string, val long"
 
 
 def _table_rows(spark, t, version=None):
@@ -58,7 +53,7 @@ def test_random_walk_matches_model(spark, tmp_path):
 
     # version 0: seed append
     seed = fresh_rows(60)
-    tx_append(_df(spark, seed), t, ["k"])
+    tx_append(tx_df(spark, seed, SCHEMA), t, ["k"])
     for k, s, v in seed:
         model[k] = (s, v)
     history.append(dict(model))
@@ -73,12 +68,15 @@ def test_random_walk_matches_model(spark, tmp_path):
             rows = [r for r in fresh_rows(20) if r[0] not in model]
             if not rows:
                 continue
-            tx_append(_df(spark, rows), t, ["k"])
+            tx_append(tx_df(spark, rows, SCHEMA), t, ["k"])
             for k, s, v in rows:
                 model[k] = (s, v)
         elif op == "merge":
             rows = fresh_rows(25)
-            tx_merge(spark, t, _df(spark, rows), "k", ["k"])
+            # a row list, not tx_df: built through Arrow, a merge
+            # source changes how many files the merge commits
+            tx_merge(spark, t, spark.createDataFrame(rows, SCHEMA), "k",
+                     ["k"])
             for k, s, v in rows:
                 model[k] = (s, v)
         elif op == "delete":

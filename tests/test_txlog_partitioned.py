@@ -33,14 +33,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
     tx_rename_column,
     vacuum,
 )
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 ROWS = [(1, "a"), (2, "b"), (3, "a"), (4, "c"), (5, "b"), (6, "a")]
@@ -48,7 +41,7 @@ ROWS = [(1, "a"), (2, "b"), (3, "a"), (4, "c"), (5, "b"), (6, "a")]
 
 def test_partitioned_append_layout_and_log(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     assert table_partition_by(t) == ["s"]
     # hive layout on disk: data/tx-*/s=<v>/part-*.parquet
     deep = glob.glob(os.path.join(t, "data", "tx-*", "s=*", "*.parquet"))
@@ -60,7 +53,7 @@ def test_partitioned_append_layout_and_log(spark, tmp_path):
         p = a["stats"]["_part"]["s"]
         assert isinstance(p, str) and f"s={p}/" in a["file"]
         assert a["stats"]["s"] == [p, p]
-    assert _rows(read_table(spark, t)) == sorted(ROWS)
+    assert tx_rows(read_table(spark, t)) == sorted(ROWS)
 
 
 def test_partition_predicate_never_lists_other_partitions(spark, tmp_path):
@@ -69,44 +62,48 @@ def test_partition_predicate_never_lists_other_partitions(spark, tmp_path):
     scanned file list, with NO stats columns recorded (pure
     directory-level prune from the log's _part values)."""
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, stats_cols=None, partition_by=["s"])
-    tx_append(_df(spark, [(7, "a"), (8, "b")]), t, partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, stats_cols=None, partition_by=["s"])
+    tx_append(tx_df(spark, [(7, "a"), (8, "b")]), t, partition_by=["s"])
     got = read_table(spark, t, where=("s", "=", "a"))
     files = got.inputFiles()
     assert files and all("s=a/" in f for f in files)
     assert len(files) < len(snapshot_files(t))
-    assert _rows(got) == [(1, "a"), (3, "a"), (6, "a"), (7, "a")]
+    assert tx_rows(got) == [(1, "a"), (3, "a"), (6, "a"), (7, "a")]
     # range ops prune too (typed python compare on the values)
     gt = read_table(spark, t, where=("s", ">", "b"))
     assert all("s=c/" in f for f in gt.inputFiles())
-    assert _rows(gt) == [(4, "c")]
+    assert tx_rows(gt) == [(4, "c")]
 
 
 def test_partition_spec_fixed_at_creation(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     with pytest.raises(ValueError, match="fixed at table creation"):
-        tx_append(_df(spark, [(9, "z")]), t, ["k"], partition_by=["k"])
+        tx_append(tx_df(spark, [(9, "z")]), t, ["k"], partition_by=["k"])
     with pytest.raises(ValueError, match="fixed at table creation"):
-        tx_append(_df(spark, [(9, "z")]), t, ["k"], partition_by=[])
+        tx_append(tx_df(spark, [(9, "z")]), t, ["k"], partition_by=[])
     # restating the same spec, or omitting it, both inherit
-    tx_append(_df(spark, [(9, "z")]), t, ["k"], partition_by=["s"])
-    tx_append(_df(spark, [(10, "z")]), t, ["k"])
-    assert len(_rows(read_table(spark, t))) == len(ROWS) + 2
+    tx_append(tx_df(spark, [(9, "z")]), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, [(10, "z")]), t, ["k"])
+    assert len(tx_rows(read_table(spark, t))) == len(ROWS) + 2
     got = read_table(spark, t, where=("s", "=", "z"))
     assert all("s=z/" in f for f in got.inputFiles())
-    assert _rows(got) == [(9, "z"), (10, "z")]
+    assert tx_rows(got) == [(9, "z"), (10, "z")]
 
 
 def test_partitioned_delete_merge_compact_preserve_layout(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     tx_delete_where(spark, t, ("k", "=", 4), ["k"])
-    tx_merge(spark, t, _df(spark, [(2, "b2"), (9, "c")]), "k", ["k"])
+    # a row list, not tx_df: built through Arrow, this merge source
+    # changes how many files the merge and the compact commit
+    tx_merge(spark, t, spark.createDataFrame([(2, "b2"), (9, "c")],
+                                             "k long, s string"),
+             "k", ["k"])
     tx_compact(spark, t, 1, ["k"])
     # every surviving generation is still hive-partitioned
     assert all("=" in f.split("/")[-2] for f in snapshot_files(t))
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "a"), (2, "b2"), (3, "a"), (5, "b"), (6, "a"), (9, "c")]
     # and the rewritten files' partition values still prune
     got = read_table(spark, t, where=("s", "=", "a"))
@@ -115,7 +112,7 @@ def test_partitioned_delete_merge_compact_preserve_layout(spark, tmp_path):
 
 def test_partitioned_dv_delete_zero_rewrites(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     before = sorted(glob.glob(os.path.join(t, "data", "tx-*", "s=*",
                                            "*.parquet")))
     tx_delete_where(spark, t, ("s", "=", "b"), ["k"],
@@ -124,22 +121,22 @@ def test_partitioned_dv_delete_zero_rewrites(spark, tmp_path):
                                           "*.parquet")))
     assert after == before
     assert history(t)[-1]["dvs"] >= 1
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "a"), (3, "a"), (4, "c"), (6, "a")]
 
 
 def test_partitioned_checkpoint_clean_vacuum(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     tx_compact(spark, t, 1, ["k"])
     tx_checkpoint(t)
     tx_clean_log(t)
     assert table_partition_by(t) == ["s"]  # survives via the footer
-    assert _rows(read_table(spark, t)) == sorted(ROWS)
+    assert tx_rows(read_table(spark, t)) == sorted(ROWS)
     # vacuum walks the NESTED dirs and reclaims the pre-compact files
     removed = vacuum(t, keep_versions=1)
     assert removed >= 3  # one file per partition value at least
-    assert _rows(read_table(spark, t)) == sorted(ROWS)
+    assert tx_rows(read_table(spark, t)) == sorted(ROWS)
 
 
 def test_partitioned_txsource_batch_and_stream(spark, tmp_path):
@@ -152,10 +149,10 @@ def test_partitioned_txsource_batch_and_stream(spark, tmp_path):
 
     register_txlog_source(spark)
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     got = spark.read.format("txlog").option("path", t).load()
     # the partition column re-materializes from the log's _part values
-    assert _rows(got) == sorted(ROWS)
+    assert tx_rows(got) == sorted(ROWS)
     out: list = []
     stream = spark.readStream.format("txlog").option("path", t).load()
     await_or_raise(
@@ -173,15 +170,15 @@ def test_partition_values_with_special_chars_roundtrip(spark, tmp_path):
     trap); NULL partition values ride the hive default marker."""
     t = str(tmp_path / "t")
     rows = [(1, "a+b"), (2, "x:y"), (3, "p=q"), (4, None), (5, "w z")]
-    tx_append(_df(spark, rows), t, ["k"], partition_by=["s"])
-    assert _rows(read_table(spark, t)) == rows
+    tx_append(tx_df(spark, rows), t, ["k"], partition_by=["s"])
+    assert tx_rows(read_table(spark, t)) == rows
     got = read_table(spark, t, where=("s", "=", "a+b"))
-    assert _rows(got) == [(1, "a+b")]
+    assert tx_rows(got) == [(1, "a+b")]
     # DV deletes work on the escaped dirs too (the rel-path extraction
     # must match the log's hive-escaped file keys, not the URI form)
     tx_delete_where(spark, t, ("s", "=", "x:y"), ["k"],
                     deletion_vectors=True)
-    assert _rows(read_table(spark, t)) == [
+    assert tx_rows(read_table(spark, t)) == [
         (1, "a+b"), (3, "p=q"), (4, None), (5, "w z")]
     # and the DataSource's worker-side mask agrees
     from saurav_nayak_recipe_etl_project_spark.sources.txsource import (
@@ -190,7 +187,7 @@ def test_partition_values_with_special_chars_roundtrip(spark, tmp_path):
 
     register_txlog_source(spark)
     via_src = spark.read.format("txlog").option("path", t).load()
-    assert _rows(via_src) == [
+    assert tx_rows(via_src) == [
         (1, "a+b"), (3, "p=q"), (4, None), (5, "w z")]
 
 
@@ -202,31 +199,31 @@ def test_streaming_sink_into_partitioned_table(spark, tmp_path):
     )
 
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(0, "a")]), t, ["k"], partition_by=["s"])
-    tx_sink_batch(_df(spark, [(1, "b"), (2, "a")]), 0, t, app="w",
+    tx_append(tx_df(spark, [(0, "a")]), t, ["k"], partition_by=["s"])
+    tx_sink_batch(tx_df(spark, [(1, "b"), (2, "a")]), 0, t, app="w",
                   stats_cols=["k"])
-    tx_sink_batch(_df(spark, [(1, "b"), (2, "a")]), 0, t, app="w",
+    tx_sink_batch(tx_df(spark, [(1, "b"), (2, "a")]), 0, t, app="w",
                   stats_cols=["k"])  # replay: no-op
     assert latest_version(t) == 1
-    assert _rows(read_table(spark, t)) == [(0, "a"), (1, "b"), (2, "a")]
+    assert tx_rows(read_table(spark, t)) == [(0, "a"), (1, "b"), (2, "a")]
     got = read_table(spark, t, where=("s", "=", "b"))
     assert all("s=b/" in f for f in got.inputFiles())
-    assert _rows(got) == [(1, "b")]
+    assert tx_rows(got) == [(1, "b")]
 
 
 def test_rename_partition_column(spark, tmp_path):
     t = str(tmp_path / "t")
-    tx_append(_df(spark, ROWS), t, ["k"], partition_by=["s"])
+    tx_append(tx_df(spark, ROWS), t, ["k"], partition_by=["s"])
     tx_rename_column(t, "s", "cat")
     got = read_table(spark, t)
     assert got.columns == ["k", "cat"]
-    assert _rows(got) == sorted(ROWS)
+    assert tx_rows(got) == sorted(ROWS)
     # pruning under the NEW name (translated to the physical dirs)
     pr = read_table(spark, t, where=("cat", "=", "a"))
     assert all("s=a/" in f for f in pr.inputFiles())
-    assert _rows(pr) == [(1, "a"), (3, "a"), (6, "a")]
+    assert tx_rows(pr) == [(1, "a"), (3, "a"), (6, "a")]
     # appends under the new logical name keep the physical layout
-    tx_append(_df(spark, [(9, "a")], "k long, cat string"), t, ["k"])
+    tx_append(tx_df(spark, [(9, "a")], "k long, cat string"), t, ["k"])
     assert glob.glob(os.path.join(t, "data", "tx-*", "s=a", "*.parquet"))
-    assert _rows(read_table(spark, t, where=("cat", "=", "a"))) == [
+    assert tx_rows(read_table(spark, t, where=("cat", "=", "a"))) == [
         (1, "a"), (3, "a"), (6, "a"), (9, "a")]

@@ -20,14 +20,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txsource import (
     register_txlog_source,
 )
 from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
-
-
-def _df(spark, rows, schema="k long, s string"):
-    return spark.createDataFrame(rows, schema)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.txframes import tx_df, tx_rows
 
 
 @pytest.fixture()
@@ -39,13 +32,13 @@ def txsrc(spark):
 def test_batch_read_parity_and_time_travel(txsrc, tmp_path):
     spark = txsrc
     t = str(tmp_path / "t")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
-    tx_append(_df(spark, [(3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(3, "c")]), t, ["k"])
     got = spark.read.format("txlog").option("path", t).load()
-    assert _rows(got) == _rows(read_table(spark, t))
+    assert tx_rows(got) == tx_rows(read_table(spark, t))
     v0 = (spark.read.format("txlog").option("path", t)
           .option("version", 0).load())
-    assert _rows(v0) == [(1, "a"), (2, "b")]
+    assert tx_rows(v0) == [(1, "a"), (2, "b")]
 
 
 def _drain(spark, t, ckpt, out, **opts):
@@ -72,14 +65,14 @@ def _drain(spark, t, ckpt, out, **opts):
 def test_stream_versions_are_offsets_with_restart(txsrc, tmp_path):
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     out: list = []
     _drain(spark, t, ckpt, out)
     assert sorted(out) == [(1, "a"), (2, "b")]
     # new commits land; a SECOND query lifetime on the same checkpoint
     # consumes ONLY them — versions are the offsets
-    tx_append(_df(spark, [(3, "c")]), t, ["k"])
+    tx_append(tx_df(spark, [(3, "c")]), t, ["k"])
     out2: list = []
     _drain(spark, t, ckpt, out2)
     assert sorted(out2) == [(3, "c")]
@@ -92,7 +85,7 @@ def test_stream_versions_are_offsets_with_restart(txsrc, tmp_path):
 def test_stream_burst_cap_bounds_batches(txsrc, tmp_path):
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(0, "seed")]), t, ["k"])
+    tx_append(tx_df(spark, [(0, "seed")]), t, ["k"])
     out: list = []
     _drain(spark, t, ckpt, out, maxVersionsPerBatch="1")
     # a burst of 3 more commits becomes bounded micro-batches on the
@@ -102,7 +95,7 @@ def test_stream_burst_cap_bounds_batches(txsrc, tmp_path):
     # on Python sources, so each query lifetime here runs exactly one
     # capped micro-batch — the cap shows up as one-commit-per-lifetime.
     for i in range(1, 4):
-        tx_append(_df(spark, [(i, f"r{i}")]), t, ["k"])
+        tx_append(tx_df(spark, [(i, f"r{i}")]), t, ["k"])
     out2: list = []
     for _ in range(3):
         batches = _drain(spark, t, ckpt, out2, maxVersionsPerBatch="1")
@@ -121,16 +114,16 @@ def test_stream_byte_cap_paces_uneven_commits(txsrc, tmp_path):
     and the two trailing tiny ones coalesce under the budget."""
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(0, "seed")]), t, ["k"])
+    tx_append(tx_df(spark, [(0, "seed")]), t, ["k"])
     out: list = []
     _drain(spark, t, ckpt, out)  # consume the seed; cap applies next
-    tx_append(_df(spark, [(1, "tiny1")]).coalesce(1), t, ["k"])
+    tx_append(tx_df(spark, [(1, "tiny1")]).coalesce(1), t, ["k"])
     big = spark.range(2, 5002).select(
         F.col("id").alias("k"),
         F.concat(F.lit("row-"), F.col("id")).alias("s")).coalesce(1)
     tx_append(big, t, ["k"])
-    tx_append(_df(spark, [(9001, "tiny2")]).coalesce(1), t, ["k"])
-    tx_append(_df(spark, [(9002, "tiny3")]).coalesce(1), t, ["k"])
+    tx_append(tx_df(spark, [(9001, "tiny2")]).coalesce(1), t, ["k"])
+    tx_append(tx_df(spark, [(9002, "tiny3")]).coalesce(1), t, ["k"])
     # budget: comfortably above one tiny commit (~1 KB) plus another,
     # far below the 5000-row commit
     sizes = [a["stats"]["bytes"]
@@ -157,7 +150,7 @@ def test_stream_byte_cap_paces_uneven_commits(txsrc, tmp_path):
 def test_stream_removal_commit_is_loud(txsrc, tmp_path):
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a"), (2, "b")]), t, ["k"])
     tx_delete_where(spark, t, ("k", "=", 1), ["k"])
     with pytest.raises(Exception, match="tx_changes"):
         _drain(spark, t, ckpt, [])
@@ -166,8 +159,8 @@ def test_stream_removal_commit_is_loud(txsrc, tmp_path):
 def test_stream_backfills_pre_evolution_files(txsrc, tmp_path):
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(2, "b", 7)], "k long, s string, extra int"),
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b", 7)], "k long, s string, extra int"),
               t, ["k"], allow_schema_evolution=True)
     out: list = []
     _drain(spark, t, ckpt, out)
@@ -180,8 +173,8 @@ def test_stream_backfills_pre_evolution_files(txsrc, tmp_path):
 def test_starting_version_skips_history(txsrc, tmp_path):
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(1, "a")]), t, ["k"])
-    tx_append(_df(spark, [(2, "b")]), t, ["k"])
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    tx_append(tx_df(spark, [(2, "b")]), t, ["k"])
     out: list = []
     _drain(spark, t, ckpt, out, startingVersion="1")
     assert sorted(out) == [(2, "b")]
@@ -197,7 +190,7 @@ def test_processing_time_trigger_paces_multiple_batches(txsrc, tmp_path):
 
     spark = txsrc
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
-    tx_append(_df(spark, [(0, "seed")]), t, ["k"])
+    tx_append(tx_df(spark, [(0, "seed")]), t, ["k"])
     batches: list = []
 
     def sink(df, bid):
@@ -218,7 +211,7 @@ def test_processing_time_trigger_paces_multiple_batches(txsrc, tmp_path):
         # three commits land while the query is LIVE; the cap must
         # deliver them as three separate single-commit micro-batches
         for i in range(1, 4):
-            tx_append(_df(spark, [(i, f"r{i}")]), t, ["k"])
+            tx_append(tx_df(spark, [(i, f"r{i}")]), t, ["k"])
         while time.time() < deadline and len(batches) < 4:
             time.sleep(0.1)
         assert q.isActive
@@ -255,8 +248,8 @@ def test_txlog_fed_mv_equals_batch_twin(txsrc, tmp_path, sf_dir):
     ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
     tx_append(events.filter(F.col("event_id") <= mid), t, ["event_id"])
     run_mv_stream_txlog(spark, t, ckpt, state)
-    half = _rows(read_mv(spark, state))
-    want_half = _rows(
+    half = tx_rows(read_mv(spark, state))
+    want_half = tx_rows(
         _partial_agg(events.filter(F.col("event_id") <= mid)).select(
             "user_id", "event_type", "n_events",
             F.round(F.col("value_cents") / 100.0, 2).alias("total_value"),
@@ -266,13 +259,13 @@ def test_txlog_fed_mv_equals_batch_twin(txsrc, tmp_path, sf_dir):
     # second commit + second lifetime: incremental, not a re-read
     tx_append(events.filter(F.col("event_id") > mid), t, ["event_id"])
     run_mv_stream_txlog(spark, t, ckpt, state)
-    want_full = _rows(
+    want_full = tx_rows(
         _partial_agg(events).select(
             "user_id", "event_type", "n_events",
             F.round(F.col("value_cents") / 100.0, 2).alias("total_value"),
             ((F.col("value_cents") / F.col("n_events")) / F.lit(100.0))
             .alias("avg_value")))
-    assert _rows(read_mv(spark, state)) == want_full
+    assert tx_rows(read_mv(spark, state)) == want_full
 
 
 def test_stream_upcasts_pre_widening_files(txsrc, tmp_path):

@@ -1,15 +1,11 @@
-"""Interleaved min-of-N mini-bench for a few registry entries.
+"""Min-of-N mini-bench for a few registry entries.
 
 Usage:
-    python tools/minibench.py q1 q2 ...                      # min-of-5 each
+    python tools/minibench.py q1 q2 ...       # min-of-5 each
     python tools/minibench.py --iters 7 q1 q2
-    python tools/minibench.py --alt SPARK_GRAFT_X=a,b q1     # A/B a vs b
 
---alt interleaves the variants (a, b, a, b, ...) within one session so
-host noise hits both arms equally (the r14/r15 A/B discipline); the
-env var is read by the code under test at plan-build time. Timing uses
-the noop sink (guide §1.4) on the same multi-file sf dir the real
-bench times.
+Timing uses the noop sink (guide §1.4) on the same multi-file sf dir
+the real bench times.
 """
 
 from __future__ import annotations
@@ -29,15 +25,11 @@ from saurav_nayak_recipe_etl_project_spark.session import get_spark  # noqa: E40
 def main() -> None:
     args = sys.argv[1:]
     iters = 5
-    alt_var, alt_vals = None, [None]
     names = []
     i = 0
     while i < len(args):
         if args[i] == "--iters":
             iters = int(args[i + 1]); i += 2
-        elif args[i] == "--alt":
-            alt_var, vals = args[i + 1].split("=", 1)
-            alt_vals = vals.split(","); i += 2
         else:
             names.append(args[i]); i += 1
     spark = get_spark(app_name="minibench")
@@ -47,26 +39,17 @@ def main() -> None:
     print(f"# load_avg {os.getloadavg()[0]:.2f}  sf_dir {sf_dir}")
     for name in names:
         fn = QUERIES[name]
-        runs: dict[str | None, list[float]] = {v: [] for v in alt_vals}
-        # one untimed warm run per variant (codegen compile, footers)
-        for v in alt_vals:
-            if alt_var:
-                os.environ[alt_var] = v
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs: list[float] = []
+        # one untimed warm run (codegen compile, footers)
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         for _ in range(iters):
-            for v in alt_vals:
-                if alt_var:
-                    os.environ[alt_var] = v
-                spark.sparkContext.setJobDescription(f"{name} [{v}]")
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs[v].append(time.perf_counter() - t0)
-                spark.sparkContext.setJobDescription(None)
-        for v in alt_vals:
-            r = runs[v]
-            tag = f" [{alt_var}={v}]" if alt_var else ""
-            print(f"{name}{tag}: min {min(r):.3f}s median "
-                  f"{statistics.median(r):.3f}s  ({len(r)} runs)")
+            spark.sparkContext.setJobDescription(name)
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs.append(time.perf_counter() - t0)
+            spark.sparkContext.setJobDescription(None)
+        print(f"{name}: min {min(runs):.3f}s median "
+              f"{statistics.median(runs):.3f}s  ({len(runs)} runs)")
 
 
 if __name__ == "__main__":
