@@ -7,16 +7,22 @@ Reference flow (src/etl_pipeline.py / cloud_function/main.py):
 
 This pipeline:
   JSONL docs → declarative explode/posexplode normalization →
-  CSV lake backup + parquet warehouse truncate-load → validation
-  report — every stage a distributed DataFrame op.
+  parquet warehouse truncate-load → CSV lake backup written from the
+  committed warehouse (not the reverse: a parquet round trip is
+  lossless, a CSV one is not — null and "" both write as an empty
+  field) → validation report.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.sources.documents import read_documents
+from saurav_nayak_recipe_etl_project_spark.sources.documents import (
+    INTERACTION_DOC_SCHEMA,
+    USER_DOC_SCHEMA,
+    read_documents,
+)
 from saurav_nayak_recipe_etl_project_spark.sources.sinks import (
     load_warehouse_table,
     table_path,
@@ -24,14 +30,18 @@ from saurav_nayak_recipe_etl_project_spark.sources.sinks import (
 )
 
 
+def _good(docs: DataFrame, key: str) -> DataFrame:
+    # PERMISSIVE mode nulls every data field on a malformed line, so a
+    # required-field filter quarantines bad docs without touching the
+    # _corrupt_record column (which Spark only allows on cached plans).
+    return docs.filter(F.col(key).isNotNull()).drop("_corrupt_record")
+
+
 def normalize_documents(docs: DataFrame) -> dict[str, DataFrame]:
     """Nested order-docs → star schema: a fact table plus an ordered
     bridge table (the reference's recipes/ingredients/steps split,
     src/etl_pipeline.py:56-84)."""
-    # PERMISSIVE mode nulls every data field on a malformed line, so a
-    # required-field filter quarantines bad docs without touching the
-    # _corrupt_record column (which Spark only allows on cached plans).
-    good = docs.filter(F.col("order_id").isNotNull()).drop("_corrupt_record")
+    good = _good(docs, "order_id")
     orders = good.select("order_id", "user_id", "status", "total", "order_date")
     items = good.select(
         "order_id", F.posexplode("items").alias("pos", "it")
@@ -45,18 +55,29 @@ def normalize_documents(docs: DataFrame) -> dict[str, DataFrame]:
     return {"orders": orders, "order_items": items}
 
 
-def run_document_etl(spark: SparkSession, source_path: str,
-                     lake_dir: str, warehouse_dir: str) -> dict[str, int]:
-    """Extract → normalize → lake backup → warehouse load.
-    Returns per-table row counts (the reference prints these)."""
-    docs = read_documents(spark, source_path)
-    tables = normalize_documents(docs)
+def _load_tables(spark: SparkSession, tables: dict[str, DataFrame],
+                 lake_dir: str, warehouse_dir: str) -> dict[str, int]:
+    """Parse each table's documents once, in two Spark jobs: the
+    warehouse write observes the row count (no `count()` re-read) and
+    the lake re-reads the parquet with the known schema (a bare read
+    runs a schema-inference job)."""
     counts: dict[str, int] = {}
     for name, df in tables.items():
-        write_csv_lake(df, table_path(lake_dir, name))
-        load_warehouse_table(df, table_path(warehouse_dir, name))
-        counts[name] = df.count()
+        obs, wh_path = Observation(), table_path(warehouse_dir, name)
+        load_warehouse_table(df.observe(obs, F.count(F.lit(1)).alias("n")),
+                             wh_path)
+        write_csv_lake(spark.read.schema(df.schema).parquet(wh_path),
+                       table_path(lake_dir, name))
+        counts[name] = obs.get["n"]
     return counts
+
+
+def run_document_etl(spark: SparkSession, source_path: str,
+                     lake_dir: str, warehouse_dir: str) -> dict[str, int]:
+    """Extract → normalize → warehouse load → lake backup.
+    Returns per-table row counts (the reference prints these)."""
+    tables = normalize_documents(read_documents(spark, source_path))
+    return _load_tables(spark, tables, lake_dir, warehouse_dir)
 
 
 def run_full_star_etl(spark: SparkSession, users_path: str, orders_path: str,
@@ -66,24 +87,9 @@ def run_full_star_etl(spark: SparkSession, users_path: str, orders_path: str,
     four-table star schema (users, orders fact, order_items ordered
     bridge, interactions log) → lake + warehouse
     (src/etl_pipeline.py:28-134 end-to-end)."""
-    from saurav_nayak_recipe_etl_project_spark.sources.documents import (
-        INTERACTION_DOC_SCHEMA,
-        USER_DOC_SCHEMA,
-    )
-
-    users = read_documents(spark, users_path, USER_DOC_SCHEMA).filter(
-        F.col("user_id").isNotNull()
-    ).drop("_corrupt_record")
-    interactions = read_documents(
-        spark, interactions_path, INTERACTION_DOC_SCHEMA
-    ).filter(F.col("interaction_id").isNotNull()).drop("_corrupt_record")
     tables = normalize_documents(read_documents(spark, orders_path))
-    tables["users"] = users
-    tables["interactions"] = interactions
-
-    counts: dict[str, int] = {}
-    for name, df in tables.items():
-        write_csv_lake(df, table_path(lake_dir, name))
-        load_warehouse_table(df, table_path(warehouse_dir, name))
-        counts[name] = df.count()
-    return counts
+    tables["users"] = _good(
+        read_documents(spark, users_path, USER_DOC_SCHEMA), "user_id")
+    tables["interactions"] = _good(read_documents(
+        spark, interactions_path, INTERACTION_DOC_SCHEMA), "interaction_id")
+    return _load_tables(spark, tables, lake_dir, warehouse_dir)

@@ -9,7 +9,10 @@ same, only the sink changes.
 
 from __future__ import annotations
 
+import glob
 import math
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,9 +67,6 @@ def compact_parquet(spark: SparkSession, path: str,
     ceil(bytes/target) files. The #1 operational fix for long-lived
     append-heavy tables (file-listing and task-scheduling costs scale
     with file count, not bytes). Returns the new file count."""
-    import glob
-    import os
-
     files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
@@ -74,8 +74,6 @@ def compact_parquet(spark: SparkSession, path: str,
     # stage through a temp dir: can't overwrite a path while reading it
     tmp = path.rstrip("/") + "__compact"
     df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    import shutil
-
     shutil.rmtree(path)
     shutil.move(tmp, path)
     return n_out
@@ -124,9 +122,6 @@ def publish_with_audit(df: DataFrame, table_dir: str, audits,
     stores the pointer file becomes the metadata-location swap every
     table format performs; the staging/audit legs are identical.
     Returns the published snapshot path."""
-    import os
-    import shutil
-
     spark = df.sparkSession
     staging_root = os.path.join(table_dir, "_staging")
     os.makedirs(staging_root, exist_ok=True)
@@ -185,8 +180,6 @@ def read_published(spark: SparkSession, table_dir: str,
     publish_with_audit), or — time travel — a specific retained
     `version` number. Raises if nothing has been published or the
     requested version was pruned past keep_versions."""
-    import os
-
     if version is None:
         cur_file = os.path.join(table_dir, "CURRENT")
         with open(cur_file) as fh:
@@ -205,8 +198,6 @@ def published_versions(table_dir: str) -> list[int]:
     """Retained snapshot version numbers, ascending (the time-travel
     catalog; the last entry is not necessarily CURRENT if a publish
     raced — CURRENT is the only read authority)."""
-    import os
-
     return sorted(
         int(d[2:]) for d in os.listdir(table_dir)
         if d.startswith("_v") and d[2:].isdigit()

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+
 # The "order document" shape — an order with its nested line items,
 # structurally identical to the reference's recipe docs with nested
 # ingredients/steps (reference schema/recipe.json).
@@ -72,8 +74,6 @@ INTERACTION_DOC_SCHEMA = T.StructType(
 
 def export_user_documents(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     """users collection analog (reference users docs → users.csv)."""
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
-
     customer = load_table(spark, "customer", sf_dir)
     customer.select(
         F.col("c_custkey").alias("user_id"),
@@ -87,8 +87,6 @@ def export_interaction_documents(spark: SparkSession, sf_dir: str,
                                  out_path: str) -> None:
     """interactions collection analog (view/like/cook_attempt log →
     events with optional rating; reference interactions docs)."""
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
-
     events = load_table(spark, "events", sf_dir)
     events.select(
         F.col("event_id").alias("interaction_id"),
@@ -104,8 +102,6 @@ def export_order_documents(spark: SparkSession, sf_dir: str, out_path: str) -> N
     """Build nested order docs from the relational tables and write
     JSONL — the fixture generator standing in for the upstream
     document store."""
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
-
     orders = load_table(spark, "orders", sf_dir)
     lineitem = load_table(spark, "lineitem", sf_dir)
     items = (

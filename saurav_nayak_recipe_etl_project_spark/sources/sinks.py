@@ -4,7 +4,9 @@ Mirrors the reference's two-tier load (reference README §5.3):
 CSV backups to a bucket (cloud_function/main.py:107-142) and
 WRITE_TRUNCATE warehouse loads (bigquery_loader_function/main.py).
 Spark-first both are just `df.write` — distributed, atomic via the
-commit protocol, no driver-side buffering of rows.
+commit protocol, no driver-side buffering of rows. The ETL writes the
+lake from the committed warehouse parquet, so the documents are parsed
+once; not the reverse, as a CSV read-back cannot tell null from "".
 """
 
 from __future__ import annotations

@@ -35,15 +35,19 @@ def parallel_actions(*thunks) -> None:
     Callers must pass actions whose plans read only already-
     materialized inputs (caches, checkpoints, state files) — two
     concurrent first consumers of one unmaterialized lazy checkpoint
-    each re-evaluate its whole plan (the r14-measured hazard).
-    Every action is awaited; the first failure re-raises after all
-    have settled, so no thunk is abandoned mid-write."""
-    if len(thunks) <= 1:
-        for t in thunks:
-            t()
-        return
+    each re-evaluate its whole plan (the r14-measured hazard). Each
+    thread gets its own copy of the caller's local properties, so its
+    jobs join the caller's job group. Every action is awaited; the first
+    failure re-raises after all settle (no thunk abandoned mid-write)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    # with PYSPARK_PIN_THREAD=false this returns the session, not a wrapper
+    spark = SparkSession.getActiveSession()
+    if spark is not None and callable(inheritable_thread_target(spark)):
+        thunks = [inheritable_thread_target(spark)(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         errors = [f.exception() for f in futures]

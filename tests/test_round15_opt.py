@@ -246,3 +246,20 @@ def test_parallel_actions_runs_all_and_propagates_failure():
     with pytest.raises(RuntimeError, match="boom"):
         parallel_actions(boom, slow_ok)
     assert done == ["slow"]  # sibling finished despite the failure
+
+
+def test_parallel_actions_keeps_the_callers_job_group(spark):
+    """The worker threads inherit the caller's job group, so the jobs
+    of concurrent actions are attributed to the caller (the DV merge
+    runs its two heaviest writes this way)."""
+    from saurav_nayak_recipe_etl_project_spark.streaming import (
+        parallel_actions,
+    )
+    from tests.jobgroups import jobs_in_group
+
+    df = spark.range(1000)
+    _, serial = jobs_in_group(spark, lambda: (df.count(), df.count()))
+    _, parallel = jobs_in_group(
+        spark, lambda: parallel_actions(df.count, df.count))
+    assert serial >= 2
+    assert parallel == serial
