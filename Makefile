@@ -1,7 +1,8 @@
 .PHONY: test bench verify plans report
 
+# the Tier-1 command from ROADMAP.md, verbatim, so a local run matches the gate
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

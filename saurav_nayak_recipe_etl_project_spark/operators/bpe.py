@@ -15,7 +15,7 @@ then (left, right) asc), and a codegen'd `aggregate` fold that applies
 the merge greedy-left-to-right inside each word. The driver holds only
 the merge table (n_merges rows); lineage is cut per round with
 localCheckpoint — the standard Spark iterative pattern (same shape as
-dedup.dup_clusters' label propagation).
+dedup.star_components' contraction loop).
 
 No SQL oracle: the loop's argmax feeds the next iteration's
 re-tokenization, which a single SQL string cannot express — behavior is

@@ -134,13 +134,22 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, tau: float = 0.3,
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return _jaccard_at_least(inter, sa, sb, tau)
+
+
+def _jaccard_at_least(inter: DataFrame, n_a: DataFrame, n_b: DataFrame,
+                      tau: float, a: str = "doc_a",
+                      b: str = "doc_b") -> DataFrame:
+    """(a, b, jaccard) for the rows of `inter` (a, b, inter) whose
+    Jaccard |∩| / (|A|+|B|-|∩|) reaches `tau`; `n_a` is (a, n_a) and
+    `n_b` is (b, n_b). Filters on the unrounded value (like the
+    oracles) and rounds only for output — keeps threshold semantics
+    identical across engines."""
     jacc = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    # filter on the unrounded value (like the oracle), round only for
-    # output — keeps threshold semantics identical across engines
     return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
+        inter.join(n_a, a).join(n_b, b)
         .filter(jacc >= tau)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
+        .select(a, b, F.round(jacc, 6).alias("jaccard"))
     )
 
 
@@ -183,6 +192,26 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 32, n: int = 3,
     )
 
 
+def band_keys(sigs: DataFrame, n_hashes: int = 32,
+              n_bands: int = 8) -> DataFrame:
+    """(doc_id, band_id, band_hash) rows — the LSH candidate keys of a
+    (doc_id, sig) signature frame: band b hashes signature rows
+    b·r+1 .. b·r+r (r = n_hashes // n_bands) with xxhash64. Two docs
+    are LSH candidates iff they share a (band_id, band_hash) key."""
+    rows_per_band = n_hashes // n_bands
+    return sigs.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(n_bands - 1)),
+                lambda b: F.xxhash64(
+                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
+                ),
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+
 def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 32, n_bands: int = 8,
                       tau: float = 0.3, n: int = 3,
                       text_col: str = "text",
@@ -192,9 +221,6 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 32, n_bands: int = 8,
     Pairs only form inside an (band_id, band_hash) bucket — the classic
     LSH trick that keeps pair generation sub-quadratic at any scale.
     """
-    from pyspark import StorageLevel
-
-    rows_per_band = n_hashes // n_bands
     # The signature table feeds three plan branches (banding + both
     # sides of the verify join); persist it once instead of recomputing
     # the shingle explode 3× — at warehouse scale this is the step
@@ -208,17 +234,7 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 32, n_bands: int = 8,
         minhash_signatures(docs, n_hashes, n, text_col, id_col),
         "minhash_lsh_pairs.sigs",
     )
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = band_keys(sigs, n_hashes, n_bands)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
@@ -275,11 +291,23 @@ def lsh_verified_pairs(docs: DataFrame, tau: float = 0.5, n_hashes: int = 32,
 
     sh = persist_scoped(shingle_rows(docs, n, text_col, id_col),
                         "lsh_verified_pairs.shingles")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("_db"), F.col("shingle").alias("sh_b"))
+    return verify_candidates(sigs_pairs, sh, tau)
+
+
+def verify_candidates(cand: DataFrame, shingles: DataFrame,
+                      tau: float) -> DataFrame:
+    """EXACT Jaccard verify of candidate pairs: (doc_a, doc_b, jaccard)
+    for each `cand` pair (doc_a, doc_b) whose distinct (doc_id,
+    shingle) sets in `shingles` reach `tau`. The intersection join
+    touches only candidate endpoints' shingles, so the cost is linear
+    in candidates, not quadratic in shingle co-occurrence."""
+    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sa = shingles.select(F.col("doc_id").alias("doc_a"),
+                         F.col("shingle").alias("sh_a"))
+    sb = shingles.select(F.col("doc_id").alias("_db"),
+                         F.col("shingle").alias("sh_b"))
     inter = (
-        sigs_pairs.join(sa, "doc_a")
+        cand.join(sa, "doc_a")
         .join(sb, (F.col("doc_b") == F.col("_db"))
               & (F.col("sh_a") == F.col("sh_b")))
         .groupBy("doc_a", "doc_b")
@@ -287,12 +315,7 @@ def lsh_verified_pairs(docs: DataFrame, tau: float = 0.5, n_hashes: int = 32,
     )
     za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jacc = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.join(za, "doc_a").join(zb, "doc_b")
-        .filter(jacc >= tau)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-    )
+    return _jaccard_at_least(inter, za, zb, tau)
 
 
 def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,48 +439,6 @@ def embedding_dup_pairs(emb: DataFrame, tau: float = 0.3,
     )
 
 
-def embedding_dup_pairs_broadcast(emb: DataFrame, tau: float = 0.3) -> DataFrame:
-    """Broadcast-matmul variant of `embedding_dup_pairs` for when ONE
-    side fits in memory: snapshot the table as a numpy matrix,
-    broadcast it, and stream Arrow batches through a single matmul
-    each. Caps at driver/executor memory by construction — use the
-    blocked or bucketed form beyond that."""
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    e = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    snap = e.toPandas()
-    ids = snap["vec_id"].to_numpy()
-    mat = np.stack(snap["v"].to_numpy())
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    def gen(batches):
-        all_ids, all_mat = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a_ids = pdf["vec_id"].to_numpy()
-            a = np.stack(pdf["v"].to_numpy())
-            a = a / np.linalg.norm(a, axis=1, keepdims=True)
-            sims = a @ all_mat.T
-            ai, bi = np.nonzero(
-                (sims >= tau) & (a_ids[:, None] < all_ids[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ai],
-                    "id_b": all_ids[bi],
-                    "cos_sim": np.round(sims[ai, bi], 6),
-                }
-            )
-
-    return e.mapInPandas(gen, schema="id_a long, id_b long, cos_sim double")
-
-
 def embedding_dup_pairs_bucketed(emb: DataFrame, tau: float = 0.3,
                                  n_planes: int = 4,
                                  n_tables: int = 8) -> DataFrame:
@@ -467,17 +448,13 @@ def embedding_dup_pairs_bucketed(emb: DataFrame, tau: float = 0.3,
     `n_tables` independent plane sets are OR-ed (multi-table LSH):
     single-table recall for angle θ is (1-θ/π)^planes, L tables lift
     it to 1-(1-p)^L. Recall<1 by design; the blocked exact form above
-    is the oracle it is measured against in tests."""
-    return _emb_bucketed_hof(emb, tau, n_planes, n_tables)
+    is the oracle it is measured against in tests.
 
-
-def _emb_bucketed_hof(emb: DataFrame, tau: float, n_planes: int,
-                      n_tables: int) -> DataFrame:
-    """r15 shape: one scan, one COMPACT bucket-array expression
+    Shape (r15): one scan, one COMPACT bucket-array expression
     (similarity._bucket_array — same values, ~tables·planes× fewer
     expression nodes, which moves the cost off the driver's
     analyzer/AQE re-optimizer), posexploded into the bucket-group
-    pandas verify unchanged."""
+    pandas verify."""
     import numpy as np
     import pandas as pd
 
@@ -515,123 +492,26 @@ def _emb_bucketed_hof(emb: DataFrame, tau: float, n_planes: int,
 
 
 def dup_clusters(docs: DataFrame, tau: float = 0.5, n: int = 3,
-                 max_iters: int = 50, text_col: str = "text",
+                 max_rounds: int = 20, text_col: str = "text",
                  id_col: str = "doc_id") -> DataFrame:
-    """Connected components over near-dup edges → (doc_id, cluster_id).
+    """Connected components over near-dup edges → (doc_id, cluster_id),
+    cluster_id = the component's min doc_id.
 
     Pairwise dedup output is not directly actionable (A~B, B~C must
     collapse to ONE keeper); this resolves transitive clusters by
-    min-label propagation: every doc starts as its own label, then
-    repeatedly takes the min label in its neighborhood. Converges in
-    O(cluster diameter) rounds — near-dup clusters are shallow, so the
-    iteration count stays tiny at any corpus size. localCheckpoint
-    cuts lineage each round (the standard Spark iterative pattern).
+    star contraction (`star_components`: Kiveris et al., 'Connected
+    Components in MapReduce and Beyond', SoCC'14), which converges in
+    O(log^2 n) rounds regardless of component DIAMETER — a long dup
+    chain across crawls costs no more rounds than a shallow cluster.
 
     Edges come from the sub-quadratic two-stage path
     (`lsh_verified_pairs`: LSH band candidates → exact-Jaccard verify),
     not the quadratic inverted-index join — same verified-pair columns,
     linear-in-candidates cost.
 
-    `max_iters` is a SAFETY CAP, not a tuning knob: non-convergence
-    raises instead of silently returning partially-propagated labels.
+    `max_rounds` is a SAFETY CAP, not a tuning knob: non-convergence
+    raises instead of returning partial components.
     """
-    edges = (
-        lsh_verified_pairs(docs, tau=tau, n=n, text_col=text_col, id_col=id_col)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    # symmetric edge list including self-loops so isolated docs keep
-    # their own label
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-    )
-    labels = docs.select(
-        F.col(id_col).alias("src"), F.col(id_col).cast("long").alias("label")
-    ).localCheckpoint()
-    converged = False
-    # max_iters + 1 passes: convergence is only OBSERVED by a pass that
-    # changes nothing, so a chain whose propagation finishes exactly on
-    # pass max_iters still needs one more look — the cap bounds
-    # *propagation* work, matching the documented diameter condition
-    for _ in range(max_iters + 1):
-        neighbor_min = (
-            sym.join(labels.withColumnRenamed("src", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # EAGER checkpoint: new_labels is fully materialized before the
-        # probe and the next round read it, whatever their shape (a
-        # lazy one cached only what its first consumer computed). The
-        # interleaved A/B against lazy + full-count probe was flat to
-        # eager-ahead (OPTIMIZATION_r15.md).
-        new_labels = (
-            labels.join(neighbor_min, "src", "left")
-            .select(
-                "src",
-                F.least(F.col("label"), F.coalesce("nmin", F.col("label")))
-                .alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "src")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"dup_clusters: min-label propagation did not converge within "
-            f"{max_iters} iterations — a duplicate chain has diameter > "
-            f"{max_iters}; raise max_iters rather than using partial labels"
-        )
-    return labels.select(
-        F.col("src").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive duplicate clusters over near-dup edges (min-label
-    propagation). Oracled: the edge set equals the exact tau=0.5 pair
-    set on this corpus (see dedup_lsh_verified), so the SQL oracle
-    rebuilds the same components as a recursive transitive closure —
-    distributed label propagation vs single-node WITH RECURSIVE, same
-    clusters."""
-    return dup_clusters(load_table(spark, "documents", sf_dir))
-
-
-def dup_clusters_star(docs: DataFrame, tau: float = 0.5, n: int = 3,
-                      max_rounds: int = 20, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., 'Connected Components in MapReduce and Beyond',
-    SoCC'14) — the second, scale-preferred CC algorithm beside
-    dup_clusters' min-label propagation.
-
-    Why a second algorithm: min-label converges in O(component
-    DIAMETER) rounds — fine for shallow near-dup clusters, quadratic
-    pain on a long chain. Star contraction converges in O(log^2 n)
-    rounds regardless of diameter, at the same two-shuffles-per-round
-    cost, which is the algorithm you want when components can be deep
-    (link graphs, long dup chains across crawls). Both run here and
-    MUST agree (same registry oracle; cross-checked in
-    tests/test_clusters.py).
-
-    large-star: every neighbor v > u relinks to m = min(N(u) ∪ {u});
-    small-star: every neighbor v <= u (and u itself) relinks to m,
-    self-loops dropped. At fixpoint the edge set is a star forest
-    (child -> component-min root); labels read straight off it.
-    Fixpoint detection is an exact set compare (two anti-joins), and
-    `max_rounds` is a safety cap that RAISES instead of returning
-    partial components."""
     pairs = (
         lsh_verified_pairs(docs, tau=tau, n=n, text_col=text_col,
                            id_col=id_col)
@@ -649,14 +529,31 @@ def dup_clusters_star(docs: DataFrame, tau: float = 0.5, n: int = 3,
     )
 
 
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Transitive duplicate clusters over near-dup edges (star
+    contraction). Oracled: the edge set equals the exact tau=0.5 pair
+    set on this corpus (see dedup_lsh_verified), so the SQL oracle
+    rebuilds the same components as a recursive transitive closure —
+    distributed star contraction vs single-node WITH RECURSIVE, same
+    clusters."""
+    return dup_clusters(load_table(spark, "documents", sf_dir))
+
+
 def star_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Generic large-star/small-star contraction over an edge list
     with columns (a, b) of any orderable type; returns the
     (a -> parent) star forest: one row per NON-ROOT node of every
     component of size >= 2, parent = the component's min node.
     Callers left-join their node universe and coalesce singletons.
-    Extracted verbatim from dup_clusters_star so string-keyed entity
-    resolution (operators/fuzzy.py) shares the identical loop."""
+    The package's one CC loop: dup_clusters (and through it the
+    corpus_audit cluster entries) and string-keyed entity resolution
+    (operators/fuzzy.py) all run it.
+
+    large-star: every neighbor v > u relinks to m = min(N(u) ∪ {u});
+    small-star: every neighbor v <= u (and u itself) relinks to m,
+    self-loops dropped. At fixpoint the edge set is a star forest
+    (child -> component-min root). `max_rounds` is a safety cap that
+    RAISES instead of returning partial components."""
     e = pairs.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
     converged = False
 
@@ -689,10 +586,10 @@ def star_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
         return out.where(F.col("a") != F.col("b"))
 
     for rnd in range(max_rounds):
-        # EAGER checkpoint, as in dup_clusters: a lazy one with a
-        # limit(1) probe left partitions unfilled and re-evaluated the
-        # plan next round (dedup_clusters_star 3.9 -> 5.5 s); with a
-        # full-count probe it measured flat to slower than eager.
+        # EAGER checkpoint: a lazy one with a limit(1) probe left
+        # partitions unfilled and re-evaluated the plan next round
+        # (dedup_clusters_star 3.9 -> 5.5 s); with a full-count probe
+        # it measured flat to slower than eager.
         new_e = (
             _star(_star(e, "large"), "small").distinct()
             .localCheckpoint()
@@ -716,14 +613,6 @@ def star_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             f"fixpoint within {max_rounds} rounds"
         )
     return e.groupBy("a").agg(F.min("b").alias("parent"))
-
-
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry twin of dedup_clusters running the O(log^2 n)-round
-    star-contraction algorithm — SAME oracle (components are
-    algorithm-independent), so the driver hash-verifies that both
-    algorithms produce identical clusters."""
-    return dup_clusters_star(load_table(spark, "documents", sf_dir))
 
 
 # --- F-extension: train/test contamination ----------------------------------
@@ -750,12 +639,7 @@ def cross_corpus_overlap(docs_a: DataFrame, docs_b: DataFrame,
         .groupBy("a_id", "b_id")
         .agg(F.count("*").alias("inter"))
     )
-    jacc = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.join(na, "a_id").join(nb, "b_id")
-        .filter(jacc >= tau)
-        .select("a_id", "b_id", F.round(jacc, 6).alias("jaccard"))
-    )
+    return _jaccard_at_least(inter, na, nb, tau, "a_id", "b_id")
 
 
 def dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,7 +971,9 @@ DEDUP_QUERIES = {
     "dedup_embedding": dedup_embedding,
     "dedup_embedding_exact": dedup_embedding_exact,
     "dedup_clusters": dedup_clusters,
-    "dedup_clusters_star": dedup_clusters_star,
+    # the name of the retired second CC algorithm's entry, kept so
+    # registry names stay stable: both names build dup_clusters
+    "dedup_clusters_star": dedup_clusters,
     "dedup_lsh_verified": dedup_lsh_verified,
     "dedup_contamination": dedup_contamination,
     "documents_deduped": documents_deduped,
@@ -1394,8 +1280,9 @@ DEDUP_ORACLES = {
     """,
     # dedup_clusters: min-id connected components over the verified pair
     # set. Portable because the edge set equals the EXACT tau=0.5 pair
-    # set (see dedup_lsh_verified), and components-with-min-label is a
-    # transitive closure — WITH RECURSIVE reach, then MIN(peer) per doc.
+    # set (see dedup_lsh_verified), and a component labelled by its min
+    # id is a transitive closure — WITH RECURSIVE reach, then MIN(peer)
+    # per doc.
     "dedup_clusters": f"""
         WITH RECURSIVE
         t AS (
@@ -1446,7 +1333,5 @@ DEDUP_ORACLES = {
     """,
 }
 
-# Components are algorithm-independent: the star-contraction twin must
-# reproduce EXACTLY the clusters the recursive-CTE closure (and the
-# min-label path) produce.
+# Both cluster entry names build dup_clusters, so they share one oracle.
 DEDUP_ORACLES["dedup_clusters_star"] = DEDUP_ORACLES["dedup_clusters"]

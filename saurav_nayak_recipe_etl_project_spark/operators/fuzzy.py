@@ -102,7 +102,7 @@ def part_name_entity_resolution(spark: SparkSession,
     record pipeline composed from existing stages): length-band
     blocking -> bounded levenshtein edges (name_near_collisions) ->
     star-contraction connected components (operators/dedup.py
-    star_components, shared verbatim with the doc-dedup path) ->
+    star_components, the same loop dup_clusters runs) ->
     survivorship. Canonical member per cluster = most catalog rows,
     lexicographic name tie-break; singleton names are not emitted
     (nothing to merge).

@@ -269,7 +269,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree legs, edge count), and Catalyst does not common-subexpress
     a repeated aggregation subtree — without this the fact table is
     scanned 24x (measured; 4 scans after). Same pattern as
-    dup_clusters; the edge table is support-pruned tiny."""
+    star_components; the edge table is support-pruned tiny."""
     li = load_table(spark, "lineitem", sf_dir)
     return triangle_stats(support_edges(li).localCheckpoint())
 

@@ -53,37 +53,15 @@ from saurav_nayak_recipe_etl_project_spark.streaming import (
 )
 
 from saurav_nayak_recipe_etl_project_spark.operators.dedup import (
+    band_keys,
     minhash_signatures,
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 
-N_HASHES = 32
-N_BANDS = 8
 # State-partitioning fan-out for the membership-read prune; the bucket
 # is pmod(band_hash, N_STATE_BUCKETS), a content key (band_id alone
 # can't prune: every doc emits every band index).
 N_STATE_BUCKETS = 16
-
-
-def band_keys(docs: DataFrame, n_hashes: int = N_HASHES,
-              n_bands: int = N_BANDS,
-              shingles: DataFrame | None = None) -> DataFrame:
-    """(doc_id, band_id, band_hash) rows — the LSH candidate keys.
-    `shingles` (optional, precomputed shingle_rows output) skips the
-    shingle explode when the caller already materialized it."""
-    rows_per_band = n_hashes // n_bands
-    sigs = minhash_signatures(docs, n_hashes, shingles=shingles)
-    return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band_id", "band_hash"),
-    )
 
 
 def lsh_band_dedup(docs: DataFrame) -> DataFrame:
@@ -91,7 +69,7 @@ def lsh_band_dedup(docs: DataFrame) -> DataFrame:
     band bucket with a smaller doc_id. One explode + one bucket-min
     window-free aggregation + one semi-join; sub-quadratic by the same
     argument as minhash_lsh_pairs."""
-    bands = band_keys(docs)
+    bands = band_keys(minhash_signatures(docs))
     bucket_min = bands.groupBy("band_id", "band_hash").agg(
         F.min("doc_id").alias("min_doc")
     )
@@ -194,7 +172,7 @@ def _process_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     # batch input: bounded micro-batch scan, consumed by the shingle
     # explode and the survivors anti-join — both cheap pruned scans;
     # not worth a dedicated materialization job (r15)
-    bands = band_keys(batch_df).withColumn(
+    bands = band_keys(minhash_signatures(batch_df)).withColumn(
         "bucket", F.pmod(F.col("band_hash"), F.lit(N_STATE_BUCKETS)).cast("int")
     ).localCheckpoint(eager=False)
     # the bucket dirs this batch can possibly hit — bounded by

@@ -19,10 +19,10 @@ keys against (batch ∪ state) keys, and the exact verify runs on the
 batch's shingles plus the state shingles of just the candidate
 endpoints. Any pair the full-batch two-stage dedup finds shares ≥1
 band bucket, so the incremental candidate set is IDENTICAL, and the
-verify arithmetic is the same expression — the streamed MV equals
-lsh_verified_pairs(corpus) set-for-set, value-for-value. That is why
-the registered entry carries the same STRICT exact-pair-set oracle as
-dedup_lsh_verified, not an agreement gate.
+verify is the same function (dedup.verify_candidates) — the streamed
+MV equals lsh_verified_pairs(corpus) set-for-set, value-for-value.
+That is why the registered entry carries the same STRICT
+exact-pair-set oracle as dedup_lsh_verified, not an agreement gate.
 
 State layout (the doc_dedup.py discipline):
 - `bands/batch_id=N/` — the batch's (doc_id, band_id, band_hash)
@@ -56,15 +56,15 @@ from pyspark.sql import functions as F
 
 from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.dedup import (
+    band_keys,
+    minhash_signatures,
     shingle_rows,
+    verify_candidates,
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 from saurav_nayak_recipe_etl_project_spark.streaming import (
     parallel_actions,
     rebalance_for_write,
-)
-from saurav_nayak_recipe_etl_project_spark.streaming.doc_dedup import (
-    band_keys,
 )
 
 PAIR_TAU = 0.5
@@ -110,7 +110,7 @@ def pair_mv_process_batch(batch_docs: DataFrame, batch_id: int,
     # functions, identical under any batching. Shingles materialize
     # FIRST and feed the signature pipeline, so the explode+distinct
     # runs once per batch, not once for state and again inside
-    # band_keys (r14: the batch's dominant recompute). sh_new's
+    # minhash_signatures (r14: the batch's dominant recompute). sh_new's
     # checkpoint is LAZY: its single pre-write consumer chain runs
     # through bands_new's eager materialization (one job computes
     # both, sh_new caching as it streams past); the state write and
@@ -122,7 +122,7 @@ def pair_mv_process_batch(batch_docs: DataFrame, batch_id: int,
         "bucket", F.pmod(F.col("doc_id"), F.lit(N_DOC_BUCKETS)).cast("int")
     ).localCheckpoint(eager=False)
     bands_new = band_keys(
-        docs, shingles=sh_new.select("doc_id", "shingle")
+        minhash_signatures(docs, shingles=sh_new.select("doc_id", "shingle"))
     ).localCheckpoint()
 
     bands_old = _read_part(
@@ -185,28 +185,7 @@ def pair_mv_process_batch(batch_docs: DataFrame, batch_id: int,
         .select("doc_id", "shingle")
     )
     sh_all = sh_new.select("doc_id", "shingle").unionByName(sh_old)
-    sizes = sh_all.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = sh_all.select(F.col("doc_id").alias("doc_a"),
-                       F.col("shingle").alias("sh_a"))
-    sb = sh_all.select(F.col("doc_id").alias("_db"),
-                       F.col("shingle").alias("sh_b"))
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, (F.col("doc_b") == F.col("_db"))
-              & (F.col("sh_a") == F.col("sh_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n_sh").alias("n_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n_sh").alias("n_b"))
-    jacc = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    pairs = (
-        inter.join(za, "doc_a").join(zb, "doc_b")
-        .filter(jacc >= tau)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-    )
+    pairs = verify_candidates(cand, sh_all, tau)
     # replay-stable overwrites: pairs + this batch's state. The three
     # writes are mutually independent (distinct dirs; all three read
     # only already-materialized caches — sh_new/bands_new/cand were

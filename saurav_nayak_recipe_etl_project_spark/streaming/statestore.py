@@ -33,6 +33,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession, functions as F
 
+from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
 from saurav_nayak_recipe_etl_project_spark.streaming.events import (
     read_event_stream,
 )
@@ -112,4 +113,4 @@ def run_rocksdb_user_stats_stream(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        await_or_raise(q)

@@ -93,19 +93,6 @@ def test_embedding_pairs_threshold(spark):
     assert pairs == {(1, 2)}
 
 
-def test_blocked_pairs_match_broadcast_pairs(spark, sf_dir):
-    """The distributed block-product exact pairs must equal the
-    broadcast-matmul exact pairs — same algorithm, two shapes."""
-    from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    blocked = {(r["id_a"], r["id_b"]): r["cos_sim"]
-               for r in D.embedding_dup_pairs(emb, tau=0.3).collect()}
-    bcast = {(r["id_a"], r["id_b"]): r["cos_sim"]
-             for r in D.embedding_dup_pairs_broadcast(emb, tau=0.3).collect()}
-    assert blocked == bcast and len(blocked) > 0
-
-
 def test_bucketed_embedding_pairs_are_exact_subset(spark, sf_dir):
     """LSH-bucketed pairs report the exact cosine for every pair they
     surface (subset of exact pairs, useful recall on clustered data)."""

@@ -8,6 +8,7 @@ import random
 
 from saurav_nayak_recipe_etl_project_spark.operators import dedup as D
 from saurav_nayak_recipe_etl_project_spark.operators import text as T
+from tests.unionfind import min_labels
 
 VOCAB = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
          "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
@@ -236,28 +237,9 @@ def test_twa_bounded_by_min_max_value(spark):
 def test_star_cc_labels_are_component_minima(spark):
     """On a seeded random graph, every cluster label must equal the min
     doc_id of its component (checked against a pure-python union-find)."""
-    import random as _r
-
-    from saurav_nayak_recipe_etl_project_spark.operators.dedup import (
-        dup_clusters_star, lsh_verified_pairs,
-    )
-
     docs = _random_docs(spark, n=100, seed=23)
     edges = [(r["doc_a"], r["doc_b"])
-             for r in lsh_verified_pairs(docs, tau=0.5).collect()]
-    parent = list(range(100))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {i: find(i) for i in range(100)}
+             for r in D.lsh_verified_pairs(docs, tau=0.5).collect()]
     got = {r["doc_id"]: r["cluster_id"]
-           for r in dup_clusters_star(docs, tau=0.5).collect()}
-    assert got == want
+           for r in D.dup_clusters(docs, tau=0.5).collect()}
+    assert got == min_labels(range(100), edges)
