@@ -72,36 +72,15 @@ def semantic_dup_pairs(emb: DataFrame, tau: float = TAU,
 
     from saurav_nayak_recipe_etl_project_spark.operators.similarity import (
         _as_double,
+        _assign_cells,
         _hash_sample,
         _train_coarse_centroids,
     )
 
-    spark = emb.sparkSession
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
-    X = _hash_sample(e, n_train)
-    c_mat = _train_coarse_centroids(X, n_clusters, train_iters)
-    bc = spark.sparkContext.broadcast(c_mat)
-
-    def assign(batches):
-        cm = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = mn @ cm.T
-            top = np.argsort(-sims, axis=1)[:, :n_assign]
-            out = pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_assign),
-                "v": pdf["v"].iloc[
-                    np.repeat(np.arange(len(pdf)), n_assign)].to_numpy(),
-                "cluster": top.ravel(),
-            })
-            yield out
-
-    assigned = e.mapInPandas(
-        assign, schema="vec_id long, v array<double>, cluster int"
-    )
+    c_mat = _train_coarse_centroids(_hash_sample(e, n_train), n_clusters,
+                                    train_iters)
+    assigned = _assign_cells(e, c_mat, "cluster", n_assign)
 
     def pair_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()

@@ -1,19 +1,27 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-- ann_cosine_topk   brute-force cosine top-k: correct baseline. The
-                    query side is tiny and broadcast; the corpus side
-                    streams — so the plan is one broadcast-nested-loop
-                    + per-query window top-k, no global sort.
-- ann_lsh_bucketed  the scale path: deterministic random-hyperplane
-                    sign buckets (xxhash64-derived ±1 planes, no RNG
-                    state), candidates only within a bucket → cost
-                    drops from O(N·Q) to O(N + bucket·Q).
+Each ANN method is a candidate generator in front of one exact
+scan-and-rank step:
 
-Vector math is JVM higher-order folds (functions/vector_fn.py) — no
-Python, Arrow, or UDF in the hot path.
+- cosine_topk        exact: every vector is scored against the
+                     broadcast query matrix, one matmul per Arrow batch.
+- lsh_bucketed_topk  deterministic random-hyperplane sign buckets
+                     (xxhash64-derived ±1 planes, no RNG state); only
+                     same-bucket pairs are scored, in JVM folds
+                     (functions/vector_fn.py).
+- ivf_topk, hnsw_topk  vectors assigned to IVF lists or HNSW sample-node
+                     cells; a query scores only the cells it probes.
+- pq_topk, ivfpq_topk  PQ codes give each query an ADC shortlist, which
+                     an exact cosine re-ranks.
+
+The shared steps (query load, nearest-cell assignment, probe-masked
+scan, per-query top-k and the PQ ADC step) are the private helpers
+below; vector_index.py and semdedup.py import them too.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +45,124 @@ def _as_double(col) -> F.Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+# The shared ANN steps. The functions that run on the executors are
+# defined INSIDE these helpers so that cloudpickle ships them by value:
+# the Python workers inherit the JVM's cwd, not the driver's sys.path,
+# and need not be able to import this package.
+
+def _load_queries(e: DataFrame, n_queries: int, memo: dict | None = None):
+    """(q_ids, q_mat): the query vectors (vec_id < n_queries) of the
+    (vec_id, v) frame `e`, rows normalized. The collected snapshot goes
+    through the memo, so the methods recall_at_k composes share one
+    collect."""
+    import numpy as np
+
+    qsnap = _memo_get(
+        memo, ("queries", n_queries),
+        lambda: e.filter(F.col("vec_id") < n_queries).toPandas())
+    if not len(qsnap):
+        raise ValueError(
+            f"no query vectors: no vec_id < n_queries={n_queries}")
+    q_mat = np.stack(qsnap["v"].to_numpy())
+    return (qsnap["vec_id"].to_numpy(),
+            q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True))
+
+
+def _assign_cells(e: DataFrame, cells, cell_col: str,
+                  n_assign: int | None = None) -> DataFrame:
+    """(vec_id, v, <cell_col>): each vector of `e` assigned by cosine
+    to its nearest row of the broadcast `cells` matrix (IVF centroids,
+    HNSW sample nodes, SemDeDup clusters), one matmul per Arrow batch.
+    n_assign=None keeps the single argmax cell; an int soft-assigns a
+    vector to its n_assign nearest cells, one row per cell."""
+    import numpy as np
+    import pandas as pd
+
+    bc = e.sparkSession.sparkContext.broadcast(cells)
+
+    def assign(batches):
+        cm = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = np.stack(pdf["v"].to_numpy())
+            sims = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ cm.T
+            if n_assign is None:
+                top = np.argmax(sims, axis=1)[:, None]
+            else:
+                top = np.argsort(-sims, axis=1)[:, :n_assign]
+            # a matrix with fewer than n_assign rows gives fewer cells
+            rows = np.repeat(np.arange(len(pdf)), top.shape[1])
+            yield pd.DataFrame({
+                "vec_id": pdf["vec_id"].to_numpy()[rows],
+                "v": pdf["v"].to_numpy()[rows],
+                cell_col: top.ravel(),
+            })
+
+    return e.mapInPandas(
+        assign, schema=f"vec_id long, v array<double>, {cell_col} int")
+
+
+def _probed_scores(assigned: DataFrame, cell_col: str, q_ids, q_mat,
+                   probes) -> DataFrame:
+    """(query_id, neighbor_id, sim) for every pair of a query and a
+    vector in a cell it probes — `probes` is a boolean (Q, n_cells)
+    mask over `assigned`'s `cell_col` — excluding the query itself.
+    One broadcast query matmul per Arrow batch."""
+    import numpy as np
+    import pandas as pd
+
+    bc = assigned.sparkSession.sparkContext.broadcast((q_ids, q_mat, probes))
+
+    def score(batches):
+        ids, qm, pr = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            n_ids = pdf["vec_id"].to_numpy()
+            m = np.stack(pdf["v"].to_numpy())
+            sims = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ qm.T
+            qi, ni = np.nonzero(pr[:, pdf[cell_col].to_numpy()]
+                                & (ids[:, None] != n_ids[None, :]))
+            yield pd.DataFrame({"query_id": ids[qi],
+                                "neighbor_id": n_ids[ni],
+                                "sim": sims[ni, qi]})
+
+    return assigned.mapInPandas(
+        score, schema="query_id long, neighbor_id long, sim double")
+
+
+def _top_k(scored: DataFrame, k: int, by: str = "sim") -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, <by>) rows, ranked by
+    (by desc, neighbor_id asc): (query_id, neighbor_id, cos_sim, rank),
+    with `by` rounded to the 6-decimal output convention as cos_sim."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(by), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round(by, 6).alias("cos_sim"), "rank")
+    )
+
+
+def _pq_adc():
+    """The PQ encode + ADC step that the PQ scans run per Arrow batch:
+    adc(z, codebooks, cb_sq, lut) encodes each row of z (B, m_sub,
+    dsub) as its nearest codeword per subspace (argmin ||x - c||² =
+    argmin |c|² - 2x·c) and sums the queries' lookup-table entries for
+    those codes into (B, Q) scores."""
+    import numpy as np
+
+    def adc(z, cb, cb_sq, lut):
+        out = np.zeros((len(z), len(lut)))
+        for mi in range(z.shape[1]):
+            codes = np.argmin(
+                cb_sq[mi][None, :] - 2.0 * (z[:, mi, :] @ cb[mi].T), axis=1)
+            out += lut[:, mi, codes].T               # (B, Q)
+        return out
+
+    return adc
+
+
 def cosine_topk(emb: DataFrame, n_queries: int = N_QUERIES,
                 k: int = TOP_K,
                 sim_ceiling: float | None = None,
@@ -58,13 +184,7 @@ def cosine_topk(emb: DataFrame, n_queries: int = N_QUERIES,
 
     spark = emb.sparkSession
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
-    qsnap = _memo_get(
-        memo, ("queries", n_queries),
-        lambda: e.filter(F.col("vec_id") < n_queries).toPandas())
-    q_ids = qsnap["vec_id"].to_numpy()
-    q_mat = np.stack(qsnap["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
+    bc = spark.sparkContext.broadcast(_load_queries(e, n_queries, memo))
 
     def gen(batches):
         ids, qm = bc.value
@@ -94,12 +214,7 @@ def cosine_topk(emb: DataFrame, n_queries: int = N_QUERIES,
         # knife-edge at the ceiling would admit a pair in one engine
         # and not the other
         scored = scored.filter(F.round(F.col("sim"), 6) < sim_ceiling)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _plane_signs(p: int, dim: int) -> list[float]:
@@ -237,15 +352,9 @@ def lsh_bucketed_topk(emb: DataFrame, n_queries: int = N_QUERIES,
         .select("query_id", "neighbor_id", "qv", "nv")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id", "neighbor_id", cosine("qv", "nv").alias("sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k(
+        cand.select("query_id", "neighbor_id", cosine("qv", "nv").alias("sim")),
+        k)
 
 
 def _probe_masks(q_mat, c_mat, list_sizes, scan_frac: float,
@@ -291,10 +400,6 @@ def ivf_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
     here are the (n_lists-row, bounded) index statistics a real
     deployment persists with the index.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
 
     X = _memo_sample(memo, e, n_train)
@@ -302,67 +407,10 @@ def ivf_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
         memo, ("coarse", n_train, n_lists, train_iters),
         lambda: (lambda C: (C, _sample_list_sizes(X, C, n_lists)))(
             _train_coarse_centroids(X, n_lists, train_iters)))
-    bc_c = spark.sparkContext.broadcast(c_mat)
-
-    def assign(batches):
-        cm = bc_c.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            lists = np.argmax(mn @ cm.T, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "v": pdf["v"], "list_id": lists}
-            )
-
-    assigned = e.mapInPandas(
-        assign, schema="vec_id long, v array<double>, list_id int"
-    )
-
-    queries = _memo_get(
-        memo, ("queries", n_queries),
-        lambda: e.filter(F.col("vec_id") < n_queries).toPandas())
-    q_mat = np.stack(queries["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    assigned = _assign_cells(e, c_mat, "list_id")
+    q_ids, q_mat = _load_queries(e, n_queries, memo)
     probes = _probe_masks(q_mat, c_mat, list_sizes, scan_frac)
-    bc_q = spark.sparkContext.broadcast(
-        (queries["vec_id"].to_numpy(), q_mat, probes)
-    )
-
-    def score(batches):
-        ids, qm, pr = bc_q.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["vec_id"].to_numpy()
-            lists = pdf["list_id"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = mn @ qm.T                       # (batch, Q)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(ids)):
-                probe_mask = pr[qi, lists] & (n_ids != ids[qi])
-                out_q.append(np.full(probe_mask.sum(), ids[qi]))
-                out_n.append(n_ids[probe_mask])
-                out_s.append(sims[probe_mask, qi])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = assigned.mapInPandas(
-        score, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k(_probed_scores(assigned, "list_id", q_ids, q_mat, probes), k)
 
 
 def knn_label_accuracy(emb: DataFrame, k: int = KNN_K,
@@ -642,12 +690,7 @@ def pq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
     cb_sq = (codebooks ** 2).sum(axis=2)          # (m_sub, k_codes)
     dsub = codebooks.shape[2]
 
-    queries = _memo_get(
-        memo, ("queries", n_queries),
-        lambda: e.filter(F.col("vec_id") < n_queries).toPandas())
-    q_ids = queries["vec_id"].to_numpy()
-    q_mat = np.stack(queries["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_ids, q_mat = _load_queries(e, n_queries, memo)
     # ADC lookup table (Q, m_sub, k_codes): rotated query subvector ·
     # codebook — q·x̂ = (qR)·(x̂R) since R is orthonormal
     qz = q_mat @ R
@@ -655,6 +698,7 @@ def pq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
         "qmd,mkd->qmk", qz.reshape(len(q_ids), m_sub, dsub), codebooks
     )
     bc = spark.sparkContext.broadcast((q_ids, lut, codebooks, cb_sq, R))
+    adc = _pq_adc()
 
     def adc_scan(batches):
         ids, lt, cb, cbsq, rot = bc.value
@@ -664,13 +708,8 @@ def pq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
             n_ids = pdf["vec_id"].to_numpy()
             m = np.stack(pdf["v"].to_numpy())
             mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sub = (mn @ rot).reshape(len(n_ids), m_sub, dsub)
-            # encode: per subspace argmin ||x - c||² = argmin(|c|² - 2x·c)
-            sims = np.zeros((len(n_ids), len(ids)))
-            for mi in range(m_sub):
-                d = cbsq[mi][None, :] - 2.0 * (sub[:, mi, :] @ cb[mi].T)
-                codes = np.argmin(d, axis=1)          # (B,)
-                sims += lt[:, mi, codes].T            # (B, Q)
+            sims = adc((mn @ rot).reshape(len(n_ids), m_sub, dsub),
+                       cb, cbsq, lt)
             out = []
             for qi in range(len(ids)):
                 s = sims[:, qi].copy()
@@ -688,12 +727,7 @@ def pq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
     cand = e.mapInPandas(
         adc_scan, schema="query_id long, neighbor_id long, adc double"
     )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    short = (
-        cand.withColumn("_r", F.row_number().over(ws))
-        .filter(F.col("_r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
+    short = _top_k(cand, shortlist, "adc").select("query_id", "neighbor_id")
     return _exact_rerank(e, short, q_ids, q_mat, k)
 
 
@@ -716,12 +750,7 @@ def _exact_rerank(e: DataFrame, short: DataFrame, q_ids, q_mat,
         .join(F.broadcast(qv), "query_id")
         .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("nv")).alias("sim"))
     )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k(rer, k)
 
 
 def ivfpq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
@@ -782,12 +811,7 @@ def ivfpq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
         _train_residual)
     cb_sq = (codebooks ** 2).sum(axis=2)
 
-    queries = _memo_get(
-        memo, ("queries", n_queries),
-        lambda: e.filter(F.col("vec_id") < n_queries).toPandas())
-    q_ids = queries["vec_id"].to_numpy()
-    q_mat = np.stack(queries["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_ids, q_mat = _load_queries(e, n_queries, memo)
     q_cent = q_mat @ c_mat.T                      # (Q, n_lists): q·c_l
     probes = _probe_masks(q_mat, c_mat, list_sizes, scan_frac)
     # rotated-space LUT: q·r̂ = (qR)·(r̂R) since R is orthonormal
@@ -798,6 +822,7 @@ def ivfpq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
     bc = spark.sparkContext.broadcast(
         (q_ids, q_cent, probes, lut, c_mat, codebooks, cb_sq, R)
     )
+    adc = _pq_adc()
 
     def scan(batches):
         ids, qc, pr, lt, cm, cb, cbsq, rot = bc.value
@@ -809,17 +834,13 @@ def ivfpq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
             mn = m / np.linalg.norm(m, axis=1, keepdims=True)
             lists = np.argmax(mn @ cm.T, axis=1)          # (B,)
             r = ((mn - cm[lists]) @ rot).reshape(len(n_ids), m_sub, dsub)
-            adc = np.zeros((len(n_ids), len(ids)))
-            for mi in range(m_sub):
-                d = cbsq[mi][None, :] - 2.0 * (r[:, mi, :] @ cb[mi].T)
-                codes = np.argmin(d, axis=1)
-                adc += lt[:, mi, codes].T                 # q·residual̂
+            q_res = adc(r, cb, cbsq, lt)                  # q·residual̂
             out = []
             for qi in range(len(ids)):
                 probe_mask = pr[qi, lists] & (n_ids != ids[qi])
                 if not probe_mask.any():
                     continue
-                s = adc[probe_mask, qi] + qc[qi, lists[probe_mask]]
+                s = q_res[probe_mask, qi] + qc[qi, lists[probe_mask]]
                 sub_ids = n_ids[probe_mask]
                 idx = np.lexsort((sub_ids, -s))[:shortlist]
                 out.append(pd.DataFrame({
@@ -833,129 +854,7 @@ def ivfpq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
     cand = e.mapInPandas(
         scan, schema="query_id long, neighbor_id long, adc double"
     )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    short = (
-        cand.withColumn("_r", F.row_number().over(ws))
-        .filter(F.col("_r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(e, short, q_ids, q_mat, k)
-
-
-def lopq_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
-              n_lists: int = 16, scan_frac: float = 0.5, m_sub: int = 8,
-              k_codes: int = 64, n_train: int = 2048,
-              train_iters: int = 10, shortlist: int = 300) -> DataFrame:
-    """Locally-optimized product quantization (LOPQ, Kalantidis &
-    Avrithis CVPR'14): IVFPQ with a PER-LIST OPQ rotation and PER-LIST
-    residual codebooks. Each coarse cell's residual distribution has
-    its own covariance structure; one global rotation+codebook
-    (ivfpq_topk) models their mixture, while LOPQ fits each cell's
-    local geometry — the accuracy-per-byte ceiling of the PQ family.
-
-    Driver state stays bounded: n_lists rotations (l×d×d) + n_lists
-    codebook sets (l×m×k×dsub) ≈ a few hundred KB at these settings —
-    corpus-size independent, broadcast like every other ANN model
-    here. The scan groups each Arrow batch BY LIST so the per-list
-    rotation is applied as one matmul per (list ∩ batch), not per row.
-    Per-cell training sample is n_train/n_lists (~128) — codebooks are
-    coarser than the pooled IVFPQ ones, which is the standard LOPQ
-    trade (local fit vs per-cell sample size); measured here it wins.
-    Determinism: shared hash sample, first-k inits, id tiebreaks."""
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    e = emb.select("vec_id", _as_double("embedding").alias("v"))
-
-    X = _hash_sample(e, n_train)
-    c_mat = _train_coarse_centroids(X, n_lists, train_iters)
-    list_sizes = _sample_list_sizes(X, c_mat, n_lists)
-
-    dim = X.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    assign = np.argmax(X @ c_mat.T, axis=1)
-    rots = np.zeros((n_lists, dim, dim))
-    cbs = np.zeros((n_lists, m_sub, k_codes, dsub))
-    for l in range(n_lists):
-        res_l = X[assign == l] - c_mat[l]
-        if len(res_l) < 2:  # degenerate cell: identity rotation,
-            res_l = X - c_mat[l]  # pooled residuals as fallback
-        rots[l] = _opq_rotation(res_l, m_sub)
-        if len(res_l) < k_codes:
-            # small cell: tile the residuals so k-means has >= k rows
-            # (duplicate codewords collapse harmlessly in ADC)
-            res_l = np.tile(res_l, (k_codes // len(res_l) + 1, 1))
-        cbs[l] = _train_pq_codebooks_from(
-            res_l @ rots[l], m_sub, k_codes, train_iters
-        )
-    cb_sq = (cbs ** 2).sum(axis=3)                 # (l, m, k)
-
-    queries = e.filter(F.col("vec_id") < n_queries).toPandas()
-    q_ids = queries["vec_id"].to_numpy()
-    q_mat = np.stack(queries["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_cent = q_mat @ c_mat.T
-    probes = _probe_masks(q_mat, c_mat, list_sizes, scan_frac)
-    # per-list LUT: (Q, l, m, k) — q rotated into EACH list's frame
-    q_rot = np.einsum("qd,lde->qle", q_mat, rots)  # (Q, l, dim)
-    lut = np.einsum(
-        "qlmd,lmkd->qlmk",
-        q_rot.reshape(len(q_ids), n_lists, m_sub, dsub),
-        cbs,
-    )
-    bc = spark.sparkContext.broadcast(
-        (q_ids, q_cent, probes, lut, c_mat, cbs, cb_sq, rots)
-    )
-
-    def scan(batches):
-        ids, qc, pr, lt, cm, cb, cbsq, rot = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["vec_id"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            lists = np.argmax(mn @ cm.T, axis=1)
-            adc = np.zeros((len(n_ids), len(ids)))
-            for l in np.unique(lists):
-                sel = lists == l
-                r = ((mn[sel] - cm[l]) @ rot[l]).reshape(
-                    sel.sum(), m_sub, dsub
-                )
-                for mi in range(m_sub):
-                    d = cbsq[l, mi][None, :] - 2.0 * (r[:, mi, :] @ cb[l, mi].T)
-                    codes = np.argmin(d, axis=1)
-                    adc[sel] += lt[:, l, mi, codes].T
-            out = []
-            for qi in range(len(ids)):
-                probe_mask = pr[qi, lists] & (n_ids != ids[qi])
-                if not probe_mask.any():
-                    continue
-                s = adc[probe_mask, qi] + qc[qi, lists[probe_mask]]
-                sub_ids = n_ids[probe_mask]
-                idx = np.lexsort((sub_ids, -s))[:shortlist]
-                out.append(pd.DataFrame({
-                    "query_id": np.full(len(idx), ids[qi]),
-                    "neighbor_id": sub_ids[idx],
-                    "adc": s[idx],
-                }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    cand = e.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, adc double"
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    short = (
-        cand.withColumn("_r", F.row_number().over(ws))
-        .filter(F.col("_r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
+    short = _top_k(cand, shortlist, "adc").select("query_id", "neighbor_id")
     return _exact_rerank(e, short, q_ids, q_mat, k)
 
 
@@ -1142,91 +1041,30 @@ def hnsw_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
     deterministic: hash sample, lexsort edges, fixed entry node, id
     tie-breaks."""
     import numpy as np
-    import pandas as pd
 
-    spark = emb.sparkSession
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
 
     X = _memo_sample(memo, e, n_train)
     adj, upper, graph_entry = _memo_get(
         memo, ("hnsw_graph", n_train, m_edges),
         lambda: _build_hnsw(X, m_edges))
-    bc_x = spark.sparkContext.broadcast(X)
-
-    def assign(batches):
-        xm = bc_x.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = mn @ xm.T
-            top = np.argsort(-sims, axis=1)[:, :n_assign]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_assign),
-                    "v": [v for v in pdf["v"] for _ in range(n_assign)],
-                    "cell_id": top.ravel(),
-                }
-            )
-
-    assigned = e.mapInPandas(
-        assign, schema="vec_id long, v array<double>, cell_id int"
-    )
-
-    queries = _memo_get(
-        memo, ("queries", n_queries),
-        lambda: e.filter(F.col("vec_id") < n_queries).toPandas())
-    q_mat = np.stack(queries["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    assigned = _assign_cells(e, X, "cell_id", n_assign)
+    q_ids, q_mat = _load_queries(e, n_queries, memo)
     probes = np.zeros((len(q_mat), len(X)), dtype=bool)
     for qi in range(len(q_mat)):
         l0_entry = _hnsw_descend(upper, X, q_mat[qi], graph_entry)
         routed = _beam_search(adj, X, q_mat[qi], ef, entry=l0_entry)
         probes[qi, routed[:n_probe_cells]] = True
-    bc_q = spark.sparkContext.broadcast(
-        (queries["vec_id"].to_numpy(), q_mat, probes)
-    )
-
-    def score(batches):
-        ids, qm, pr = bc_q.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["vec_id"].to_numpy()
-            cells = pdf["cell_id"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = mn @ qm.T
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(ids)):
-                mask = pr[qi, cells] & (n_ids != ids[qi])
-                out_q.append(np.full(mask.sum(), ids[qi]))
-                out_n.append(n_ids[mask])
-                out_s.append(sims[mask, qi])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = assigned.mapInPandas(
-        score, schema="query_id long, neighbor_id long, sim double"
+    scored = _probed_scores(
+        assigned, "cell_id", q_ids, q_mat, probes
     ).dropDuplicates(["query_id", "neighbor_id"])  # soft-assign replicas
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k(scored, k)
 
 
 def recall_at_k(emb: DataFrame, n_queries: int = N_QUERIES,
                 k: int = TOP_K) -> DataFrame:
     """Quantified ANN quality: recall@k of each approximate path
-    (hyperplane-LSH buckets, IVF probes) against the exact brute-force
+    (LSH buckets, IVF, PQ, IVFPQ and HNSW) against the exact brute-force
     top-k — one row per method. Every input is deterministic
     (hash-derived planes/centroids, id tiebreaks), so the recall value
     is stable across runs and cluster shapes; tests pin a floor."""
@@ -1249,52 +1087,37 @@ def recall_at_k(emb: DataFrame, n_queries: int = N_QUERIES,
     ]
     exact = local_frame(emb.sparkSession,
                         exact_rows, "query_id long, neighbor_id long")
-    approx = (
-        lsh_bucketed_topk(emb, n_queries, k)
-        .select("query_id", "neighbor_id")
-        .withColumn("method", F.lit("lsh_bucketed"))
-        .unionByName(
-            ivf_topk(emb, n_queries, k, memo=memo)
-            .select("query_id", "neighbor_id")
-            .withColumn("method", F.lit("ivf"))
-        )
-        .unionByName(
-            pq_topk(emb, n_queries, k, memo=memo)
-            .select("query_id", "neighbor_id")
-            .withColumn("method", F.lit("pq"))
-        )
-        .unionByName(
-            ivfpq_topk(emb, n_queries, k, memo=memo)
-            .select("query_id", "neighbor_id")
-            .withColumn("method", F.lit("ivfpq"))
-        )
-        .unionByName(
-            hnsw_topk(emb, n_queries, k, memo=memo)
-            .select("query_id", "neighbor_id")
-            .withColumn("method", F.lit("hnsw"))
-        )
-    )
-    n_exact = len(exact_rows)  # driver-known: the frame is literal
+    # one ordered name -> method table feeds both the union and the
+    # literal method rows. The order is the memo's: ivf takes the
+    # 2048-row sample that pq and ivfpq reuse and hnsw slices.
+    methods = {
+        "lsh_bucketed": lambda: lsh_bucketed_topk(emb, n_queries, k),
+        "ivf": lambda: ivf_topk(emb, n_queries, k, memo=memo),
+        "pq": lambda: pq_topk(emb, n_queries, k, memo=memo),
+        "ivfpq": lambda: ivfpq_topk(emb, n_queries, k, memo=memo),
+        "hnsw": lambda: hnsw_topk(emb, n_queries, k, memo=memo),
+    }
+    approx = reduce(DataFrame.unionByName, [
+        fn().select("query_id", "neighbor_id").withColumn("method", F.lit(name))
+        for name, fn in methods.items()
+    ])
     hits = (
         approx.join(F.broadcast(exact), ["query_id", "neighbor_id"])
         .groupBy("method")
         .agg(F.count("*").alias("hits"))
     )
     # literal method rows — a method that returns ZERO candidates must
-    # still report recall 0.0, not vanish from the output
-    methods = local_frame(
-        emb.sparkSession,
-        [("hnsw",), ("ivf",), ("ivfpq",), ("lsh_bucketed",), ("pq",)],
-        "method string",
-    )
-    # n_exact=0 (empty corpus) yields a defined 0.0, not null
+    # still report recall 0.0, not vanish from the output. A corpus
+    # whose one vector is the query has no exact neighbours: its 0 hits
+    # over max(n_exact, 1) read 0.0, not a division by zero.
     return (
-        methods.join(hits, "method", "left")
+        local_frame(emb.sparkSession, [(m,) for m in sorted(methods)],
+                    "method string")
+        .join(hits, "method", "left")
         .select(
             "method",
-            (F.lit(0.0) if n_exact == 0 else F.round(
-                F.coalesce(F.col("hits"), F.lit(0)) / F.lit(n_exact), 6
-            )).alias("recall_at_k"),
+            F.round(F.coalesce(F.col("hits"), F.lit(0))
+                    / F.lit(max(len(exact_rows), 1)), 6).alias("recall_at_k"),
         )
         .orderBy("method")
     )

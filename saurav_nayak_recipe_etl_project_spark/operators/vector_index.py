@@ -33,7 +33,11 @@ from saurav_nayak_recipe_etl_project_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
     _as_double,
+    _assign_cells,
     _hash_sample,
+    _load_queries,
+    _probed_scores,
+    _top_k,
     _train_coarse_centroids,
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
@@ -57,30 +61,9 @@ def assign_lists(emb: DataFrame, c_mat) -> DataFrame:
     """(vec_id, v, list_id) — nearest-centroid assignment, one
     broadcast matmul per Arrow batch; the map side of every index
     operation."""
-    import numpy as np
-    import pandas as pd
-
-    bc = emb.sparkSession.sparkContext.broadcast(c_mat)
-    e = emb.select("vec_id", _as_double("embedding").alias("v"))
-
-    def assign(batches):
-        cm = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "list_id": np.argmax(mn @ cm.T, axis=1),
-                }
-            )
-
-    return e.mapInPandas(
-        assign, schema="vec_id long, v array<double>, list_id int"
-    )
+    return _assign_cells(
+        emb.select("vec_id", _as_double("embedding").alias("v")), c_mat,
+        "list_id")
 
 
 def build_index(emb: DataFrame, index_path: str, c_mat=None) -> None:
@@ -103,50 +86,14 @@ def search_index(spark: SparkSession, index_path: str, q_ids, q_mat,
     storage layout). Scoring is the broadcast query matmul; top-k is
     the per-query window."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.window import Window
-
-    probes = np.argsort(-(q_mat @ c_mat.T), axis=1)[:, :n_probe]
-    probe_lists = sorted({int(x) for x in probes.ravel()})
+    order = np.argsort(-(q_mat @ c_mat.T), axis=1)
+    probes = np.zeros(order.shape, dtype=bool)
+    np.put_along_axis(probes, order[:, :n_probe], True, axis=1)
     idx = spark.read.parquet(index_path).filter(
-        F.col("list_id").isin(probe_lists)
+        F.col("list_id").isin(np.flatnonzero(probes.any(axis=0)).tolist())
     )
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, probes))
-
-    def score(batches):
-        ids, qm, pr = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["vec_id"].to_numpy()
-            lists = pdf["list_id"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy())
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = mn @ qm.T
-            out = []
-            for qi in range(len(ids)):
-                mask = np.isin(lists, pr[qi]) & (n_ids != ids[qi])
-                out.append(pd.DataFrame({
-                    "query_id": np.full(int(mask.sum()), ids[qi]),
-                    "neighbor_id": n_ids[mask],
-                    "sim": sims[mask, qi],
-                }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = idx.mapInPandas(
-        score, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    return _top_k(_probed_scores(idx, "list_id", q_ids, q_mat, probes), k)
 
 
 def _add_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
@@ -207,8 +154,6 @@ def ann_index_partitioned_search(spark: SparkSession,
     recall_ok) vs the exact top-k at the shared per-query floor. The
     directory-pruning property itself (files read ⊆ probed list dirs)
     is asserted on real scan metrics in tests/test_vector_index.py."""
-    import numpy as np
-
     from saurav_nayak_recipe_etl_project_spark.operators.similarity import (
         PER_QUERY_RECALL_FLOOR,
         _per_query_recall_ok,
@@ -218,11 +163,8 @@ def ann_index_partitioned_search(spark: SparkSession,
     c_mat = train_centroids(emb)
     tmp = scratch_dir("vec_index_search_")
     build_index(emb, f"{tmp}/index", c_mat)
-    e = emb.select("vec_id", _as_double("embedding").alias("v"))
-    queries = e.filter(F.col("vec_id") < N_QUERIES).toPandas()
-    q_ids = queries["vec_id"].to_numpy()
-    q_mat = np.stack(queries["v"].to_numpy())
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_ids, q_mat = _load_queries(
+        emb.select("vec_id", _as_double("embedding").alias("v")), N_QUERIES)
     hits = search_index(spark, f"{tmp}/index", q_ids, q_mat, c_mat)
     return _per_query_recall_ok(emb, hits, PER_QUERY_RECALL_FLOOR["ivf"])
 

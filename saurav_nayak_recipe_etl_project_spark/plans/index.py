@@ -7,7 +7,8 @@ Usage: python -m saurav_nayak_recipe_etl_project_spark.plans.index
 from __future__ import annotations
 
 
-def main() -> None:
+def render() -> str:
+    """The text of docs/QUERIES.md, built from the registry."""
     from saurav_nayak_recipe_etl_project_spark.registry import ORACLES, QUERIES
 
     lines = [
@@ -28,8 +29,12 @@ def main() -> None:
             mark = "✅" if name in ORACLES else "rows-only"
             lines.append(f"| `{name}` | {mark} | {doc} |")
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     with open("docs/QUERIES.md", "w", encoding="utf-8") as f:
-        f.write("\n".join(lines))
+        f.write(render())
 
 
 if __name__ == "__main__":

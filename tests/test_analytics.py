@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from saurav_nayak_recipe_etl_project_spark.registry import ORACLES, QUERIES
@@ -30,6 +32,18 @@ def test_all_queries_have_callable(spark):
     # every suite registers or the import fails loudly: a whole suite
     # vanishing from the registry shows up here as a count drop
     assert len(QUERIES) == len(ORACLES) == 289
+
+
+def test_query_index_doc_is_current():
+    """docs/QUERIES.md is generated from the registry, so a changed
+    entry or first docstring line must come with the regenerated file."""
+    from saurav_nayak_recipe_etl_project_spark.plans.index import render
+
+    path = os.path.join(os.path.dirname(__file__), "..", "docs", "QUERIES.md")
+    with open(path, encoding="utf-8") as f:
+        assert f.read() == render(), (
+            "regenerate with "
+            "`python -m saurav_nayak_recipe_etl_project_spark.plans.index`")
 
 
 def test_harness_detects_mismatches(spark, sf_dir):

@@ -89,19 +89,15 @@ def test_ann_memo_method_identical_to_standalone(spark, sf_dir):
 
     emb = load_table(spark, "embeddings", sf_dir)
     memo: dict = {}
-    # prime the memo through one method, reuse through another — the
+    # prime the memo through one method, reuse through the others — the
     # shared sample/queries/coarse keys must leave outputs identical
-    ivf_memo = sorted(map(tuple, S.ivf_topk(emb, memo=memo).collect()))
-    ivf_solo = sorted(map(tuple, S.ivf_topk(emb).collect()))
-    assert ivf_memo == ivf_solo
+    for method in (S.ivf_topk, S.pq_topk, S.ivfpq_topk, S.hnsw_topk,
+                   S.cosine_topk):
+        with_memo = sorted(map(tuple, method(emb, memo=memo).collect()))
+        solo = sorted(map(tuple, method(emb).collect()))
+        assert with_memo == solo, method.__name__
     assert ("coarse", 2048, 16, 10) in memo
-    pq_memo = sorted(map(tuple, S.pq_topk(emb, memo=memo).collect()))
-    pq_solo = sorted(map(tuple, S.pq_topk(emb).collect()))
-    assert pq_memo == pq_solo
     # hnsw's 1024-row sample must slice out of the memo'd 2048 sample
-    hnsw_memo = sorted(map(tuple, S.hnsw_topk(emb, memo=memo).collect()))
-    hnsw_solo = sorted(map(tuple, S.hnsw_topk(emb).collect()))
-    assert hnsw_memo == hnsw_solo
     assert ("sample", 1024) not in memo  # sliced, not recomputed
 
 
