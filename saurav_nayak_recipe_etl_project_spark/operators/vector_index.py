@@ -41,6 +41,7 @@ from saurav_nayak_recipe_etl_project_spark.operators.similarity import (
     _train_coarse_centroids,
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+from saurav_nayak_recipe_etl_project_spark.streaming import key_batches
 
 N_LISTS = 16
 N_TRAIN = 2048
@@ -127,12 +128,9 @@ def ann_index_stream_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     c_mat = train_centroids(emb)
     tmp = scratch_dir("vec_index_replay_")
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    _add_batch(spark, emb.filter(F.col("vec_id") <= mid), 0,
-               f"{tmp}/stream_index", c_mat)
-    _add_batch(spark, emb.filter(F.col("vec_id") > mid), 1,
-               f"{tmp}/stream_index", c_mat)
+    first, second = key_batches(emb, "vec_id", 2)
+    _add_batch(spark, first, 0, f"{tmp}/stream_index", c_mat)
+    _add_batch(spark, second, 1, f"{tmp}/stream_index", c_mat)
     streamed = spark.read.parquet(f"{tmp}/stream_index").select(
         "vec_id", F.col("list_id").alias("s_list")
     )

@@ -73,7 +73,16 @@ from saurav_nayak_recipe_etl_project_spark.operators.kmeans import (
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 from saurav_nayak_recipe_etl_project_spark.streaming import (
+    batch_dirs,
+    drain,
+    fold_batches,
+    hadoop_fs,
+    key_batches,
+    read_drops,
     rebalance_for_write,
+    recover_swap,
+    replay_batches,
+    swap_dirs,
 )
 
 ANN_MV_LISTS = 8     # coarse quantizer size (IVF nlist)
@@ -89,8 +98,7 @@ def _read_centroids(spark: SparkSession, cent_path: str):
     pipeline-order bug, not a condition to paper over."""
     import numpy as np
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(cent_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_path = hadoop_fs(spark, cent_path)
     if not fs.exists(jvm_path):
         # ONLY the missing-path case maps to "untrained" — a corrupt
         # or unreadable centroid file must surface as the storage
@@ -168,46 +176,6 @@ def _write_occupancy(spark: SparkSession, postings_dir: str,
         .agg(F.count(F.lit(1)).alias("c"))
     )
     occ.coalesce(1).write.mode("overwrite").parquet(occupancy_dir)
-
-
-def _recover_swap(spark: SparkSession, live: str) -> bool:
-    """Self-heal the `_swap_dirs` crash window (ADVICE r12): a crash
-    between its two renames strands the ONLY copy of the state at
-    `{live}.fold.old` with `live` missing — rename it back before any
-    maintenance proceeds, so the window is recoverable on the next
-    run instead of needing a manual rename. A strict no-op in every
-    other state (live present, or no .fold.old). Returns True when a
-    recovery happened."""
-    jvm = spark._jvm.org.apache.hadoop.fs.Path
-    live_p, old_p = jvm(live), jvm(f"{live}.fold.old")
-    fs = live_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(live_p) and fs.exists(old_p):
-        if not fs.rename(old_p, live_p):
-            raise IOError(
-                f"recover_swap: rename {live}.fold.old -> {live} failed")
-        return True
-    return False
-
-
-def _swap_dirs(spark: SparkSession, live: str, tmp: str, label: str) -> None:
-    """Publish `tmp` as `live` by two renames (live -> .old, tmp ->
-    live, delete .old): no crash point mixes old and new state —
-    every window is a no-op (stray temp) or a missing-state read
-    between the renames, self-healed by `_recover_swap` on the next
-    maintenance run. Shared by the compactor and the rebuild."""
-    # a PRIOR crash may have left the only state copy at .fold.old;
-    # deleting it below would destroy it — heal first (no-op otherwise)
-    _recover_swap(spark, live)
-    jvm = spark._jvm.org.apache.hadoop.fs.Path
-    live_p, tmp_p, old_p = jvm(live), jvm(tmp), jvm(f"{live}.fold.old")
-    fs = live_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(old_p, True)
-    if not fs.rename(live_p, old_p):
-        raise IOError(f"{label}: rename {live} -> .fold.old failed")
-    if not fs.rename(tmp_p, live_p):
-        raise IOError(f"{label}: rename {tmp} -> {live} failed — "
-                      f"state preserved at {live}.fold.old")
-    fs.delete(old_p, True)
 
 
 def ann_mv_process_batch(batch_emb: DataFrame, batch_id: int,
@@ -389,38 +357,16 @@ def compact_ann_mv_state(spark: SparkSession, state_path: str) -> int:
     already-committed batch afterwards would duplicate its vectors.
     Returns the number of partition dirs removed.
 
-    Crash posture (r12 review finding): the fold is written to a
-    SIBLING temp dir and swapped in by two renames, so no crash point
-    leaves the folded rows coexisting with the partials they fold
-    (which would silently duplicate postings) — every window is
-    either a no-op (stray temp, cleaned next run) or a LOUD
-    missing-state read between the two renames."""
-    # heal any prior crashed swap FIRST (ADVICE r12): a rebuild crash
-    # strands the whole state dir, a compact crash strands postings —
-    # either way the live path reads missing and this call would
-    # otherwise return 0 instead of recovering
-    _recover_swap(spark, state_path)
-    path = f"{state_path}/postings"
-    _recover_swap(spark, path)
-    jvm = spark._jvm.org.apache.hadoop.fs.Path
-    jvm_path = jvm(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return 0
-    names = [s.getPath().getName() for s in fs.listStatus(jvm_path)
-             if s.getPath().getName().startswith("batch_id=")]
-    if len(names) <= 1:
-        return 0
-    max_id = max(int(n.split("=", 1)[1]) for n in names)
-    # writing to the temp dir (never into the dir being read) also
-    # removes the old localCheckpoint pin on the merged frame
-    merged = spark.read.option("basePath", path).parquet(path).select(
-        "vec_id", "dist2", "v", "list_id")
-    fs.delete(jvm(f"{path}.fold.tmp"), True)
-    merged.write.partitionBy("list_id").parquet(
-        f"{path}.fold.tmp/batch_id={max_id}")
-    _swap_dirs(spark, path, f"{path}.fold.tmp", "compact_ann_mv_state")
-    return len(names) - 1
+    Crash-safe (r12 review finding): the fold is swapped in by
+    `fold_batches`, never written next to the postings it folds."""
+    # a rebuild crash strands the whole state dir; heal it FIRST, or
+    # the postings path reads missing and the fold returns 0 instead
+    # of recovering (fold_batches then heals a crashed postings swap)
+    recover_swap(spark, state_path)
+    return fold_batches(
+        spark, f"{state_path}/postings",
+        lambda partials: partials.select("vec_id", "dist2", "v", "list_id"),
+        partition_by=["list_id"])
 
 
 def rebuild_ann_mv(spark: SparkSession, state_path: str,
@@ -447,14 +393,9 @@ def rebuild_ann_mv(spark: SparkSession, state_path: str,
     continue above the fold) against the new centroids — later drops
     are increments again. Returns the number of vectors re-indexed."""
     # heal any prior crashed swap before reading state (ADVICE r12)
-    _recover_swap(spark, state_path)
-    _recover_swap(spark, f"{state_path}/postings")
-    jvm = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm(state_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    names = [s.getPath().getName()
-             for s in fs.listStatus(jvm(f"{state_path}/postings"))
-             if s.getPath().getName().startswith("batch_id=")]
-    fold_id = max(int(n.split("=", 1)[1]) for n in names)
+    recover_swap(spark, state_path)
+    recover_swap(spark, f"{state_path}/postings")
+    fold_id = max(batch_dirs(spark, f"{state_path}/postings"))
     post = read_ann_mv(spark, state_path)
     vecs = post.select("vec_id", "v")
     C, cids = _seed_matrix(vecs, k_lists)
@@ -463,7 +404,8 @@ def rebuild_ann_mv(spark: SparkSession, state_path: str,
             f"rebuild_ann_mv: index holds {C.shape[0]} vectors, "
             f"needs >= k_lists={k_lists} to train the quantizer")
     tmp = f"{state_path}.fold.tmp"
-    fs.delete(jvm(tmp), True)
+    fs, tmp_p = hadoop_fs(spark, tmp)
+    fs.delete(tmp_p, True)
     _write_centroids(spark, C, cids, f"{tmp}/centroids")
     rebalance_for_write(_assign_postings(vecs, C, cids), "list_id") \
         .write.partitionBy("list_id").parquet(
@@ -474,35 +416,20 @@ def rebuild_ann_mv(spark: SparkSession, state_path: str,
     # pass over the reassigned postings (r12 review finding)
     n = (spark.read.parquet(f"{tmp}/occupancy/batch_id={fold_id}")
          .agg(F.sum("c")).first()[0]) or 0
-    _swap_dirs(spark, state_path, tmp, "rebuild_ann_mv")
+    swap_dirs(spark, state_path, tmp)
     return int(n)
 
 
 def run_ann_index_stream(spark: SparkSession, source_dir: str,
                          checkpoint_dir: str, state_path: str,
-                         schema: str | None = None,
                          max_files_per_trigger: int | None = None) -> None:
     """Embedding drops → incrementally-maintained IVF index."""
-    reader = spark.readStream.schema(
-        schema or "vec_id long, embedding array<float>, label int"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    emb = reader.parquet(source_dir)
-
-    from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        ann_mv_process_batch(batch_df, batch_id, state_path)
-
-    await_or_raise(
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    emb = read_drops(spark, source_dir,
+                     "vec_id long, embedding array<float>, label int",
+                     max_files_per_trigger)
+    drain(emb, checkpoint_dir,
+          lambda batch_df, batch_id: ann_mv_process_batch(
+              batch_df, batch_id, state_path))
 
 
 def stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,14 +445,8 @@ def stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index/batch-assignment equality, replay idempotency, directory-
     pruned candidate completeness, and re-rank arithmetic."""
     emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("stream_ann_mv_")
-    state = f"{tmp}/state"
-    first = emb.filter(F.col("vec_id") <= mid)
-    ann_mv_process_batch(first, 0, state)
-    ann_mv_process_batch(first, 0, state)  # deliberate replay
-    ann_mv_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
+    state = replay_batches("stream_ann_mv_", ann_mv_process_batch,
+                           key_batches(emb, "vec_id", 2))
     queries = emb.filter(F.col("vec_id") < ANN_MV_QUERIES)
     return ann_search_mv(spark, state, queries)
 
@@ -640,14 +561,8 @@ def stream_ann_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer JS arithmetic — one hash proves the side-state counts,
     their replay idempotency, and the drift scalar."""
     emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("stream_ann_drift_")
-    state = f"{tmp}/state"
-    first = emb.filter(F.col("vec_id") <= mid)
-    ann_mv_process_batch(first, 0, state)
-    ann_mv_process_batch(first, 0, state)  # deliberate replay
-    ann_mv_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
+    state = replay_batches("stream_ann_drift_", ann_mv_process_batch,
+                           key_batches(emb, "vec_id", 2))
     return ann_mv_drift(spark, state)
 
 
@@ -716,13 +631,10 @@ def stream_ann_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassignment, the generation swap, and that serving reads only
     the new generation."""
     emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("stream_ann_rebuild_")
-    state = f"{tmp}/state"
-    first = emb.filter(F.col("vec_id") <= mid)
+    first, second = key_batches(emb, "vec_id", 2)
+    state = f"{scratch_dir('stream_ann_rebuild_')}/state"
     ann_mv_process_batch(first, 0, state)
-    ann_mv_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
+    ann_mv_process_batch(second, 1, state)
     rebuild_ann_mv(spark, state)
     queries = emb.filter(F.col("vec_id") < ANN_MV_QUERIES)
     return ann_search_mv(spark, state, queries)

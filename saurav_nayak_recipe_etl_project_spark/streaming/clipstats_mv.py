@@ -30,9 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.linalg import MICRO
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+from saurav_nayak_recipe_etl_project_spark.streaming import (
+    drain,
+    fold_batches,
+    key_batches,
+    read_drops,
+    replay_batches,
+)
 
 
 def clipstats_process_batch(batch_emb: DataFrame, batch_id: int,
@@ -191,24 +197,13 @@ def stream_clip_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted batch separating (js_micro ≫ batches 0-1) is pinned in
     tests, not here (the oracle already hash-verifies the values)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    c1 = lo + (hi - lo) // 3 if lo is not None else 0
-    c2 = lo + 2 * (hi - lo) // 3 if lo is not None else 0
-    tmp = scratch_dir("stream_clip_drift_")
-    state = f"{tmp}/state"
-    b0 = emb.filter(F.col("vec_id") <= c1)
-    clipstats_process_batch(b0, 0, state)
-    clipstats_process_batch(b0, 0, state)  # deliberate replay
-    clipstats_process_batch(
-        emb.filter((F.col("vec_id") > c1) & (F.col("vec_id") <= c2)),
-        1, state)
-    clipstats_process_batch(
-        emb.filter(F.col("vec_id") > c2).withColumn(
-            "embedding",
-            F.transform("embedding",
-                        lambda x: x.cast("double") + F.lit(0.25)),
-        ),
-        2, state)
+    b0, b1, b2 = key_batches(emb, "vec_id", 3)
+    shifted = b2.withColumn(
+        "embedding",
+        F.transform("embedding", lambda x: x.cast("double") + F.lit(0.25)),
+    )
+    state = replay_batches("stream_clip_drift_", clipstats_process_batch,
+                           [b0, b1, shifted])
     return clipstats_drift(spark, state)
 
 
@@ -220,66 +215,25 @@ def compact_clipstats_state(spark: SparkSession, state_path: str) -> int:
     already-committed batch afterwards would double-count). Returns
     the number of partition dirs removed.
 
-    Crash posture (r12 review finding): the folded TOTALS must never
+    Crash-safe (r12 review finding): the folded TOTALS must never
     coexist with the partials they fold — a read would silently
-    double-count. The fold is written to a SIBLING temp dir and
-    swapped in by the shared rename dance (`_swap_dirs`): every crash
-    window is either a no-op (stray temp, cleaned next run) or a LOUD
-    missing-state read between the renames — never silent
-    corruption."""
-    from saurav_nayak_recipe_etl_project_spark.streaming.ann_mv import (
-        _recover_swap,
-        _swap_dirs,
-    )
-
-    path = f"{state_path}/counts"
-    # heal any prior crashed swap first (ADVICE r12)
-    _recover_swap(spark, path)
-    jvm = spark._jvm.org.apache.hadoop.fs.Path
-    jvm_path = jvm(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return 0
-    names = [s.getPath().getName() for s in fs.listStatus(jvm_path)
-             if s.getPath().getName().startswith("batch_id=")]
-    if len(names) <= 1:
-        return 0
-    max_id = max(int(n.split("=", 1)[1]) for n in names)
-    merged = (
-        spark.read.option("basePath", path).parquet(path)
-        .groupBy("dim", "v").agg(F.sum("c").alias("c"))
-    )
-    fs.delete(jvm(f"{path}.fold.tmp"), True)
-    merged.write.parquet(f"{path}.fold.tmp/batch_id={max_id}")
-    _swap_dirs(spark, path, f"{path}.fold.tmp", "compact_clipstats_state")
-    return len(names) - 1
+    double-count — so the fold is swapped in by `fold_batches`."""
+    return fold_batches(
+        spark, f"{state_path}/counts",
+        lambda partials: partials.groupBy("dim", "v").agg(
+            F.sum("c").alias("c")))
 
 
 def run_clipstats_stream(spark: SparkSession, source_dir: str,
                          checkpoint_dir: str, state_path: str,
-                         schema: str | None = None,
                          max_files_per_trigger: int | None = None) -> None:
     """Embedding drops → incrementally-maintained clip calibration."""
-    reader = spark.readStream.schema(
-        schema or "vec_id long, embedding array<float>, label int"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    emb = reader.parquet(source_dir)
-
-    from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        clipstats_process_batch(batch_df, batch_id, state_path)
-
-    await_or_raise(
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    emb = read_drops(spark, source_dir,
+                     "vec_id long, embedding array<float>, label int",
+                     max_files_per_trigger)
+    drain(emb, checkpoint_dir,
+          lambda batch_df, batch_id: clipstats_process_batch(
+              batch_df, batch_id, state_path))
 
 
 def stream_clip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,14 +244,8 @@ def stream_clip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised every run) — then rolls the merged counts up to the
     calibration readout."""
     emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("clipstats_mv_")
-    state = f"{tmp}/state"
-    first = emb.filter(F.col("vec_id") <= mid)
-    clipstats_process_batch(first, 0, state)
-    clipstats_process_batch(first, 0, state)  # deliberate replay
-    clipstats_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
+    state = replay_batches("clipstats_mv_", clipstats_process_batch,
+                           key_batches(emb, "vec_id", 2))
     return clip_stats_from_counts(read_clipstats_counts(spark, state))
 
 

@@ -47,8 +47,12 @@ from pyspark.sql import functions as F
 
 from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.streaming import (
-    await_or_raise,
+    batch_dirs,
+    drain,
+    hadoop_fs,
+    key_batches,
     parallel_actions,
+    read_drops,
     rebalance_for_write,
 )
 
@@ -100,12 +104,11 @@ def dedup_stream_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_band_dedup() (replay + planted-dup behavior pinned in
     tests/test_doc_dedup.py)."""
     docs = load_table(spark, "documents", sf_dir)
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
+    first, second = key_batches(docs, "doc_id", 2)
     tmp = scratch_dir("stream_lsh_replay_")
     state, out = f"{tmp}/state", f"{tmp}/out"
-    _process_batch(spark, docs.filter(F.col("doc_id") <= mid), 0, state, out)
-    _process_batch(spark, docs.filter(F.col("doc_id") > mid), 1, state, out)
+    _process_batch(spark, first, 0, state, out)
+    _process_batch(spark, second, 1, state, out)
     streamed = (
         spark.read.parquet(out)
         .select("doc_id").withColumn("_skept", F.lit(True))
@@ -124,8 +127,7 @@ def _read_state(spark: SparkSession, state_path: str):
     The state layout is `state_path/batch_id=N/bucket=K/…` — standard
     hive partitioning, so batch_id AND bucket predicates both prune to
     whole directories before any file is opened."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_path = hadoop_fs(spark, state_path)
     if not fs.exists(jvm_path) or not fs.listStatus(jvm_path):
         return spark.createDataFrame(
             [], "band_id int, band_hash long, batch_id long, bucket int"
@@ -228,17 +230,9 @@ def _process_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     )
     if retention_batches is not None:
         cutoff = batch_id - retention_batches
-        state_dir = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        if fs.exists(state_dir):
-            for status in fs.listStatus(state_dir):
-                name = status.getPath().getName()
-                if name.startswith("batch_id="):
-                    try:
-                        old = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if old <= cutoff:
-                        fs.delete(status.getPath(), True)
+        for old, path in batch_dirs(spark, state_path).items():
+            if old <= cutoff:
+                fs.delete(path, True)
 
 
 def run_doc_dedup_stream(spark: SparkSession, source_dir: str,
@@ -254,22 +248,13 @@ def run_doc_dedup_stream(spark: SparkSession, source_dir: str,
     `out_path/batch_id=N`, and only the batch's NEW band keys land in
     `state_path/batch_id=N`. See module docstring for the
     idempotency and retention design."""
-    schema = "doc_id long, lang string, source string, text string"
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(source_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(spark, batch_df, batch_id, state_path, out_path,
-                       retention_batches)
-
-    await_or_raise(
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    docs = read_drops(spark, source_dir,
+                      "doc_id long, lang string, source string, text string",
+                      max_files_per_trigger)
+    drain(docs, checkpoint_dir,
+          lambda batch_df, batch_id: _process_batch(
+              spark, batch_df, batch_id, state_path, out_path,
+              retention_batches))
 
 
 STREAM_DOC_DEDUP_QUERIES = {"dedup_stream_lsh_batch": dedup_stream_lsh_batch}

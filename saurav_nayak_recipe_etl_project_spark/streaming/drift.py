@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
+from saurav_nayak_recipe_etl_project_spark.streaming import drain
 from saurav_nayak_recipe_etl_project_spark.streaming.events import (
     WATERMARK,
     read_event_stream,
@@ -134,14 +134,7 @@ def run_type_mix_stream(spark: SparkSession, source_dir: str,
             F.to_date("w.start").alias("d"), "event_type", "c"
         )
     )
-    await_or_raise(
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(counts, checkpoint_dir, query_name, "complete")
 
 
 DRIFT_ORACLE = """

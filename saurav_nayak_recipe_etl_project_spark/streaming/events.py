@@ -17,12 +17,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
-
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+from saurav_nayak_recipe_etl_project_spark.streaming import (
+    await_or_raise,
+    drain,
+    read_drops,
+)
 
 WINDOW = "1 day"
 WATERMARK = "1 day"
+
+
+def _cents():
+    """`value` in integer cents: the money-sum trick — float sums are
+    shuffle-order-dependent, integer cents are exact and associative."""
+    return F.round(F.col("value") * 100).cast("long")
+
+
+def _money_sum():
+    """Exact money sum of `value`, rounded to cents."""
+    return F.round(F.sum(_cents()) / F.lit(100.0), 2)
+
+
+def _epoch_s(col: str):
+    """Seconds since the epoch of a timestamp column, timezone-free."""
+    return F.expr("timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00',"
+                  f" {col})").cast("long")
 
 
 def _windowed(events: DataFrame) -> DataFrame:
@@ -68,10 +88,7 @@ def read_event_stream(spark: SparkSession, source_dir: str,
         f"event_id long, {ts_field}, user_id long, event_type string, "
         "value double, props string"
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(source_dir)
+    raw = read_drops(spark, source_dir, schema, max_files_per_trigger)
     # Watermarks require instant-typed (TIMESTAMP, not NTZ) event time —
     # correct for streaming: late-data reasoning happens on the timeline.
     return normalize_event_ts(raw, instant=True)
@@ -84,14 +101,7 @@ def run_windowed_stream(spark: SparkSession, source_dir: str,
     everything currently available, exactly once."""
     events = read_event_stream(spark, source_dir)
     agg = _windowed(events.withWatermark("ts", WATERMARK))
-    await_or_raise(
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(agg, checkpoint_dir, query_name, "complete")
 
 
 def run_windowed_stream_continuous(
@@ -148,21 +158,22 @@ def run_windowed_stream_append(spark: SparkSession, source_dir: str,
     )
 
 
+def _top_users(events: DataFrame, k: int) -> DataFrame:
+    """Top-k users by event volume; shared by the batch twin and the
+    streaming leaderboard (identical logical plan)."""
+    return (
+        events.groupBy("user_id")
+        .agg(F.count("*").alias("n_events"), _money_sum().alias("total_value"))
+        .orderBy(F.desc("n_events"), F.asc("user_id"))
+        .limit(k)
+    )
+
+
 def top_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the incremental top-k: top-10 users by event
     volume (the continuously-maintained leaderboard shape from the
     incremental top-k literature)."""
-    events = load_table(spark, "events", sf_dir)
-    return (
-        events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.round(F.col("value") * 100).cast("long"))
-                    / F.lit(100.0), 2).alias("total_value"),
-        )
-        .orderBy(F.desc("n_events"), F.asc("user_id"))
-        .limit(10)
-    )
+    return _top_users(load_table(spark, "events", sf_dir), 10)
 
 
 def run_topk_stream(spark: SparkSession, source_dir: str,
@@ -170,25 +181,8 @@ def run_topk_stream(spark: SparkSession, source_dir: str,
     """Continuously-maintained top-k leaderboard: complete-mode agg +
     per-trigger sorted limit. State is one row per user — bounded by
     key cardinality, not stream length."""
-    events = read_event_stream(spark, source_dir)
-    agg = (
-        events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.round(F.col("value") * 100).cast("long"))
-                    / F.lit(100.0), 2).alias("total_value"),
-        )
-        .orderBy(F.desc("n_events"), F.asc("user_id"))
-        .limit(k)
-    )
-    await_or_raise(
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    agg = _top_users(read_event_stream(spark, source_dir), k)
+    drain(agg, checkpoint_dir, query_name, "complete")
 
 
 def run_enriched_stream(spark: SparkSession, source_dir: str, user_dim,
@@ -208,20 +202,9 @@ def run_enriched_stream(spark: SparkSession, source_dir: str, user_dim,
             F.coalesce("segment", F.lit("unknown")).alias("segment"),
             "event_type",
         )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.round(F.col("value") * 100).cast("long"))
-                    / F.lit(100.0), 2).alias("sum_value"),
-        )
+        .agg(F.count("*").alias("n"), _money_sum().alias("sum_value"))
     )
-    await_or_raise(
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(agg, checkpoint_dir, query_name, "complete")
 
 
 def run_ohlc_stream(spark: SparkSession, source_dir: str,
@@ -240,12 +223,11 @@ def run_ohlc_stream(spark: SparkSession, source_dir: str,
     Complete-mode memory sink here; production would use append +
     watermark like run_windowed_stream_append once bars finalize."""
     ev = read_event_stream(spark, source_dir, max_files_per_trigger=1)
-    cents = F.round(F.col("value") * 100).cast("long")
     pick = F.struct("ts", "event_id")
     agg = (
         ev.select(
             "event_type", F.col("ts").cast("date").alias("day"),
-            "ts", "event_id", cents.alias("cents"),
+            "ts", "event_id", _cents().alias("cents"),
         )
         .groupBy("event_type", "day")
         .agg(
@@ -257,14 +239,7 @@ def run_ohlc_stream(spark: SparkSession, source_dir: str,
             (F.sum("cents") / F.lit(100.0)).alias("volume"),
         )
     )
-    await_or_raise(
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(agg, checkpoint_dir, query_name, "complete")
 
 
 def run_sliding_stream(spark: SparkSession, source_dir: str,
@@ -279,25 +254,13 @@ def run_sliding_stream(spark: SparkSession, source_dir: str,
     ev = read_event_stream(spark, source_dir, max_files_per_trigger=1)
     agg = (
         ev.groupBy(F.window("ts", "1 day", "6 hours"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.round(F.col("value") * 100).cast("long"))
-                    / F.lit(100.0), 2).alias("sum_value"),
-        )
+        .agg(F.count("*").alias("n"), _money_sum().alias("sum_value"))
         .select(
-            F.expr("timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00',"
-                   " window.start)").cast("long").alias("window_start_s"),
+            _epoch_s("window.start").alias("window_start_s"),
             "event_type", "n", "sum_value",
         )
     )
-    await_or_raise(
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(agg, checkpoint_dir, query_name, "complete")
 
 
 def run_dedup_stream(spark: SparkSession, source_dir: str,
@@ -310,14 +273,7 @@ def run_dedup_stream(spark: SparkSession, source_dir: str,
     deduped = events.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    await_or_raise(
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(deduped, checkpoint_dir, query_name)
 
 
 STREAMING_QUERIES = {
@@ -346,6 +302,24 @@ STREAMING_ORACLES = {
 }
 
 
+def _session_windows(events: DataFrame, watermark: str) -> DataFrame:
+    """Native session_window aggregation (30-minute gap) per user over
+    the watermarked event stream, with session bounds in epoch
+    seconds; shared by the complete- and append-mode runners."""
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        .agg(F.count("*").alias("n_events"), F.sum(_cents()).alias("cents"))
+        .select(
+            "user_id",
+            _epoch_s("sw.start").alias("session_start_s"),
+            _epoch_s("sw.end").alias("session_end_s"),
+            "n_events",
+            (F.col("cents") / F.lit(100.0)).alias("session_value"),
+        )
+    )
+
+
 def run_session_window_stream(spark: SparkSession, source_dir: str,
                               checkpoint_dir: str,
                               query_name: str) -> None:
@@ -361,38 +335,9 @@ def run_session_window_stream(spark: SparkSession, source_dir: str,
     this memory-sink test scope; a production sink would use APPEND
     mode with a tighter watermark so only watermark-closed sessions
     emit, keeping per-trigger output incremental."""
-    from pyspark.sql import functions as FN
-
     ev = read_event_stream(spark, source_dir, max_files_per_trigger=1)
-    agg = (
-        ev.withWatermark("ts", "30 days")
-        .groupBy(
-            FN.session_window("ts", "30 minutes").alias("sw"),
-            "user_id",
-        )
-        .agg(
-            FN.count("*").alias("n_events"),
-            FN.sum(FN.round(FN.col("value") * 100).cast("long"))
-            .alias("cents"),
-        )
-        .select(
-            "user_id",
-            FN.expr("timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00',"
-                    " sw.start)").cast("long").alias("session_start_s"),
-            FN.expr("timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00',"
-                    " sw.end)").cast("long").alias("session_end_s"),
-            "n_events",
-            (FN.col("cents") / FN.lit(100.0)).alias("session_value"),
-        )
-    )
-    await_or_raise(
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(_session_windows(ev, "30 days"), checkpoint_dir, query_name,
+          "complete")
 
 
 def run_session_window_stream_append(spark: SparkSession, source_dir: str,
@@ -408,35 +353,5 @@ def run_session_window_stream_append(spark: SparkSession, source_dir: str,
     why the test compares watermark-closed sessions only.
     max_files_per_trigger=1 forces cross-micro-batch session merging
     before emission."""
-    from pyspark.sql import functions as FN
-
     ev = read_event_stream(spark, source_dir, max_files_per_trigger=1)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(
-            FN.session_window("ts", "30 minutes").alias("sw"),
-            "user_id",
-        )
-        .agg(
-            FN.count("*").alias("n_events"),
-            FN.sum(FN.round(FN.col("value") * 100).cast("long"))
-            .alias("cents"),
-        )
-        .select(
-            "user_id",
-            FN.expr("timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00',"
-                    " sw.start)").cast("long").alias("session_start_s"),
-            FN.expr("timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00',"
-                    " sw.end)").cast("long").alias("session_end_s"),
-            "n_events",
-            (FN.col("cents") / FN.lit(100.0)).alias("session_value"),
-        )
-    )
-    await_or_raise(
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(_session_windows(ev, watermark), checkpoint_dir, query_name)

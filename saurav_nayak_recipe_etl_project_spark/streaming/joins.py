@@ -12,9 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
-
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+from saurav_nayak_recipe_etl_project_spark.streaming import drain
+from saurav_nayak_recipe_etl_project_spark.streaming.events import (
+    read_event_stream,
+)
 
 ATTRIBUTION_WINDOW = "1 hour"
 
@@ -57,22 +59,13 @@ def view_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_attribution_stream(spark: SparkSession, source_dir: str,
                            checkpoint_dir: str, query_name: str) -> None:
-    from saurav_nayak_recipe_etl_project_spark.streaming.events import read_event_stream
-
     events = read_event_stream(spark, source_dir)
     views, purchases = _sides(events)
     out = _attributed(
         views.withWatermark("v_ts", "2 hours"),
         purchases.withWatermark("p_ts", "2 hours"),
     )
-    await_or_raise(
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(out, checkpoint_dir, query_name)
 
 
 def _outer_attributed(views: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -118,10 +111,6 @@ def run_attribution_stream_outer(spark: SparkSession, source_dir: str,
     every unmatched row in state forever and emit nothing for them —
     availableNow drains pending state at end-of-stream, which the test
     exercises both ways)."""
-    from saurav_nayak_recipe_etl_project_spark.streaming.events import (
-        read_event_stream,
-    )
-
     events = read_event_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
     )
@@ -130,14 +119,7 @@ def run_attribution_stream_outer(spark: SparkSession, source_dir: str,
         views.withWatermark("v_ts", watermark),
         purchases.withWatermark("p_ts", watermark),
     )
-    await_or_raise(
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(out, checkpoint_dir, query_name)
 
 
 STREAM_JOIN_QUERIES = {"view_purchase_attribution": view_purchase_attribution}

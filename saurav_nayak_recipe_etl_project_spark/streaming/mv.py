@@ -24,10 +24,13 @@ Design (the 100 TB IVM shape):
   equals the one-shot batch aggregate BIT-FOR-BIT — which is why the
   registered entry can carry a strict value oracle (the plain SQL
   groupBy), not just an agreement gate.
-- `compact_mv_state` folds all partials into the newest partition
-  (merge-on-read cost is #partitions; compaction bounds it) — run it
-  out-of-band, like parquet compaction (operators/maintenance.py); the
-  view is identical before and after (tested).
+- `compact_mv_state` folds all partials into one partition at the
+  newest batch id (merge-on-read cost is #partitions; compaction
+  bounds it) — run it out-of-band, like parquet compaction
+  (operators/maintenance.py); the view is identical before and after
+  (tested). The fold is written to a sibling temp dir and swapped in
+  by two renames (`streaming.fold_batches`), so a crash never leaves
+  folded totals next to the partials they fold.
 """
 
 from __future__ import annotations
@@ -37,7 +40,12 @@ from pyspark.sql import functions as F
 
 from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
+from saurav_nayak_recipe_etl_project_spark.streaming import (
+    drain,
+    fold_batches,
+    key_batches,
+    replay_batches,
+)
 
 MV_KEYS = ("user_id", "event_type")
 
@@ -62,17 +70,21 @@ def mv_process_batch(batch_df: DataFrame, batch_id: int,
     )
 
 
+def _merge_partials(partials: DataFrame) -> DataFrame:
+    """Sum partials per key; the result is itself a valid partial."""
+    return partials.groupBy(*MV_KEYS).agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.sum("value_cents").alias("value_cents"),
+    )
+
+
 def read_mv(spark: SparkSession, state_path: str) -> DataFrame:
     """Merge-on-read: fold all batch partials into the current view.
     Derived metrics (total_value, avg_value) come from the mergeable
     parts at read time."""
     partials = spark.read.option("basePath", state_path).parquet(state_path)
     return (
-        partials.groupBy(*MV_KEYS)
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_cents").alias("value_cents"),
-        )
+        _merge_partials(partials)
         .select(
             *MV_KEYS,
             "n_events",
@@ -88,26 +100,13 @@ def read_mv(spark: SparkSession, state_path: str) -> DataFrame:
 
 
 def compact_mv_state(spark: SparkSession, state_path: str) -> int:
-    """Fold every batch partial into the newest batch_id partition and
-    delete the rest (out-of-band, like parquet compaction). Returns
-    the number of partitions removed. The merged partial is itself a
-    valid partial, so `read_mv` is unchanged by compaction."""
-    partials = spark.read.option("basePath", state_path).parquet(state_path)
-    max_id = partials.agg(F.max("batch_id")).first()[0]
-    merged = partials.groupBy(*MV_KEYS).agg(
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.sum("value_cents").cast("long").alias("value_cents"),
-    ).localCheckpoint()
-    merged.write.mode("overwrite").parquet(f"{state_path}/batch_id={max_id}")
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    removed = 0
-    for status in fs.listStatus(jvm_path):
-        name = status.getPath().getName()
-        if name.startswith("batch_id=") and name != f"batch_id={max_id}":
-            fs.delete(status.getPath(), True)
-            removed += 1
-    return removed
+    """Fold every batch partial into one partition at the newest batch
+    id (out-of-band, like parquet compaction). Returns the number of
+    partitions removed. The merged partial is itself a valid partial,
+    so `read_mv` is unchanged by compaction. Crash-safe: the fold is
+    swapped in by `fold_batches`, never written next to the partials
+    it folds (which `read_mv` would double-count)."""
+    return fold_batches(spark, state_path, _merge_partials)
 
 
 def run_mv_stream(spark: SparkSession, source_dir: str,
@@ -120,16 +119,9 @@ def run_mv_stream(spark: SparkSession, source_dir: str,
 
     events = read_event_stream(spark, source_dir,
                                max_files_per_trigger=max_files_per_trigger)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        mv_process_batch(batch_df, batch_id, state_path)
-
-    await_or_raise(
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(events, checkpoint_dir,
+          lambda batch_df, batch_id: mv_process_batch(batch_df, batch_id,
+                                                      state_path))
 
 
 def stream_mv_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,15 +133,8 @@ def stream_mv_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost batch, or merge error shows up as a value/hash mismatch at
     the driver, far stronger than an agree-boolean."""
     events = load_table(spark, "events", sf_dir)
-    lo, hi = events.agg(F.min("event_id"), F.max("event_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("stream_mv_")
-    state = f"{tmp}/state"
-    mv_process_batch(events.filter(F.col("event_id") <= mid), 0, state)
-    # replay batch 0 deliberately: idempotent overwrite must not
-    # double-count (the at-least-once contract, exercised every run)
-    mv_process_batch(events.filter(F.col("event_id") <= mid), 0, state)
-    mv_process_batch(events.filter(F.col("event_id") > mid), 1, state)
+    state = replay_batches("stream_mv_", mv_process_batch,
+                           key_batches(events, "event_id", 2))
     return read_mv(spark, state)
 
 
@@ -171,16 +156,9 @@ def run_mv_stream_txlog(spark: SparkSession, table: str,
     if max_versions_per_batch is not None:
         reader = reader.option("maxVersionsPerBatch",
                                str(max_versions_per_batch))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        mv_process_batch(batch_df, batch_id, state_path)
-
-    await_or_raise(
-        reader.load().writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(reader.load(), checkpoint_dir,
+          lambda batch_df, batch_id: mv_process_batch(batch_df, batch_id,
+                                                      state_path))
 
 
 def txsource_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,19 +179,15 @@ def txsource_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, "events", sf_dir).select(
         "event_id", "user_id", "event_type", "value")
-    lo, hi = events.agg(F.min("event_id"), F.max("event_id")).first()
-    c1 = lo + (hi - lo) // 3 if lo is not None else 0
-    c2 = lo + 2 * (hi - lo) // 3 if lo is not None else 0
+    b0, b1, b2 = key_batches(events, "event_id", 3)
     tmp = scratch_dir("txsource_mv_")
     table, ckpt, state = f"{tmp}/events_tx", f"{tmp}/ckpt", f"{tmp}/state"
-    tx_append(events.filter(F.col("event_id") <= c1), table, ["event_id"])
-    tx_append(events.filter((F.col("event_id") > c1)
-                            & (F.col("event_id") <= c2)),
-              table, ["event_id"])
+    tx_append(b0, table, ["event_id"])
+    tx_append(b1, table, ["event_id"])
     run_mv_stream_txlog(spark, table, ckpt, state)
     # the third commit lands only AFTER the first lifetime stopped:
     # the resumed query must consume exactly it and nothing else
-    tx_append(events.filter(F.col("event_id") > c2), table, ["event_id"])
+    tx_append(b2, table, ["event_id"])
     run_mv_stream_txlog(spark, table, ckpt, state)
     return read_mv(spark, state)
 

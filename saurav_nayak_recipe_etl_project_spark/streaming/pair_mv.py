@@ -39,6 +39,10 @@ All writes OVERWRITE replay-stable batch_id dirs and every state read
 EXCLUDES the batch's own partitions, so an at-least-once replay
 reproduces byte-identical output — same exactly-once recipe as
 doc_dedup/mv, exercised on every entry run by a deliberate replay.
+`compact_pair_mv_state` folds each of the three subdirs into one
+partition through `streaming.fold_batches`: the fold lands in a
+sibling temp dir and is swapped in by two renames, so a crash never
+leaves folded pairs next to the partitions they fold.
 
 100 TB posture: per-batch cost is O(batch shingles) + O(candidate
 pairs) — the membership/verify joins touch state proportional to the
@@ -54,7 +58,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.dedup import (
     band_keys,
     minhash_signatures,
@@ -63,17 +66,18 @@ from saurav_nayak_recipe_etl_project_spark.operators.dedup import (
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 from saurav_nayak_recipe_etl_project_spark.streaming import (
+    drain,
+    fold_batches,
+    hadoop_fs,
+    key_batches,
     parallel_actions,
+    read_drops,
     rebalance_for_write,
+    replay_batches,
 )
 
 PAIR_TAU = 0.5
 N_DOC_BUCKETS = 16
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jvm_path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
 
 
 def _read_part(spark: SparkSession, path: str, schema: str,
@@ -85,7 +89,7 @@ def _read_part(spark: SparkSession, path: str, schema: str,
     the recomputed output is identical under ANY replay ordering, not
     only the in-order recovery Structured Streaming guarantees. Empty
     typed frame when the state dir doesn't exist yet (first batch)."""
-    fs, jvm_path = _fs(spark, path)
+    fs, jvm_path = hadoop_fs(spark, path)
     if not fs.exists(jvm_path) or not fs.listStatus(jvm_path):
         return spark.createDataFrame([], schema)
     return (
@@ -223,10 +227,10 @@ def read_pair_mv(spark: SparkSession, state_path: str) -> DataFrame:
 
 
 def compact_pair_mv_state(spark: SparkSession, state_path: str) -> int:
-    """Fold every pairs/bands/shingles batch partition into the newest
-    batch_id dir and delete the rest (out-of-band, like parquet
-    compaction — the compact_mv_state discipline from streaming/mv.py).
-    Bounds the merge-on-read partition count after many micro-batches;
+    """Fold every pairs/bands/shingles batch partition into one dir at
+    the newest batch id (out-of-band, like parquet compaction — the
+    compact_mv_state discipline from streaming/mv.py). Bounds the
+    merge-on-read partition count after many micro-batches;
     `read_pair_mv` and the NEXT batch's state reads are unchanged by
     construction: pairs are disjoint across partitions (each pair
     lives in exactly one), and band/shingle rows are per-doc facts
@@ -236,60 +240,29 @@ def compact_pair_mv_state(spark: SparkSession, state_path: str) -> int:
     folding erases the per-batch history, so a replay of an
     already-committed batch after compaction would see the wrong
     earlier-state — the same contract compact_mv_state carries.
-    Returns the number of partition dirs removed."""
-    removed = 0
-    for sub in ("pairs", "bands", "shingles"):
-        path = f"{state_path}/{sub}"
-        fs, jvm_path = _fs(spark, path)
-        if not fs.exists(jvm_path):
-            continue
-        names = [s.getPath().getName() for s in fs.listStatus(jvm_path)
-                 if s.getPath().getName().startswith("batch_id=")]
-        if len(names) <= 1:
-            continue
-        max_id = max(int(n.split("=", 1)[1]) for n in names)
-        df = spark.read.option("basePath", path).parquet(path)
-        cols = [c for c in df.columns if c != "batch_id"]
-        part_cols = ["bucket"] if sub == "shingles" else []
-        merged = df.select(*cols).localCheckpoint()
-        w = merged.write.mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(f"{path}/batch_id={max_id}")
-        for s in fs.listStatus(jvm_path):
-            name = s.getPath().getName()
-            if name.startswith("batch_id=") and name != f"batch_id={max_id}":
-                fs.delete(s.getPath(), True)
-                removed += 1
-    return removed
+    Crash-safe: each subdir's fold is swapped in by `fold_batches`,
+    never written next to the partitions it folds (which
+    `read_pair_mv` would return twice). Returns the number of
+    partition dirs removed."""
+    return sum(
+        fold_batches(spark, f"{state_path}/{sub}",
+                     lambda partials: partials.drop("batch_id"),
+                     partition_by=["bucket"] if sub == "shingles" else [])
+        for sub in ("pairs", "bands", "shingles")
+    )
 
 
 def run_pair_mv_stream(spark: SparkSession, source_dir: str,
                        checkpoint_dir: str, state_path: str,
-                       schema: str | None = None,
                        max_files_per_trigger: int | None = None) -> None:
     """Document drops → incrementally-maintained verified pair MV."""
-    reader = spark.readStream.schema(
-        schema or "doc_id long, text string, lang string, "
-                  "source string, n_chars long"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(source_dir)
-
-    from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pair_mv_process_batch(batch_df, batch_id, state_path)
-
-    await_or_raise(
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    docs = read_drops(spark, source_dir,
+                      "doc_id long, text string, lang string, "
+                      "source string, n_chars long",
+                      max_files_per_trigger)
+    drain(docs, checkpoint_dir,
+          lambda batch_df, batch_id: pair_mv_process_batch(
+              batch_df, batch_id, state_path))
 
 
 def stream_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,14 +277,8 @@ def stream_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and exact verify arithmetic — any missed state read, double-write,
     or bucket-prune bug goes RED at the driver."""
     docs = load_table(spark, "documents", sf_dir)
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("stream_pair_mv_")
-    state = f"{tmp}/state"
-    first = docs.filter(F.col("doc_id") <= mid)
-    pair_mv_process_batch(first, 0, state)
-    pair_mv_process_batch(first, 0, state)  # deliberate replay
-    pair_mv_process_batch(docs.filter(F.col("doc_id") > mid), 1, state)
+    state = replay_batches("stream_pair_mv_", pair_mv_process_batch,
+                           key_batches(docs, "doc_id", 2))
     return read_pair_mv(spark, state)
 
 

@@ -25,11 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.functions.cachereg import scratch_dir
 from saurav_nayak_recipe_etl_project_spark.operators.text import (
     quality_reasons,
 )
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+from saurav_nayak_recipe_etl_project_spark.streaming import (
+    drain,
+    key_batches,
+    read_drops,
+    replay_batches,
+)
 
 _ALL = "_all"    # per-source total docs marker (internal, never emitted)
 _KEPT = "_kept"  # zero-reason docs (emitted, matching F75)
@@ -113,31 +118,16 @@ def scorecard_from_counts(counts: DataFrame) -> DataFrame:
 
 def run_scorecard_stream(spark: SparkSession, source_dir: str,
                          checkpoint_dir: str, state_path: str,
-                         schema: str | None = None,
                          max_files_per_trigger: int | None = None
                          ) -> None:
     """Document drops → incrementally-maintained quality scorecard."""
-    reader = spark.readStream.schema(
-        schema or "doc_id long, text string, lang string, "
-                  "source string, n_chars long"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(source_dir)
-
-    from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        scorecard_process_batch(batch_df, batch_id, state_path)
-
-    await_or_raise(
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    docs = read_drops(spark, source_dir,
+                      "doc_id long, text string, lang string, "
+                      "source string, n_chars long",
+                      max_files_per_trigger)
+    drain(docs, checkpoint_dir,
+          lambda batch_df, batch_id: scorecard_process_batch(
+              batch_df, batch_id, state_path))
 
 
 def stream_quality_scorecard(spark: SparkSession,
@@ -148,14 +138,8 @@ def stream_quality_scorecard(spark: SparkSession,
     at-least-once idempotency contract, exercised every run) — then
     rolls the merged counts up to the scorecard."""
     docs = load_table(spark, "documents", sf_dir)
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    mid = (lo + hi) // 2 if lo is not None else 0
-    tmp = scratch_dir("scorecard_mv_")
-    state = f"{tmp}/state"
-    first = docs.filter(F.col("doc_id") <= mid)
-    scorecard_process_batch(first, 0, state)
-    scorecard_process_batch(first, 0, state)  # deliberate replay
-    scorecard_process_batch(docs.filter(F.col("doc_id") > mid), 1, state)
+    state = replay_batches("scorecard_mv_", scorecard_process_batch,
+                           key_batches(docs, "doc_id", 2))
     return scorecard_from_counts(read_scorecard_counts(spark, state))
 
 

@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
+from saurav_nayak_recipe_etl_project_spark.streaming import drain
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -186,15 +186,7 @@ def run_session_stream(spark: SparkSession, source_dir: str,
     from saurav_nayak_recipe_etl_project_spark.streaming.events import read_event_stream
 
     events = read_event_stream(spark, source_dir, max_files_per_trigger)
-    await_or_raise(
-        sessionize_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(sessionize_stream(events), checkpoint_dir, query_name)
 
 
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:

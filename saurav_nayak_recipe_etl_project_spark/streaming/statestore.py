@@ -33,7 +33,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession, functions as F
 
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
+from saurav_nayak_recipe_etl_project_spark.streaming import drain
 from saurav_nayak_recipe_etl_project_spark.streaming.events import (
     read_event_stream,
 )
@@ -105,12 +105,4 @@ def run_rocksdb_user_stats_stream(
         .alias("max_value_cents"),
     )
     with rocksdb_state(spark):
-        q = (
-            per_user.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
+        drain(per_user, checkpoint_dir, query_name, "complete")

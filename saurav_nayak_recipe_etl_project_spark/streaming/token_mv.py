@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from saurav_nayak_recipe_etl_project_spark.functions.text_fn import BPE_PIECE
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
+from saurav_nayak_recipe_etl_project_spark.streaming import drain, read_drops
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string"
 
@@ -45,11 +45,7 @@ def run_source_token_stream(spark: SparkSession, source_dir: str,
     pair; a year of drops costs the same state as a day. Memory sink
     here (the test harness); production swaps a Delta/parquet MV —
     the counts frame contract is what downstream shares."""
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               max_files_per_trigger)
-    docs = reader.parquet(source_dir)
+    docs = read_drops(spark, source_dir, DOC_SCHEMA, max_files_per_trigger)
     counts = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(
@@ -57,11 +53,4 @@ def run_source_token_stream(spark: SparkSession, source_dir: str,
             .cast("long")
         ).alias("tokens"),
     )
-    await_or_raise(
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(counts, checkpoint_dir, query_name, "complete")

@@ -13,9 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
 from pyspark.sql.window import Window
+
+from saurav_nayak_recipe_etl_project_spark.streaming import drain, hadoop_fs
+from saurav_nayak_recipe_etl_project_spark.streaming.events import (
+    read_event_stream,
+)
 
 
 def latest_per_key(df: DataFrame, key: str, ts: str, tiebreak: str) -> DataFrame:
@@ -30,8 +33,6 @@ def latest_per_key(df: DataFrame, key: str, ts: str, tiebreak: str) -> DataFrame
 def run_upsert_stream(spark: SparkSession, source_dir: str,
                       checkpoint_dir: str, state_path: str) -> None:
     """Event drops → per-user latest-state parquet table."""
-    from saurav_nayak_recipe_etl_project_spark.streaming.events import read_event_stream
-
     events = read_event_stream(spark, source_dir)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -39,10 +40,7 @@ def run_upsert_stream(spark: SparkSession, source_dir: str,
         # Only a genuinely-missing state path means "first batch" —
         # corrupt files or IO errors must propagate, not silently
         # overwrite the accumulated state with one micro-batch.
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = jvm_path.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
+        fs, jvm_path = hadoop_fs(spark, state_path)
         if fs.exists(jvm_path):
             existing = spark.read.parquet(state_path)
             merged = latest_per_key(
@@ -53,12 +51,7 @@ def run_upsert_stream(spark: SparkSession, source_dir: str,
         # materialize before overwriting the path we just read
         merged.localCheckpoint().write.mode("overwrite").parquet(state_path)
 
-    await_or_raise(
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(events, checkpoint_dir, merge)
 
 
 def run_audited_publish_stream(spark: SparkSession, source_dir: str,
@@ -93,9 +86,6 @@ def run_audited_publish_stream(spark: SparkSession, source_dir: str,
         AuditFailure,
         publish_with_audit,
     )
-    from saurav_nayak_recipe_etl_project_spark.streaming.events import (
-        read_event_stream,
-    )
 
     events = read_event_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
@@ -116,11 +106,5 @@ def run_audited_publish_stream(spark: SparkSession, source_dir: str,
         except AuditFailure as e:
             outcomes[batch_id] = str(e)
 
-    await_or_raise(
-        per_user.writeStream.outputMode("complete")
-        .foreachBatch(stage_audit_publish)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(per_user, checkpoint_dir, stage_audit_publish, "complete")
     return outcomes

@@ -7,9 +7,10 @@
 2. tx_checkpoint pointer regression (low): two racing checkpoints
    must never move `_last_checkpoint` backwards, and tx_clean_log
    must clean only what the pointer can resolve.
-3. _swap_dirs crash window (low): a crash between the two renames
+3. swap_dirs crash window (low): a crash between the two renames
    strands the only state copy at {live}.fold.old — the next
    maintenance run must self-heal instead of returning 0 / raising.
+   Pinned for all four compactors, which share streaming.fold_batches.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from saurav_nayak_recipe_etl_project_spark.sources import txlog
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
@@ -37,11 +37,22 @@ from saurav_nayak_recipe_etl_project_spark.streaming.ann_mv import (
     compact_ann_mv_state,
     read_ann_mv,
 )
+from saurav_nayak_recipe_etl_project_spark.streaming import key_batches
 from saurav_nayak_recipe_etl_project_spark.streaming.clipstats_mv import (
     clip_stats_from_counts,
     clipstats_process_batch,
     compact_clipstats_state,
     read_clipstats_counts,
+)
+from saurav_nayak_recipe_etl_project_spark.streaming.mv import (
+    compact_mv_state,
+    mv_process_batch,
+    read_mv,
+)
+from saurav_nayak_recipe_etl_project_spark.streaming.pair_mv import (
+    compact_pair_mv_state,
+    pair_mv_process_batch,
+    read_pair_mv,
 )
 from tests.txframes import tx_df, tx_rows
 
@@ -132,15 +143,14 @@ def test_clean_log_trusts_pointer_not_max_listed(spark, tmp_path):
     assert latest_version(t) == 1
 
 
-# --- 3. _swap_dirs crash self-heal --------------------------------------
+# --- 3. swap_dirs crash self-heal ---------------------------------------
 
-def _build_ann_state(spark, sf_dir, tmp_path):
-    emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2
+def _build_state(spark, sf_dir, tmp_path, table, key, process):
+    """Two key-ordered batches of `table` through `process`."""
     state = str(tmp_path / "state")
-    ann_mv_process_batch(emb.filter(F.col("vec_id") <= mid), 0, state)
-    ann_mv_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
+    batches = key_batches(load_table(spark, table, sf_dir), key, 2)
+    for batch_id, batch in enumerate(batches):
+        process(batch, batch_id, state)
     return state
 
 
@@ -149,42 +159,46 @@ def _postings_set(df):
         (r["vec_id"], r["list_id"], r["dist2"]) for r in df.collect())
 
 
-def test_compact_heals_crashed_postings_swap(spark, sf_dir, tmp_path):
-    state = _build_ann_state(spark, sf_dir, tmp_path)
-    before = _postings_set(read_ann_mv(spark, state))
+# name -> (table, split key, process_batch, crashed dir under the state
+# dir, compactor, view, partition dirs the compaction removes)
+_COMPACTORS = {
+    "ann": ("embeddings", "vec_id", ann_mv_process_batch, "/postings",
+            compact_ann_mv_state,
+            lambda spark, st: _postings_set(read_ann_mv(spark, st)), 1),
+    "clipstats": ("embeddings", "vec_id", clipstats_process_batch,
+                  "/counts", compact_clipstats_state,
+                  lambda spark, st: tx_rows(clip_stats_from_counts(
+                      read_clipstats_counts(spark, st))), 1),
+    "mv": ("events", "event_id", mv_process_batch, "", compact_mv_state,
+           lambda spark, st: tx_rows(read_mv(spark, st)), 1),
+    # one dir from each of pairs/, bands/ and shingles/
+    "pair": ("documents", "doc_id", pair_mv_process_batch, "/pairs",
+             compact_pair_mv_state,
+             lambda spark, st: tx_rows(read_pair_mv(spark, st)), 3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_COMPACTORS))
+def test_compactor_heals_crashed_swap(spark, sf_dir, tmp_path, name):
+    table, key, process, sub, compact, view, n_removed = _COMPACTORS[name]
+    state = _build_state(spark, sf_dir, tmp_path, table, key, process)
+    before = view(spark, state)
     # simulate the between-renames crash: live gone, state at .fold.old
-    os.rename(f"{state}/postings", f"{state}/postings.fold.old")
-    removed = compact_ann_mv_state(spark, state)
-    assert removed == 1  # healed AND compacted, not the pre-fix 0
-    assert _postings_set(read_ann_mv(spark, state)) == before
+    os.rename(f"{state}{sub}", f"{state}{sub}.fold.old")
+    assert compact(spark, state) == n_removed  # healed AND compacted
+    assert view(spark, state) == before
 
 
 def test_compact_heals_crashed_rebuild_swap(spark, sf_dir, tmp_path):
     """A rebuild crash strands the WHOLE state dir — the compactor
     must recover it before looking for postings."""
-    state = _build_ann_state(spark, sf_dir, tmp_path)
+    state = _build_state(spark, sf_dir, tmp_path, "embeddings", "vec_id",
+                         ann_mv_process_batch)
     before = _postings_set(read_ann_mv(spark, state))
     os.rename(state, f"{state}.fold.old")
     removed = compact_ann_mv_state(spark, state)
     assert removed == 1
     assert _postings_set(read_ann_mv(spark, state)) == before
-
-
-def test_clipstats_compact_heals_crashed_swap(spark, sf_dir, tmp_path):
-    emb = load_table(spark, "embeddings", sf_dir)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    mid = (lo + hi) // 2
-    state = str(tmp_path / "state")
-    clipstats_process_batch(emb.filter(F.col("vec_id") <= mid), 0, state)
-    clipstats_process_batch(emb.filter(F.col("vec_id") > mid), 1, state)
-    before = tx_rows(clip_stats_from_counts(
-        read_clipstats_counts(spark, state)))
-    os.rename(f"{state}/counts", f"{state}/counts.fold.old")
-    removed = compact_clipstats_state(spark, state)
-    assert removed == 1
-    after = tx_rows(clip_stats_from_counts(
-        read_clipstats_counts(spark, state)))
-    assert after == before
 
 
 def test_regressed_pointer_read_repairs_via_listing(spark, tmp_path):

@@ -11,6 +11,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
+from saurav_nayak_recipe_etl_project_spark.streaming import drain
 from saurav_nayak_recipe_etl_project_spark.streaming.events import (
     read_event_stream,
 )
@@ -23,14 +24,8 @@ _COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
 
 def _run_count_stream(spark, src, ckpt, name):
-    q = (
-        read_event_stream(spark, str(src))
-        .groupBy("user_id").count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name).option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
+    counts = read_event_stream(spark, str(src)).groupBy("user_id").count()
+    drain(counts, str(ckpt), name, "complete")
 
 
 def test_state_reader_matches_batch_twin(spark, sf_dir, tmp_path):

@@ -201,7 +201,8 @@ def test_real_stream_through_txn_sink(spark, sf_dir, tmp_path):
     import shutil
 
     from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
+        drain,
+        read_drops,
     )
 
     orders = _orders(spark, sf_dir)
@@ -215,17 +216,11 @@ def test_real_stream_through_txn_sink(spark, sf_dir, tmp_path):
         shutil.copy(glob.glob(f"{d}/part-*.parquet")[0],
                     str(src / f"{i}.parquet"))
     t = str(tmp_path / "t")
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_orderstatus string, o_totalprice double")
-        .option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
-    await_or_raise(
-        stream.writeStream.foreachBatch(
-            lambda df, bid: tx_sink_batch(df, bid, t, app="stream"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
+    stream = read_drops(
+        spark, str(src),
+        "o_orderkey long, o_orderstatus string, o_totalprice double", 1)
+    drain(stream, str(tmp_path / "ckpt"),
+          lambda df, bid: tx_sink_batch(df, bid, t, app="stream"))
     assert _rows(read_table(spark, t)) == _rows(orders)
     assert last_txn_batch(t, "stream") == 1
 

@@ -143,9 +143,7 @@ def test_partitioned_txsource_batch_and_stream(spark, tmp_path):
     from saurav_nayak_recipe_etl_project_spark.sources.txsource import (
         register_txlog_source,
     )
-    from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
-    )
+    from saurav_nayak_recipe_etl_project_spark.streaming import drain
 
     register_txlog_source(spark)
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
@@ -155,11 +153,8 @@ def test_partitioned_txsource_batch_and_stream(spark, tmp_path):
     assert tx_rows(got) == sorted(ROWS)
     out: list = []
     stream = spark.readStream.format("txlog").option("path", t).load()
-    await_or_raise(
-        stream.writeStream.foreachBatch(
-            lambda df, bid: out.extend(tuple(r) for r in df.collect()))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start())
+    drain(stream, ckpt,
+          lambda df, bid: out.extend(tuple(r) for r in df.collect()))
     assert sorted(out) == sorted(ROWS)
 
 

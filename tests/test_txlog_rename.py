@@ -198,9 +198,7 @@ def test_txsource_batch_and_stream_after_rename(spark, tmp_path):
     from saurav_nayak_recipe_etl_project_spark.sources.txsource import (
         register_txlog_source,
     )
-    from saurav_nayak_recipe_etl_project_spark.streaming import (
-        await_or_raise,
-    )
+    from saurav_nayak_recipe_etl_project_spark.streaming import drain
 
     register_txlog_source(spark)
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
@@ -219,9 +217,6 @@ def test_txsource_batch_and_stream_after_rename(spark, tmp_path):
     stream = spark.readStream.format("txlog").option("path", t).load()
     assert stream.columns == ["k", "label"]
     out: list = []
-    await_or_raise(
-        stream.writeStream.foreachBatch(
-            lambda df, bid: out.extend(tuple(r) for r in df.collect()))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start())
+    drain(stream, ckpt,
+          lambda df, bid: out.extend(tuple(r) for r in df.collect()))
     assert sorted(out) == [(1, "a"), (2, "b")]

@@ -19,7 +19,7 @@ from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
 from saurav_nayak_recipe_etl_project_spark.sources.txsource import (
     register_txlog_source,
 )
-from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
+from saurav_nayak_recipe_etl_project_spark.streaming import drain
 from tests.txframes import tx_df, tx_rows
 
 
@@ -54,11 +54,7 @@ def _drain(spark, t, ckpt, out, **opts):
             batches.append(rows)
             out.extend(rows)
 
-    await_or_raise(
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
+    drain(stream, ckpt, sink)
     return batches
 
 
