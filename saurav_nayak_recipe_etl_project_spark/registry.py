@@ -67,7 +67,7 @@ def _load_suites() -> None:
         ("saurav_nayak_recipe_etl_project_spark.streaming.mv", "STREAM_MV_QUERIES", "STREAM_MV_ORACLES"),
         ("saurav_nayak_recipe_etl_project_spark.streaming.pair_mv", "STREAM_PAIR_MV_QUERIES", "STREAM_PAIR_MV_ORACLES"),
         ("saurav_nayak_recipe_etl_project_spark.streaming.ann_mv", "ANN_MV_QUERY_FNS", "ANN_MV_ORACLES"),
-        ("saurav_nayak_recipe_etl_project_spark.sources.txlog", "TXLOG_QUERIES", "TXLOG_ORACLES"),
+        ("saurav_nayak_recipe_etl_project_spark.sources.acid", "TXLOG_QUERIES", "TXLOG_ORACLES"),
         ("saurav_nayak_recipe_etl_project_spark.streaming.scorecard_mv", "SCORECARD_MV_QUERIES", "SCORECARD_MV_ORACLES"),
         ("saurav_nayak_recipe_etl_project_spark.streaming.drift", "STREAM_DRIFT_QUERIES", "STREAM_DRIFT_ORACLES"),
         ("saurav_nayak_recipe_etl_project_spark.streaming.clipstats_mv", "CLIPSTATS_MV_QUERIES", "CLIPSTATS_MV_ORACLES"),
