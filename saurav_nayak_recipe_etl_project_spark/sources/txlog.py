@@ -36,6 +36,17 @@ add/remove FILE actions, so
   records the horizon; time travel past it fails LOUDLY, not with a
   missing-file stack trace.
 
+The write ops share one helper per protocol step: `_resolve_snapshot`
+(live files, metadata record and version from ONE log listing),
+`_matching_files` (the min/max prune; partition columns carry [v, v]
+stats), `_write_files` (logical frame in, laid out by the metadata
+record), `_rewrite` (the copy-on-write tail of delete, compact and
+optimize), `_write_dv` (deletion vectors for delete and merge),
+`_check_written` (CHECK constraints on the bytes written), `_publish`
+(temp file, fsync, then link or rename: commits, checkpoints, the
+pointer, the vacuum horizon) and `_commit`/`_commit_rmw`. The
+registered `acid_orders_*` scenarios live in sources/acid.py.
+
 100 TB posture: the log is checkpointed — `tx_checkpoint` folds the
 action log into a parquet snapshot published via a `_last_checkpoint`
 pointer (the Delta checkpoint protocol), so reads replay O(tail)
@@ -88,10 +99,6 @@ def _log_versions(table: str) -> tuple[list[int], list[int]]:
         elif f.endswith(_CKPT_SUFFIX) and f[:-n].isdigit():
             cs.append(int(f[:-n]))
     return sorted(js), sorted(cs)
-
-
-def _json_versions(table: str) -> list[int]:
-    return _log_versions(table)[0]
 
 
 def _versions(table: str) -> list[int]:
@@ -153,15 +160,33 @@ def _meta_at(table: str, version: int) -> dict:
     return _meta_from(lambda _k: None)
 
 
+def _publish(path: str, data: bytes, exclusive: bool = False) -> None:
+    """Write `data` to a private temp file beside `path`, fsync it, and
+    only then publish it under `path` in one atomic step, so no reader
+    and no crash can observe a half-written file. `exclusive` publishes
+    with os.link, which fails with FileExistsError when `path` already
+    exists (the commit's mutual exclusion, the same guarantee as
+    O_CREAT|O_EXCL); otherwise os.replace overwrites it."""
+    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "wb") as f:
+        f.write(data)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        (os.link if exclusive else os.replace)(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
 def _commit(table: str, version: int, actions: list[dict],
             txn: dict | None = None, **changes) -> None:
-    """Atomically create version file `version` — O_CREAT|O_EXCL is
-    the mutual exclusion: exactly one writer wins a version number.
-    Each commit records the whole metadata record (_META): `changes`
-    overlays the record of `version - 1`, and a field not passed (or
-    passed as None) carries forward. A caller already holding the
-    prior record passes all of it (`**dict(meta, ...)`) and no log
-    read happens."""
+    """Atomically create version file `version` — exactly one writer
+    wins a version number (see _publish). Each commit records the whole
+    metadata record (_META): `changes` overlays the record of
+    `version - 1`, and a field not passed (or passed as None) carries
+    forward. A caller already holding the prior record passes all of it
+    (`**dict(meta, ...)`) and no log read happens."""
     unknown = changes.keys() - _META.keys()
     if unknown:
         raise TypeError(f"_commit: unknown metadata fields {sorted(unknown)}")
@@ -171,28 +196,17 @@ def _commit(table: str, version: int, actions: list[dict],
     import time
 
     os.makedirs(_log_path(table), exist_ok=True)
-    path = os.path.join(_log_path(table), f"{version:011d}.json")
     payload = json.dumps(
         {"actions": actions, "txn": txn, **{k: meta[k] for k in _META},
          "ts": round(time.time(), 6)}) + "\n"
-    # publish the FULL payload atomically: write a private temp file,
-    # then hard-link it to the version name (link fails if the name is
-    # taken — same mutual exclusion as O_EXCL, but no window where a
-    # reader or a crash can observe a half-written/empty version file)
-    tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp, path)
+        _publish(os.path.join(_log_path(table), f"{version:011d}.json"),
+                 payload.encode(), exclusive=True)
     except FileExistsError:
         raise TxConflict(
             f"version {version} of {table} was committed by another "
             "writer; re-read the latest snapshot and retry"
         ) from None
-    finally:
-        os.unlink(tmp)
 
 
 def _read_json_commit(table: str, v: int) -> dict:
@@ -238,10 +252,12 @@ def _best_checkpoint(table: str, version: int, cvs: list[int]) -> int:
 
 def _resolve_snapshot(
         table: str, version: int | None = None, txns: dict | None = None
-) -> tuple[dict, int, int, dict]:
+) -> tuple[dict, int, int, dict, int]:
     """Replay to `version` through the best checkpoint at or below it:
     (live files, json commits replayed, checkpoint version used or -1,
-    metadata record at `version`). A `txns` dict passed in receives
+    metadata record at `version`, `version` — the latest when None, so
+    a write op captures its base and its snapshot from one listing). A
+    `txns` dict passed in receives
     every app's txn high-water mark as of `version`. The replay cost is
     O(tail-past-checkpoint), not O(commits) — the Delta
     `_last_checkpoint` read path — over ONE log-directory listing.
@@ -317,7 +333,7 @@ def _resolve_snapshot(
                 live[a["file"]] = st
     if tail:  # the last replayed commit IS `version`
         meta = _meta_from(entry.get)
-    return live, len(tail), base, meta
+    return live, len(tail), base, meta, version
 
 
 def snapshot_files(table: str, version: int | None = None) -> dict:
@@ -378,16 +394,29 @@ _REL_FILE_RE = r"(data/[^/]+(?:/[^/]+=[^/]+)*/[^/]+)$"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
+def _url_decode(col: F.Column) -> F.Column:
+    """One %XX decoding layer. url_decode treats '+' as a space
+    (application/x-www-form semantics) but neither URI nor hive path
+    escaping ENCODES '+', so pre-escape it — only genuine %XX sequences
+    decode."""
+    return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
+
+
 def _rel_file_expr() -> F.Column:
     """The scanned row's ON-DISK relative data-file path, from
     `_metadata.file_path`. The metadata column is a URI, so
     hive-escaped partition dir names arrive re-encoded (s=x%3Ay →
     s=x%253Ay) — decode the URI layer ONCE so the value matches the
-    log's file keys (which keep the hive escaping). The '+' pre-escape
-    guards url_decode's form-semantics ('+' is never URI-encoded)."""
-    enc = F.regexp_extract(F.col("_metadata.file_path"),
-                           _REL_FILE_RE, 1)
-    return F.url_decode(F.regexp_replace(enc, r"\+", "%2B"))
+    log's file keys (which keep the hive escaping)."""
+    return _url_decode(F.regexp_extract(F.col("_metadata.file_path"),
+                                        _REL_FILE_RE, 1))
+
+
+def _positions(df: DataFrame, *cols: str) -> DataFrame:
+    """`cols` plus each row's (file, pos) position — the deletion-vector
+    row address — of a frame scanned by _read_files."""
+    return df.select(*cols, _rel_file_expr().alias("file"),
+                     F.col("_metadata.row_index").alias("pos"))
 
 
 def _attach_partition_cols(df: DataFrame, pby: list,
@@ -398,12 +427,6 @@ def _attach_partition_cols(df: DataFrame, pby: list,
     scan's projection — no per-file reads, no discovery pass."""
     import re as _re
 
-    def _decode(col):
-        # url_decode treats '+' as a space (application/x-www-form
-        # semantics) but neither URI nor hive path escaping ENCODES
-        # '+', so pre-escape it — only genuine %XX sequences decode
-        return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
-
     for p in pby:
         enc = F.regexp_extract(
             F.col("_metadata.file_path"),
@@ -411,7 +434,7 @@ def _attach_partition_cols(df: DataFrame, pby: list,
         # TWO decode layers: _metadata.file_path is a URI (the
         # hive-escaped dir name s=x%3Ay arrives as s=x%253Ay), so
         # decode the URI encoding first, then the hive escaping
-        raw = _decode(_decode(enc))
+        raw = _url_decode(_url_decode(enc))
         df = df.withColumn(
             p,
             F.when(raw == _HIVE_NULL, F.lit(None))
@@ -495,29 +518,6 @@ def table_partition_by(table: str) -> list:
     return _meta_at(table, latest_version(table))["partition_by"]
 
 
-_PYOPS = {
-    "=": lambda a, b: a == b,
-    "<=": lambda a, b: a <= b,
-    "<": lambda a, b: a < b,
-    ">=": lambda a, b: a >= b,
-    ">": lambda a, b: a > b,
-}
-
-
-def _part_prunes(stats: dict, pcol: str, op: str, value) -> bool:
-    """True when the file's recorded partition VALUE proves it cannot
-    match `pcol op value` — the directory-level prune, consulted
-    BEFORE min/max stats (and valid even when the writer recorded no
-    stats columns)."""
-    part = stats.get("_part") or {}
-    if pcol not in part or part[pcol] is None:
-        return False
-    try:
-        return not _PYOPS[op](part[pcol], value)
-    except TypeError:
-        return False  # incomparable types: never skip blindly
-
-
 def _phys(colmap: dict, col: str) -> str:
     """Physical name of logical column `col` (identity when unmapped).
     File stats are keyed by PHYSICAL names (stable across renames), so
@@ -525,30 +525,33 @@ def _phys(colmap: dict, col: str) -> str:
     return colmap.get(col, col)
 
 
-def _to_physical(df: DataFrame, colmap: dict) -> DataFrame:
-    """Rename a logical-named DataFrame to physical names for writing
-    (no-op without renames)."""
-    ren = {c: p for c, p in colmap.items()
-           if p != c and c in df.columns}
-    return df.withColumnsRenamed(ren) if ren else df
+def _check_counts(df: DataFrame, checks: dict) -> tuple[int, dict]:
+    """(rows, {constraint name: (violating rows, unknown rows)}) over
+    `df` in ONE aggregation pass. SQL-standard CHECK semantics: a row
+    violates a constraint only when its predicate is FALSE; a NULL
+    (UNKNOWN) predicate passes."""
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    for name, (col, op, value) in sorted(checks.items()):
+        pred = _OPS[op](F.col(col), F.lit(value))
+        aggs += [
+            F.sum(F.when(pred.eqNullSafe(F.lit(False)), 1).otherwise(0))
+            .alias(f"_viol_{name}"),
+            F.sum(F.when(pred.isNull(), 1).otherwise(0))
+            .alias(f"_unk_{name}")]
+    row = df.agg(*aggs).first()
+    return int(row["_n"]), {
+        n: (int(row[f"_viol_{n}"] or 0), int(row[f"_unk_{n}"] or 0))
+        for n in checks}
 
 
 def _validate_checks(df: DataFrame, checks: dict, table: str) -> None:
-    """SQL-standard CHECK semantics: a row passes when the predicate
-    is TRUE or UNKNOWN (NULL); it is a violation only when FALSE. One
-    pass counts every constraint's violations; any violation raises
-    with the per-constraint counts — the write is rejected whole (the
-    Delta ADD CONSTRAINT write contract)."""
+    """Reject the write whole when any row of `df` violates a CHECK
+    constraint (the Delta ADD CONSTRAINT write contract); the error
+    carries the per-constraint violation counts."""
     if not checks:
         return
-    aggs = []
-    for name, (col, op, value) in sorted(checks.items()):
-        pred = _OPS[op](F.col(col), F.lit(value))
-        aggs.append(
-            F.sum(F.when(pred.eqNullSafe(F.lit(False)), 1).otherwise(0))
-            .alias(name))
-    row = df.agg(*aggs).first()
-    bad = {n: int(row[n] or 0) for n in sorted(checks) if row[n]}
+    bad = {n: viol for n, (viol, _) in
+           sorted(_check_counts(df, checks)[1].items()) if viol}
     if bad:
         raise ValueError(
             f"tx CHECK constraint violation for {table}: {bad} rows "
@@ -557,6 +560,15 @@ def _validate_checks(df: DataFrame, checks: dict, table: str) -> None:
 
 
 _CHECK_NAME_RE = r"^[A-Za-z_][A-Za-z0-9_]{0,127}$"
+
+
+def _latest_meta(table: str) -> tuple[int, dict]:
+    """(latest version, its metadata record) for a metadata-only
+    commit at the next version; raises on a table with no commits."""
+    base = latest_version(table)
+    if base < 0:
+        raise ValueError(f"{table} has no commits — append first")
+    return base, _meta_at(table, base)
 
 
 def tx_set_check(spark: SparkSession, table: str, name: str,
@@ -588,10 +600,8 @@ def tx_set_check(spark: SparkSession, table: str, name: str,
             f"tx CHECK constraint name {name!r} is not a plain "
             "identifier ([A-Za-z_][A-Za-z0-9_]*, <=128 chars) — the "
             "name doubles as an aggregation alias in validation")
-    base = latest_version(table)
-    if base < 0:
-        raise ValueError(f"{table} has no commits — append first")
-    checks = dict(_meta_at(table, base)["checks"])
+    base, meta = _latest_meta(table)
+    checks = dict(meta["checks"])
     _validate_checks(read_table(spark, table), {name: constraint}, table)
     checks[name] = list(constraint)
     _commit(table, base + 1, [], checks=checks)
@@ -600,8 +610,8 @@ def tx_set_check(spark: SparkSession, table: str, name: str,
 
 def tx_drop_check(table: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT: one metadata-only commit."""
-    base = latest_version(table)
-    checks = dict(_meta_at(table, base)["checks"])
+    base, meta = _latest_meta(table)
+    checks = dict(meta["checks"])
     if name not in checks:
         raise ValueError(f"{table} has no CHECK constraint {name!r} "
                          f"(have {sorted(checks)})")
@@ -627,10 +637,7 @@ def tx_rename_column(table: str, old: str, new: str) -> int:
     physical name is rejected — the physical namespace must stay
     unambiguous (the same rule _check_schema enforces for added
     columns)."""
-    base = latest_version(table)
-    if base < 0:
-        raise ValueError(f"{table} has no commits — append first")
-    meta = _meta_at(table, base)
+    base, meta = _latest_meta(table)
     schema = meta["schema"]
     if not schema:
         raise ValueError(f"{table} records no schema — cannot rename")
@@ -673,10 +680,7 @@ def tx_drop_column(table: str, col: str) -> int:
     directory layout depends on them — Delta's rule) and for columns
     a CHECK constraint references (drop the constraint deliberately
     first); dropping the last column is meaningless."""
-    base = latest_version(table)
-    if base < 0:
-        raise ValueError(f"{table} has no commits")
-    meta = _meta_at(table, base)
+    base, meta = _latest_meta(table)
     schema = meta["schema"]
     if not schema:
         raise ValueError(f"{table} records no schema — cannot drop")
@@ -723,30 +727,14 @@ def check_audit(spark: SparkSession, table: str) -> DataFrame:
     snapshot (the read_table single-resolution rule)."""
     v = latest_version(table)
     checks = _meta_at(table, v)["checks"]
-    if not checks:
-        return spark.createDataFrame(
-            [],
-            "constraint_name string, col string, op string, "
-            "value_str string, n_rows long, n_pass long, "
-            "n_violate long, n_unknown long")
-    df = read_table(spark, table, version=v)
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for name, (col, op, value) in sorted(checks.items()):
-        pred = _OPS[op](F.col(col), F.lit(value))
-        aggs.append(
-            F.sum(F.when(pred.eqNullSafe(F.lit(False)), 1).otherwise(0))
-            .alias(f"_viol_{name}"))
-        aggs.append(
-            F.sum(F.when(pred.isNull(), 1).otherwise(0))
-            .alias(f"_unk_{name}"))
-    row = df.agg(*aggs).first()
-    n = int(row["_n"])
     out = []
-    for name, (col, op, value) in sorted(checks.items()):
-        viol = int(row[f"_viol_{name}"] or 0)
-        unk = int(row[f"_unk_{name}"] or 0)
-        out.append((name, col, op, str(value), n, n - viol - unk,
-                    viol, unk))
+    if checks:
+        n, counts = _check_counts(read_table(spark, table, version=v),
+                                  checks)
+        for name, (col, op, value) in sorted(checks.items()):
+            viol, unk = counts[name]
+            out.append((name, col, op, str(value), n, n - viol - unk,
+                        viol, unk))
     return local_frame(
         spark, out,
         "constraint_name string, col string, op string, "
@@ -947,11 +935,8 @@ def _footer_stats_actions(dest: str, sub: str, cols: list[str],
     import pyarrow.parquet as pq
 
     partition_by = partition_by or []
-    if partition_by:
-        files = sorted(_glob.glob(os.path.join(
-            dest, *(["*=*"] * len(partition_by)), "*.parquet")))
-    else:
-        files = sorted(_glob.glob(os.path.join(dest, "*.parquet")))
+    files = sorted(_glob.glob(os.path.join(
+        dest, *(["*=*"] * len(partition_by)), "*.parquet")))
     if not files:
         return []
     file_cols = [c for c in cols if c not in partition_by]
@@ -1007,70 +992,75 @@ def _footer_stats_actions(dest: str, sub: str, cols: list[str],
     return actions
 
 
-def _dv_file_list(dest: str) -> list[str]:
-    """Distinct data-file paths named by the DV parquet just written,
-    read driver-side from the 'file' column ONLY (dictionary-encoded
-    strings — metadata-scale bytes even for billions of positions),
-    replacing the whole Spark read-back job each DV commit used to run
-    (r15, guide §1.2: don't re-launch a job to learn what you just
-    wrote). Reads the actual written bytes, so the answer is identical
-    to the old `back.select("file").distinct().collect()`."""
+def _write_dv(table: str, hits: DataFrame) -> list[dict]:
+    """Write the (file, pos) position deletes `hits` (see _positions)
+    as ONE deletion-vector parquet dir `data/dv-<uuid>` and return a
+    `dv` action per data file it names — [] with the dir removed when
+    nothing matched. The named files are read driver-side from the
+    written 'file' column only (dictionary-encoded strings —
+    metadata-scale bytes even for billions of positions), so learning
+    what was just written launches no Spark job."""
     import glob as _glob
+    import shutil
 
     import pyarrow.parquet as pq
 
-    out: set[str] = set()
+    sub = os.path.join("data", f"dv-{uuid.uuid4().hex[:12]}")
+    dest = os.path.join(table, sub)
+    hits.write.parquet(dest)
+    files: set[str] = set()
     for p in _glob.glob(os.path.join(dest, "*.parquet")):
-        t = pq.read_table(p, columns=["file"])
-        out.update(t.column("file").unique().to_pylist())
-    return sorted(out)
+        files.update(pq.read_table(p, columns=["file"])
+                     .column("file").unique().to_pylist())
+    if not files:
+        shutil.rmtree(dest, ignore_errors=True)
+    return [{"op": "dv", "file": f, "dv": sub} for f in sorted(files)]
 
 
 def _write_files(df: DataFrame, table: str,
                  stats_cols: list[str] | None,
-                 partition_by: list | None = None) -> list[dict]:
-    """Write the dataframe as new data files under data/tx-<uuid>/ and
-    return their add-actions with per-file min/max stats. Stats come
-    from the parquet FOOTERS when every stat column is numeric (the
-    production-format idiom — zero extra Spark jobs; see
-    _footer_stats_actions); otherwise from one read of the delta
-    grouped by input_file_name (same numbers). All column names here
-    are PHYSICAL (callers translate through the colmap).
+                 meta: dict = _META) -> list[dict]:
+    """Write the LOGICAL-named dataframe as new data files under
+    data/tx-<uuid>/, laid out by the metadata record `meta` (column
+    mapping and partitioning; the defaults write an identity-mapped,
+    unpartitioned table), and return their add-actions with per-file
+    min/max stats for the logical `stats_cols`. Files and stats carry
+    PHYSICAL names. Stats come from the parquet FOOTERS when every stat
+    column is numeric (the production-format idiom — zero extra Spark
+    jobs; see _footer_stats_actions); otherwise from one read of the
+    delta grouped by input_file_name (same numbers).
 
-    `partition_by` writes hive-style `col=value` directories under the
-    tx dir (one file never spans partitions); partition values are
-    recorded TYPED in each add-action's stats under `_part` (the
-    directory-level prune input) and the partition columns get [v, v]
-    min/max stats for free. Stat and partition columns must be
-    JSON-primitive types (string/int/float/bool)."""
+    A partitioned table writes hive-style `col=value` directories under
+    the tx dir (one file never spans partitions); partition values are
+    recorded TYPED in each add-action's stats under `_part`, and the
+    partition columns get [v, v] min/max stats — which is what lets
+    _overlaps prune a partition predicate. Stat and partition columns
+    must be JSON-primitive types (string/int/float/bool)."""
     spark = df.sparkSession
+    colmap, partition_by = meta["colmap"], meta["partition_by"]
+    ren = {c: p for c, p in colmap.items() if p != c and c in df.columns}
+    if ren:
+        df = df.withColumnsRenamed(ren)
+    stats_cols = [_phys(colmap, c) for c in stats_cols or []]
     sub = os.path.join("data", f"tx-{uuid.uuid4().hex[:12]}")
     dest = os.path.join(table, sub)
-    if partition_by:
-        df.write.partitionBy(*partition_by).parquet(dest)
-        # an EMPTY partitioned write emits no part files at all (plain
-        # writes emit one schema-carrying empty file) — no add actions
-        if not any(fn.endswith(".parquet")
-                   for _root, _dirs, fns in os.walk(dest) for fn in fns):
-            return []
-        # footer fast path (r15: partitioned too — hive dir values are
-        # decoded driver-side; any value Spark's column-wide partition
-        # inference could type differently falls back to the read-back
-        # lane below, which stays the source of truth)
-        actions = _footer_stats_actions(dest, sub, list(stats_cols or []),
-                                        partition_by)
-        if actions is not None:
-            return actions
-        # basePath re-materializes the partition columns for the stats
-        back = spark.read.option("basePath", dest).parquet(dest)
-    else:
-        df.write.parquet(dest)
-        actions = _footer_stats_actions(dest, sub, list(stats_cols or []))
-        if actions is not None:
-            return actions
-        back = spark.read.parquet(dest)
-    cols = list(stats_cols or [])
-    cols += [p for p in partition_by or [] if p not in cols]
+    df.write.partitionBy(*partition_by).parquet(dest)
+    # an EMPTY partitioned write emits no part files at all (plain
+    # writes emit one schema-carrying empty file) — no add actions
+    if partition_by and not any(
+            fn.endswith(".parquet")
+            for _root, _dirs, fns in os.walk(dest) for fn in fns):
+        return []
+    # footer fast path (partitioned too — hive dir values are decoded
+    # driver-side; any value Spark's column-wide partition inference
+    # could type differently falls back to the read-back lane below,
+    # which stays the source of truth)
+    actions = _footer_stats_actions(dest, sub, stats_cols, partition_by)
+    if actions is not None:
+        return actions
+    # basePath re-materializes any partition columns for the stats
+    back = spark.read.option("basePath", dest).parquet(dest)
+    cols = stats_cols + [p for p in partition_by if p not in stats_cols]
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in cols:
         aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
@@ -1110,27 +1100,25 @@ def _discard_written(table: str, actions: list[dict]) -> None:
         shutil.rmtree(os.path.join(table, d), ignore_errors=True)
 
 
-def _read_written(spark: SparkSession, actions: list[dict],
-                  table: str, meta: dict, colmap: dict) -> DataFrame:
-    """The rows a pending commit would make live — read back from the
-    files actually written, so validation sees the committed BYTES,
-    not a second evaluation of a possibly non-deterministic source
-    (ADVICE r13: rand()/timestamp sources could otherwise commit rows
-    that were never validated). Files store physical names; the frame
-    comes back LOGICAL (checks reference logical columns), with hive
-    partition columns re-derived from the paths. `meta` is the base
-    version's record; `colmap` the mapping the files were written
-    under."""
-    df = spark.read.parquet(
-        *[os.path.join(table, a["file"]) for a in actions
-          if a["op"] == "add"])
-    pby = meta["partition_by"]
-    if pby:
-        phys_types = {_phys(colmap, c): t
-                      for c, t in (meta["schema"] or {}).items()}
-        df = _attach_partition_cols(df, pby, phys_types)
-    ren = {p: c for c, p in colmap.items() if p != c}
-    return df.withColumnsRenamed(ren) if ren else df
+def _check_written(spark: SparkSession, table: str, actions: list[dict],
+                   meta: dict) -> None:
+    """Validate the CHECK constraints of the metadata record `meta`
+    against the rows the pending commit's add actions WROTE — read back
+    from the files under `meta` (the merged schema and the column
+    mapping they were written under), not a second evaluation of a
+    possibly non-deterministic source (ADVICE r13: rand()/timestamp
+    sources could otherwise commit rows that were never validated;
+    Delta enforces invariants on the rows actually written). A
+    violation discards the uncommitted files and re-raises."""
+    files = [a["file"] for a in actions if a["op"] == "add"]
+    if not meta["checks"] or not files:
+        return
+    try:
+        _validate_checks(_read_files(spark, table, files, meta),
+                         meta["checks"], table)
+    except ValueError:
+        _discard_written(table, actions)
+        raise
 
 
 def tx_append(df: DataFrame, table: str,
@@ -1204,40 +1192,22 @@ def tx_append(df: DataFrame, table: str,
                     f"tx partition spec is fixed at table creation: "
                     f"{table} is partitioned by {pby}, append asked "
                     f"for {req}")
+        # record the MERGED schema: a narrow source never regresses a
+        # widened table; a widening/evolving source promotes it
+        rec = dict(meta, colmap=colmap, partition_by=pby,
+                   schema=_merged_schema(prior or {}, _schema_fields(df)))
         if actions is not None and colmap != colmap_used:
             _discard_written(table, actions)
             actions = None
         if actions is None:
-            actions = _write_files(
-                _to_physical(df, colmap), table,
-                [_phys(colmap, c) for c in stats_cols or []], pby)
+            actions = _write_files(df, table, stats_cols, rec)
             colmap_used = colmap
-        # CHECK constraints as of base, validated against the WRITTEN
-        # BYTES (read-back of the new files — ADVICE r13: validating
-        # the source DataFrame is a second evaluation, so a
-        # non-deterministic source could commit rows never validated;
-        # Delta enforces invariants on the rows actually written). A
-        # rival changing the checks mid-write forces TxConflict at
-        # base+1 and this re-validates (the same pinning as the schema
-        # check). A violation discards the uncommitted files.
-        checks = meta["checks"]
-        if checks:
-            try:
-                _validate_checks(
-                    _read_written(df.sparkSession, actions, table,
-                                  meta, colmap),
-                    checks, table)
-            except ValueError:
-                _discard_written(table, actions)
-                raise
-        # record the MERGED schema: a narrow source never regresses a
-        # widened table; a widening/evolving source promotes it
-        schema = _merged_schema(prior, _schema_fields(df)) if prior \
-            else _schema_fields(df)
+        # CHECK constraints as of base: a rival changing them mid-write
+        # forces TxConflict at base+1 and this re-validates (the same
+        # pinning as the schema check)
+        _check_written(df.sparkSession, table, actions, rec)
         try:
-            _commit(table, base + 1, actions, txn,
-                    **dict(meta, schema=schema, colmap=colmap,
-                           partition_by=pby))
+            _commit(table, base + 1, actions, txn, **rec)
             return base + 1
         except TxConflict:
             continue
@@ -1321,6 +1291,16 @@ def _overlaps(stats: dict, col: str, op: str, value) -> bool:
     raise ValueError(f"unsupported predicate op {op!r}")
 
 
+def _matching_files(live: dict, meta: dict, where: tuple) -> list[str]:
+    """The live files (sorted) whose stats can hold a row matching
+    `where` = (logical col, op, literal) — log-level data skipping. A
+    partition column prunes through the same min/max test: every
+    partitioned add action records [v, v] stats for it."""
+    col, op, value = where
+    pcol = _phys(meta["colmap"], col)
+    return [f for f in sorted(live) if _overlaps(live[f], pcol, op, value)]
+
+
 _OPS = {
     "=": lambda c, v: c == v,
     "<=": lambda c, v: c <= v,
@@ -1351,25 +1331,16 @@ def read_table(spark: SparkSession, table: str,
     # version — a rival evolution committing between two independent
     # resolutions would return snapshot-N rows under schema@N+1 (r13
     # review finding); one replay yields both
-    live, _, _, meta = _resolve_snapshot(table, version)
+    live, _, _, meta, _ = _resolve_snapshot(table, version)
     if not live:
         raise ValueError(f"{table} snapshot is empty")
     files = sorted(live)
     if where is not None:
-        col, op, value = where
-        pcol = _phys(meta["colmap"], col)
-        # partition prune FIRST (directory-level: exact values, valid
-        # even with no stats columns recorded), then min/max stats
-        files = [f for f in files
-                 if not _part_prunes(live[f], pcol, op, value)
-                 and _overlaps(live[f], pcol, op, value)]
-        if not files:
-            # preserve the FULL (merged) schema: fall back to the
-            # whole file list — a single arbitrary file could predate
-            # an additive evolution and silently lack new columns.
-            # The predicate matches nothing, parquet row-group stats
-            # skip the data pages, and zero-match reads are rare.
-            files = sorted(live)
+        # no file can match: keep the whole list rather than one
+        # arbitrary file, which could predate an additive evolution
+        # and lack new columns — the filter below matches nothing and
+        # parquet row-group stats skip the data pages
+        files = _matching_files(live, meta, where) or files
     df = _read_files(spark, table, files, meta, live)
     if where is not None:
         col, op, value = where
@@ -1398,56 +1369,46 @@ def tx_delete_where(spark: SparkSession, table: str, where: tuple,
       the removed file); vacuum keeps DV files alive while any kept
       snapshot references them. Both modes are NULL-safe: a NULL
       predicate never deletes a row."""
-    col, op, value = where
-    base = latest_version(table)
-    live, _, _, meta = _resolve_snapshot(table, base)
-    colmap = meta["colmap"]
-    pcol = _phys(colmap, col)
-    touched = [f for f in sorted(live)
-               if not _part_prunes(live[f], pcol, op, value)
-               and _overlaps(live[f], pcol, op, value)]
+    live, _, _, meta, base = _resolve_snapshot(table)
+    touched = _matching_files(live, meta, where)
     if not touched:
         # no file's stats can contain a match: a no-op delete commits
         # NOTHING — an empty version would pollute history and the CDF
         # version sequence for zero state change
         return base
+    col, op, value = where
     pred = _OPS[op](F.col(col), F.lit(value))
     if deletion_vectors:
-        sub = os.path.join("data", f"dv-{uuid.uuid4().hex[:12]}")
-        dest = os.path.join(table, sub)
-        # read WITH the current DVs applied: rows already deleted must
-        # not be re-recorded; pred IS TRUE keeps NULL rows out
-        hits = (
+        # positions read WITH the current DVs applied: rows already
+        # deleted must not be re-recorded; pred IS TRUE keeps NULL
+        # rows out
+        actions = _write_dv(table, _positions(
             _read_files(spark, table, touched, meta, live)
-            .filter(pred.eqNullSafe(F.lit(True)))
-            .select(
-                _rel_file_expr().alias("file"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-        )
-        hits.write.parquet(dest)
-        dv_files = _dv_file_list(dest)
-        if not dv_files:
-            # stats overlapped but nothing matched: remove the empty
-            # DV dir, commit nothing
-            import shutil
-            shutil.rmtree(dest, ignore_errors=True)
-            return base
-        actions = [{"op": "dv", "file": f, "dv": sub} for f in dv_files]
+            .filter(pred.eqNullSafe(F.lit(True)))))
+        if not actions:
+            return base  # stats overlapped but nothing matched
         return _commit_rmw(table, base, actions, set(touched), meta)
-    # NULL-safe survivor filter: ~(col op value) is NULL (not
-    # false) when the column is NULL, and a plain filter drops
-    # NULL rows — silently deleting rows the predicate never
-    # matched. A delete keeps every row whose predicate is not
-    # TRUE, so coalesce the negation to TRUE for NULLs.
-    survivors = _read_files(spark, table, touched, meta, live).filter(
-        F.coalesce(~pred, F.lit(True)))
-    actions = [{"op": "remove", "file": f} for f in touched]
-    actions += _write_files(_to_physical(survivors, colmap), table,
-                            [_phys(colmap, c) for c in stats_cols or []],
-                            meta["partition_by"])
-    # schema carried forward; blind-append rivals commute (_commit_rmw)
-    return _commit_rmw(table, base, actions, set(touched), meta)
+    # NULL-safe survivor filter: ~(col op value) is NULL (not false)
+    # when the column is NULL, and a plain filter drops NULL rows —
+    # silently deleting rows the predicate never matched. A delete
+    # keeps every row whose predicate is not TRUE.
+    return _rewrite(spark, table, base, live, meta, touched, stats_cols,
+                    lambda df: df.filter(F.coalesce(~pred, F.lit(True))))
+
+
+def _rewrite(spark: SparkSession, table: str, base: int, live: dict,
+             meta: dict, files: list[str], stats_cols: list[str] | None,
+             reshape) -> int:
+    """The copy-on-write tail: read `files` (deletion vectors applied),
+    `reshape` the rows (filter or re-layout), write them as new files,
+    and commit remove(files) + the adds at base+1 through _commit_rmw
+    with `files` as the read set — the schema carries forward and
+    rival blind appends commute."""
+    actions = _write_files(
+        reshape(_read_files(spark, table, files, meta, live)), table,
+        stats_cols, meta)
+    actions += [{"op": "remove", "file": f} for f in files]
+    return _commit_rmw(table, base, actions, set(files), meta)
 
 
 def _cluster(df: DataFrame, cluster_by, target_files: int) -> DataFrame:
@@ -1489,16 +1450,10 @@ def tx_compact(spark: SparkSession, table: str, target_files: int = 1,
     after compaction; a PAIR of columns Z-orders the rewrite
     (Morton-interleaved ranks — both columns prune alone, the Delta
     OPTIMIZE ZORDER layout)."""
-    base = latest_version(table)
-    live, _, _, meta = _resolve_snapshot(table, base)
-    colmap = meta["colmap"]
-    df = _read_files(spark, table, sorted(live), meta, live)
-    df = _cluster(df, cluster_by, target_files)
-    actions = _write_files(_to_physical(df, colmap), table,
-                           [_phys(colmap, c) for c in stats_cols or []],
-                           meta["partition_by"])
-    actions += [{"op": "remove", "file": f} for f in sorted(live)]
-    return _commit_rmw(table, base, actions, set(live), meta)
+    live, _, _, meta, base = _resolve_snapshot(table)
+    return _rewrite(spark, table, base, live, meta, sorted(live),
+                    stats_cols,
+                    lambda df: _cluster(df, cluster_by, target_files))
 
 
 def tx_optimize(spark: SparkSession, table: str,
@@ -1526,9 +1481,9 @@ def tx_optimize(spark: SparkSession, table: str,
     day closes, not the whole table; files other partitions own are
     untouched by construction (directory-level prune first, then
     stats)."""
-    base = latest_version(table)
-    live, _, _, meta = _resolve_snapshot(table, base)
-    colmap = meta["colmap"]
+    live, _, _, meta, base = _resolve_snapshot(table)
+    if where is not None:
+        live = {f: live[f] for f in _matching_files(live, meta, where)}
 
     def _size(f: str, st: dict) -> int:
         b = st.get("bytes")
@@ -1539,28 +1494,18 @@ def tx_optimize(spark: SparkSession, table: str,
                 b = 0
         return int(b)
 
-    small = {f: _size(f, st) for f, st in live.items()
-             if _size(f, st) < target_file_bytes}
-    if where is not None:
-        col, op, value = where
-        pcol = _phys(colmap, col)
-        small = {f: b for f, b in small.items()
-                 if not _part_prunes(live[f], pcol, op, value)
-                 and _overlaps(live[f], pcol, op, value)}
+    small = {f: b for f, st in live.items()
+             if (b := _size(f, st)) < target_file_bytes}
     # a small file carrying deletion vectors is worth rewriting even
     # alone (the pack folds the DV read tax away)
     if len(small) < 2 and not any(
             live[f].get("_dvs") for f in small):
         return base
     n_out = max(1, -(-sum(small.values()) // target_file_bytes))
-    df = _read_files(spark, table, sorted(small), meta, live)
-    df = (df.coalesce(n_out) if cluster_by is None
-          else _cluster(df, cluster_by, n_out))
-    actions = _write_files(_to_physical(df, colmap), table,
-                           [_phys(colmap, c) for c in stats_cols or []],
-                           meta["partition_by"])
-    actions += [{"op": "remove", "file": f} for f in sorted(small)]
-    return _commit_rmw(table, base, actions, set(small), meta)
+    return _rewrite(
+        spark, table, base, live, meta, sorted(small), stats_cols,
+        lambda df: (df.coalesce(n_out) if cluster_by is None
+                    else _cluster(df, cluster_by, n_out)))
 
 
 def tx_merge(spark: SparkSession, table: str, source: DataFrame,
@@ -1626,19 +1571,16 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
     # min/max agg or the file writes forces TxConflict instead of
     # being schema-checked against the pre-rival version and silently
     # dropped from _schema_fields(merged)
-    base = latest_version(table)
-    live, _, _, meta = _resolve_snapshot(table, base)
+    live, _, _, meta, base = _resolve_snapshot(table)
     prior = _check_schema(source, table, allow_schema_evolution,
                           meta) or {}
-    lo, hi = klo, khi
-    colmap = meta["colmap"]
-    pkey = _phys(colmap, key)
-    if lo is None:
+    if klo is None:
         return base  # empty source: no-op, no empty commit
+    pkey = _phys(meta["colmap"], key)
     touched = [
         f for f in sorted(live)
-        if _overlaps(live[f], pkey, ">=", lo)
-        and _overlaps(live[f], pkey, "<=", hi)
+        if _overlaps(live[f], pkey, ">=", klo)
+        and _overlaps(live[f], pkey, "<=", khi)
     ]
 
     def _cond_true(cond: tuple):
@@ -1699,26 +1641,15 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
             upd = (src_f.join(tkeys, key, "left_semi")
                    .filter(~F.col("__tx_del") & F.col("__tx_upd")))
             to_write = ins.unionByName(upd).drop("__tx_del", "__tx_upd")
-    actions: list[dict] = []
     write_df: DataFrame | None = None
     if deletion_vectors and tgt is not None:
         # merge-on-read MERGE: position-delete the fired matched rows,
-        # append only the replacement rows — zero data files removed
-        import shutil
-
-        sub = os.path.join("data", f"dv-{uuid.uuid4().hex[:12]}")
-        dest = os.path.join(table, sub)
-        # positions read WITH current DVs applied (already-masked rows
-        # are never re-recorded — the tx_delete_where discipline)
-        hits = (
-            _read_files(spark, table, touched, meta, live)
-            .select(
-                F.col(key),
-                _rel_file_expr().alias("file"),
-                F.col("_metadata.row_index").alias("pos"))
-            .join(repl, key, "left_semi")
-            .select("file", "pos")
-        )
+        # append only the replacement rows — zero data files removed.
+        # Positions are read WITH current DVs applied (already-masked
+        # rows are never re-recorded — the tx_delete_where discipline).
+        hits = (_positions(_read_files(spark, table, touched, meta, live),
+                           key)
+                .join(repl, key, "left_semi").select("file", "pos"))
         # the DV-position write and the replacement-row probe+write
         # are independent (distinct dirs; both scan the key-pruned
         # touched files + source), so they run CONCURRENTLY from
@@ -1731,33 +1662,25 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
             parallel_actions,
         )
 
-        res: dict = {"dv_files": [], "add_actions": None}
+        res: dict = {"dv": [], "adds": None}
 
-        def _write_dv() -> None:
-            hits.write.parquet(dest)
-            res["dv_files"] = _dv_file_list(dest)
+        def _dv() -> None:
+            res["dv"] = _write_dv(table, hits)
 
-        def _write_repl() -> None:
+        def _repl() -> None:
             # plain upsert writes the whole (non-empty) source — no
             # probe needed; the clause path may write nothing
             # (all-delete)
             if to_write is source or to_write.limit(1).count():
-                res["add_actions"] = _write_files(
-                    _to_physical(to_write, colmap), table,
-                    [_phys(colmap, c) for c in stats_cols or []],
-                    meta["partition_by"])
+                res["adds"] = _write_files(to_write, table, stats_cols,
+                                           meta)
 
-        parallel_actions(_write_dv, _write_repl)
-        if res["dv_files"]:
-            actions += [{"op": "dv", "file": f, "dv": sub}
-                        for f in res["dv_files"]]
-        else:
-            shutil.rmtree(dest, ignore_errors=True)
-        if res["add_actions"] is not None:
+        parallel_actions(_dv, _repl)
+        if res["adds"] is not None:
             write_df = to_write
-        if not actions and write_df is None:
+        elif not res["dv"]:
             return base  # nothing fired, nothing to insert: no-op
-        actions += res["add_actions"] or []
+        actions = res["dv"] + (res["adds"] or [])
     else:
         # copy-on-write: rewrite the touched files whole.
         # allowMissingColumns: under additive evolution the survivors
@@ -1766,30 +1689,16 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
         write_df = (to_write if survivors is None
                     else survivors.unionByName(to_write,
                                                allowMissingColumns=True))
-        actions += [{"op": "remove", "file": f} for f in touched]
-        if write_df is not None:
-            actions += _write_files(
-                _to_physical(write_df, colmap), table,
-                [_phys(colmap, c) for c in stats_cols or []],
-                meta["partition_by"])
-    # CHECK constraints validated against the WRITTEN BYTES (ADVICE
-    # r13, same as tx_append): every row this commit makes newly live
-    # is in the new files; a violation discards them uncommitted.
-    checks = meta["checks"]
-    new = [a for a in actions if a["op"] == "add"]
-    if checks and new:
-        try:
-            _validate_checks(
-                _read_written(spark, new, table, meta, colmap),
-                checks, table)
-        except ValueError:
-            _discard_written(table, new)
-            raise
-    return _commit_rmw(
-        table, base, actions, set(touched), meta,
-        schema=_merged_schema(
-            prior, _schema_fields(write_df if write_df is not None
-                                  else source)))
+        actions = [{"op": "remove", "file": f} for f in touched]
+        actions += _write_files(write_df, table, stats_cols, meta)
+    # CHECK constraints validated against the WRITTEN BYTES (as in
+    # tx_append): every row this commit makes newly live is in the new
+    # files; a violation discards them uncommitted.
+    schema = _merged_schema(prior, _schema_fields(
+        write_df if write_df is not None else source))
+    _check_written(spark, table, actions, dict(meta, schema=schema))
+    return _commit_rmw(table, base, actions, set(touched), meta,
+                       schema=schema)
 
 
 def tx_changes(spark: SparkSession, table: str, from_version: int,
@@ -1821,7 +1730,7 @@ def _cdf_sides(spark: SparkSession, table: str, from_version: int,
     if from_version >= to_version:
         raise ValueError("tx_changes needs from_version < to_version")
     before = snapshot_files(table, from_version)
-    after, _, _, meta = _resolve_snapshot(table, to_version)
+    after, _, _, meta, _ = _resolve_snapshot(table, to_version)
     removed = sorted(f for f in before if f not in after)
     added = sorted(f for f in after if f not in before)
     # a file whose DELETION VECTORS changed between the versions
@@ -1899,7 +1808,7 @@ def tx_read_incremental(spark: SparkSession, table: str,
     if latest <= after_version:
         return None, latest
     added: list[str] = []
-    vs = [v for v in _json_versions(table)
+    vs = [v for v in _log_versions(table)[0]
           if after_version < v <= latest]
     if vs != list(range(after_version + 1, latest + 1)):
         raise ValueError(
@@ -1983,18 +1892,13 @@ def vacuum(table: str, keep_versions: int = 1) -> int:
         for f, st in snapshot_files(table, v).items():
             referenced.add(f)
             ref_dirs.update(st.get("_dvs", []))
-    # publish the horizon BEFORE deleting anything, via temp+rename
-    # like _commit: if deletion is interrupted by a crash, time travel
-    # past the horizon fails with the loud horizon error (conservative
-    # — some vacuumed-version reads that would still work are refused),
-    # never with a missing-parquet scan error mid-plan.
-    hp = os.path.join(_log_path(table), _HORIZON)
-    tmp = hp + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(str(keep[0]))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, hp)
+    # publish the horizon BEFORE deleting anything: if deletion is
+    # interrupted by a crash, time travel past the horizon fails with
+    # the loud horizon error (conservative — some vacuumed-version
+    # reads that would still work are refused), never with a
+    # missing-parquet scan error mid-plan.
+    _publish(os.path.join(_log_path(table), _HORIZON),
+             str(keep[0]).encode())
     removed = 0
     data_root = os.path.join(table, "data")
     for sub in sorted(os.listdir(data_root)) if os.path.isdir(
@@ -2038,10 +1942,9 @@ def tx_restore(table: str, to_version: int,
     to opt INTO validation: the restored live set is checked against
     the constraints currently in force and a violation raises without
     committing."""
-    base = latest_version(table)
+    current, _, _, meta, base = _resolve_snapshot(table)
     # loud if vacuumed/cleaned
-    target, _, _, tmeta = _resolve_snapshot(table, to_version)
-    current, _, _, meta = _resolve_snapshot(table, base)
+    target, _, _, tmeta, _ = _resolve_snapshot(table, to_version)
     if spark is not None:
         checks = meta["checks"]
         if checks and target:
@@ -2078,7 +1981,7 @@ def history(table: str) -> list[dict]:
     by tx_clean_log no longer have per-commit history — the
     log-retention contract)."""
     out = []
-    for v in _json_versions(table):
+    for v in _log_versions(table)[0]:
         e = _read_json_commit(table, v)
         ops = [a["op"] for a in e["actions"]]
         out.append({"version": v, "adds": ops.count("add"),
@@ -2096,7 +1999,7 @@ def version_at_timestamp(table: str, ts: float) -> int:
     lose their timestamps with their history — time travel to them is
     already version-gated; pre-r14 commits without a ts are skipped)."""
     best = None
-    for v in _json_versions(table):
+    for v in _log_versions(table)[0]:
         cts = _read_json_commit(table, v).get("ts")
         if cts is not None and cts <= ts:
             best = v
@@ -2111,8 +2014,13 @@ def version_at_timestamp(table: str, ts: float) -> int:
 def tx_checkpoint(table: str) -> int:
     """Fold the transaction log into a parquet checkpoint at the
     current latest version and publish it via the `_last_checkpoint`
-    pointer (temp+rename, like _commit) — the Delta checkpoint
-    protocol. After this, ANY read at or past the checkpoint replays
+    pointer — the Delta checkpoint protocol. Order: the checkpoint's
+    bytes are written to a temp file and fsynced, then renamed into
+    place; only then is the pointer written, fsynced and renamed
+    (_publish both times). A crash can therefore never leave the
+    pointer naming a checkpoint whose bytes did not reach the disk —
+    the state tx_clean_log trusts when it deletes the JSON commits
+    below it. After this, ANY read at or past the checkpoint replays
     only the checkpoint plus the JSON tail — O(tail), not O(commits) —
     and `tx_clean_log` may delete the folded JSON commits entirely.
     The checkpoint carries the live file set with stats, the table
@@ -2123,11 +2031,8 @@ def tx_checkpoint(table: str) -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    v = latest_version(table)
-    if v < 0:
-        raise ValueError(f"{table} has no commits to checkpoint")
     txns: dict = {}
-    live, _, _, meta = _resolve_snapshot(table, v, txns)
+    live, _, _, meta, v = _resolve_snapshot(table, None, txns)
     files = sorted(live)
     t = pa.table(
         {"file": pa.array(files, pa.string()),
@@ -2138,10 +2043,9 @@ def tx_checkpoint(table: str) -> int:
         _ckpt_key("txns"): json.dumps(txns).encode(),
         b"version": str(v).encode(),
     })
-    path = _ckpt_path(table, v)
-    tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    pq.write_table(t, tmp)
-    os.replace(tmp, path)
+    buf = pa.BufferOutputStream()
+    pq.write_table(t, buf)
+    _publish(_ckpt_path(table, v), buf.getvalue().to_pybytes())
     # never REGRESS the pointer (ADVICE r12): two racing checkpoints
     # (A folds v12, slower B then writes ptr=10) would otherwise leave
     # reads resolving base=10 while tx_clean_log cleans to the max
@@ -2150,13 +2054,8 @@ def tx_checkpoint(table: str) -> int:
     # additionally trusts only the pointer (see there).
     existing = last_checkpoint_version(table)
     if existing is None or existing < v:
-        ptr = os.path.join(_log_path(table), _CKPT_PTR)
-        tmp = ptr + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(json.dumps({"version": v}))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, ptr)
+        _publish(os.path.join(_log_path(table), _CKPT_PTR),
+                 json.dumps({"version": v}).encode())
     return v
 
 

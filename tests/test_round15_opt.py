@@ -142,6 +142,8 @@ def test_footer_stats_partitioned_match_readback(spark, tmp_path):
         "k long, s string, x double",
     )
 
+    part_s = dict(T._META, partition_by=["s"])
+
     def write_actions(monkey_off: bool):
         table = str(tmp_path / ("rb" if monkey_off else "ff"))
         os.makedirs(table, exist_ok=True)
@@ -150,11 +152,12 @@ def test_footer_stats_partitioned_match_readback(spark, tmp_path):
             T._footer_stats_actions = lambda *a, **k: None
             try:
                 acts = T._write_files(df.repartition(2), table,
-                                      ["k", "x"], ["s"])
+                                      ["k", "x"], part_s)
             finally:
                 T._footer_stats_actions = orig
         else:
-            acts = T._write_files(df.repartition(2), table, ["k", "x"], ["s"])
+            acts = T._write_files(df.repartition(2), table, ["k", "x"],
+                                  part_s)
         # strip the uuid'd path; key by partition value for comparison
         out = {}
         for a in acts:
@@ -180,6 +183,8 @@ def test_footer_stats_partitioned_numeric_and_mixed_values(
     ambiguous value (float-looking) must fall back to read-back."""
     import saurav_nayak_recipe_etl_project_spark.sources.txlog as T
 
+    part_s = dict(T._META, partition_by=["s"])
+
     def acts_for(rows, force_readback=False):
         import uuid as _uuid
         table = str(tmp_path / _uuid.uuid4().hex[:8])
@@ -189,10 +194,10 @@ def test_footer_stats_partitioned_numeric_and_mixed_values(
             orig = T._footer_stats_actions
             T._footer_stats_actions = lambda *a, **kw: None
             try:
-                return T._write_files(df, table, ["k"], ["s"])
+                return T._write_files(df, table, ["k"], part_s)
             finally:
                 T._footer_stats_actions = orig
-        return T._write_files(df, table, ["k"], ["s"])
+        return T._write_files(df, table, ["k"], part_s)
 
     # all-canonical-int column: inference says int
     fast = acts_for([(1, "123", 1.0), (2, "456", 2.0)])

@@ -44,15 +44,47 @@ def test_checkpoint_read_equivalence_and_tail_replay(spark, tmp_path):
     # THE pin: a post-checkpoint read opens the checkpoint + ZERO json
     # commits; after one more append it replays exactly that ONE tail
     # commit — O(tail), not O(commits)
-    live, replayed, base, _ = _resolve_snapshot(t)
+    live, replayed, base, _, _ = _resolve_snapshot(t)
     assert (replayed, base) == (0, 2)
     tx_append(tx_df(spark, [(4, "d")]), t, ["k"])
-    live, replayed, base, _ = _resolve_snapshot(t)
+    live, replayed, base, _, _ = _resolve_snapshot(t)
     assert (replayed, base) == (1, 2)
     assert tx_rows(read_table(spark, t)) == [(1, "a"), (3, "c"), (4, "d")]
     # pre-checkpoint time travel still replays from scratch (json kept)
-    live, replayed, base, _ = _resolve_snapshot(t, 1)
+    live, replayed, base, _, _ = _resolve_snapshot(t, 1)
     assert (replayed, base) == (2, -1)
+
+
+def test_checkpoint_bytes_reach_disk_before_publish(spark, tmp_path,
+                                                   monkeypatch):
+    """The checkpoint's temp file is fsynced BEFORE it is renamed into
+    place, and the `_last_checkpoint` pointer is published after it:
+    a crash can never leave the pointer naming a checkpoint whose bytes
+    did not reach the disk (tx_clean_log trusts that pointer when it
+    deletes the JSON commits below it)."""
+    t = str(tmp_path / "t")
+    tx_append(tx_df(spark, [(1, "a")]), t, ["k"])
+    synced: set = set()
+    published: list = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        synced.add(os.fstat(fd).st_ino)
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        published.append((os.path.basename(dst),
+                          os.stat(src).st_ino in synced))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    v = tx_checkpoint(t)
+    monkeypatch.undo()
+    assert published == [
+        (os.path.basename(txlog._ckpt_path(t, v)), True),
+        (txlog._CKPT_PTR, True)]
+    assert tx_rows(read_table(spark, t)) == [(1, "a")]
 
 
 def test_checkpoint_idempotent_rewrite(spark, tmp_path):
@@ -339,12 +371,12 @@ def test_long_log_soak_reads_stay_o_tail(spark, tmp_path, monkeypatch):
             txlog.tx_compact(spark, t, 2, ["k"])
             tx_checkpoint(t)
             tx_clean_log(t)
-            live, tail, base, _ = txlog._resolve_snapshot(t)
+            live, tail, base, _, _ = txlog._resolve_snapshot(t)
             assert tail == 0 and base == latest_version(t)
             assert len(live) <= 2
     # (a) the tail after the last maintenance (at i=80) is exactly the
     # 40 appends since it — never the full 120+-commit history
-    live, tail, base, _ = txlog._resolve_snapshot(t)
+    live, tail, base, _, _ = txlog._resolve_snapshot(t)
     assert tail == every
     assert tail < n // 2
     # (c) checkpointed read == full replay of the surviving log;
@@ -355,21 +387,31 @@ def test_long_log_soak_reads_stay_o_tail(spark, tmp_path, monkeypatch):
     assert len(via_ckpt) == n
     want = [(i, f"r{i}") for i in range(1, n + 1)]
     assert via_ckpt == sorted(want)
-    live2, tail2, base2, _ = txlog._resolve_snapshot(t)
+    live2, tail2, base2, _, _ = txlog._resolve_snapshot(t)
     assert tail2 == 0 and base2 == latest_version(t)
 
 
 def test_public_calls_read_the_log_a_bounded_number_of_times(
         spark, tmp_path, monkeypatch):
-    """Each public call resolves the table metadata once per version it
-    needs and passes it down: one tx_append lists the log directory
-    once and parses one commit (the record at its base); one tx_merge
-    lists it twice (base capture + snapshot replay) and parses only the
-    commits its replay needs; one tx_checkpoint parses each tail commit
-    once, folding the txn marks into the replay. Re-reading the record
-    field by field cost 9 listings / 7 parses for this append and
-    21 / 20 for this merge; a second pass over the tail for the txn
-    marks cost this checkpoint 12 parses."""
+    """Each write op captures its base version and its snapshot from
+    ONE listing of the log directory (`_resolve_snapshot` returns the
+    version it resolved) and passes the metadata record down; restore
+    lists twice (the current and the target snapshot). Each op also
+    runs exactly the Spark jobs it ran before its write steps were
+    shared — except the checked append and merge, which no longer run a
+    schema-inference job to read back the files they wrote. Every count
+    is exact, so one extra job or listing fails here. An append parses
+    one commit (the record at its base), a merge only the commits its
+    replay needs, and a checkpoint each tail commit once, folding the
+    txn marks into the replay."""
+    from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
+        tx_compact,
+        tx_optimize,
+        tx_restore,
+        tx_set_check,
+    )
+    from tests.jobgroups import jobs_in_group
+
     t = str(tmp_path / "t")
     for i in range(4):
         tx_append(tx_df(spark, [(i, f"r{i}")]), t, ["k"])
@@ -387,21 +429,52 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
 
     monkeypatch.setattr(os, "listdir", listdir)
     monkeypatch.setattr(txlog, "_read_json_commit", read_json_commit)
-    assert tx_append(tx_df(spark, [(9, "r9")]), t, ["k"]) == 4
-    assert counts == {"listdir": 1, "json": 1}
-    counts.update(listdir=0, json=0)
-    # no checkpoint: the replay parses all five commits, nothing more
+    got = {}
+
+    def run(name, fn):
+        counts.update(listdir=0, json=0)
+        v, jobs = jobs_in_group(spark, fn)
+        got[name] = (v, jobs, counts["listdir"])
+        return counts["json"]
+
+    assert run("append", lambda: tx_append(
+        tx_df(spark, [(9, "r9")]), t, ["k"])) == 1
     # a row list, not tx_df: built through Arrow, this merge source
-    # changes how many files the merge commits
+    # changes how many files the merge commits. No checkpoint yet: the
+    # replay parses all five commits, nothing more.
     src = spark.createDataFrame([(1, "m1"), (7, "m7")], "k long, s string")
-    assert tx_merge(spark, t, src, "k", ["k"]) == 5
-    assert counts["listdir"] <= 2 and counts["json"] <= 5, counts
-    counts.update(listdir=0, json=0)
-    assert tx_checkpoint(t) == 5
-    assert counts["listdir"] <= 2 and counts["json"] <= 6, counts
+    assert run("merge", lambda: tx_merge(spark, t, src, "k", ["k"])) <= 5
+    assert run("checkpoint", lambda: tx_checkpoint(t)) <= 6
+    run("delete_dv", lambda: tx_delete_where(
+        spark, t, ("k", "=", 2), ["k"], deletion_vectors=True))
+    run("delete_cow", lambda: tx_delete_where(spark, t, ("k", "=", 3),
+                                              ["k"]))
+    run("optimize", lambda: tx_optimize(spark, t, 1 << 20, ["k"]))
+    run("compact", lambda: tx_compact(spark, t, 1, ["k"]))
+    run("restore", lambda: tx_restore(t, 4))
     monkeypatch.undo()
+    tx_set_check(spark, t, "k_nonneg", ("k", ">=", 0))
+    monkeypatch.setattr(os, "listdir", listdir)
+    run("checked_append", lambda: tx_append(
+        tx_df(spark, [(5, "r5")]), t, ["k"]))
+    run("checked_merge", lambda: tx_merge(spark, t, src, "k", ["k"]))
+    monkeypatch.undo()
+    # (version, Spark jobs, log listings)
+    assert got == {
+        "append": (4, 1, 1),
+        "merge": (5, 7, 1),
+        "checkpoint": (5, 0, 1),
+        "delete_dv": (6, 1, 1),
+        "delete_cow": (7, 2, 1),
+        "optimize": (8, 1, 1),
+        "compact": (9, 2, 1),
+        "restore": (10, 0, 2),
+        "checked_append": (12, 3, 1),
+        "checked_merge": (13, 9, 1),
+    }
     assert tx_rows(read_table(spark, t)) == [
-        (0, "r0"), (1, "m1"), (2, "r2"), (3, "r3"), (7, "m7"), (9, "r9")]
+        (0, "r0"), (1, "m1"), (2, "r2"), (3, "r3"), (5, "r5"), (7, "m7"),
+        (9, "r9")]
 
 
 def test_metadata_record_reads_back_from_commit_and_checkpoint(
