@@ -4,9 +4,15 @@ state: each micro-batch merges into a keyed parquet table instead of
 replacing it.
 
 foreachBatch gives exactly-once-per-batch semantics (batch_id is
-replay-stable); the merge itself is a window dedup — at warehouse
-scale you'd swap the overwrite for a format with row-level merge
-(Delta/Iceberg), but the merge plan is identical.
+replay-stable); the merge itself is a window dedup.
+
+Crash posture: a batch never writes into the state it reads. The merged
+state goes to a sibling `.fold.tmp` dir and is published with the
+streaming kit's `swap_dirs` (the first batch, with no live state yet,
+publishes with a plain rename). Every crash window therefore leaves
+either the old state, a stray temp dir, or the old state parked at
+`.fold.old` — which `recover_swap` moves back at the start of the next
+batch. No window loses accumulated state.
 """
 
 from __future__ import annotations
@@ -15,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from saurav_nayak_recipe_etl_project_spark.streaming import drain, hadoop_fs
+from saurav_nayak_recipe_etl_project_spark.streaming import (
+    drain,
+    hadoop_fs,
+    recover_swap,
+    swap_dirs,
+)
 from saurav_nayak_recipe_etl_project_spark.streaming.events import (
     read_event_stream,
 )
@@ -37,19 +48,24 @@ def run_upsert_stream(spark: SparkSession, source_dir: str,
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         incoming = latest_per_key(batch_df, "user_id", "ts", "event_id")
-        # Only a genuinely-missing state path means "first batch" —
-        # corrupt files or IO errors must propagate, not silently
-        # overwrite the accumulated state with one micro-batch.
+        # heal a swap a crash interrupted BEFORE deciding "first
+        # batch": only a genuinely-missing state means that — corrupt
+        # files or IO errors must propagate, not silently replace the
+        # accumulated state with one micro-batch
+        recover_swap(spark, state_path)
         fs, jvm_path = hadoop_fs(spark, state_path)
+        tmp = f"{state_path}.fold.tmp"
+        tmp_path = hadoop_fs(spark, tmp)[1]
+        fs.delete(tmp_path, True)
         if fs.exists(jvm_path):
-            existing = spark.read.parquet(state_path)
-            merged = latest_per_key(
-                existing.unionByName(incoming), "user_id", "ts", "event_id"
-            )
+            latest_per_key(
+                spark.read.parquet(state_path).unionByName(incoming),
+                "user_id", "ts", "event_id").write.parquet(tmp)
+            swap_dirs(spark, state_path, tmp)
         else:
-            merged = incoming
-        # materialize before overwriting the path we just read
-        merged.localCheckpoint().write.mode("overwrite").parquet(state_path)
+            incoming.write.parquet(tmp)
+            if not fs.rename(tmp_path, jvm_path):
+                raise IOError(f"upsert: rename {tmp} -> {state_path} failed")
 
     drain(events, checkpoint_dir, merge)
 

@@ -11,6 +11,7 @@ import os
 
 from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 from saurav_nayak_recipe_etl_project_spark.sources.pysource import register
+from saurav_nayak_recipe_etl_project_spark.streaming import await_or_raise
 
 
 def test_jsonl_roundtrip_and_commit_protocol(spark, sf_dir, tmp_path):
@@ -74,7 +75,7 @@ def test_jsonl_stream_reader_picks_up_new_shards(spark, sf_dir, tmp_path):
              .outputMode("append")
              .option("checkpointLocation", str(tmp_path / "ckpt_js"))
              .trigger(availableNow=True).start())
-        q.awaitTermination()
+        await_or_raise(q)
 
     _land("shard-000.jsonl", docs[:25])
     _drain()
@@ -181,7 +182,7 @@ def test_jsonl_stream_rejects_out_of_order_shard(spark, sf_dir, tmp_path):
              .outputMode("append")
              .option("checkpointLocation", str(tmp_path / "ckpt_ooo"))
              .trigger(availableNow=True).start())
-        q.awaitTermination()
+        await_or_raise(q)
 
     _land("shard-005.jsonl", [1, 2])
     _drain()
@@ -211,7 +212,7 @@ def test_jsonl_stream_writer_batch_prefixed_commit(spark, sf_dir, tmp_path):
              .outputMode("append")
              .option("checkpointLocation", str(tmp_path / "ckpt_w"))
              .trigger(availableNow=True).start())
-        q.awaitTermination()
+        await_or_raise(q)
 
     stage = tmp_path / "stage_w"
     a.coalesce(1).write.mode("overwrite").parquet(str(stage))

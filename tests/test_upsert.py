@@ -10,6 +10,34 @@ from saurav_nayak_recipe_etl_project_spark.sources.catalog import load_table
 from saurav_nayak_recipe_etl_project_spark.streaming import upsert as U
 
 
+def _land_halves(spark, sf_dir, tmp_path):
+    """Stage the events table's even and odd event_ids as two
+    single-file parquet drops under `tmp_path`; return their paths."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    events = load_table(spark, "events", sf_dir).withColumn(
+        "ts", F.col("ts").cast("timestamp"))
+    out = []
+    for name, pred in [("even", "event_id % 2 = 0"),
+                       ("odd", "event_id % 2 = 1")]:
+        half = str(tmp_path / f"half_{name}")
+        events.filter(pred).coalesce(1).write.parquet(half)
+        out.append(glob.glob(half + "/part-*.parquet")[0])
+    return out
+
+
+def _assert_latest_per_user(spark, sf_dir, state):
+    got = spark.read.parquet(state)
+    events = load_table(spark, "events", sf_dir)
+    want = U.latest_per_key(events, "user_id", "ts", "event_id")
+    assert got.count() == events.select("user_id").distinct().count()
+    g = {r["user_id"]: r["event_id"] for r in got.collect()}
+    w = {r["user_id"]: r["event_id"] for r in want.collect()}
+    assert g == w
+
+
 def test_upsert_converges_to_latest_per_user(spark, sf_dir, tmp_path):
     src = tmp_path / "drops"
     src.mkdir()
@@ -21,15 +49,30 @@ def test_upsert_converges_to_latest_per_user(spark, sf_dir, tmp_path):
     # second identical drop must not duplicate state
     shutil.copy(f"{sf_dir}/events.parquet", src / "b.parquet")
     U.run_upsert_stream(spark, str(src), ckpt, state)
+    _assert_latest_per_user(spark, sf_dir, state)
 
-    got = spark.read.parquet(state)
-    events = load_table(spark, "events", sf_dir)
-    want = U.latest_per_key(events, "user_id", "ts", "event_id")
 
-    assert got.count() == events.select("user_id").distinct().count()
-    g = {r["user_id"]: r["event_id"] for r in got.collect()}
-    w = {r["user_id"]: r["event_id"] for r in want.collect()}
-    assert g == w
+def test_upsert_heals_a_crashed_state_swap(spark, sf_dir, tmp_path):
+    """Two disjoint drops (even and odd event_ids), with a crash
+    between the swap's two renames simulated after the first: the live
+    state sits only at `.fold.old`. The second batch must heal it and
+    fold the second drop into ALL the accumulated state, not rebuild
+    the state from the second drop alone."""
+    import os
+
+    src = tmp_path / "drops"
+    src.mkdir()
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    even, odd = _land_halves(spark, sf_dir, tmp_path)
+    shutil.copy(even, src / "even.parquet")
+    U.run_upsert_stream(spark, str(src), ckpt, state)
+    os.rename(state, f"{state}.fold.old")
+    shutil.copy(odd, src / "odd.parquet")
+    U.run_upsert_stream(spark, str(src), ckpt, state)
+    _assert_latest_per_user(spark, sf_dir, state)
+    assert not os.path.exists(f"{state}.fold.old")
+    assert not os.path.exists(f"{state}.fold.tmp")
 
 
 def test_audited_publish_stream_gates_each_batch(spark, sf_dir, tmp_path):
@@ -75,24 +118,17 @@ def test_audited_publish_stream_is_cumulative_across_batches(
     drops): the final published snapshot must aggregate BOTH batches'
     events — per-type counts and exact distinct users over the full
     corpus — not just the latest micro-batch's rows."""
-    import glob
-
     from pyspark.sql import functions as F
 
     from saurav_nayak_recipe_etl_project_spark.operators.maintenance import (
         read_published,
     )
 
-    events = load_table(spark, "events", sf_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    events = load_table(spark, "events", sf_dir)
     src = tmp_path / "drops"
     src.mkdir()
-    for name, pred in [("even", "event_id % 2 = 0"),
-                       ("odd", "event_id % 2 = 1")]:
-        half = str(tmp_path / f"half_{name}")
-        events.filter(pred).coalesce(1).write.parquet(half)
-        part = glob.glob(half + "/part-*.parquet")[0]
+    for name, part in zip(("even", "odd"),
+                          _land_halves(spark, sf_dir, tmp_path)):
         shutil.copy(part, src / f"{name}.parquet")
 
     outcomes = U.run_audited_publish_stream(
