@@ -1132,8 +1132,10 @@ def tx_append(df: DataFrame, table: str,
     `partition_by` (r13 verdict item 4, first commit only): the table
     becomes hive-partitioned — every write lays files out under
     `col=value` directories, partition values ride typed in the log,
-    and a partition predicate prunes files BEFORE min/max stats are
-    consulted (the directory-level first prune a 100 TB read needs).
+    and a partition predicate prunes whole partitions through the
+    [v, v] stats every partitioned file records for its partition
+    columns (with no stats_cols needed — the prune a 100 TB read
+    needs).
     The partition spec is fixed at creation (the Delta/Iceberg
     contract); later appends may restate it but not change it."""
     actions = None
@@ -1479,8 +1481,8 @@ def tx_optimize(spark: SparkSession, table: str,
     predicate can match — OPTIMIZE WHERE, the partition-scoped
     maintenance shape: at 100 TB you pack TODAY'S partition after the
     day closes, not the whole table; files other partitions own are
-    untouched by construction (directory-level prune first, then
-    stats)."""
+    untouched by construction (their partition columns' [v, v] stats
+    cannot match)."""
     live, _, _, meta, base = _resolve_snapshot(table)
     if where is not None:
         live = {f: live[f] for f in _matching_files(live, meta, where)}

@@ -1,8 +1,9 @@
 """Partitioned txlog tables (r13 verdict item 4): `tx_append(...,
 partition_by=[...])` lays files out under hive-style `col=value`
 directories with typed partition values in the log; a partition
-predicate prunes files BEFORE min/max stats (and without needing any
-stats_cols), and the spec is fixed at table creation. Pins: the
+predicate prunes files through the [v, v] stats of the partition
+columns (without needing any stats_cols), and the spec is fixed at
+table creation. Pins: the
 input_file_name evidence that a partition predicate never lists other
 partitions' files, layout preservation through delete/merge/compact,
 DV deletes on deep paths, checkpoint/clean/vacuum on nested dirs,
@@ -92,8 +93,8 @@ def test_partition_columns_carry_point_stats_in_both_write_lanes(
 def test_partition_predicate_never_lists_other_partitions(spark, tmp_path):
     """The verdict's evidence test: a partition predicate's scan must
     touch ONLY the matching partition's files — checked on the actual
-    scanned file list, with NO stats columns recorded (pure
-    directory-level prune from the log's _part values)."""
+    scanned file list, with NO stats columns recorded (the partition
+    column's [v, v] stats alone prune)."""
     t = str(tmp_path / "t")
     tx_append(tx_df(spark, ROWS), t, stats_cols=None, partition_by=["s"])
     tx_append(tx_df(spark, [(7, "a"), (8, "b")]), t, partition_by=["s"])
