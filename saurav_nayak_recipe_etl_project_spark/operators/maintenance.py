@@ -151,7 +151,9 @@ def publish_with_audit(df: DataFrame, table_dir: str, audits,
     staged = os.path.join(staging_root, f"_v{version}")
     df.write.mode("errorifexists").parquet(staged)
 
-    staged_df = spark.read.parquet(staged)
+    # read back with the schema just written: a bare read runs a
+    # schema-inference job
+    staged_df = spark.read.schema(df.schema).parquet(staged)
     for audit in audits:
         if not audit(staged_df):
             shutil.rmtree(staged)

@@ -2,15 +2,32 @@
 
 Mirrors the reference's fixed 5-table star schema catalog
 (reference schema/*.json, output/*.csv) generalized to the testdata's
-TPC-H-ish schema. Loaders are plain `spark.read.parquet` so Catalyst
-keeps full pushdown/pruning ability — no eager caching, no collect.
+TPC-H-ish schema. Loaders are lazy parquet scans, so Catalyst keeps
+full pushdown/pruning ability — no eager caching, no collect. Each scan
+is given the schema read from the parquet footer on the driver
+(`parquet_schema`), so building a plan runs no Spark job: a bare
+`spark.read.parquet` runs one schema-inference job per call.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TABLES = (
     "region",
@@ -38,7 +55,109 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` with the schema taken from the
+    footer, so it runs no schema-inference job. A path with no data
+    file is read bare, which raises Spark's own error for it."""
+    schema = parquet_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+# the key under which Spark's parquet writer stores its own schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# Spark's type for each unsigned integer width, which arrow's
+# conversion does not map
+_UNSIGNED = {8: ShortType(), 16: IntegerType(), 32: LongType(),
+             64: DecimalType(20, 0)}
+
+
+def parquet_schema(path: str) -> StructType | None:
+    """The schema Spark infers for the parquet file or directory at
+    `path` (None when it holds no data file), from one driver-side
+    footer read of the first data file in Spark's order — the file
+    Spark's own inference reads when schemas are not merged:
+
+    - a footer written by Spark holds Spark's schema: take it;
+    - otherwise map the arrow schema: a naive timestamp is
+      timestamp_ntz, a UTC-adjusted one and INT96 are timestamp,
+      INT64 TIMESTAMP(NANOS) is bigint (Spark reads it so under
+      `nanosAsLong`, the events rule), an unsigned integer is the
+      next wider signed type (decimal(20,0) for 64 bits);
+    - every field is nullable, as Spark makes every file-source field.
+
+    A pure function of the file: nothing is cached on the path."""
+    import pyarrow.parquet as pq
+
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return None
+    pf = pq.ParquetFile(data_file)
+    spark_schema = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_schema is not None:
+        return _nullable(StructType.fromJson(json.loads(spark_schema)))
+    leaves = iter([pf.schema.column(i) for i in range(len(pf.schema))])
+    return StructType([StructField(f.name, _spark_type(f.type, leaves))
+                       for f in pf.schema_arrow])
+
+
+def _first_data_file(path: str) -> str | None:
+    """`path` itself when it is a file, else the first file under it
+    in sorted path order that Spark reads as data (names starting with
+    `_` or `.` are not); None when there is none."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
+def _spark_type(at, leaves) -> DataType:
+    """Spark's type for arrow type `at`, consuming the parquet leaf
+    columns it spans from `leaves` (depth-first, the order both
+    schemas list them in): a leaf's timestamp type follows its
+    physical storage, which the arrow type does not always show."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pa.types.is_struct(at):
+        return StructType([StructField(f.name, _spark_type(f.type, leaves))
+                           for f in at])
+    if pa.types.is_map(at):
+        return MapType(_spark_type(at.key_type, leaves),
+                       _spark_type(at.item_type, leaves))
+    if (pa.types.is_list(at) or pa.types.is_large_list(at)
+            or pa.types.is_fixed_size_list(at)):
+        return ArrayType(_spark_type(at.value_type, leaves))
+    col = next(leaves)
+    if col.physical_type == "INT96":
+        return TimestampType()
+    logical = json.loads(col.logical_type.to_json())
+    if logical["Type"] == "Timestamp":
+        if logical["timeUnit"] == "nanoseconds":
+            return LongType()
+        return TimestampType() if logical["isAdjustedToUTC"] else TimestampNTZType()
+    if pa.types.is_unsigned_integer(at):
+        return _UNSIGNED[at.bit_width]
+    return from_arrow_type(at, prefer_timestamp_ntz=True)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """`dt` with every field, array element and map value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
 
 
 def event_ts_is_nanos(path: str) -> bool:
@@ -129,10 +248,11 @@ def normalize_event_ts(df: DataFrame, instant: bool = False) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unit-robust events loader: probe-free (reads, then branches on
-    the surfaced dtype via normalize_event_ts)."""
+    """Unit-robust events loader: reads, then branches on the dtype the
+    footer gives `ts` (bigint for TIMESTAMP(NANOS)) via
+    normalize_event_ts."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     return normalize_event_ts(df)
 
 

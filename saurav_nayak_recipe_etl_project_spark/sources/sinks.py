@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import read_parquet
+
 
 def write_csv_lake(df: DataFrame, path: str) -> None:
     """Header'd CSV backup (the reference's data-lake tier). One file
@@ -33,7 +35,10 @@ def load_warehouse_table(df: DataFrame, path: str,
 
 
 def read_warehouse_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The warehouse table at `path`, read with its footer schema (no
+    schema-inference job); hive partition columns are still discovered
+    from the directory names."""
+    return read_parquet(spark, path)
 
 
 def read_csv_lake(spark: SparkSession, path: str, schema: str) -> DataFrame:
