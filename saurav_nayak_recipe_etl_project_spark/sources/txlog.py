@@ -108,10 +108,15 @@ def _versions(table: str) -> list[int]:
     return sorted(set(js) | set(cs))
 
 
+def _latest(js: list[int], cs: list[int]) -> int:
+    """The newest version in one `_log_versions` listing, -1 when it
+    holds no commit."""
+    return max(js[-1:] + cs[-1:], default=-1)
+
+
 def latest_version(table: str) -> int:
     """-1 when the table has no commits yet."""
-    vs = _versions(table)
-    return vs[-1] if vs else -1
+    return _latest(*_log_versions(table))
 
 
 # The table METADATA record every commit carries — field → default
@@ -600,9 +605,10 @@ def tx_set_check(spark: SparkSession, table: str, name: str,
             f"tx CHECK constraint name {name!r} is not a plain "
             "identifier ([A-Za-z_][A-Za-z0-9_]*, <=128 chars) — the "
             "name doubles as an aggregation alias in validation")
-    base, meta = _latest_meta(table)
+    live, _, _, meta, base = _resolve_snapshot(table)
     checks = dict(meta["checks"])
-    _validate_checks(read_table(spark, table), {name: constraint}, table)
+    _validate_checks(_snapshot_rows(spark, table, live, meta),
+                     {name: constraint}, table)
     checks[name] = list(constraint)
     _commit(table, base + 1, [], checks=checks)
     return base + 1
@@ -724,12 +730,13 @@ def check_audit(spark: SparkSession, table: str) -> DataFrame:
     committed table always audits n_violate = 0 — a nonzero count here
     means someone mutated data files out-of-band. Version resolved
     ONCE: the audited rows and the constraint set come from the same
-    snapshot (the read_table single-resolution rule)."""
-    v = latest_version(table)
-    checks = _meta_at(table, v)["checks"]
+    snapshot, from one listing of the log (the read_table
+    single-resolution rule)."""
+    live, _, _, meta, _ = _resolve_snapshot(table)
+    checks = meta["checks"]
     out = []
     if checks:
-        n, counts = _check_counts(read_table(spark, table, version=v),
+        n, counts = _check_counts(_snapshot_rows(spark, table, live, meta),
                                   checks)
         for name, (col, op, value) in sorted(checks.items()):
             viol, unk = counts[name]
@@ -1156,9 +1163,10 @@ def tx_append(df: DataFrame, table: str,
     # being silently regressed by a stale schema recommit.
     colmap_used = None
     for _ in range(20):
-        base = latest_version(table)
+        js, cs = _log_versions(table)
+        base = _latest(js, cs)
         if txn is not None:
-            last = last_txn_batch(table, txn["app"], at_version=base)
+            last = _txn_mark(table, txn["app"], base, js, cs)
             if last is not None and txn["batch"] <= last:
                 return base  # idempotent replay: no-op
         meta = _meta_at(table, base)
@@ -1334,6 +1342,13 @@ def read_table(spark: SparkSession, table: str,
     # resolutions would return snapshot-N rows under schema@N+1 (r13
     # review finding); one replay yields both
     live, _, _, meta, _ = _resolve_snapshot(table, version)
+    return _snapshot_rows(spark, table, live, meta, where)
+
+
+def _snapshot_rows(spark: SparkSession, table: str, live: dict,
+                   meta: dict, where: tuple | None = None) -> DataFrame:
+    """The rows of a resolved snapshot (`live` files, `meta` record),
+    `where` pruning files by their stats and then filtering rows."""
     if not live:
         raise ValueError(f"{table} snapshot is empty")
     files = sorted(live)
@@ -1806,12 +1821,12 @@ def tx_read_incremental(spark: SparkSession, table: str,
     representable as an append feed — consume `tx_changes` instead;
     silently skipping removals would replay ghosts). Returns
     (DataFrame | None, latest_version) — None when nothing new."""
-    latest = latest_version(table)
+    js, cs = _log_versions(table)
+    latest = _latest(js, cs)
     if latest <= after_version:
         return None, latest
     added: list[str] = []
-    vs = [v for v in _log_versions(table)[0]
-          if after_version < v <= latest]
+    vs = [v for v in js if after_version < v <= latest]
     if vs != list(range(after_version + 1, latest + 1)):
         raise ValueError(
             f"tx_read_incremental: commits in ({after_version}, {latest}] "
@@ -1838,7 +1853,16 @@ def last_txn_batch(table: str, app: str,
     (latest when None) — None when the app never committed (Delta's
     SetTransaction replay). `at_version` lets tx_append pin the check
     to its captured base so check-then-commit is conflict-atomic."""
-    limit = latest_version(table) if at_version is None else at_version
+    js, cs = _log_versions(table)
+    return _txn_mark(table, app,
+                     _latest(js, cs) if at_version is None else at_version,
+                     js, cs)
+
+
+def _txn_mark(table: str, app: str, limit: int, js: list[int],
+              cs: list[int]) -> int | None:
+    """last_txn_batch at version `limit` over the listing (`js`, `cs`)
+    the caller already took."""
     if limit < 0:
         return None
     # scan NEWEST-first and stop at the app's first txn: per app,
@@ -1848,7 +1872,6 @@ def last_txn_batch(table: str, app: str,
     # made a long-lived tx_sink_batch stream O(commits^2)). A
     # checkpoint at or below `limit` bounds the scan further: its
     # metadata folds every older commit's txn high-water marks.
-    js, cs = _log_versions(table)
     base = _best_checkpoint(table, limit, cs)
     for v in reversed([v for v in js if base < v <= limit]):
         txn = _read_json_commit(table, v).get("txn")

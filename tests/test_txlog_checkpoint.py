@@ -396,7 +396,10 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
     """Each write op captures its base version and its snapshot from
     ONE listing of the log directory (`_resolve_snapshot` returns the
     version it resolved) and passes the metadata record down; restore
-    lists twice (the current and the target snapshot). Each op also
+    lists twice (the current and the target snapshot). A txn append
+    (each `tx_sink_batch`), a CHECK constraint, the constraint audit
+    and an incremental read take their version and their txn mark or
+    snapshot from one listing too. Each op also
     runs exactly the Spark jobs it ran before its write steps were
     shared — except the checked append and merge, which no longer run a
     schema-inference job to read back the files they wrote. Every count
@@ -405,8 +408,10 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
     replay needs, and a checkpoint each tail commit once, folding the
     txn marks into the replay."""
     from saurav_nayak_recipe_etl_project_spark.sources.txlog import (
+        check_audit,
         tx_compact,
         tx_optimize,
+        tx_read_incremental,
         tx_restore,
         tx_set_check,
     )
@@ -452,12 +457,16 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
     run("optimize", lambda: tx_optimize(spark, t, 1 << 20, ["k"]))
     run("compact", lambda: tx_compact(spark, t, 1, ["k"]))
     run("restore", lambda: tx_restore(t, 4))
-    monkeypatch.undo()
-    tx_set_check(spark, t, "k_nonneg", ("k", ">=", 0))
-    monkeypatch.setattr(os, "listdir", listdir)
+    run("set_check", lambda: tx_set_check(spark, t, "k_nonneg",
+                                          ("k", ">=", 0)))
     run("checked_append", lambda: tx_append(
         tx_df(spark, [(5, "r5")]), t, ["k"]))
     run("checked_merge", lambda: tx_merge(spark, t, src, "k", ["k"]))
+    run("txn_append", lambda: tx_append(
+        tx_df(spark, [(6, "r6")]), t, ["k"], txn={"app": "a", "batch": 0}))
+    # the number of constraints audited; the cursor after v13
+    run("audit", lambda: check_audit(spark, t).count())
+    run("read_incremental", lambda: tx_read_incremental(spark, t, 13)[1])
     monkeypatch.undo()
     # (version, Spark jobs, log listings)
     assert got == {
@@ -469,12 +478,16 @@ def test_public_calls_read_the_log_a_bounded_number_of_times(
         "optimize": (8, 1, 1),
         "compact": (9, 2, 1),
         "restore": (10, 0, 2),
+        "set_check": (11, 2, 1),
         "checked_append": (12, 3, 1),
         "checked_merge": (13, 9, 1),
+        "txn_append": (14, 3, 1),
+        "audit": (1, 4, 1),
+        "read_incremental": (14, 0, 1),
     }
     assert tx_rows(read_table(spark, t)) == [
-        (0, "r0"), (1, "m1"), (2, "r2"), (3, "r3"), (5, "r5"), (7, "m7"),
-        (9, "r9")]
+        (0, "r0"), (1, "m1"), (2, "r2"), (3, "r3"), (5, "r5"), (6, "r6"),
+        (7, "m7"), (9, "r9")]
 
 
 def test_metadata_record_reads_back_from_commit_and_checkpoint(
