@@ -20,6 +20,7 @@ from pyspark.sql.types import (
     DataType,
     DecimalType,
     IntegerType,
+    IntegralType,
     LongType,
     MapType,
     ShortType,
@@ -106,16 +107,17 @@ def parquet_schema(path: str) -> StructType | None:
 
 def _first_data_file(path: str) -> str | None:
     """`path` itself when it is a file, else the first file under it
-    in sorted path order that Spark reads as data (names starting with
-    `_` or `.` are not); None when there is none."""
+    that Spark reads as data (names starting with `_` or `.` are not),
+    taking the least full path as Spark orders the files; None when
+    there is none."""
     if os.path.isfile(path):
         return path
+    data = []
     for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        data = sorted(f for f in files if not f.startswith(("_", ".")))
-        if data:
-            return os.path.join(root, data[0])
-    return None
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        data += [os.path.join(root, f) for f in files
+                 if not f.startswith(("_", "."))]
+    return min(data, default=None)
 
 
 def _spark_type(at, leaves) -> DataType:
@@ -169,27 +171,15 @@ def event_ts_is_nanos(path: str) -> bool:
     catalog and the streaming reader can never diverge on it."""
     import glob
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     def _is_nanos(one: str) -> bool:
-        # Classify by what SPARK will surface, not what pyarrow reads:
-        # only INT64 TIMESTAMP(NANOS) (and raw int64 epochs) arrive as
-        # long under nanosAsLong. Legacy INT96 timestamps read as
-        # timestamp[ns] in pyarrow too, but Spark decodes them as
-        # proper timestamps — grouping them with ns here would both
-        # misclassify the file and falsely flag a µs+INT96 dir as
-        # mixed-unit.
-        t = pq.read_schema(one).field("ts").type
-        if pa.types.is_integer(t):
-            return True
-        if pa.types.is_timestamp(t) and t.unit == "ns":
-            meta_schema = pq.ParquetFile(one).schema
-            for i in range(len(meta_schema)):
-                col = meta_schema.column(i)
-                if col.name == "ts":
-                    return col.physical_type != "INT96"
-        return False
+        # Classify by what SPARK will surface (parquet_schema), not
+        # what pyarrow reads: only INT64 TIMESTAMP(NANOS) and raw
+        # integer epochs arrive as integers under nanosAsLong. Legacy
+        # INT96 timestamps read as timestamp[ns] in pyarrow too, but
+        # Spark decodes them as proper timestamps — grouping them with
+        # ns here would both misclassify the file and falsely flag a
+        # µs+INT96 dir as mixed-unit.
+        return isinstance(parquet_schema(one)["ts"].dataType, IntegralType)
 
     if os.path.isdir(path):
         files = sorted(

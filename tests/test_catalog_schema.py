@@ -15,9 +15,11 @@ import pytest
 from pyspark.sql.types import LongType, TimestampType
 
 from saurav_nayak_recipe_etl_project_spark.sources import catalog, sinks
+from tests.conftest import SF_DIR
 from tests.jobgroups import jobs_in_group
 
-SF_DIRS = [f"/root/testdata/{sf}" for sf in ("sf0.001", "sf0.01", "sf0.1")]
+SF_DIRS = [os.path.join(os.path.dirname(SF_DIR), sf)
+           for sf in ("sf0.001", "sf0.01", "sf0.1")]
 
 
 @pytest.fixture
